@@ -11,6 +11,13 @@ Design for Spark:
 - the state dict is broadcast once per executor (``SparkContext.broadcast``
   inside ``ner_sentences``/``ner_pages``); workers never re-deserialize per
   task;
+- the weights are packed once per model (``pack_state``): Q/K/V fused into
+  one ``[H, 3H]`` weight and ``[3H]`` bias, the dense/FFN/classifier
+  weights pre-transposed and contiguous. Every linear is then one 2-D GEMM
+  over the ``[B·T, H]`` activations. ``NumpyTokenClassifier`` packs lazily
+  on the worker and leaves the packed arrays out of its pickle, so the
+  broadcast carries the state dict only; ``bert_token_logits(sd, …)``
+  packs per call and runs the same forward;
 - all math is batched numpy (BLAS pinned to 1 thread in
   ``plans/session.py`` — rule: one math thread per Spark task);
 - eval-mode semantics only (no dropout), matching ``model.eval()`` at
@@ -19,18 +26,24 @@ Design for Spark:
 The activation follows the checkpoint's config: ``_meta.hidden_act`` in the
 state dict (default ``"gelu"`` — the exact erf GELU stock
 ``BertForTokenClassification`` configs use; ``"gelu_new"`` selects the tanh
-approximation some configs request). The erf is evaluated in float64 with
-the Abramowitz–Stegun 7.1.26 polynomial (max abs error 1.5e-7 ≈ float32
-eps — within one float32 ulp of stdlib ``math.erf``) — no scipy needed.
+approximation some configs request). The exact GELU's erf is the
+Abramowitz–Stegun 7.1.26 polynomial (max abs error 1.5e-7 ≈ float32 eps),
+evaluated in the activation's own dtype — float32 on executors, float64 end to end for a
+float64 state dict such as the SQL oracle's — so no scipy is needed and no
+dtype round trip is paid.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
 __all__ = [
     "init_token_classifier_state",
     "bert_token_logits",
+    "pack_state",
+    "packed_token_logits",
     "bert_config_of",
     "save_checkpoint",
     "load_checkpoint",
@@ -150,31 +163,51 @@ def load_checkpoint(path: str) -> dict[str, np.ndarray]:
 
 
 def _layer_norm(x: np.ndarray, weight: np.ndarray, bias: np.ndarray, eps: float = 1e-12):
-    mu = x.mean(axis=-1, keepdims=True)
-    var = x.var(axis=-1, keepdims=True)
-    return (x - mu) / np.sqrt(var + eps) * weight + bias
+    n = x.shape[-1]
+    x = x - np.add.reduce(x, axis=-1, keepdims=True) / n
+    var = np.add.reduce(x * x, axis=-1, keepdims=True)
+    var /= n
+    var += eps
+    x /= np.sqrt(var, out=var)
+    x *= weight
+    x += bias
+    return x
 
 
-def _erf(x: np.ndarray) -> np.ndarray:
-    """Vectorized erf, Abramowitz–Stegun 7.1.26 in float64: max abs error
-    1.5e-7 ≈ float32 eps, so the float32 GELU agrees with stdlib
-    ``math.erf`` to within one ulp (asserted in tests); stdlib math.erf via
-    np.vectorize would be exact but ~50× slower on the [B,T,ff] tensor."""
-    sign = np.sign(x)
-    ax = np.abs(x)
-    t = 1.0 / (1.0 + 0.3275911 * ax)
-    poly = t * (
-        0.254829592
-        + t * (-0.284496736 + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429)))
-    )
-    return sign * (1.0 - poly * np.exp(-ax * ax))
+# Abramowitz–Stegun 7.1.26: erfc(a) ≈ (a1·t + … + a5·t⁵)·exp(−a²) with
+# t = 1/(1 + p·a), a ≥ 0 — max abs error 1.5e-7 ≈ float32 eps. The a_i are
+# stored pre-divided by √2, the factor that turns a = |x|/√2 into ½|x|.
+_AS_P = 0.3275911
+_AS_A = tuple(
+    c / math.sqrt(2.0)
+    for c in (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
+)
 
 
 def _gelu_erf(x: np.ndarray) -> np.ndarray:
-    """Exact GELU (HF ``"gelu"`` — the stock BertConfig default)."""
-    return 0.5 * x * (1.0 + _erf(x.astype(np.float64) / np.sqrt(2.0))).astype(
-        np.float32
-    )
+    """Exact GELU (HF ``"gelu"`` — the stock BertConfig default):
+    ``x·Φ(x) = relu(x) − ½|x|·erfc(|x|/√2)`` with the A&S 7.1.26 erfc,
+    evaluated in ``x``'s own dtype with in-place temporaries (this runs on
+    the largest activation of the forward). Agrees with stdlib
+    ``math.erf`` to within a few float32 ulp (asserted in tests); no scipy
+    needed."""
+    a = x * (1.0 / math.sqrt(2.0))
+    np.abs(a, out=a)
+    t = a * _AS_P
+    t += 1.0
+    np.reciprocal(t, out=t)
+    q = t * _AS_A[4]
+    for c in _AS_A[3::-1]:
+        q += c
+        q *= t
+    e = np.square(a)
+    np.negative(e, out=e)
+    np.exp(e, out=e)
+    q *= e
+    q *= a  # ½|x|·erfc(|x|/√2)
+    y = np.maximum(x, 0.0)
+    y -= q
+    return y
 
 
 def _gelu_tanh(x: np.ndarray) -> np.ndarray:
@@ -190,14 +223,121 @@ _ACTIVATIONS = {
 }
 
 
-def _linear(x: np.ndarray, sd: dict, prefix: str) -> np.ndarray:
-    return x @ sd[prefix + ".weight"].T + sd[prefix + ".bias"]
+def _dense(sd: dict, prefix: str) -> tuple[np.ndarray, np.ndarray]:
+    """HF Linear ``[out, in]`` weight → contiguous ``[in, out]`` plus bias."""
+    return np.ascontiguousarray(sd[prefix + ".weight"].T), sd[prefix + ".bias"]
 
 
-def _softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
-    m = x.max(axis=axis, keepdims=True)
-    e = np.exp(x - m)
-    return e / e.sum(axis=axis, keepdims=True)
+def pack_state(sd: dict[str, np.ndarray]) -> dict:
+    """Inference layout of a state dict, built once per model: per layer a
+    fused Q/K/V weight ``[H, 3H]`` with bias ``[3H]`` and pre-transposed
+    contiguous dense/FFN weights, plus the transposed classifier, so every
+    linear of the forward is one 2-D GEMM over ``[B·T, H]``. The arrays
+    keep the state dict's dtype."""
+    cfg = bert_config_of(sd)
+    try:
+        act = _ACTIVATIONS[cfg["hidden_act"]]
+    except KeyError:
+        raise ValueError(
+            f"unsupported hidden_act {cfg['hidden_act']!r}; "
+            f"known: {sorted(_ACTIVATIONS)}"
+        ) from None
+    scale = math.sqrt(cfg["hidden"] // cfg["heads"])
+    layers = []
+    for i in range(cfg["layers"]):
+        p = f"bert.encoder.layer.{i}."
+        q, k, v = (p + f"attention.self.{n}" for n in ("query", "key", "value"))
+        layers.append(
+            {
+                # the 1/√dh score scale folded into the query projection
+                # (exact when √dh is a power of two, as for dh = 16 or 64)
+                "qkv": (
+                    np.ascontiguousarray(
+                        np.concatenate(
+                            [sd[q + ".weight"] / scale, sd[k + ".weight"], sd[v + ".weight"]]
+                        ).T
+                    ),
+                    np.concatenate(
+                        [sd[q + ".bias"] / scale, sd[k + ".bias"], sd[v + ".bias"]]
+                    ),
+                ),
+                "attn_out": _dense(sd, p + "attention.output.dense"),
+                "attn_ln": (
+                    sd[p + "attention.output.LayerNorm.weight"],
+                    sd[p + "attention.output.LayerNorm.bias"],
+                ),
+                "ffn_in": _dense(sd, p + "intermediate.dense"),
+                "ffn_out": _dense(sd, p + "output.dense"),
+                "out_ln": (
+                    sd[p + "output.LayerNorm.weight"],
+                    sd[p + "output.LayerNorm.bias"],
+                ),
+            }
+        )
+    return {
+        "heads": cfg["heads"],
+        "act": act,
+        "word": sd["bert.embeddings.word_embeddings.weight"],
+        "position": sd["bert.embeddings.position_embeddings.weight"],
+        "token_type0": sd["bert.embeddings.token_type_embeddings.weight"][0],
+        "emb_ln": (
+            sd["bert.embeddings.LayerNorm.weight"],
+            sd["bert.embeddings.LayerNorm.bias"],
+        ),
+        "layers": layers,
+        "classifier": _dense(sd, "classifier"),
+    }
+
+
+def packed_token_logits(
+    pk: dict,
+    ids: np.ndarray,
+    attention_mask: np.ndarray | None = None,
+    out_dtype: np.dtype = np.float32,
+) -> np.ndarray:
+    """The forward over :func:`pack_state` weights; see
+    :func:`bert_token_logits` for the contract."""
+    B, T = ids.shape
+    H = pk["word"].shape[1]
+    heads = pk["heads"]
+    dh = H // heads
+    x = pk["word"][ids] + pk["position"][:T][None, :, :] + pk["token_type0"]
+    x = _layer_norm(x.reshape(B * T, H), *pk["emb_ln"])
+    if attention_mask is None:
+        attention_mask = np.ones((B, T), x.dtype)
+    ext_mask = (1.0 - attention_mask[:, None, None, :].astype(x.dtype)) * -10000.0
+
+    for layer in pk["layers"]:
+        w, b = layer["qkv"]
+        qkv = x @ w
+        qkv += b
+        # [B·T, 3H] -> 3 × [B, heads, T, dh]
+        q, k, v = qkv.reshape(B, T, 3, heads, dh).transpose(2, 0, 3, 1, 4)
+        scores = q @ k.transpose(0, 1, 3, 2)
+        scores += ext_mask
+        scores -= scores.max(axis=-1, keepdims=True)
+        np.exp(scores, out=scores)
+        scores /= scores.sum(axis=-1, keepdims=True)
+        ctx = (scores @ v).transpose(0, 2, 1, 3).reshape(B * T, H)
+        w, b = layer["attn_out"]
+        h = ctx @ w
+        h += b
+        h += x
+        attn = _layer_norm(h, *layer["attn_ln"])
+        w, b = layer["ffn_in"]
+        inter = attn @ w
+        inter += b
+        inter = pk["act"](inter)
+        w, b = layer["ffn_out"]
+        h = inter @ w
+        h += b
+        h += attn
+        x = _layer_norm(h, *layer["out_ln"])
+
+    w, b = pk["classifier"]
+    logits = x @ w
+    logits += b
+    return logits.reshape(B, T, -1).astype(out_dtype, copy=False)
 
 
 def bert_token_logits(
@@ -214,54 +354,7 @@ def bert_token_logits(
     → per layer (multi-head self-attention with additive −10⁴ pad mask,
     residual + LN, GELU FFN, residual + LN) → token classifier head —
     the ``BertForTokenClassification`` dataflow of ``BERT/Model.py:311-318``.
+    Packs the weights (:func:`pack_state`) on every call; a caller that
+    runs many batches packs once and calls :func:`packed_token_logits`.
     """
-    cfg = bert_config_of(sd)
-    try:
-        act = _ACTIVATIONS[cfg["hidden_act"]]
-    except KeyError:
-        raise ValueError(
-            f"unsupported hidden_act {cfg['hidden_act']!r}; "
-            f"known: {sorted(_ACTIVATIONS)}"
-        ) from None
-    B, T = ids.shape
-    H, heads = cfg["hidden"], cfg["heads"]
-    dh = H // heads
-    if attention_mask is None:
-        attention_mask = np.ones((B, T), np.float32)
-    ext_mask = (1.0 - attention_mask[:, None, None, :].astype(np.float32)) * -10000.0
-
-    x = (
-        sd["bert.embeddings.word_embeddings.weight"][ids]
-        + sd["bert.embeddings.position_embeddings.weight"][:T][None, :, :]
-        + sd["bert.embeddings.token_type_embeddings.weight"][0][None, None, :]
-    )
-    x = _layer_norm(
-        x,
-        sd["bert.embeddings.LayerNorm.weight"],
-        sd["bert.embeddings.LayerNorm.bias"],
-    )
-
-    def split_heads(t):  # [B,T,H] -> [B,heads,T,dh]
-        return t.reshape(B, T, heads, dh).transpose(0, 2, 1, 3)
-
-    for i in range(cfg["layers"]):
-        p = f"bert.encoder.layer.{i}."
-        q = split_heads(_linear(x, sd, p + "attention.self.query"))
-        k = split_heads(_linear(x, sd, p + "attention.self.key"))
-        v = split_heads(_linear(x, sd, p + "attention.self.value"))
-        scores = q @ k.transpose(0, 1, 3, 2) / np.sqrt(dh) + ext_mask
-        ctx = _softmax(scores) @ v  # [B,heads,T,dh]
-        ctx = ctx.transpose(0, 2, 1, 3).reshape(B, T, H)
-        attn = _layer_norm(
-            _linear(ctx, sd, p + "attention.output.dense") + x,
-            sd[p + "attention.output.LayerNorm.weight"],
-            sd[p + "attention.output.LayerNorm.bias"],
-        )
-        inter = act(_linear(attn, sd, p + "intermediate.dense"))
-        x = _layer_norm(
-            _linear(inter, sd, p + "output.dense") + attn,
-            sd[p + "output.LayerNorm.weight"],
-            sd[p + "output.LayerNorm.bias"],
-        )
-
-    return (x @ sd["classifier.weight"].T + sd["classifier.bias"]).astype(out_dtype)
+    return packed_token_logits(pack_state(sd), ids, attention_mask, out_dtype)

@@ -1043,6 +1043,22 @@ def hits_integer(
     )
 
 
+def _check_priority_ids(sym: DataFrame, op: str) -> None:
+    """Precondition of the ``(v·MIS_MUL) % MIS_MOD`` priority scramble:
+    node ids in ``[0, MIS_MOD)``.  Only there is it injective (and free of
+    BIGINT overflow, and equal to the pure-Python ``mis_priority``);
+    colliding priorities make neither neighbor a strict local minimum and
+    stall the rounds.  ``sym`` is the symmetrized ``(a, b)`` edge frame."""
+    from ..oracle.graph import MIS_MOD
+
+    lo, hi = sym.agg(F.min("a"), F.max("a")).first()
+    if lo is not None and (lo < 0 or hi >= MIS_MOD):
+        raise ValueError(
+            f"{op}: node ids must lie in [0, {MIS_MOD}) for the priority "
+            f"scramble, got [{lo}, {hi}]; densify the ids first"
+        )
+
+
 def maximal_independent_set(
     edges: DataFrame,
     max_rounds: int = 6,
@@ -1063,7 +1079,9 @@ def maximal_independent_set(
     frame is ``localCheckpoint``-ed per round (rule 23).  Scrambled
     priorities give the O(log n) expected round count (id-ordered would
     serialize a chain); overrunning ``max_rounds`` raises LOUDLY — the
-    unrolled SQL twin covers the same fixed budget (kcore's contract)."""
+    unrolled SQL twin covers the same fixed budget (kcore's contract).
+    Node ids must lie in ``[0, MIS_MOD)``, where the scramble is
+    injective; ids outside raise ``ValueError``."""
     from ..oracle.graph import MIS_MOD, MIS_MUL
 
     und = (
@@ -1079,6 +1097,7 @@ def maximal_independent_set(
         .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
         .localCheckpoint(eager=True)
     )
+    _check_priority_ids(sym, "maximal_independent_set")
 
     def pri(col):
         return (F.col(col) * F.lit(MIS_MUL)) % F.lit(MIS_MOD)
@@ -1827,9 +1846,12 @@ def maximal_matching(
     endpoint, so an MIS of the line graph IS a maximal matching — one
     kernel, two operators (CLAUDE.md rule 6 at the operator level).
 
-    Returns ``(edge_id, u, v, matched, mis_round)`` for EVERY input edge
-    (``matched`` BIGINT 0/1; ``mis_round`` = the MIS round that picked
-    it, 0 when unmatched or isolated).  ISOLATED edges (sharing no
+    Returns ``(edge_id, u, v, matched, mis_round)`` for every input edge
+    that is not a self-loop (``matched`` BIGINT 0/1; ``mis_round`` = the
+    MIS round that picked it, 0 when unmatched or isolated).  Self-loops
+    (``src == dst``) are dropped: no matching can contain one.  Edge ids
+    must lie in ``[0, MIS_MOD)`` — they are the line graph's node ids, see
+    :func:`maximal_independent_set`.  ISOLATED edges (sharing no
     endpoint with any other edge) never enter the line graph; they are
     trivially in every maximal matching, so they come back ``matched=1,
     mis_round=0``.
@@ -1842,11 +1864,15 @@ def maximal_matching(
     ``localCheckpoint`` per round (rule 23).  The reference has no graph
     stage (``OICI_database.py:34-39``) — SURVEY §2.12 KG-scale extension.
     """
-    base = edges.select(
-        F.col(edge_id).cast("long").alias("eid"),
-        F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
-        F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
-    ).localCheckpoint(eager=True)
+    base = (
+        edges.select(
+            F.col(edge_id).cast("long").alias("eid"),
+            F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
+            F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .localCheckpoint(eager=True)
+    )
     ep = base.select("eid", F.col("u").alias("node")).union(
         base.select("eid", F.col("v").alias("node"))
     )
@@ -1909,7 +1935,8 @@ def jones_plassmann_coloring(
     and two anti-joins shrinking the sets, every frame
     ``localCheckpoint``-ed (rule 23).  Priorities are the injective
     scramble (rule 11) so no tie-break is needed; overrunning
-    ``max_rounds`` or exhausting ``max_colors`` raises LOUDLY."""
+    ``max_rounds`` or exhausting ``max_colors`` raises LOUDLY.  Node ids
+    must lie in ``[0, MIS_MOD)`` (see :func:`maximal_independent_set`)."""
     from ..oracle.graph import MIS_MOD, MIS_MUL
 
     und = (
@@ -1925,6 +1952,7 @@ def jones_plassmann_coloring(
         .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
         .localCheckpoint(eager=True)
     )
+    _check_priority_ids(sym, "jones_plassmann_coloring")
 
     def pri(col):
         return (F.col(col) * F.lit(MIS_MUL)) % F.lit(MIS_MOD)
@@ -2047,10 +2075,7 @@ def widest_path_bounded(
                 F.max("cap").alias("cap"),
                 (
                     F.max("cap")
-                    > F.coalesce(
-                        F.max(F.when(F.col("__old") == 1, F.col("cap"))),
-                        F.lit(None),
-                    )
+                    > F.max(F.when(F.col("__old") == 1, F.col("cap")))
                 ).alias("__improved_vs_old"),
                 F.max("__old").alias("__had_old"),
             )

@@ -11,9 +11,12 @@ Per Arrow batch, inside the Python worker:
    right-pad each sub-batch to its own max ≤512  (``Batch``, data_utils.py:66-97
    — the padding-efficiency trick Catalyst can't know about)
 3. model forward → argmax over label axis        (:311-318)
-4. drop the [CLS] position, trim to sentence length, map ids→labels,
-   stray [PAD]→'O'                               (:320-327, :391-397; predict.py:5)
-5. BIO-decode to mention spans via the reference FSM (iob_util.py:62-94)
+4. drop the [CLS] position; per sub-batch, map the [B, T] argmax ids
+   through (prefix, type) lookup tables, stray [PAD]→'O', positions past
+   each sentence's length → 'O'                  (:320-327, :391-397; predict.py:5)
+5. BIO-decode the whole sub-batch at once: chunk-start/-end masks of the
+   reference's lenient FSM (iob_util.py:62-94, ``oracle/iob.py``), spans
+   by ``np.nonzero`` (``bio_spans``)
 
 The model is pluggable: anything with ``logits(ids: list[list[int]]) ->
 [B, T, num_labels] ndarray``. ``TorchTokenClassifier`` (gated import) wraps a
@@ -35,7 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..oracle.iob import iob_to_spans
+from ..oracle.iob import split_tag
 from ..oracle.matcher import automaton_match, build_automaton
 from ..oracle.textproc import han_to_zen
 from .tagger import MENTION_SCHEMA, matches_to_iob
@@ -71,6 +74,11 @@ class CharTokenizer:
         return [self.itos[i] for i in ids[1:]]  # drop [CLS]
 
 
+# BIO prefix codes of ``LabelVocab.bio_tables`` / ``bio_spans``
+_P_O, _P_B, _P_I, _P_OTHER = 0, 1, 2, 3
+_PREFIX_CODES = {"O": _P_O, "B": _P_B, "I": _P_I}
+
+
 class LabelVocab:
     """[PAD]=0, first-seen order (``BERT/bert_utils.py:39-55``)."""
 
@@ -89,8 +97,55 @@ class LabelVocab:
         v.stoi = {l: i for i, l in enumerate(v.itos)}
         return v
 
-    def to_labels(self, ids: np.ndarray) -> list[str]:
-        return [self.itos[i] if self.itos[i] != PAD else "O" for i in ids]
+    def bio_tables(self) -> tuple[np.ndarray, np.ndarray, list]:
+        """(prefix code per label id, type code per label id, type names)
+        for :func:`bio_spans`. ``[PAD]`` decodes as ``'O'``; prefixes other
+        than O/B/I share one code, as ``oracle/iob.py`` treats them alike.
+        Type code 0 is the ``None`` type of ``'O'``. A typed ``O-`` label
+        is rejected: the reference FSM decodes it into spans that start at
+        −1."""
+        names: list = [None]
+        prefix = np.empty(len(self.itos), np.int8)
+        types = np.empty(len(self.itos), np.int32)
+        for i, label in enumerate(self.itos):
+            p, t = split_tag("O" if label == PAD else label)
+            if p == "O" and t is not None:
+                raise ValueError(f"label {label!r} is not a BIO tag")
+            prefix[i] = _PREFIX_CODES.get(p, _P_OTHER)
+            if t not in names:
+                names.append(t)
+            types[i] = names.index(t)
+        return prefix, types, names
+
+
+def bio_spans(
+    pred: np.ndarray, lengths: np.ndarray, prefix: np.ndarray, types: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized ``oracle.iob.iob_to_spans`` over a sub-batch of label-id
+    rows: ``pred`` [B, T] ids, row ``r`` valid for ``lengths[r]`` positions.
+    Returns ``(row, start, end, type_code)`` arrays (end-exclusive, in
+    row-major order — the order the per-row reference emits).
+
+    Each row is framed by ``'O'`` sentinels, positions past its length
+    read as ``'O'``, and the reference's lenient FSM becomes two masks:
+    a chunk starts at ``B-``, at ``I-`` after ``O``, or on a type change;
+    it ends before ``B-``, before ``O``, or before a type change. Every
+    start is followed by exactly one end before the next start, so the
+    k-th start pairs with the k-th end."""
+    B, T = pred.shape
+    valid = np.arange(T)[None, :] < np.asarray(lengths)[:, None]
+    p = np.zeros((B, T + 2), np.int8)  # _P_O sentinels
+    t = np.zeros((B, T + 2), np.int32)  # type code 0 = None
+    p[:, 1:-1] = np.where(valid, prefix[pred], _P_O)
+    t[:, 1:-1] = types[pred]  # types past a row's length are never read
+    pp, pc, pn = p[:, :-2], p[:, 1:-1], p[:, 2:]
+    tp, tc, tn = t[:, :-2], t[:, 1:-1], t[:, 2:]
+    inside = pc != _P_O
+    start = inside & ((pc == _P_B) | ((pp == _P_O) & (pc == _P_I)) | (tp != tc))
+    end = inside & ((pn == _P_B) | (pn == _P_O) | (tc != tn))
+    rows, starts = np.nonzero(start)
+    end_rows, ends = np.nonzero(end)
+    return rows, starts, ends + 1, tc[end_rows, ends]
 
 
 def label_vocab_for_types(types: list[str]) -> LabelVocab:
@@ -181,9 +236,15 @@ class NumpyTokenClassifier:
     def __init__(self, state_dict: dict, tokenizer: "CharTokenizer"):
         self.state_dict = state_dict
         self.tokenizer = tokenizer
+        self._packed = None
+
+    def __getstate__(self):
+        state = self.__dict__.copy()
+        state["_packed"] = None  # re-packed lazily on each executor
+        return state
 
     def logits(self, texts: list[str], padded_len: int) -> np.ndarray:
-        from .bert_numpy import bert_token_logits
+        from .bert_numpy import pack_state, packed_token_logits
 
         B = len(texts)
         ids = np.zeros((B, padded_len), np.int64)  # [PAD]=0 right-padding
@@ -192,7 +253,9 @@ class NumpyTokenClassifier:
             enc = self.tokenizer.encode(self.tokenizer.tokenize(t))[:padded_len]
             ids[bi, : len(enc)] = enc
             mask[bi, : len(enc)] = 1.0
-        return bert_token_logits(self.state_dict, ids, mask)
+        if self._packed is None:
+            self._packed = pack_state(self.state_dict)
+        return packed_token_logits(self._packed, ids, mask)
 
 
 def classifier_from_checkpoint(path: str):
@@ -271,6 +334,7 @@ def _infer_rows(rows, mdl, vocab, batch_size: int, max_len: int, out: dict):
     """
     texts = [han_to_zen(r[2]) for r in rows]
     spanner = getattr(getattr(mdl, "tokenizer", None), "tokenize_with_spans", None)
+    prefix, types, type_names = vocab.bio_tables()
     order = sorted(range(len(texts)), key=lambda i: -len(texts[i]))
     for ofs in range(0, len(order), batch_size):
         idxs = order[ofs : ofs + batch_size]
@@ -280,34 +344,27 @@ def _infer_rows(rows, mdl, vocab, batch_size: int, max_len: int, out: dict):
             # [CLS]); the same truncated id sequence is what mdl.logits
             # builds from chunk, so labels and alignment stay in lockstep
             chunk_spans = [spanner(c)[: max_len - 1] for c in chunk]
-            padded = max((len(s) for s in chunk_spans), default=0) + 1  # +[CLS]
+            lengths = [len(s) for s in chunk_spans]
         else:
             chunk_spans = None
-            padded = max((len(c) for c in chunk), default=0) + 1  # +[CLS]
+            lengths = [len(c) for c in chunk]
+        padded = max(lengths, default=0) + 1  # +[CLS]
         logits = mdl.logits(chunk, padded)
         pred_ids = logits.argmax(axis=2)[:, 1:]  # drop [CLS] position
-        for row, i in enumerate(idxs):
-            if chunk_spans is not None:
+        span_rows, starts, ends, tcodes = bio_spans(pred_ids, lengths, prefix, types)
+        for row, s, e, tc in zip(
+            span_rows.tolist(), starts.tolist(), ends.tolist(), tcodes.tolist()
+        ):
+            if chunk_spans is not None:  # piece offsets -> char offsets
                 tbl = chunk_spans[row]
-                labels = vocab.to_labels(pred_ids[row, : len(tbl)])
-                spans = []
-                for s in iob_to_spans([p for p, _, _ in tbl], labels):
-                    cs, ce = tbl[s["start"]][1], tbl[s["end"] - 1][2]
-                    spans.append(
-                        {"start": cs, "end": ce, "type": s["type"],
-                         "word": chunk[row][cs:ce]}
-                    )
-            else:
-                n = len(chunk[row])
-                labels = vocab.to_labels(pred_ids[row, :n])
-                spans = iob_to_spans(list(chunk[row]), labels)
-            for span in spans:
-                out["url"].append(rows[i][0])
-                out["sent_id"].append(int(rows[i][1]))
-                out["start"].append(span["start"])
-                out["end"].append(span["end"])
-                out["type"].append(span["type"])
-                out["word"].append(span["word"])
+                s, e = tbl[s][1], tbl[e - 1][2]
+            url, sent_id, _ = rows[idxs[row]]
+            out["url"].append(url)
+            out["sent_id"].append(int(sent_id))
+            out["start"].append(s)
+            out["end"].append(e)
+            out["type"].append(type_names[tc])
+            out["word"].append(chunk[row][s:e])
 
 
 def _out_to_pdf(out: dict) -> pd.DataFrame:

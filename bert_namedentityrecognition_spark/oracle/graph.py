@@ -914,13 +914,15 @@ def matching_sql(edge_ctes: str, rounds: int) -> str:
     exploded-endpoint self-join, already symmetric since both orders of
     each pair appear).  Isolated edges never enter the line graph and
     come back ``matched=1, mis_round=0`` — trivially in every maximal
-    matching — exactly the operator's contract."""
+    matching — and self-loops (``u = v``) are dropped — exactly the
+    operator's contract."""
     graph_ctes = (
         edge_ctes.rstrip().rstrip(",")
         + """,
+edges_nl AS MATERIALIZED (SELECT eid, u, v FROM edges_base WHERE u <> v),
 ep AS MATERIALIZED (
-  SELECT eid, u AS node FROM edges_base
-  UNION ALL SELECT eid, v AS node FROM edges_base
+  SELECT eid, u AS node FROM edges_nl
+  UNION ALL SELECT eid, v AS node FROM edges_nl
 ),
 sym AS MATERIALIZED (
   SELECT DISTINCT e1.eid AS a, e2.eid AS b
@@ -936,7 +938,7 @@ SELECT CAST(e.eid AS BIGINT) AS edge_id,
                  OR e.eid NOT IN (SELECT a FROM sym)
             THEN 1 ELSE 0 END AS BIGINT) AS matched,
        CAST(COALESCE(m.mis_round, 0) AS BIGINT) AS mis_round
-FROM edges_base e LEFT JOIN mis m ON m.node = e.eid
+FROM edges_nl e LEFT JOIN mis m ON m.node = e.eid
 """
     return mis_sql(graph_ctes, rounds, final_select=final)
 

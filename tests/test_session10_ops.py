@@ -76,6 +76,48 @@ def test_matching_sql_twin_on_fixture():
     assert got == want
 
 
+def test_matching_drops_self_loops_in_both_twins(spark):
+    """A self-loop is no matching edge: both the Spark operator and the SQL
+    twin drop it, whether it is isolated or touches a matched edge."""
+    from bert_namedentityrecognition_spark.oracle.graph import matching_sql
+
+    edges = {1: (0, 1), 2: (1, 2), 7: (30, 30), 8: (1, 1)}
+    rows = [(e, u, v) for e, (u, v) in edges.items()]
+    spark_out = {
+        r["edge_id"]: (r["matched"], r["mis_round"])
+        for r in maximal_matching(_edges_df(spark, rows)).collect()
+    }
+    vals = ", ".join(f"({e}, {u}, {v})" for e, (u, v) in edges.items())
+    sql = matching_sql(
+        f"edges_base AS MATERIALIZED (SELECT * FROM (VALUES {vals}) t(eid, u, v))",
+        rounds=4,
+    )
+    sql_out = {r[0]: (r[3], r[4]) for r in duckdb.sql(sql).fetchall()}
+    assert set(spark_out) == set(sql_out) == {1, 2}
+    assert spark_out == sql_out
+    assert sorted(m for m, _ in spark_out.values()) == [0, 1]
+
+
+@pytest.mark.parametrize("bad", [-1, 1_000_000_007])
+def test_priority_scramble_rejects_ids_out_of_range(spark, bad):
+    """(v·MIS_MUL) % MIS_MOD is injective only on [0, MIS_MOD): ids 0 and
+    MIS_MOD would share priority 0 and stall the rounds."""
+    from bert_namedentityrecognition_spark.operators.graph import (
+        jones_plassmann_coloring,
+        maximal_independent_set,
+    )
+
+    df = spark.createDataFrame([(0, bad), (bad, 5)], "src long, dst long")
+    with pytest.raises(ValueError, match="densify"):
+        maximal_independent_set(df)
+    with pytest.raises(ValueError, match="densify"):
+        jones_plassmann_coloring(df)
+    with pytest.raises(ValueError, match="densify"):
+        maximal_matching(
+            _edges_df(spark, [(bad, 0, 1), (0, 1, 2)])
+        )
+
+
 def test_gap_bucket_is_floor_log2(spark):
     gaps = [0, 1, 2, 3, 4, 7, 8, 1023, 1024, 123456]
     df = spark.createDataFrame([(g,) for g in gaps], "g long")
