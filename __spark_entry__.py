@@ -103,7 +103,7 @@ def _doc_sentences(spark, sf_dir):
     Null text is skipped at the source (the reference Dataset ABC's
     NaN-skip, ``dataset/base.py``) — the DuckDB occurrence twin already
     drops null docs (``replace(NULL, ..)`` predicates are never true),
-    and the Arrow tagger stage would raise on None."""
+    and the pushable filter keeps them out of the Arrow transfer."""
     return (
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -7456,9 +7456,7 @@ def _warc_ingest_mentions(spark, sf):
     d = os.path.join(_writable_base(), "var", f"warc_fixture_{n_pages}")
     fixtures.write_warc_fixture(d, n_pages)
     pages = prepare_pages(read_warc(spark, d))
-    m = extract_mentions(
-        pages, fixtures.WARC_TERM_TYPES, lang_filter="cjk", normalize=True
-    )
+    m = extract_mentions(pages, fixtures.WARC_TERM_TYPES, lang_filter="cjk")
     per_url = pages.select(
         "url",
         "warc_ts",

@@ -30,7 +30,7 @@ inference pages/s), "skew" (walls + deterministic reducer split), and
 "ppjoin_openvocab" (naive vs prefix-filtered set-similarity join).
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, KG_BENCH_PAGES (corpus
-size, default 250000), KG_BENCH_TRIALS (base trials per scaling level,
+size, default 45000), KG_BENCH_TRIALS (base trials per scaling level,
 default 2), KG_BENCH_CORES_LOW / KG_BENCH_CORES_HIGH (gate pair override),
 and section skips: KG_BENCH_SKIP_SCALING, KG_BENCH_SKIP_CROSS,
 KG_BENCH_SKIP_NER_NUMPY, KG_BENCH_SKIP_SKEW, KG_BENCH_SKIP_PPJOIN (=1).
@@ -194,26 +194,56 @@ def _ensure_bench_corpus(n_pages: int) -> str:
     return _write_pages_parquet(rows, BENCH_DATA, marker)
 
 
-def run_kg_level(data_dir: str, cores: int) -> dict:
-    """One scaling level: full KG pipeline (model path) at local[cores]."""
-    from pyspark.sql import functions as F
-
+def _bench_model(texts: list[str], tokenizer_kind: str = "char"):
+    """(NumpyTokenClassifier, LabelVocab): the random-init numpy BERT
+    (2L/64H/4 heads) the model benches run, its vocabulary the chars of
+    ``texts``. ``tokenizer_kind='wordpiece'`` adds ## continuations and a
+    few hot multi-char pieces so words genuinely expand to >1 piece."""
+    from bert_namedentityrecognition_spark.operators.bert_numpy import (
+        init_token_classifier_state,
+    )
     from bert_namedentityrecognition_spark.operators.ner import (
-        DictionaryStubModel,
+        CharTokenizer,
+        NumpyTokenClassifier,
         label_vocab_for_types,
     )
+    from bert_namedentityrecognition_spark.oracle.textproc import han_to_zen
+    from bert_namedentityrecognition_spark.sources import fixtures
+
+    alphabet = sorted({c for t in texts if t for c in han_to_zen(t)})
+    if tokenizer_kind == "wordpiece":
+        from bert_namedentityrecognition_spark.oracle.wordpiece import (
+            WordPieceTokenizer,
+        )
+
+        pieces = [d for d in fixtures.DRUGS[:8]] + ["##" + c for c in alphabet]
+        tok = WordPieceTokenizer(alphabet + pieces)
+    else:
+        tok = CharTokenizer(alphabet)
+    vocab = label_vocab_for_types(["drug", "symptom"])
+    sd = init_token_classifier_state(
+        vocab_size=len(tok.itos), num_labels=len(vocab.itos),
+        hidden=64, layers=2, heads=4, intermediate=256, seed=0,
+    )
+    return NumpyTokenClassifier(sd, tok), vocab
+
+
+def run_kg_level(data_dir: str, cores: int) -> dict:
+    """One scaling level: full KG pipeline (real numpy-BERT model path) at
+    local[cores]."""
+    from pyspark.sql import functions as F
+
     from bert_namedentityrecognition_spark.plans.pipeline import run_kg_pipeline
     from bert_namedentityrecognition_spark.plans.session import build_session
     from bert_namedentityrecognition_spark.sources import fixtures
 
     term_types = fixtures.pipeline_term_types()
-    vocab = label_vocab_for_types(list(term_types.values()))
     spark = build_session(
         app_name=f"kg-bench-{cores}", cores=cores, shuffle_partitions=cores
     )
     pages = spark.read.parquet(data_dir)
     dim = fixtures.entity_dim_to_spark(spark)
-    model = DictionaryStubModel(term_types, vocab, emulate_compute=True)
+    model, vocab = _bench_model([r.text for r in pages.limit(200).collect()])
     # warm-up (excluded from timing): JVM + codegen via a small scan, plus
     # ALL python workers — limit(64).count() alone runs one task and spins
     # one worker, so at local[8] seven workers would cold-start inside the
@@ -247,49 +277,21 @@ def run_ner_numpy_bench(
     """Real-model inference data point: ner_pages with the numpy
     BertForTokenClassification forward (random-init weights) — measures the
     §2.6 model path's distributed throughput, complementing the
-    gazetteer-stub scaling bench. ``tokenizer_kind='wordpiece'`` drives the
+    end-to-end scaling bench. ``tokenizer_kind='wordpiece'`` drives the
     sub-token path (piece tokenization + piece→char span lifting) so the
     alignment overhead is a measured number, not a guess."""
     import time as _t
 
-    from bert_namedentityrecognition_spark.operators.bert_numpy import (
-        init_token_classifier_state,
-    )
-    from bert_namedentityrecognition_spark.operators.ner import (
-        CharTokenizer,
-        NumpyTokenClassifier,
-        label_vocab_for_types,
-        ner_pages,
-    )
-    from bert_namedentityrecognition_spark.oracle.textproc import han_to_zen
+    from bert_namedentityrecognition_spark.operators.ner import ner_pages
     from bert_namedentityrecognition_spark.plans.session import build_session
     from bert_namedentityrecognition_spark.sources import fixtures
 
     rows = fixtures.generate_pages(n_pages, seed=7, min_sents=4, max_sents=12)
-    alphabet = sorted(
-        {c for r in rows[:200] if r["text"] for c in han_to_zen(r["text"])}
-    )
-    if tokenizer_kind == "wordpiece":
-        from bert_namedentityrecognition_spark.oracle.wordpiece import (
-            WordPieceTokenizer,
-        )
-
-        # char vocab + ## continuations + a few hot multi-char pieces so
-        # words genuinely expand to >1 piece mid-word
-        pieces = [d for d in fixtures.DRUGS[:8]] + ["##" + c for c in alphabet]
-        tok = WordPieceTokenizer(alphabet + pieces)
-    else:
-        tok = CharTokenizer(alphabet)
-    vocab = label_vocab_for_types(["drug", "symptom"])
-    sd = init_token_classifier_state(
-        vocab_size=len(tok.itos), num_labels=len(vocab.itos),
-        hidden=64, layers=2, heads=4, intermediate=256, seed=0,
-    )
+    model, vocab = _bench_model([r["text"] for r in rows[:200]], tokenizer_kind)
     spark = build_session(
         app_name="ner-numpy-bench", cores=cores, shuffle_partitions=cores
     )
     pages = fixtures.pages_to_spark(spark, rows).repartition(cores * 4)
-    model = NumpyTokenClassifier(sd, tok)
     _warm_python_workers(spark, cores)
     t0 = _t.perf_counter()
     n_mentions = ner_pages(pages, model, vocab, batch_size=16).count()
@@ -654,9 +656,10 @@ def main():
         # where 2→8 read 0.69. The 2→8 pair remains available via
         # KG_BENCH_CORES_LOW/HIGH for cross-checking; the host probe +
         # host-normalized figure are reported either way.
-        # 250k pages keeps the local[4] level ~85 s — far above the zone
-        # where fixed per-run costs (worker spin-up now pre-warmed) bite.
-        n_pages = int(os.environ.get("KG_BENCH_PAGES", "250000"))
+        # 45k pages keep the real-model local[4] level at ~59 s (min of
+        # two trials on the 4-vCPU host), above the ~50 s where fixed
+        # per-run costs (worker spin-up now pre-warmed) stop biting.
+        n_pages = int(os.environ.get("KG_BENCH_PAGES", "45000"))
         c_lo = int(os.environ.get("KG_BENCH_CORES_LOW", "1"))
         c_hi = int(os.environ.get("KG_BENCH_CORES_HIGH", str(4 * c_lo)))
         result["kg_scaling"] = run_kg_scaling(n_pages, c_lo, c_hi)

@@ -22,8 +22,13 @@ The model is pluggable: anything with ``logits(ids: list[list[int]]) ->
 [B, T, num_labels] ndarray``. ``TorchTokenClassifier`` (gated import) wraps a
 real ``BertForTokenClassification`` state_dict broadcast via
 ``SparkContext.broadcast`` and loaded once per executor worker.
-``DictionaryStubModel`` is the deterministic stand-in used in this sandbox:
-same tensor shapes, same decode path, logits derived from a gazetteer.
+``NumpyTokenClassifier`` runs the same forward in numpy.
+``DictionaryStubModel`` is the test fake: same tensor shapes, same decode
+path, logits derived from a gazetteer, so the model path's decode can be
+checked against the gazetteer's mentions.
+
+The stage body itself is ``operators/tagger._mention_stage``, shared with
+the gazetteer paths; only the tagger differs (:func:`_infer_rows`).
 
 At 100 TB the unit of work is the Arrow batch (bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``), so executor-python peak
@@ -32,19 +37,22 @@ memory is flat; weights ship once per executor, not per task.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..oracle.iob import split_tag
 from ..oracle.matcher import automaton_match, build_automaton
 from ..oracle.textproc import han_to_zen
-from .tagger import MENTION_SCHEMA, matches_to_iob
+from .tagger import (
+    MAX_LEN,
+    _mention_stage,
+    _page_rows,
+    _pages_text_source,
+    _sentence_rows,
+    matches_to_iob,
+)
 
 PAD, CLS, UNK = "[PAD]", "[CLS]", "[UNK]"
-MAX_LEN = 512
 
 
 class CharTokenizer:
@@ -156,7 +164,7 @@ def label_vocab_for_types(types: list[str]) -> LabelVocab:
 
 
 class DictionaryStubModel:
-    """Deterministic logits from a gazetteer — the sandbox's 'weights'.
+    """Deterministic logits from a gazetteer — the test fake of a model.
 
     Produces a [B, T, L] float32 tensor with 1.0 at the IOB label of each
     char position (positions covered by a dictionary match) so that
@@ -164,54 +172,19 @@ class DictionaryStubModel:
     pad/trim/decode machinery.
     """
 
-    def __init__(
-        self,
-        term_types: dict[str, str],
-        label_vocab: LabelVocab,
-        emulate_compute: bool = False,
-        d_model: int = 64,
-        d_ff: int = 256,
-    ):
+    def __init__(self, term_types: dict[str, str], label_vocab: LabelVocab):
         self.term_types = {han_to_zen(k): v for k, v in term_types.items()}
         self.label_vocab = label_vocab
-        # emulate_compute: burn one seeded FFN block ([B,T,d]·[d,ff]·[ff,d])
-        # per batch so benchmarks see a transformer-representative
-        # compute-to-coordination ratio (a real forward is 100-1000x the
-        # gazetteer cost; without this the pipeline measures scheduler
-        # overhead, not inference scaling). Semantics are unchanged — the
-        # gazetteer logits are returned either way.
-        self.emulate_compute = emulate_compute
-        self.d_model = d_model
-        self.d_ff = d_ff
         self._automaton = None
-        self._weights = None
 
     def __getstate__(self):
         state = self.__dict__.copy()
         state["_automaton"] = None  # rebuilt lazily on each executor
-        state["_weights"] = None
         return state
-
-    def _ffn(self, texts: list[str], padded_len: int) -> None:
-        if self._weights is None:
-            rng = np.random.RandomState(0)
-            self._weights = (
-                rng.randn(self.d_model, self.d_ff).astype(np.float32) * 0.02,
-                rng.randn(self.d_ff, self.d_model).astype(np.float32) * 0.02,
-            )
-        w1, w2 = self._weights
-        x = np.zeros((len(texts), padded_len, self.d_model), np.float32)
-        for bi, t in enumerate(texts):
-            codes = np.frombuffer(t.encode("utf-32-le"), np.uint32)[: padded_len - 1]
-            x[bi, 1 : len(codes) + 1, 0] = codes % 97
-        h = np.maximum(x @ w1, 0.0)
-        (h @ w2).sum()  # forward block executed, activations discarded
 
     def logits(self, texts: list[str], padded_len: int) -> np.ndarray:
         if self._automaton is None:
             self._automaton = build_automaton(list(self.term_types))
-        if self.emulate_compute:
-            self._ffn(texts, padded_len)
         out = np.zeros((len(texts), padded_len, len(self.label_vocab.itos)), np.float32)
         o_id = self.label_vocab.stoi["O"]
         out[:, :, o_id] = 0.5  # default O everywhere (incl. [CLS]/[PAD] pos)
@@ -367,21 +340,13 @@ def _infer_rows(rows, mdl, vocab, batch_size: int, max_len: int, out: dict):
             out["word"].append(chunk[row][s:e])
 
 
-def _out_to_pdf(out: dict) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "url": pd.Series(out["url"], dtype="object"),
-            "sent_id": pd.Series(out["sent_id"], dtype="int32"),
-            "start": pd.Series(out["start"], dtype="int32"),
-            "end": pd.Series(out["end"], dtype="int32"),
-            "type": pd.Series(out["type"], dtype="object"),
-            "word": pd.Series(out["word"], dtype="object"),
-        }
-    )
+def _model_tagger(model, label_vocab: LabelVocab, batch_size: int):
+    """The model as a ``_mention_stage`` tagger."""
 
+    def tag(rows: list[tuple], out: dict[str, list]) -> None:
+        _infer_rows(rows, model, label_vocab, batch_size, MAX_LEN, out)
 
-def _empty_out() -> dict:
-    return {k: [] for k in ("url", "sent_id", "start", "end", "type", "word")}
+    return tag
 
 
 def ner_sentences(
@@ -389,21 +354,13 @@ def ner_sentences(
     model,
     label_vocab: LabelVocab,
     batch_size: int = 8,
-    max_len: int = MAX_LEN,
 ) -> DataFrame:
-    """The NER mapInPandas stage over a sentences table."""
-    sc = sentences.sparkSession.sparkContext
-    bc = sc.broadcast((model, label_vocab))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mdl, vocab = bc.value
-        for pdf in batches:
-            out = _empty_out()
-            rows = list(zip(pdf["url"], pdf["sent_id"], pdf["sent"]))
-            _infer_rows(rows, mdl, vocab, batch_size, max_len, out)
-            yield _out_to_pdf(out)
-
-    return sentences.mapInPandas(run, schema=MENTION_SCHEMA)
+    """The NER mapInPandas stage over a sentences table. Null and empty
+    sentences are skipped; a sentence longer than ``MAX_LEN - 1`` tokens is
+    truncated, not dropped."""
+    return _mention_stage(
+        sentences, _sentence_rows, _model_tagger, model, label_vocab, batch_size
+    )
 
 
 def ner_pages(
@@ -411,11 +368,7 @@ def ner_pages(
     model,
     label_vocab: LabelVocab,
     batch_size: int = 8,
-    max_len: int = MAX_LEN,
     lang_filter: str | None = "ja",
-    text_col: str = "text",
-    key_col: str = "url",
-    html_col: str | None = "html",
 ) -> DataFrame:
     """Fused pages → mentions via the model path: preprocess + sentence
     split + batched inference + BIO decode in ONE Arrow stage (one Python
@@ -423,29 +376,11 @@ def ner_pages(
     for why fusion matters at high parallelism). html→text fallback for
     null-text rows happens inside the same section (null-gated JVM-side, so
     text rows never ship html bytes through Arrow)."""
-    from ..oracle.textproc import html_to_text, preprocess_text, split_sentences
-
-    from ..operators.tagger import _pages_text_source
-
-    sc = pages.sparkSession.sparkContext
-    bc = sc.broadcast((model, label_vocab))
-
-    src = _pages_text_source(pages, text_col, key_col, html_col, lang_filter)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mdl, vocab = bc.value
-        for pdf in batches:
-            out = _empty_out()
-            rows = []
-            for url, text, hb in zip(pdf["url"], pdf["text"], pdf["_html"]):
-                if text is None or text == "":
-                    text = html_to_text(hb) if hb is not None else ""
-                    if not text:
-                        continue
-                for sid, sent in enumerate(split_sentences(preprocess_text(text))):
-                    if len(sent) <= max_len:
-                        rows.append((url, sid, sent))
-            _infer_rows(rows, mdl, vocab, batch_size, max_len, out)
-            yield _out_to_pdf(out)
-
-    return src.mapInPandas(run, schema=MENTION_SCHEMA)
+    return _mention_stage(
+        _pages_text_source(pages, lang_filter),
+        _page_rows,
+        _model_tagger,
+        model,
+        label_vocab,
+        batch_size,
+    )

@@ -1,11 +1,11 @@
-"""Dictionary (gazetteer) NER tagger — sentences → mentions.
+"""Dictionary (gazetteer) NER tagger and the one mention-extraction stage.
 
 The scale path of the reference's containment join
 (``util/text_utils.py:154-192`` + ``knowledge_bases/hyakuyaku.py:71-88``):
 instead of scanning the text once per dictionary term (O(|text|·|dict|)),
-an Aho-Corasick automaton is built ONCE on the driver from the (small)
-dictionary, broadcast to executors, and each Arrow batch is scanned in
-O(|text|). Longest-first overlap masking matches the reference greedy loop
+an Aho-Corasick automaton is built once per task from the (small)
+broadcast dictionary, and each Arrow batch is scanned in O(|text|).
+Longest-first overlap masking matches the reference greedy loop
 exactly (property-tested in tests/test_oracle_text_fuzzy.py).
 
 Matching happens on han_to_zen-normalized text — identical normalization to
@@ -15,23 +15,28 @@ keeps downstream joins consistent.
 Output: mentions(url, sent_id, start, end, type, word) — char offsets into
 the normalized sentence, end-exclusive.
 
-For parity with the model path the matcher result is round-tripped through
-char-level IOB tags and the reference BIO FSM (so the production decode code
-path is exercised even with the dictionary stand-in model).
+``automaton_match`` already returns non-overlapping matches, so each match
+is emitted as a span directly. Round-tripping them through char-level IOB
+tags and the reference BIO FSM returns the same spans; that round trip is
+the reference (``plans/oracle_pipeline.oracle_mentions``), property-tested
+in tests/test_mention_stage.py.
+
+Every mention path — gazetteer or model (``operators/ner.py``), over a
+sentences table or over pages — is the same ``mapInPandas`` body,
+:func:`_mention_stage`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..oracle.iob import iob_to_spans
 from ..oracle.matcher import automaton_match, build_automaton
-from ..oracle.textproc import han_to_zen, html_to_text
+from ..oracle.textproc import han_to_zen, html_to_text, preprocess_text, split_sentences
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -43,6 +48,11 @@ MENTION_SCHEMA = T.StructType(
         T.StructField("word", T.StringType(), False),
     ]
 )
+
+# pages paths drop sentences longer than MAX_LEN chars
+# (``util/text_utils.py:50-61``); the model's position table holds MAX_LEN
+# tokens including [CLS]
+MAX_LEN = 512
 
 
 def matches_to_iob(text: str, matches: list[tuple[int, int, str]], types: dict[str, str]) -> list[str]:
@@ -56,10 +66,104 @@ def matches_to_iob(text: str, matches: list[tuple[int, int, str]], types: dict[s
     return tags
 
 
+class _Gazetteer:
+    """Dictionary tagger: ``term_types`` maps surface → entity type; with
+    ``normalize`` surfaces and sentences are han_to_zen-normalized first."""
+
+    def __init__(self, term_types: dict[str, str], normalize: bool):
+        self.types = {
+            (han_to_zen(k) if normalize else k): v for k, v in term_types.items()
+        }
+        self.normalize = normalize
+        self.automaton = build_automaton(list(self.types))
+
+    def spans(self, sent: str) -> list[tuple[int, int, str, str]]:
+        """(start, end, type, word) of every match, offsets into the
+        (normalized) ``sent``."""
+        text = han_to_zen(sent) if self.normalize else sent
+        return [
+            (s, e, self.types[term], text[s:e])
+            for s, e, term in automaton_match(text, self.automaton)
+        ]
+
+    def __call__(self, rows, out: dict[str, list]) -> None:
+        for url, sid, sent in rows:
+            for s, e, ttype, word in self.spans(sent):
+                out["url"].append(url)
+                out["sent_id"].append(sid)
+                out["start"].append(s)
+                out["end"].append(e)
+                out["type"].append(ttype)
+                out["word"].append(word)
+
+
+def _mentions_frame(out: dict[str, list]) -> pd.DataFrame:
+    """MENTION_SCHEMA pandas frame from per-column lists."""
+    return pd.DataFrame(
+        {
+            f.name: pd.Series(
+                out[f.name],
+                dtype="int32" if isinstance(f.dataType, T.IntegerType) else "object",
+            )
+            for f in MENTION_SCHEMA
+        }
+    )
+
+
+def _sentence_rows(pdf: pd.DataFrame) -> list[tuple]:
+    """(url, sent_id, sent) rows of a sentences batch; a null or empty
+    sentence has no mentions and is skipped."""
+    return [row for row in zip(pdf["url"], pdf["sent_id"], pdf["sent"]) if row[2]]
+
+
+def _page_sentences(text: str | None, html: bytes | None) -> list[tuple[int, str]]:
+    """(sent_id, sent) of one page: the html→text fallback when ``text`` is
+    null or empty, preprocess + split, then the ``MAX_LEN`` cut. sent_ids
+    are assigned before the cut, as in ``pages_to_sentences``."""
+    if not text:
+        text = html_to_text(html) if html is not None else ""
+    return [
+        (sid, sent)
+        for sid, sent in enumerate(split_sentences(preprocess_text(text)))
+        if len(sent) <= MAX_LEN
+    ]
+
+
+def _page_rows(pdf: pd.DataFrame) -> list[tuple]:
+    """(url, sent_id, sent) rows of a ``_pages_text_source`` batch."""
+    return [
+        (url, sid, sent)
+        for url, text, html in zip(pdf["url"], pdf["text"], pdf["_html"])
+        for sid, sent in _page_sentences(text, html)
+    ]
+
+
+def _mention_stage(
+    src: DataFrame,
+    rows_of: Callable[[pd.DataFrame], list[tuple]],
+    make_tagger: Callable,
+    *tagger_args,
+) -> DataFrame:
+    """The one Arrow stage behind every mention path: per batch,
+    ``rows_of`` yields (url, sent_id, sent) rows and the tagger, built once
+    per task as ``make_tagger(*tagger_args)`` from the broadcast args,
+    appends their mentions to per-column lists. One Python runner section,
+    no shuffle."""
+    bc = src.sparkSession.sparkContext.broadcast(tagger_args)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        tag = make_tagger(*bc.value)
+        for pdf in batches:
+            out = {name: [] for name in MENTION_SCHEMA.fieldNames()}
+            tag(rows_of(pdf), out)
+            yield _mentions_frame(out)
+
+    return src.mapInPandas(run, schema=MENTION_SCHEMA)
+
+
 def tag_sentences(
     sentences: DataFrame,
     term_types: dict[str, str],
-    decode_via_iob: bool = True,
     normalize: bool = True,
 ) -> DataFrame:
     """sentences(url, sent_id, sent) → mentions. One Arrow stage, no shuffle.
@@ -69,57 +173,11 @@ def tag_sentences(
     han_to_zen-normalized before matching; disable for ASCII corpora where
     surfaces should surface verbatim.
     """
-    normalized_types = {
-        (han_to_zen(k) if normalize else k): v for k, v in term_types.items()
-    }
-    terms = list(normalized_types)
-    sc = sentences.sparkSession.sparkContext
-    bc = sc.broadcast((terms, normalized_types, normalize))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        term_list, types, do_norm = bc.value
-        automaton = build_automaton(term_list)
-        for pdf in batches:
-            urls, sids, starts, ends, tps, words = [], [], [], [], [], []
-            for url, sid, sent in zip(pdf["url"], pdf["sent_id"], pdf["sent"]):
-                text = han_to_zen(sent) if do_norm else sent
-                matches = automaton_match(text, automaton)
-                if decode_via_iob:
-                    tags = matches_to_iob(text, matches, types)
-                    for span in iob_to_spans(list(text), tags):
-                        urls.append(url)
-                        sids.append(sid)
-                        starts.append(span["start"])
-                        ends.append(span["end"])
-                        tps.append(span["type"])
-                        words.append(span["word"])
-                else:
-                    for s, e, term in matches:
-                        urls.append(url)
-                        sids.append(sid)
-                        starts.append(s)
-                        ends.append(e)
-                        tps.append(types[term])
-                        words.append(term)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "start": pd.Series(starts, dtype="int32"),
-                    "end": pd.Series(ends, dtype="int32"),
-                    "type": pd.Series(tps, dtype="object"),
-                    "word": pd.Series(words, dtype="object"),
-                }
-            )
-
-    return sentences.mapInPandas(run, schema=MENTION_SCHEMA)
+    return _mention_stage(sentences, _sentence_rows, _Gazetteer, term_types, normalize)
 
 
 def _pages_text_source(
     pages: DataFrame,
-    text_col: str,
-    key_col: str,
-    html_col: str | None,
     lang_filter: str | None,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -129,38 +187,29 @@ def _pages_text_source(
     empty): the pushable filter keeps text-or-html rows, and the JVM-side
     ``when`` gate keeps html bytes out of the Arrow transfer for text rows.
     EVERY pages consumer must come through here (CLAUDE.md rule 10) so the
-    input contract — fallback + lang gating — stays in one place;
+    input contract stays in one place: fallback gating and lang here, then
+    html decode, split and length cut in :func:`_page_sentences`.
     ``extra_cols`` carries additional passthrough columns (e.g. warc_ts
     for the streaming pair path)."""
-    has_text = F.col(text_col).isNotNull() & (F.col(text_col) != "")
-    if html_col is not None and html_col in pages.columns:
-        df = pages.filter(has_text | F.col(html_col).isNotNull())
-        html_arg = F.when(~has_text, F.col(html_col))
+    has_text = F.col("text").isNotNull() & (F.col("text") != "")
+    if "html" in pages.columns:
+        df = pages.filter(has_text | F.col("html").isNotNull())
+        html_arg = F.when(~has_text, F.col("html"))
     else:
         df = pages.filter(has_text)
         html_arg = F.lit(None).cast("binary")
     if lang_filter is not None and "lang" in pages.columns:
         df = df.filter(F.col("lang") == lang_filter)
-    return df.select(
-        F.col(key_col).alias("url"),
-        F.col(text_col).alias("text"),
-        html_arg.alias("_html"),
-        *[F.col(c) for c in extra_cols],
-    )
+    return df.select("url", "text", html_arg.alias("_html"), *extra_cols)
 
 
 def extract_mentions(
     pages: DataFrame,
     term_types: dict[str, str],
-    max_length: int = 512,
     lang_filter: str | None = "ja",
-    normalize: bool = True,
-    text_col: str = "text",
-    key_col: str = "url",
-    html_col: str | None = "html",
 ) -> DataFrame:
     """Fused pages → mentions: preprocess + sentence-split + 512-filter +
-    han_to_zen + tag + BIO decode in ONE Arrow stage.
+    han_to_zen + tag in ONE Arrow stage.
 
     Semantically identical to ``pages_to_sentences`` → ``tag_sentences``
     (sent_ids are assigned before the length filter, matching the oracle),
@@ -175,50 +224,6 @@ def extract_mentions(
     null-gated JVM-side (``when(NOT has_text, html)``) so Arrow never ships
     html bytes for pages that already carry text.
     """
-    from ..oracle.textproc import preprocess_text, split_sentences
-
-    normalized_types = {
-        (han_to_zen(k) if normalize else k): v for k, v in term_types.items()
-    }
-    sc = pages.sparkSession.sparkContext
-    bc = sc.broadcast((list(normalized_types), normalized_types, normalize, max_length))
-
-    src = _pages_text_source(pages, text_col, key_col, html_col, lang_filter)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        term_list, types, do_norm, maxlen = bc.value
-        automaton = build_automaton(term_list)
-        for pdf in batches:
-            urls, sids, starts, ends, tps, words = [], [], [], [], [], []
-            for url, text, hb in zip(pdf["url"], pdf["text"], pdf["_html"]):
-                if text is None or text == "":
-                    text = html_to_text(hb) if hb is not None else ""
-                    if not text:
-                        continue
-                for sid, sent in enumerate(split_sentences(preprocess_text(text))):
-                    if len(sent) > maxlen:
-                        continue
-                    norm = han_to_zen(sent) if do_norm else sent
-                    matches = automaton_match(norm, automaton)
-                    if not matches:
-                        continue
-                    tags = matches_to_iob(norm, matches, types)
-                    for span in iob_to_spans(list(norm), tags):
-                        urls.append(url)
-                        sids.append(sid)
-                        starts.append(span["start"])
-                        ends.append(span["end"])
-                        tps.append(span["type"])
-                        words.append(span["word"])
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "start": pd.Series(starts, dtype="int32"),
-                    "end": pd.Series(ends, dtype="int32"),
-                    "type": pd.Series(tps, dtype="object"),
-                    "word": pd.Series(words, dtype="object"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=MENTION_SCHEMA)
+    return _mention_stage(
+        _pages_text_source(pages, lang_filter), _page_rows, _Gazetteer, term_types, True
+    )

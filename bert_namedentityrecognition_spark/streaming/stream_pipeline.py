@@ -73,30 +73,20 @@ def streaming_pairs(
     import pandas as pd
 
     from ..operators.normalize import build_dim_index, resolve_surfaces_driver
-    from ..operators.tagger import _pages_text_source
+    from ..operators.tagger import _Gazetteer, _page_sentences, _pages_text_source
     from ..oracle.ade import NO_SYMPTOMS
-    from ..oracle.matcher import automaton_match, build_automaton
-    from ..oracle.textproc import (
-        han_to_zen,
-        html_to_text,
-        preprocess_text,
-        split_sentences,
-    )
 
-    normalized_types = {han_to_zen(k): v for k, v in term_types.items()}
     sc = pages_stream.sparkSession.sparkContext
-    bc = sc.broadcast((list(normalized_types), normalized_types, dim_rows, threshold))
+    bc = sc.broadcast((term_types, dim_rows, threshold))
 
     # the shared pages contract (rule 10): html→text fallback rows pass
     # through with _html set — a WARC-sourced stream carries text=None by
     # design, and a bare text filter would silently drop every page
-    src = _pages_text_source(
-        pages_stream, "text", "url", "html", lang_filter, extra_cols=("warc_ts",)
-    )
+    src = _pages_text_source(pages_stream, lang_filter, extra_cols=("warc_ts",))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        terms, types, dims, thr = bc.value
-        automaton = build_automaton(terms)
+        tt, dims, thr = bc.value
+        gazetteer = _Gazetteer(tt, True)
         # one O(|dim|) index build per task, not one per distinct surface
         idx = build_dim_index(dims)
         cache: dict[tuple[str, str], tuple] = {}
@@ -111,21 +101,11 @@ def streaming_pairs(
         for pdf in batches:
             ts_out, subj_out, obj_out = [], [], []
             for ts, text, hb in zip(pdf["warc_ts"], pdf["text"], pdf["_html"]):
-                if text is None or text == "":
-                    text = html_to_text(hb) if hb is not None else ""
-                    if not text:
-                        continue
                 drugs: list[str] = []
                 syms_raw: list[str] = []
-                for sent in split_sentences(preprocess_text(text)):
-                    if len(sent) > 512:
-                        continue
-                    norm = han_to_zen(sent)
-                    for s, e, term in automaton_match(norm, automaton):
-                        if types[term] == "drug":
-                            drugs.append(norm[s:e])
-                        else:
-                            syms_raw.append(norm[s:e])
+                for _, sent in _page_sentences(text, hb):
+                    for _, _, ttype, word in gazetteer.spans(sent):
+                        (drugs if ttype == "drug" else syms_raw).append(word)
                 if remove_duplicates:
                     drug_list = sorted(set(drugs))
                     sym_list = sorted(set(syms_raw))

@@ -77,11 +77,11 @@ def test_ner_pages_numpy_model_matches_local_forward(spark):
         preprocess_text,
         split_sentences,
     )
+    from bert_namedentityrecognition_spark.operators.tagger import MENTION_SCHEMA
     from bert_namedentityrecognition_spark.operators.ner import (
         CharTokenizer,
         LabelVocab,
         NumpyTokenClassifier,
-        _empty_out,
         _infer_rows,
         label_vocab_for_types,
         ner_pages,
@@ -118,7 +118,7 @@ def test_ner_pages_numpy_model_matches_local_forward(spark):
         for sid, sent in enumerate(split_sentences(preprocess_text(t))):
             if len(sent) <= 512:
                 rows.append((f"u{i}", sid, sent))
-    out = _empty_out()
+    out = {k: [] for k in MENTION_SCHEMA.fieldNames()}
     _infer_rows(rows, model, vocab, batch_size=2, max_len=512, out=out)
     want = set(
         zip(out["url"], out["sent_id"], out["start"], out["end"], out["type"], out["word"])

@@ -1,6 +1,7 @@
 """The NER stage's vectorized BIO decode against the reference FSM
 (``oracle.iob.iob_to_spans``), the packed numpy forward's pickling and
-dtype contract, and ``ner_pages`` on degenerate inputs."""
+dtype contract, and ``ner_pages`` and ``extract_mentions`` on degenerate
+inputs."""
 
 from __future__ import annotations
 
@@ -15,11 +16,11 @@ from hypothesis import strategies as st
 from bert_namedentityrecognition_spark.operators.ner import (
     PAD,
     LabelVocab,
-    _empty_out,
     _infer_rows,
     bio_spans,
     label_vocab_for_types,
 )
+from bert_namedentityrecognition_spark.operators.tagger import MENTION_SCHEMA
 from bert_namedentityrecognition_spark.oracle.iob import iob_to_spans
 
 VOCABS = [
@@ -181,7 +182,7 @@ def test_infer_rows_decode_matches_reference(granularity, vocab_idx):
     mdl = _HashModel(tok, len(vocab.itos))
     rows = [(f"u{i % 3}", i, s) for i, s in enumerate(SENTS * 3)]
     for batch_size, max_len in [(1, 512), (3, 512), (8, 6)]:
-        out = _empty_out()
+        out = {k: [] for k in MENTION_SCHEMA.fieldNames()}
         _infer_rows(rows, mdl, vocab, batch_size, max_len, out)
         got = list(zip(*(out[k] for k in ("url", "sent_id", "start", "end", "type", "word"))))
         assert got == _reference_infer(rows, mdl, vocab, batch_size, max_len)
@@ -265,9 +266,11 @@ def test_gelu_in_float64_is_float64_accurate():
     assert np.all(np.abs(got - ref) <= 0.5 * np.abs(x) * 1.5e-7 + 1e-15)
 
 
-# --- ner_pages on degenerate inputs ----------------------------------------
+# --- ner_pages and extract_mentions on degenerate inputs --------------------
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+GAZETTEER = {"頭": "symptom", "頭痛": "symptom", "薬": "drug"}
+NO_MENTIONS = {"ner_pages": [], "extract_mentions": []}
 
 
 @pytest.fixture(scope="module")
@@ -276,29 +279,36 @@ def numpy_model():
 
 
 def _mentions(spark, rows, model, vocab, partitions=None):
+    """Mention tuples of each pages → mentions stage: the model path
+    (``ner_pages``) and the gazetteer path (``extract_mentions``)."""
     from bert_namedentityrecognition_spark.operators.ner import ner_pages
-    from bert_namedentityrecognition_spark.operators.tagger import MENTION_SCHEMA
+    from bert_namedentityrecognition_spark.operators.tagger import extract_mentions
 
     pages = spark.createDataFrame(rows, PAGES_SCHEMA)
     if partitions is not None:
         pages = pages.repartition(partitions)
-    df = ner_pages(pages, model, vocab)
-    assert df.schema == MENTION_SCHEMA
-    return [tuple(r) for r in df.collect()]
+    got = {}
+    for name, df in [
+        ("ner_pages", ner_pages(pages, model, vocab)),
+        ("extract_mentions", extract_mentions(pages, GAZETTEER)),
+    ]:
+        assert df.schema == MENTION_SCHEMA
+        got[name] = [tuple(r) for r in df.collect()]
+    return got
 
 
 def test_ner_pages_empty_frame(spark, numpy_model):
-    assert _mentions(spark, [], *numpy_model) == []
+    assert _mentions(spark, [], *numpy_model) == NO_MENTIONS
 
 
 def test_ner_pages_all_null_text_and_html(spark, numpy_model):
     rows = [(f"u{i}", None, None, None, "ja") for i in range(4)]
-    assert _mentions(spark, rows, *numpy_model) == []
+    assert _mentions(spark, rows, *numpy_model) == NO_MENTIONS
 
 
 def test_ner_pages_only_overlong_sentences(spark, numpy_model):
     rows = [("u0", None, None, "頭" * 600 + "。", "ja"), ("u1", None, None, "薬" * 513, "ja")]
-    assert _mentions(spark, rows, *numpy_model) == []
+    assert _mentions(spark, rows, *numpy_model) == NO_MENTIONS
 
 
 def test_ner_pages_single_partition_equals_many(spark, numpy_model):
@@ -308,14 +318,17 @@ def test_ner_pages_single_partition_equals_many(spark, numpy_model):
     ]
     one = _mentions(spark, rows, *numpy_model, partitions=1)
     many = _mentions(spark, rows, *numpy_model, partitions=4)
-    assert sorted(one) == sorted(many)
+    for name in NO_MENTIONS:
+        assert sorted(one[name]) == sorted(many[name])
+    assert one["extract_mentions"]
 
 
 def test_ner_pages_one_character_sentence(spark, numpy_model):
     model, vocab = numpy_model
     got = _mentions(spark, [("u0", None, None, "頭", "ja")], model, vocab)
-    out = _empty_out()
+    out = {k: [] for k in MENTION_SCHEMA.fieldNames()}
     _infer_rows([("u0", 0, "頭")], model, vocab, 8, 512, out)
     want = list(zip(*(out[k] for k in ("url", "sent_id", "start", "end", "type", "word"))))
-    assert got == want
-    assert all((s, e, w) == (0, 1, "頭") for _, _, s, e, _, w in got)
+    assert got["ner_pages"] == want
+    assert all((s, e, w) == (0, 1, "頭") for _, _, s, e, _, w in want)
+    assert got["extract_mentions"] == [("u0", 0, 0, 1, "symptom", "頭")]

@@ -67,16 +67,16 @@ class _FixedPieceModel:
 
 def test_wordpiece_decode_lifts_piece_spans_to_char_offsets():
     from bert_namedentityrecognition_spark.operators.ner import (
-        _empty_out,
         _infer_rows,
         label_vocab_for_types,
     )
+    from bert_namedentityrecognition_spark.operators.tagger import MENTION_SCHEMA
 
     tok = _wp_tokenizer()
     vocab = label_vocab_for_types(["drug"])
     model = _FixedPieceModel(tok, vocab)
     sent = "ロキソニン 服用 頭痛"  # pieces: ロキソ ##ニン 服 ##用 頭痛
-    out = _empty_out()
+    out = {k: [] for k in MENTION_SCHEMA.fieldNames()}
     _infer_rows([("u", 0, sent)], model, vocab, batch_size=4, max_len=512, out=out)
     from bert_namedentityrecognition_spark.oracle.textproc import han_to_zen
 
@@ -95,11 +95,11 @@ def test_ner_pages_wordpiece_spark_matches_local(spark):
     )
     from bert_namedentityrecognition_spark.operators.ner import (
         NumpyTokenClassifier,
-        _empty_out,
         _infer_rows,
         label_vocab_for_types,
         ner_pages,
     )
+    from bert_namedentityrecognition_spark.operators.tagger import MENTION_SCHEMA
     from bert_namedentityrecognition_spark.oracle.textproc import (
         han_to_zen,
         preprocess_text,
@@ -140,7 +140,7 @@ def test_ner_pages_wordpiece_spark_matches_local(spark):
         for sid, sent in enumerate(split_sentences(preprocess_text(t))):
             if len(sent) <= 512:
                 rows.append((f"u{i}", sid, sent))
-    out = _empty_out()
+    out = {k: [] for k in MENTION_SCHEMA.fieldNames()}
     _infer_rows(rows, model, vocab, batch_size=2, max_len=512, out=out)
     want = set(
         zip(out["url"], out["sent_id"], out["start"], out["end"], out["type"], out["word"])
