@@ -37,6 +37,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..oracle.fuzzy import ratio
 from ..oracle.textproc import han_to_zen
+from ..sources.dims import local_frame
 
 SENTINEL = ""
 
@@ -548,9 +549,16 @@ def normalize_mentions(
 
     Hybrid resolution: if the distinct (word, type) set fits under
     ``max_driver_surfaces`` it is collected and scored driver-side with the
-    identical oracle kernels (cheap, zero extra python stages); larger sets
-    go through the distributed exact→fuzzy broadcast-join path. Set
-    ``max_driver_surfaces=0`` to force the distributed path.
+    identical oracle kernels; larger sets go through the distributed
+    exact→fuzzy broadcast-join path. Set ``max_driver_surfaces=0`` to force
+    the distributed path.
+
+    The driver path adds zero Python stages: the resolved map is built with
+    :func:`~..sources.dims.local_frame`, so every plan that broadcasts it
+    (triples, nodes, edges) scans a ``LocalTableScan``, and the ``dim``
+    collect is cheap when ``dim`` is one too. A map built by
+    ``createDataFrame(list)`` would be a Python-RDD scan, one Python task
+    per scan in each of those plans.
     """
     spark = mentions.sparkSession
     surfaces = mentions.select("word", "type").distinct()
@@ -561,7 +569,7 @@ def normalize_mentions(
             rows = resolve_surfaces_driver(
                 [(r.word, r.type) for r in sample], dim_rows, threshold, type_to_kind
             )
-            resolved = spark.createDataFrame(rows, _RESOLVED_SCHEMA)
+            resolved = local_frame(spark, rows, _RESOLVED_SCHEMA)
             return mentions.join(F.broadcast(resolved), ["word", "type"], "left")
     resolved = normalize_surfaces(surfaces, dim, threshold, type_to_kind)
     return mentions.join(F.broadcast(resolved), ["word", "type"], "left")

@@ -231,12 +231,15 @@ def build_graph(
             F.countDistinct("url").alias("doc_count"),
         )
     )
-    surf_map = dim.select(
-        F.col("surface").alias("_k"), F.col("entity_id").alias("_id")
-    ).dropDuplicates(["_k"])
-    canon_map = dim.select(
-        F.col("canonical").alias("_k"), F.col("entity_id").alias("_id")
-    ).dropDuplicates(["_k"])
+    # a surface or canonical listed under several entity ids (real MedDRA /
+    # Manbyo dimensions have them) keeps the min id — value-deterministic,
+    # the rule _dedup_dimn uses, never an arbitrary row
+    surf_map = dim.groupBy(F.col("surface").alias("_k")).agg(
+        F.min("entity_id").alias("_id")
+    )
+    canon_map = dim.groupBy(F.col("canonical").alias("_k")).agg(
+        F.min("entity_id").alias("_id")
+    )
     edges = (
         triples.join(
             F.broadcast(surf_map.withColumnRenamed("_id", "_src")),

@@ -9,11 +9,18 @@ Spark dataflow (SURVEY.md §7):
                      broadcast join + window top-1 → broadcast join back)
       → canonical   (alias connected-components map, broadcast)
       → triples     (co-scope pairing join + salted groupBy count)
-      → nodes/edges (partitioned parquet sinks; Iceberg bucketing documented)
+      → nodes/edges (parquet sinks; Iceberg bucketing documented)
 
 Shuffles: exactly two on the hot path at scale — the pairing self-join keyed
 by url (avoidable with bucketed storage) and the triple count aggregation
 (map-side combined, salt-able). Everything else is broadcast or narrow.
+
+Each piece of work runs once per pass: ``mentions`` and ``triples`` are
+persisted (the NER stage and the pairing + count feed several consumers),
+the side tables built on the driver (resolved surface map, fixture and
+loaded dimensions) are ``LocalTableScan`` frames, so broadcasting them runs
+no Python task, and the parquet sink writes each table as its plan emits
+it, with no shuffle of its own.
 """
 
 from __future__ import annotations
@@ -43,14 +50,23 @@ def run_kg_pipeline(
     model=None,
     label_vocab=None,
 ) -> dict[str, DataFrame]:
-    """Returns the full lineage: sentences, mentions, normalized, triples, nodes.
+    """Returns the full lineage: sentences, mentions, normalized, triples,
+    nodes, edges.
 
-    ``mentions``/``normalized`` are persisted by default: they feed multiple
-    consumers (distinct-surface map, drug/symptom branches, No-Symptoms
-    anti-join, nodes agg), and recomputing the NER Arrow stage per consumer
-    is the single biggest avoidable cost. In the cluster deployment the same
-    role is played by writing mentions to storage between stages; persist is
-    the in-session equivalent.
+    With ``persist`` (the default) two frames are persisted:
+
+    - ``mentions`` feeds the distinct-surface map, the pairing, the nodes
+      aggregation and the sink; recomputing the NER Arrow stage per
+      consumer is the single biggest avoidable cost.
+    - ``triples`` feeds both its own sink and ``edges``; without it the
+      edges write re-runs the per-url pairing and the count aggregation.
+
+    ``normalized`` is not persisted: it is a broadcast join of the persisted
+    mentions with a small ``LocalTableScan`` map. In the cluster deployment
+    the same role is played by writing mentions to storage between stages;
+    persist is the in-session equivalent. The caller unpersists
+    ``mentions``; :func:`write_outputs` releases ``triples`` after its two
+    sinks.
     """
     sentences = pages_to_sentences(pages, lang_filter=lang_filter)
     if model is not None:
@@ -65,15 +81,14 @@ def run_kg_pipeline(
     if alias_edges is not None:
         alias_map = canonical_alias_map(alias_edges, dim)
         normalized = apply_alias_map(normalized, alias_map, dim=dim)
-    # normalized is NOT persisted: it is a cheap broadcast-join view over the
-    # persisted mentions; consumers (triples, nodes) recompute that join
-    # rather than paying a second materialization of the mention stream
     triples = build_triples(
         normalized,
         scope=scope,
         remove_duplicates=remove_duplicates,
         salt_buckets=salt_buckets,
     )
+    if persist:
+        triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
     from ..operators.triples import build_graph
 
     graph = build_graph(normalized, dim, triples)
@@ -87,23 +102,30 @@ def run_kg_pipeline(
     }
 
 
-def write_outputs(outputs: dict[str, DataFrame], base_dir: str, url_buckets: int = 64):
-    """Materialize the KG tables.
+def write_outputs(outputs: dict[str, DataFrame], base_dir: str):
+    """Materialize the KG tables as parquet directories.
 
-    Parquet here; on a real deployment these are Iceberg tables with
-    ``partitionedBy(bucket(url_buckets, 'url'))`` for mentions (co-locates
-    the pairing join → no shuffle) and ``bucket(N, 'subj')`` for triples.
+    No table is shuffled for its sink. Mentions come out of the mention
+    stage url-clustered (each page's mentions from one task), and plain
+    parquet records no bucketing a reader could use, so a
+    ``repartition(url)`` would only cost a shuffle of the largest table.
+    Edges are triples-sized. The bucketed sinks are
+    :func:`write_outputs_bucketed` and :func:`write_outputs_iceberg`
+    (``bucket(N, 'url')`` co-locates the pairing join on read).
     Each write is an atomic directory replace = the idempotent-resume unit.
+
+    The triples cache (see :func:`run_kg_pipeline`) serves the triples and
+    edges writes and is released after them: every cached plan left behind
+    is matched against each later query's plan, and a caller that releases
+    only ``mentions`` would keep one per pass. The release waits for the
+    cached blocks to be removed, so no removal work outlives the call.
     """
-    outputs["mentions"].repartition(url_buckets, "url").write.mode(
-        "overwrite"
-    ).parquet(f"{base_dir}/mentions")
+    outputs["mentions"].write.mode("overwrite").parquet(f"{base_dir}/mentions")
     outputs["triples"].write.mode("overwrite").parquet(f"{base_dir}/triples")
     outputs["nodes"].write.mode("overwrite").parquet(f"{base_dir}/nodes")
     if "edges" in outputs:
-        outputs["edges"].repartition("src_id").write.mode("overwrite").parquet(
-            f"{base_dir}/edges"
-        )
+        outputs["edges"].write.mode("overwrite").parquet(f"{base_dir}/edges")
+    outputs["triples"].unpersist(blocking=True)
 
 
 def write_outputs_bucketed(

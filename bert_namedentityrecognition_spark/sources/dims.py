@@ -14,19 +14,43 @@ becomes a one-time export into the canonical ``entity_dim`` shape
   llt.pt_code = pt_j.pt_code``) pre-joined into one flat dimension so the
   runtime pays a single broadcast join instead of two
 - ``dim_from_excel``    — OICI-style Excel, gated on an engine being present
+
+Every frame built from rows held on the driver goes through
+:func:`local_frame`, so it plans as a ``LocalTableScan`` with size stats
+instead of a Python-RDD ``Scan ExistingRDD``.
 """
 
 from __future__ import annotations
 
 import sqlite3
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DIM_SCHEMA = (
     "entity_id string, surface string, canonical string, code string, "
     "kind string, human_check string"
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: str | T.StructType
+) -> DataFrame:
+    """Driver-held rows (tuples in schema order, or dicts) → DataFrame.
+
+    Goes through Arrow, so the plan is a ``LocalTableScan``: scanning it runs
+    no Python task (``createDataFrame(list)`` plans a ``Scan ExistingRDD``
+    whose every scan does), and the optimizer sees its size, so joins
+    against it broadcast. An empty ``rows`` keeps the schema."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    records = [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows]
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def dim_from_csv(
@@ -84,12 +108,12 @@ def dim_from_sqlite(
         r["kind"] = kind
         r["human_check"] = None
         # sqlite columns are often INTEGER (MedDRA llt/pt codes) while the
-        # dim schema is all-string — createDataFrame(StringType) rejects
-        # ints, so coerce the projected values
+        # dim schema is all-string — a string column rejects ints, so
+        # coerce the projected values
         for k in ("entity_id", "surface", "canonical", "code"):
             if r.get(k) is not None and not isinstance(r[k], str):
                 r[k] = str(r[k])
-    return spark.createDataFrame(rows, DIM_SCHEMA) if rows else spark.createDataFrame([], DIM_SCHEMA)
+    return local_frame(spark, rows, DIM_SCHEMA)
 
 
 def sqlite_query_df(
@@ -102,8 +126,8 @@ def sqlite_query_df(
     ``dim_from_sqlite`` layers the entity-dim projection/coercion on top
     of the same connect/execute kernel."""
     with sqlite3.connect(path) as con:
-        rows = [tuple(r) for r in con.execute(query).fetchall()]
-    return spark.createDataFrame(rows, schema)
+        rows = con.execute(query).fetchall()
+    return local_frame(spark, rows, schema)
 
 
 def two_hop_dim(llt: DataFrame, pt: DataFrame) -> DataFrame:
@@ -283,4 +307,4 @@ def dim_from_excel(
         for i, r in enumerate(records)
         if r.get(surface_col) is not None
     ]
-    return spark.createDataFrame(rows, DIM_SCHEMA)
+    return local_frame(spark, rows, DIM_SCHEMA)

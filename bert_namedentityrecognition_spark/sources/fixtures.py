@@ -232,6 +232,8 @@ def pages_to_spark(spark, rows: list[dict]):
 def entity_dim_to_spark(spark, rows: list[dict] | None = None):
     from pyspark.sql import types as T
 
+    from .dims import local_frame
+
     schema = T.StructType(
         [
             T.StructField("entity_id", T.StringType(), False),
@@ -242,7 +244,7 @@ def entity_dim_to_spark(spark, rows: list[dict] | None = None):
             T.StructField("human_check", T.StringType(), True),
         ]
     )
-    return spark.createDataFrame(rows or generate_entity_dim(), schema=schema)
+    return local_frame(spark, rows or generate_entity_dim(), schema)
 
 
 # --- WARC ingest fixture (driver-gate raw-source scan) -----------------------

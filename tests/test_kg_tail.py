@@ -1,0 +1,283 @@
+"""The KG tail after the mention stage: normalize → triples → graph → sink.
+
+- edge endpoint ids are value-deterministic when a dictionary key maps to
+  several entity ids;
+- degenerate inputs (no pages, nothing resolves, one vs four partitions, one
+  url split across input partitions) give defined outputs whose triples
+  equal the oracle kernels over the written mentions;
+- the plans do each piece of work once: driver-built side tables are
+  ``LocalTableScan``s, edges read the persisted triples, and the mentions
+  sink has no shuffle.
+- a warm pass generates no code: every class of the pass is still in the
+  session's generated-code cache.
+"""
+
+import os
+import time
+
+import pyarrow.parquet as pq
+import pytest
+
+from bert_namedentityrecognition_spark.operators.normalize import _RESOLVED_SCHEMA
+from bert_namedentityrecognition_spark.oracle.ade import ade_pairs_from_lists
+from bert_namedentityrecognition_spark.oracle.normalize import DictNormalizer
+from bert_namedentityrecognition_spark.oracle.textproc import han_to_zen
+from bert_namedentityrecognition_spark.plans.pipeline import run_kg_pipeline, write_outputs
+from bert_namedentityrecognition_spark.sources import fixtures
+
+PAGE_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+TERM_TYPES = {"ロキソニン": "drug", "アスピリン": "drug", "頭痛": "symptom", "発熱": "symptom"}
+
+
+def _dim_row(eid, surface, kind, canonical=None):
+    return {"entity_id": eid, "surface": surface, "canonical": canonical or surface,
+            "code": None, "kind": kind, "human_check": None}
+
+
+DIM = [
+    _dim_row("D1", "ロキソニン", "drug"),
+    _dim_row("D2", "アスピリン", "drug"),
+    _dim_row("S1", "頭痛", "symptom"),
+    _dim_row("S2", "発熱", "symptom"),
+]
+
+
+def _pages(spark, rows):
+    return spark.createDataFrame([(u, None, None, t, "ja") for u, t in rows], PAGE_SCHEMA)
+
+
+def _oracle_triples(mentions_dir, dim_rows, threshold=70.0):
+    """Triples from the written mentions with the pure-Python kernels:
+    per-url (drug words, symptom words) lists, symptoms through the top-1
+    fuzzy normalizer, pairing and counting by ``oracle/ade.py``."""
+    t = pq.read_table(mentions_dir, columns=["url", "type", "word"]).to_pydict()
+    docs = {}
+    for url, typ, word in zip(t["url"], t["type"], t["word"]):
+        d = docs.setdefault(url, ([], []))
+        (d[0] if typ == "drug" else d[1]).append(word)
+    sym = [r for r in dim_rows if r["kind"] == "symptom"]
+    normalizer = DictNormalizer({r["surface"] for r in sym}, threshold=threshold)
+    canonical = {han_to_zen(r["surface"]): r["canonical"] for r in sym}
+
+    def norm(word):
+        surface, _ = normalizer.normalize(word)
+        return canonical[surface] if surface else ""
+
+    counts = ade_pairs_from_lists(
+        [d for d, _ in docs.values()], [s for _, s in docs.values()],
+        remove_duplicates=True, normalize=norm,
+    )
+    return sorted((s, o, n) for (s, o), n in counts.items())
+
+
+def _run_and_write(spark, pages, dim_rows, base):
+    dim = fixtures.entity_dim_to_spark(spark, dim_rows)
+    out = run_kg_pipeline(pages, dim, TERM_TYPES)
+    write_outputs(out, base)
+    read = {k: spark.read.parquet(f"{base}/{k}") for k in ("mentions", "triples", "nodes", "edges")}
+    triples = sorted((r.subj, r.obj, r["count"]) for r in read["triples"].collect())
+    assert triples == _oracle_triples(f"{base}/mentions", dim_rows)
+    # every edge is a triple with ids attached
+    edges = sorted((r.subj, r.obj, r["count"]) for r in read["edges"].collect())
+    assert edges == triples
+    out["mentions"].unpersist()
+    return out, read, triples
+
+
+@pytest.mark.parametrize("first,second", [(("D9", "S9"), ("D1", "S1")), (("D1", "S1"), ("D9", "S9"))])
+@pytest.mark.parametrize("partitions", [1, 4])
+def test_edge_endpoint_ids_take_min_entity_id(spark, partitions, first, second):
+    """A surface (drug) and a canonical (symptom) listed under two entity
+    ids resolve to the smaller id, whatever the dictionary's row order and
+    partitioning — the value-deterministic rule of ``_dedup_dimn``."""
+    rows = [
+        _dim_row(first[0], "ロキソニン", "drug"),
+        _dim_row(second[0], "ロキソニン", "drug"),
+        _dim_row(first[1], "頭痛", "symptom"),
+        _dim_row(second[1], "ずつう", "symptom", canonical="頭痛"),
+    ]
+    dim = fixtures.entity_dim_to_spark(spark, rows)
+    dim = dim.coalesce(1) if partitions == 1 else dim.repartition(partitions)
+    pages = _pages(spark, [("https://a", "ロキソニンを服用後、頭痛が出現した。")])
+    out = run_kg_pipeline(pages, dim, TERM_TYPES, persist=False)
+    edges = [(e.src_id, e.dst_id, e.subj, e.obj) for e in out["edges"].collect()]
+    assert edges == [("D1", "S1", "ロキソニン", "頭痛")]
+
+
+def test_empty_page_frame(spark, tmp_path):
+    base = str(tmp_path / "kg")
+    out, read, triples = _run_and_write(spark, _pages(spark, []), DIM, base)
+    assert triples == []
+    assert all(read[k].count() == 0 for k in read)
+    # the empty resolved map keeps its schema: the normalized columns and
+    # their types are the driver path's _RESOLVED_SCHEMA
+    resolved = spark.createDataFrame([], _RESOLVED_SCHEMA).schema
+    normalized = {f.name: f.dataType for f in out["normalized"].schema}
+    for f in resolved:
+        assert normalized[f.name] == f.dataType, f.name
+    assert read["edges"].columns == ["src_id", "pred", "dst_id", "subj", "obj", "count"]
+
+
+def test_no_surface_resolves(spark, tmp_path):
+    """Every mention fails to resolve: symptoms drop out of the pairs, a
+    drug-only page still pairs with No Symptoms, and no node exists."""
+    dim = [_dim_row("X1", "zzzzz", "drug"), _dim_row("X2", "qqqqq", "symptom")]
+    pages = _pages(spark, [
+        ("https://a", "ロキソニンを服用後、頭痛が出現した。"),
+        ("https://b", "アスピリンを飲んだ。"),
+    ])
+    out, read, triples = _run_and_write(spark, pages, dim, str(tmp_path / "kg"))
+    assert triples == [("アスピリン", "No Symptoms", 1)]
+    assert read["nodes"].count() == 0
+    assert {r.method for r in out["normalized"].collect()} == {"fuzzy"}
+    assert [(r.src_id, r.dst_id) for r in read["edges"].collect()] == [
+        ("SURF:アスピリン", "SURF:No Symptoms")
+    ]
+
+
+def test_one_partition_equals_four(spark, tmp_path):
+    rows = fixtures.generate_pages(40, seed=5)
+    got = []
+    for n in (1, 4):
+        pages = fixtures.pages_to_spark(spark, rows).repartition(n)
+        dim = fixtures.entity_dim_to_spark(spark)
+        out = run_kg_pipeline(pages, dim, fixtures.pipeline_term_types())
+        base = str(tmp_path / f"kg{n}")
+        write_outputs(out, base)
+        got.append({
+            k: sorted(map(tuple, spark.read.parquet(f"{base}/{k}").collect()))
+            for k in ("mentions", "triples", "nodes", "edges")
+        })
+        out["mentions"].unpersist()
+    assert got[0] == got[1]
+    assert got[0]["triples"] and got[0]["edges"]
+
+
+def test_duplicate_url_split_across_partitions(spark, tmp_path):
+    """One url's pages sit in two input partitions, so its mentions come
+    from two tasks and land in two files; the pairing still treats them as
+    one document, like the oracle over all its written mentions."""
+    rows = [
+        ("https://dup", "ロキソニンを服用後、頭痛が出現した。"),
+        ("https://c", "アスピリンで発熱が治まった。"),
+        ("https://dup", "アスピリンを飲んだら発熱した。"),
+        ("https://d", "ロキソニンを飲んだ。"),
+    ]
+    rdd = spark.sparkContext.parallelize([(u, None, None, t, "ja") for u, t in rows], 2)
+    pages = spark.createDataFrame(rdd, PAGE_SCHEMA)
+    assert pages.rdd.glom().map(lambda p: [r.url for r in p]).collect() == [
+        ["https://dup", "https://c"], ["https://dup", "https://d"]
+    ]
+    base = str(tmp_path / "kg")
+    _, read, triples = _run_and_write(spark, pages, DIM, base)
+    files = {
+        f for f in os.listdir(f"{base}/mentions") if f.endswith(".parquet")
+        if "https://dup" in pq.read_table(f"{base}/mentions/{f}").column("url").to_pylist()
+    }
+    assert len(files) == 2
+    assert ("ロキソニン", "発熱", 1) in triples and ("アスピリン", "頭痛", 1) in triples
+
+
+# --- plan shape ---------------------------------------------------------------
+
+
+def _plan_nodes(plan):
+    """Physical plan nodes of an executed plan, through adaptive wrappers
+    and query stages, but not into the plans cached relations were built
+    from (an ``InMemoryTableScan`` is a leaf here)."""
+    name = plan.getClass().getSimpleName()
+    yield name, plan
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+        return
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _scans(nodes, node_class):
+    """Sorted output column names of each node of ``node_class``."""
+    return [sorted(a.name() for a in _seq(p.output())) for n, p in nodes if n == node_class]
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _executed(df):
+    df.collect()
+    return df._jdf.queryExecution().executedPlan()
+
+
+def test_tail_plans_do_each_piece_of_work_once(spark, tmp_path):
+    src = str(tmp_path / "pages")
+    fixtures.pages_to_spark(spark, fixtures.generate_pages(60, seed=3)).write.parquet(src)
+    pages = spark.read.parquet(src)
+    out = run_kg_pipeline(pages, fixtures.entity_dim_to_spark(spark), fixtures.pipeline_term_types())
+
+    nodes_plan = _executed(out["nodes"])
+    edges_plan = _executed(out["edges"])
+    for plan in (nodes_plan, edges_plan):
+        # also the plans the cached relations were built from
+        assert "Scan ExistingRDD" not in plan.toString()
+
+    # the resolved surface map and the dimension are local tables
+    local = "LocalTableScanExec"
+    assert ["canonical", "entity_id", "type", "word"] in _scans(_plan_nodes(nodes_plan), local)
+    edge_nodes = list(_plan_nodes(edges_plan))
+    assert ["entity_id", "surface"] in _scans(edge_nodes, local)
+    assert ["canonical", "entity_id"] in _scans(edge_nodes, local)
+
+    # edges read the persisted triples: one cached scan of the triples
+    # columns and no pairing aggregation of their own
+    assert _scans(edge_nodes, "InMemoryTableScanExec") == [["count", "obj", "pred", "subj"]]
+    assert "ObjectHashAggregateExec" not in [n for n, _ in edge_nodes]
+
+    # the mentions sink adds no shuffle: find its execution in the SQL
+    # status store (filled asynchronously by the listener bus)
+    store = spark._jsparkSession.sharedState().statusStore()
+    base = str(tmp_path / "kg")
+    write_outputs(out, base)
+    deadline = time.monotonic() + 10
+    while True:
+        executions = _seq(store.executionsList())
+        mention_writes = [
+            e.physicalPlanDescription() for e in executions
+            if f"{base}/mentions," in e.physicalPlanDescription()
+        ]
+        if mention_writes or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    assert len(mention_writes) == 1, mention_writes
+    assert "InMemoryTableScan" in mention_writes[0]
+    assert "Exchange" not in mention_writes[0], mention_writes[0]
+    # the sink released the triples cache it was kept for
+    assert not out["triples"].is_cached
+    out["mentions"].unpersist()
+
+
+def _codegen_compiles(spark) -> int:
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_pass_compiles_no_code(spark, tmp_path):
+    """A second identical pass finds every generated class in the cache.
+    Spark's default cache (100 classes in 4 LRU segments) is about one
+    pass, so a warm pass recompiled some of its classes in some processes."""
+    src = str(tmp_path / "pages")
+    fixtures.pages_to_spark(spark, fixtures.generate_pages(60, seed=5)).write.parquet(src)
+    dim = fixtures.entity_dim_to_spark(spark)
+
+    def one_pass(base):
+        out = run_kg_pipeline(spark.read.parquet(src), dim, fixtures.pipeline_term_types())
+        write_outputs(out, base)
+        out["mentions"].unpersist()
+
+    one_pass(str(tmp_path / "kg1"))
+    before = _codegen_compiles(spark)
+    one_pass(str(tmp_path / "kg2"))
+    assert _codegen_compiles(spark) == before

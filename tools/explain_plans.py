@@ -111,11 +111,13 @@ def main():
         "kg_incremental_merge join pre-aggregated edge- or span-sized sides",
         "FULL OUTER (Spark cannot broadcast a",
         "full-outer side); kg_bucketed_join is the INTENDED zero-exchange",
-        "co-located bucket SMJ; kg_e2e_triples' SMJs sit on tiny",
-        "Scan ExistingRDD fixture dims INSIDE a BroadcastExchange build side",
-        "(stats-less local relations — AQE converts them to broadcast at",
-        "runtime, invisible in this pre-execution explain; the parquet-backed",
-        "twin kg_e2e_triples_lev shows the all-broadcast shape);",
+        "co-located bucket SMJ; kg_e2e_triples' dimension and resolved",
+        "surface map are LocalTableScans, so every join against them is a",
+        "BroadcastHashJoin already in this pre-execution explain; its three",
+        "remaining SMJs join the alias connected-components output",
+        "(localCheckpoint-ed, stats-less Scan ExistingRDD relations) INSIDE",
+        "a BroadcastExchange build side (tiny at runtime, where AQE's",
+        "statistics can still convert them);",
         "kg_alias_components likewise joins two stats-less local relations",
         "(the alias fixture) that AQE broadcast-converts at runtime;",
         "dedup_minhash_clusters' SMJ is the components-star output join on",
