@@ -4310,8 +4310,10 @@ FROM pairs GROUP BY subj, obj
 
 
 def _kg_fuzzy_indel(spark, sf):
-    """Reference-parity fuzzy normalization (indel ratio Arrow UDF): runs the
-    near-miss document vocabulary through the two-phase exact→fuzzy join."""
+    """Reference-parity fuzzy normalization (indel ratio): runs the near-miss
+    document vocabulary through the distributed exact→fuzzy resolver
+    (``normalize_surfaces``: one mapInPandas stage running
+    ``resolve_surfaces`` against a per-worker ``build_dim_index``)."""
     from bert_namedentityrecognition_spark.operators.normalize import normalize_surfaces
     from bert_namedentityrecognition_spark.sources import fixtures
 
@@ -5646,7 +5648,7 @@ def _streaming_windowed_triples(spark, sf):
 
     from bert_namedentityrecognition_spark.operators.normalize import (
         build_dim_index,
-        resolve_surfaces_driver,
+        resolve_surfaces,
     )
     from bert_namedentityrecognition_spark.oracle.matcher import (
         automaton_match,
@@ -5681,7 +5683,7 @@ def _streaming_windowed_triples(spark, sf):
             assert han_to_zen(sent) == sent, sent
             matched = {t for _a, _b, t in automaton_match(sent, auto)}
             assert matched == {d, s}, (sent, matched)
-            rec = resolve_surfaces_driver([(s, "symptom")], dim_rows, 70.0, index=idx)[0]
+            rec = resolve_surfaces([(s, "symptom")], idx, 70.0)[0]
             assert rec[2] == s, rec  # identity dim: canon(s) == s
 
     rows = [
@@ -8333,13 +8335,14 @@ def _meddra_two_hop(spark, sf):
     ``dim_from_sqlite`` layers on), pre-joined into one dimension by
     ``two_hop_dim`` (left join + ``coalesce(pt_name, surface)`` fallback
     for dangling pt_codes + VALUE-deterministic surface dedup — the
-    ``dropDuplicates`` row-order pick was replaced by the
-    ``_dedup_dimn``-style window this round), then broadcast-equi-joined
-    against a 4n-row arithmetic mention stream and counted. The fixture
-    has no rng — pure integer arithmetic — so the SQL twin replays
-    generation, hop, dedup, and counting exactly. Ref: reference two-hop
-    is ``knowledge_bases/meddra.py`` (LLT→PT via SQLite); collision and
-    dangling-PT cadences are asserted present at fixture-build time."""
+    ``dropDuplicates`` row-order pick was replaced by the min
+    (canonical, entity_id, code) rule of ``build_dim_index``), then
+    broadcast-equi-joined against a 4n-row arithmetic mention stream and
+    counted. The fixture has no rng — pure integer arithmetic — so the SQL
+    twin replays generation, hop, dedup, and counting exactly. Ref:
+    reference two-hop is ``knowledge_bases/meddra.py`` (LLT→PT via
+    SQLite); collision and dangling-PT cadences are asserted present at
+    fixture-build time."""
     import os
 
     from bert_namedentityrecognition_spark.sources import fixtures

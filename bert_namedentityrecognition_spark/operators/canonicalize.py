@@ -193,7 +193,7 @@ def canonical_alias_map(
 def _rep_rows(dim: DataFrame, remap: list[str], part: list[str], pfx: str) -> DataFrame:
     """One dim row per ``part`` key, chosen VALUE-deterministically (min
     (canonical, entity_id, code) cast to string, nulls last — the same
-    ordering as ``normalize._dedup_dimn``). ``dropDuplicates`` here would be
+    ordering as ``normalize.build_dim_index``). ``dropDuplicates`` here would be
     row-order-dependent: a surface present under multiple kinds (or as
     normalization-collapsed duplicates) would hand back an arbitrary row's
     ids, differing across runs/partitionings."""
@@ -235,7 +235,7 @@ def apply_alias_map(
     kind's ids back — falling back to a kind-agnostic row when that kind
     has no dim entry for the surface. Either way the row is picked
     value-deterministically (min (canonical, entity_id, code), matching
-    ``normalize._dedup_dimn``), never by row order. Without the remap, a
+    ``normalize.build_dim_index``), never by row order. Without the remap, a
     mention normalized to entity B then alias-collapsed onto A's surface
     kept B's entity_id, so the nodes table split one collapsed entity
     across two ids. A representative absent from dim maps its component's

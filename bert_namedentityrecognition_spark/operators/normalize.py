@@ -1,25 +1,40 @@
-"""Entity normalization — the exact→fuzzy two-phase broadcast join.
+"""Entity normalization — one exact→fuzzy resolver, run where the surfaces are.
 
 Re-expresses the EntityNormalizer family (``knowledge_bases/manbyo.py:52-85``,
-``hyakuyaku.py:50-69``, ``OICI_database.py:22-41``) as DataFrame stages:
+``hyakuyaku.py:50-69``, ``OICI_database.py:22-41``) as one index-and-score
+kernel, :func:`build_dim_index` + :func:`resolve_surfaces`:
 
 1. **distinct surfaces** — normalize each distinct (word, type) once, not per
    mention (the reference normalizes per mention occurrence; same result,
    this is the scale-correct evaluation order).
-2. **exact stage** — broadcast hash equi-join on han_to_zen-normalized
-   surface (the OICI short-circuit, ``OICI_database.py:25-32``); JVM-side.
-3. **fuzzy stage** — only the misses: broadcast theta-join against the
-   dimension with a *length-band prune* derived from the indel-ratio bound
-   (``ratio ≤ 200·min(la,lb)/(la+lb)``; pairs whose bound can't reach the
-   threshold are never scored), then a vectorized Arrow UDF computes the
-   exact reference scorer (indel ratio == rapidfuzz.fuzz.ratio), then
-   ``row_number()`` over ``Window.partitionBy(word).orderBy(score desc,
-   surface asc)`` picks the deterministic top-1 (``process.extractOne``).
-4. **threshold + sentinel** — accept iff score > threshold else '' sentinel
-   (``manbyo.py:63-71``); convert hook = taking the dimension's canonical /
-   code columns in the join itself.
-5. **join back** — mention stream joins the tiny surface→canonical map
+2. **index** — the dimension is han_to_zen-normalized once and keyed per
+   (surface_norm, kind), one row per key chosen by value.
+3. **exact stage** — lookup of the han_to_zen-normalized surface (the OICI
+   short-circuit, ``OICI_database.py:25-32``).
+4. **fuzzy stage** — only the misses: the same-kind rows that pass a
+   *length band* derived from the indel-ratio bound
+   (``ratio ≤ 200·min(la,lb)/(la+lb)``; rows whose bound can't reach the
+   threshold are never scored) are scored with the exact reference scorer
+   (indel ratio == rapidfuzz.fuzz.ratio); top-1 by (score desc,
+   surface_norm asc), the deterministic ``process.extractOne``.
+5. **threshold + sentinel** — accept iff score > threshold else '' sentinel
+   (``manbyo.py:63-71``); convert hook = the dimension row's canonical /
+   code columns.
+6. **join back** — mention stream joins the tiny surface→canonical map
    (broadcast); no shuffle of the big side.
+
+Where the kernel runs is the only choice left, made from the observed
+distinct-surface count (:func:`normalize_mentions`): on the driver over the
+collected surfaces, or in one ``mapInPandas`` stage over the distinct
+surfaces (:func:`normalize_surfaces`) against an index built once per
+Python worker from broadcast dimension rows. The streaming pair stage
+(``streaming/stream_pipeline.py:streaming_pairs``) uses the same per-worker
+index.
+
+Other semantics keep their own stages: :func:`oici_normalize_surfaces`
+(raw-key exact branch with sentinels, one recursion) and the all-JVM
+levenshtein scorer of :func:`search_candidates_topk` /
+:func:`normalize_surfaces_lev`.
 
 Skew note: surfaces are distinct before any expensive work, so a hot surface
 ("ロキソニン" in 30% of pages) costs ONE normalization; the join back is a
@@ -27,6 +42,8 @@ broadcast, so no skewed shuffle partition exists on this path at all.
 """
 
 from __future__ import annotations
+
+import itertools
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -41,6 +58,16 @@ from ..sources.dims import local_frame
 
 SENTINEL = ""
 
+# distinct (word, type) sets up to this size are resolved on the driver;
+# larger ones in the distributed stage
+MAX_DRIVER_SURFACES = 100_000
+
+_RESOLVED_SCHEMA = (
+    "word string, type string, canonical string, entity_id string, "
+    "code string, score double, method string"
+)
+_RESOLVED_COLS = [f.split()[0] for f in _RESOLVED_SCHEMA.split(", ")]
+
 
 @pandas_udf(T.StringType())
 def han_to_zen_udf(s: pd.Series) -> pd.Series:
@@ -52,205 +79,174 @@ def indel_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([ratio(x, y) for x, y in zip(a, b)], dtype="float64")
 
 
-def normalized_dim(dim: DataFrame) -> DataFrame:
-    """Dimension with han_to_zen-normalized surface (dict side of the join).
-
-    Normalization must match the mention side exactly (manbyo.py:58) —
-    both run the same ``han_to_zen`` oracle kernel.
-    """
-    return dim.withColumn("surface_norm", han_to_zen_udf(F.col("surface")))
-
-
-def _dedup_dimn(dimn: DataFrame) -> DataFrame:
-    """One row per (surface_norm, kind), chosen VALUE-deterministically
-    (min (canonical, entity_id, code), strings, nulls last). Dictionaries
-    with normalization-collapsed duplicates (e.g. half- and full-width
-    variants of one term as separate rows) would otherwise fan out the
-    exact equi-join — inflating every downstream count — and diverge from
-    the driver kernel, which keys a dict per (surface_norm, kind). Both
-    paths now pick the SAME row by value, not by row order (row order is
-    not stable distributed)."""
-    w = Window.partitionBy("surface_norm", "kind").orderBy(
-        F.col("canonical").asc_nulls_last(),
-        F.col("entity_id").cast("string").asc_nulls_last(),
-        F.col("code").cast("string").asc_nulls_last(),
-    )
-    return (
-        dimn.withColumn("_dn", F.row_number().over(w))
-        .filter(F.col("_dn") == 1)
-        .drop("_dn")
-    )
-
-
 def _dim_row_sort_key(rr: dict) -> tuple:
-    """Driver twin of :func:`_dedup_dimn`'s ordering."""
+    """min (canonical, entity_id, code) as strings, nulls last."""
     return tuple(
         (v is None, "" if v is None else str(v))
         for v in (rr.get("canonical"), rr.get("entity_id"), rr.get("code"))
     )
 
 
-def normalize_surfaces(
-    surfaces: DataFrame,
-    dim: DataFrame,
+def build_dim_index(
+    dim_rows: list[dict],
+) -> tuple[dict[str, list[dict]], dict[tuple[str, str], dict]]:
+    """(by_kind, exact_index) over the normalized dimension — the O(|dim|)
+    part of :func:`resolve_surfaces`, built once per driver call or once
+    per Python worker (:func:`_worker_dim_index`).
+
+    One row per (surface_norm, kind), chosen VALUE-deterministically: the
+    min (canonical, entity_id, code), strings, nulls last. Dictionaries
+    with normalization-collapsed duplicates (e.g. half- and full-width
+    variants of one term as separate rows) would otherwise fan out the
+    exact hit, and a row-order pick would depend on how the dimension is
+    partitioned."""
+    chosen: dict[tuple[str, str], dict] = {}
+    for r in dim_rows:
+        sn = han_to_zen(r["surface"])
+        rr = {**r, "surface_norm": sn}
+        key = (sn, r["kind"])
+        prev = chosen.get(key)
+        if prev is None or _dim_row_sort_key(rr) < _dim_row_sort_key(prev):
+            chosen[key] = rr
+    by_kind: dict[str, list[dict]] = {}
+    exact_index: dict[tuple[str, str], dict] = {}
+    for (sn, kind), rr in chosen.items():
+        by_kind.setdefault(kind, []).append(rr)
+        exact_index[(sn, kind)] = rr
+    return by_kind, exact_index
+
+
+def resolve_surfaces(
+    surface_rows,
+    index: tuple[dict, dict],
     threshold: float = 70.0,
-    type_to_kind: dict[str, str] | None = None,
-) -> DataFrame:
-    """surfaces(word, type) → (word, type, canonical, entity_id, score, method).
+) -> list[tuple]:
+    """(word, type) pairs → (word, type, canonical, entity_id, code, score,
+    method) tuples, one per input pair, against a :func:`build_dim_index`
+    result. ``type`` is the dimension ``kind`` the word is resolved in.
 
-    ``type_to_kind`` maps mention types to dimension ``kind`` values
-    (default: identity). Rejections carry the '' sentinel and score of the
-    best (rejected) candidate, mirroring ``manbyo.py:68-71``.
-    """
-    spark = surfaces.sparkSession
-    dimn = _dedup_dimn(
-        normalized_dim(dim).select(
-            "surface_norm", "canonical", "entity_id", "code", "kind"
-        )
-    )
-
-    if type_to_kind:
-        mapping = F.create_map(
-            *[F.lit(x) for kv in type_to_kind.items() for x in kv]
-        )
-        surfaces = surfaces.withColumn("kind_key", mapping[F.col("type")])
-    else:
-        surfaces = surfaces.withColumn("kind_key", F.col("type"))
-
-    surf = surfaces.withColumn("word_norm", han_to_zen_udf(F.col("word")))
-
-    # --- exact stage: broadcast hash equi-join --------------------------------
-    exact = surf.join(
-        F.broadcast(dimn),
-        (surf.word_norm == dimn.surface_norm) & (surf.kind_key == dimn.kind),
-        "left",
-    )
-    hits = exact.filter(F.col("surface_norm").isNotNull()).select(
-        "word",
-        "type",
-        F.col("canonical"),
-        F.col("entity_id"),
-        F.col("code"),
-        F.lit(100.0).alias("score"),
-        F.lit("exact").alias("method"),
-    )
-    misses = exact.filter(F.col("surface_norm").isNull()).select(
-        "word", "type", "kind_key", "word_norm"
-    )
-
-    # --- fuzzy stage: banded broadcast theta-join + exact scorer --------------
-    lw = F.length("word_norm").cast("double")
-    ls = F.length("surface_norm").cast("double")
-    band_ok = (200.0 * F.least(lw, ls) / (lw + ls)) > F.lit(threshold)
-    cand = misses.join(
-        F.broadcast(dimn),
-        (misses.kind_key == dimn.kind) & band_ok,
-        "left",
-    ).withColumn(
-        "score",
-        F.when(
-            F.col("surface_norm").isNotNull(),
-            indel_ratio_udf(F.col("word_norm"), F.col("surface_norm")),
-        ).otherwise(F.lit(0.0)),
-    )
-    w = Window.partitionBy("word", "type").orderBy(
-        F.col("score").desc(), F.col("surface_norm").asc_nulls_last()
-    )
-    fuzzy = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "word",
-            "type",
-            F.when(F.col("score") > threshold, F.col("canonical"))
-            .otherwise(F.lit(SENTINEL))
-            .alias("canonical"),
-            F.when(F.col("score") > threshold, F.col("entity_id"))
-            .otherwise(F.lit(None).cast("string"))
-            .alias("entity_id"),
-            F.when(F.col("score") > threshold, F.col("code"))
-            .otherwise(F.lit(None).cast("string"))
-            .alias("code"),
-            "score",
-            F.lit("fuzzy").alias("method"),
-        )
-    )
-    return hits.unionByName(fuzzy)
+    Exact hit: score 100.0, method 'exact'. Otherwise method 'fuzzy': the
+    top-1 band-passing candidate is accepted iff its score > ``threshold``.
+    A rejection carries the '' sentinel, null ids and the best
+    band-passing score, or 0.0 when the band leaves no candidate. That is
+    not always the best score over the whole kind (which is what
+    ``oracle.normalize.DictNormalizer`` reports): the band only prunes
+    candidates that cannot pass the threshold, and one of them can still
+    outscore every candidate the band keeps. Canonical, entity_id and code
+    always agree with a per-kind ``DictNormalizer``."""
+    by_kind, exact_index = index
+    out = []
+    for word, kind in surface_rows:
+        wn = han_to_zen(word)
+        hit = exact_index.get((wn, kind))
+        if hit is not None:
+            out.append(
+                (word, kind, hit["canonical"], hit["entity_id"], hit.get("code"), 100.0, "exact")
+            )
+            continue
+        lw = len(wn)
+        best: tuple[float, str, dict] | None = None
+        for rr in by_kind.get(kind, []):
+            ls = len(rr["surface_norm"])
+            if 200.0 * min(lw, ls) / (lw + ls) <= threshold:
+                continue  # banded prune: this row cannot score > threshold
+            s = ratio(wn, rr["surface_norm"])
+            if best is None or s > best[0] or (s == best[0] and rr["surface_norm"] < best[1]):
+                best = (s, rr["surface_norm"], rr)
+        if best is not None and best[0] > threshold:
+            rr = best[2]
+            out.append(
+                (word, kind, rr["canonical"], rr["entity_id"], rr.get("code"), best[0], "fuzzy")
+            )
+        else:
+            score = 0.0 if best is None else best[0]
+            out.append((word, kind, SENTINEL, None, None, score, "fuzzy"))
+    return out
 
 
 # per-worker-process cache of built dim indexes, keyed by a driver-assigned
 # sequence number (survives across tasks via spark.python.worker.reuse)
-import itertools as _it
-
 _WORKER_DIM_INDEX: dict[int, tuple] = {}
-_UDF_BC_SEQ = _it.count()
+_DIM_SEQ = itertools.count()
 
 
-def normalize_mentions_udf(
-    mentions: DataFrame,
-    dim_rows: list[dict],
+def _broadcast_dim(sc, dim_rows: list[dict]) -> tuple:
+    """Broadcast ``dim_rows`` under a fresh key for :func:`_worker_dim_index`.
+    The key is taken driver-side: a worker-side ``Broadcast`` carries no
+    ``.id``."""
+    return next(_DIM_SEQ), sc.broadcast(dim_rows)
+
+
+def _worker_dim_index(bdim: tuple) -> tuple:
+    """The :func:`build_dim_index` of a :func:`_broadcast_dim` result,
+    built once per Python worker process, not once per task. Call it from
+    inside the stage function: this module-level function resolves
+    ``_WORKER_DIM_INDEX`` in the worker's imported module, where a closure
+    shipped by value would carry a fresh copy of the dict per task."""
+    key, bc = bdim
+    idx = _WORKER_DIM_INDEX.get(key)
+    if idx is None:
+        _WORKER_DIM_INDEX.clear()  # one live dimension per worker is the norm
+        idx = _WORKER_DIM_INDEX[key] = build_dim_index(bc.value)
+    return idx
+
+
+def normalize_surfaces(
+    surfaces: DataFrame,
+    dim: DataFrame,
     threshold: float = 70.0,
-    type_to_kind: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Streaming-safe normalization: one Arrow stage resolving each mention
-    against the broadcast dimension with the oracle kernels. The dim index
-    is built ONCE per worker per broadcast (cached across reused workers —
-    re-normalizing a 100k-row dictionary per batch would dominate the
-    stage) and the per-task surface cache is bounded by the task's
-    distinct surfaces. No shuffle, no window, no driver collect — legal on
-    streaming DataFrames and exactly the batch semantics."""
-    import pandas as pd
+    """surfaces(word, type) → (word, type, canonical, entity_id, code,
+    score, method), one row per input row — pass distinct surfaces.
 
-    from pyspark.sql import types as T
-
-    sc = mentions.sparkSession.sparkContext
-    bc = sc.broadcast((dim_rows, threshold, type_to_kind))
-    # key captured DRIVER-side: the worker-side Broadcast object carries no
-    # .id attribute
-    bc_key = next(_UDF_BC_SEQ)
-    schema = T.StructType(
-        mentions.schema.fields
-        + [
-            T.StructField("canonical", T.StringType()),
-            T.StructField("entity_id", T.StringType()),
-            T.StructField("code", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-            T.StructField("method", T.StringType()),
-        ]
+    The distributed placement of :func:`resolve_surfaces`: one
+    ``mapInPandas`` stage over the surfaces, each worker resolving against
+    an index built once from the broadcast dimension rows. No join, window
+    or shuffle; rows equal the driver path's."""
+    bdim = _broadcast_dim(
+        surfaces.sparkSession.sparkContext, [r.asDict() for r in dim.collect()]
     )
 
     def run(batches):
-        rows_dim, thr, t2k = bc.value
-        # index cached per broadcast across REUSED workers (module-level,
-        # spark.python.worker.reuse) — one O(|dim|) build per worker, not
-        # one per task or per batch
-        idx = _WORKER_DIM_INDEX.get(bc_key)
-        if idx is None:
-            idx = build_dim_index(rows_dim)
-            _WORKER_DIM_INDEX.clear()  # one live dim per worker is the norm
-            _WORKER_DIM_INDEX[bc_key] = idx
-        cache: dict[tuple[str, str], tuple] = {}
+        index = _worker_dim_index(bdim)
         for pdf in batches:
-            need = {
-                (w, t)
-                for w, t in zip(pdf["word"], pdf["type"])
-                if (w, t) not in cache
-            }
-            if need:
-                for rec in resolve_surfaces_driver(
-                    sorted(need), rows_dim, thr, t2k, index=idx
-                ):
-                    cache[(rec[0], rec[1])] = rec[2:]
-            res = [cache[(w, t)] for w, t in zip(pdf["word"], pdf["type"])]
-            out = pdf.copy()
-            out["canonical"] = [r[0] for r in res]
-            out["entity_id"] = [r[1] for r in res]
-            out["code"] = [r[2] for r in res]
-            out["score"] = [r[3] for r in res]
-            out["method"] = [r[4] for r in res]
-            yield out
+            yield pd.DataFrame(
+                resolve_surfaces(zip(pdf["word"], pdf["type"]), index, threshold),
+                columns=_RESOLVED_COLS,
+            )
 
-    return mentions.mapInPandas(run, schema=schema)
+    return surfaces.select("word", "type").mapInPandas(run, schema=_RESOLVED_SCHEMA)
+
+
+def normalize_mentions(
+    mentions: DataFrame,
+    dim: DataFrame,
+    threshold: float = 70.0,
+) -> DataFrame:
+    """mentions + canonical columns. Distinct-surface dedup then broadcast
+    join back — the mention stream itself is never shuffled.
+
+    If the distinct (word, type) set has at most ``MAX_DRIVER_SURFACES``
+    rows it is collected and resolved on the driver; larger sets go through
+    :func:`normalize_surfaces`. Both run :func:`resolve_surfaces`, so the
+    placement changes where the work runs, not the rows.
+
+    The driver path adds zero Python stages: the resolved map is built with
+    :func:`~..sources.dims.local_frame`, so every plan that broadcasts it
+    (triples, nodes, edges) scans a ``LocalTableScan``, and the ``dim``
+    collect is cheap when ``dim`` is one too. A map built by
+    ``createDataFrame(list)`` would be a Python-RDD scan, one Python task
+    per scan in each of those plans.
+    """
+    surfaces = mentions.select("word", "type").distinct()
+    sample = surfaces.limit(MAX_DRIVER_SURFACES + 1).collect()
+    if len(sample) <= MAX_DRIVER_SURFACES:
+        index = build_dim_index([r.asDict() for r in dim.collect()])
+        rows = resolve_surfaces([(r.word, r.type) for r in sample], index, threshold)
+        resolved = local_frame(mentions.sparkSession, rows, _RESOLVED_SCHEMA)
+    else:
+        resolved = normalize_surfaces(surfaces, dim, threshold)
+    return mentions.join(F.broadcast(resolved), ["word", "type"], "left")
 
 
 OICI_AMBIGUOUS = "[AMB]"
@@ -290,7 +286,11 @@ def oici_normalize_surfaces(
     Like the kernel, a dictionary whose keys are not closed under
     han_to_zen would cycle (the zenkaku candidate never hits the exact
     branch) — checked once driver-side with a bounded action and failed
-    loudly, instead of looping in the reference's manner."""
+    loudly, instead of looping in the reference's manner.
+
+    Its own stage rather than :func:`resolve_surfaces`: the exact branch
+    looks up the RAW key with sentinel values, and a fuzzy match recurses
+    into it; ``indel_ratio_udf`` is its scorer."""
     mapn = mapping.withColumn("key_norm", han_to_zen_udf(F.col("key")))
     if mapn.filter(F.col("key") != F.col("key_norm")).limit(1).count():
         raise ValueError(
@@ -343,45 +343,24 @@ def normalize_surfaces_lev(
     surfaces: DataFrame,
     dim: DataFrame,
     threshold: float = 50.0,
-    surface_col: str = "surface",
 ) -> DataFrame:
     """All-JVM fuzzy top-1 variant: score = 100·(1 − levenshtein/max(len)).
 
-    Same staging as ``normalize_surfaces`` but the scorer is Spark's builtin
-    ``levenshtein`` — zero Python on the path, fully codegen-able, and
-    bit-identical to any ANSI engine's ``levenshtein`` (used by the driver's
-    DuckDB oracle). Prefer this when indel-ratio parity with rapidfuzz is
-    not required.
+    :func:`search_candidates_topk` with ``k=1`` plus the threshold/sentinel
+    select: the scorer is Spark's builtin ``levenshtein`` — zero Python on
+    the path, fully codegen-able, and bit-identical to any ANSI engine's
+    ``levenshtein`` (used by the driver's DuckDB oracle). Prefer this when
+    indel-ratio parity with rapidfuzz is not required.
 
     surfaces(word) × dim(surface, canonical) → (word, canonical, score).
     Deterministic top-1: score desc, surface asc. Below-threshold → ''.
     """
-    d = dim.select(
-        F.col(surface_col).alias("_surface"), F.col("canonical").alias("_canon")
-    )
-    scored = surfaces.join(F.broadcast(d)).withColumn(
+    return search_candidates_topk(surfaces, dim, k=1).select(
+        "word",
+        F.when(F.col("score") > threshold, F.col("canonical"))
+        .otherwise(F.lit(SENTINEL))
+        .alias("canonical"),
         "score",
-        F.round(
-            100.0
-            * (
-                1.0
-                - F.levenshtein(F.col("word"), F.col("_surface"))
-                / F.greatest(F.length("word"), F.length("_surface")).cast("double")
-            ),
-            6,
-        ),
-    )
-    w = Window.partitionBy("word").orderBy(F.col("score").desc(), F.col("_surface").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "word",
-            F.when(F.col("score") > threshold, F.col("_canon"))
-            .otherwise(F.lit(SENTINEL))
-            .alias("canonical"),
-            "score",
-        )
     )
 
 
@@ -389,7 +368,6 @@ def search_candidates_topk(
     surfaces: DataFrame,
     dim: DataFrame,
     k: int = 3,
-    surface_col: str = "surface",
     scorer: str = "levenshtein",
 ) -> DataFrame:
     """Top-k candidate retrieval per surface — the reference's ``searchTerm``
@@ -413,12 +391,8 @@ def search_candidates_topk(
     surfaces(word) × dim(surface, canonical) →
     (word, rank 1..k, surface, canonical, score). Deterministic order:
     score desc, surface asc (same total order as the top-1 normalizers)."""
-    d = dim.select(
-        F.col(surface_col).alias("surface"), F.col("canonical").alias("canonical")
-    )
+    d = dim.select("surface", "canonical")
     if scorer == "token_set_ratio":
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
 
         @pandas_udf("double")
         def _tsr(word: pd.Series, surface: pd.Series) -> pd.Series:
@@ -452,127 +426,6 @@ def search_candidates_topk(
         .select("word", F.col("rank").cast("long").alias("rank"),
                 "surface", "canonical", "score")
     )
-
-
-def build_dim_index(
-    dim_rows: list[dict],
-) -> tuple[dict[str, list[dict]], dict[tuple[str, str], dict]]:
-    """(by_kind, exact_index) over the normalized dimension — the O(|dim|)
-    part of :func:`resolve_surfaces_driver`, split out so long-lived
-    workers (the streaming UDF) build it ONCE instead of re-normalizing
-    the whole dictionary on every batch that carries a new surface.
-
-    Value-deterministic dedup per (surface_norm, kind) — the twin of the
-    distributed path's _dedup_dimn (last-row-wins depended on dim row
-    order, which the distributed path cannot reproduce)."""
-    chosen: dict[tuple[str, str], dict] = {}
-    for r in dim_rows:
-        sn = han_to_zen(r["surface"])
-        rr = {**r, "surface_norm": sn}
-        key = (sn, r["kind"])
-        prev = chosen.get(key)
-        if prev is None or _dim_row_sort_key(rr) < _dim_row_sort_key(prev):
-            chosen[key] = rr
-    by_kind: dict[str, list[dict]] = {}
-    exact_index: dict[tuple[str, str], dict] = {}
-    for (sn, kind), rr in chosen.items():
-        by_kind.setdefault(kind, []).append(rr)
-        exact_index[(sn, kind)] = rr
-    return by_kind, exact_index
-
-
-def resolve_surfaces_driver(
-    surface_rows: list[tuple[str, str]],
-    dim_rows: list[dict],
-    threshold: float = 70.0,
-    type_to_kind: dict[str, str] | None = None,
-    index: tuple[dict, dict] | None = None,
-) -> list[tuple]:
-    """Driver-side twin of ``normalize_surfaces`` over collected surfaces.
-
-    Bit-identical semantics (same han_to_zen, same banded prune, same indel
-    scorer, same tie-break) via the oracle kernels. Used by the hybrid path
-    when the distinct-surface set fits on the driver — the evaluation order
-    the reference itself uses (in-memory normalizer dict), and at high core
-    counts it avoids ~6 tiny python-UDF stages whose fixed cost dominates.
-
-    ``index``: a prebuilt :func:`build_dim_index` result — pass it from
-    long-lived callers so ``dim_rows`` isn't re-indexed per call.
-    """
-    by_kind, exact_index = index if index is not None else build_dim_index(dim_rows)
-    out = []
-    for word, mtype in surface_rows:
-        kind = (type_to_kind or {}).get(mtype, mtype)
-        wn = han_to_zen(word)
-        hit = exact_index.get((wn, kind))
-        if hit is not None:
-            out.append(
-                (word, mtype, hit["canonical"], hit["entity_id"], hit.get("code"), 100.0, "exact")
-            )
-            continue
-        lw = len(wn)
-        best: tuple[float, str, dict] | None = None
-        for rr in by_kind.get(kind, []):
-            ls = len(rr["surface_norm"])
-            if 200.0 * min(lw, ls) / (lw + ls) <= threshold:
-                continue  # banded prune, same bound as the distributed path
-            s = ratio(wn, rr["surface_norm"])
-            if best is None or s > best[0] or (s == best[0] and rr["surface_norm"] < best[1]):
-                best = (s, rr["surface_norm"], rr)
-        if best is None:
-            out.append((word, mtype, SENTINEL, None, None, 0.0, "fuzzy"))
-        elif best[0] > threshold:
-            rr = best[2]
-            out.append(
-                (word, mtype, rr["canonical"], rr["entity_id"], rr.get("code"), best[0], "fuzzy")
-            )
-        else:
-            out.append((word, mtype, SENTINEL, None, None, best[0], "fuzzy"))
-    return out
-
-
-_RESOLVED_SCHEMA = (
-    "word string, type string, canonical string, entity_id string, "
-    "code string, score double, method string"
-)
-
-
-def normalize_mentions(
-    mentions: DataFrame,
-    dim: DataFrame,
-    threshold: float = 70.0,
-    type_to_kind: dict[str, str] | None = None,
-    max_driver_surfaces: int = 100_000,
-) -> DataFrame:
-    """mentions + canonical columns. Distinct-surface dedup then broadcast
-    join back — the mention stream itself is never shuffled.
-
-    Hybrid resolution: if the distinct (word, type) set fits under
-    ``max_driver_surfaces`` it is collected and scored driver-side with the
-    identical oracle kernels; larger sets go through the distributed
-    exact→fuzzy broadcast-join path. Set ``max_driver_surfaces=0`` to force
-    the distributed path.
-
-    The driver path adds zero Python stages: the resolved map is built with
-    :func:`~..sources.dims.local_frame`, so every plan that broadcasts it
-    (triples, nodes, edges) scans a ``LocalTableScan``, and the ``dim``
-    collect is cheap when ``dim`` is one too. A map built by
-    ``createDataFrame(list)`` would be a Python-RDD scan, one Python task
-    per scan in each of those plans.
-    """
-    spark = mentions.sparkSession
-    surfaces = mentions.select("word", "type").distinct()
-    if max_driver_surfaces > 0:
-        sample = surfaces.limit(max_driver_surfaces + 1).collect()
-        if len(sample) <= max_driver_surfaces:
-            dim_rows = [r.asDict() for r in dim.collect()]
-            rows = resolve_surfaces_driver(
-                [(r.word, r.type) for r in sample], dim_rows, threshold, type_to_kind
-            )
-            resolved = local_frame(spark, rows, _RESOLVED_SCHEMA)
-            return mentions.join(F.broadcast(resolved), ["word", "type"], "left")
-    resolved = normalize_surfaces(surfaces, dim, threshold, type_to_kind)
-    return mentions.join(F.broadcast(resolved), ["word", "type"], "left")
 
 
 def disambiguate_mentions(

@@ -233,7 +233,7 @@ def build_graph(
     )
     # a surface or canonical listed under several entity ids (real MedDRA /
     # Manbyo dimensions have them) keeps the min id — value-deterministic,
-    # the rule _dedup_dimn uses, never an arbitrary row
+    # like build_dim_index's pick, never an arbitrary row
     surf_map = dim.groupBy(F.col("surface").alias("_k")).agg(
         F.min("entity_id").alias("_id")
     )

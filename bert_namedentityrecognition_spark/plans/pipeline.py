@@ -5,8 +5,8 @@ Spark dataflow (SURVEY.md §7):
     pages(url, warc_ts, html, text, lang)
       → sentences   (filter + posexplode, no shuffle)
       → mentions    (one mapInPandas Arrow stage: han_to_zen + tag + BIO decode)
-      → normalized  (distinct surfaces → exact broadcast join → banded fuzzy
-                     broadcast join + window top-1 → broadcast join back)
+      → normalized  (distinct surfaces → exact→fuzzy resolver, on the driver
+                     or in one mapInPandas stage → broadcast join back)
       → canonical   (alias connected-components map, broadcast)
       → triples     (co-scope pairing join + salted groupBy count)
       → nodes/edges (parquet sinks; Iceberg bucketing documented)

@@ -139,7 +139,7 @@ def two_hop_dim(llt: DataFrame, pt: DataFrame) -> DataFrame:
 
     Surface collisions (two LLTs sharing a surface) are resolved
     VALUE-deterministically — min (canonical, entity_id, code), nulls
-    last, same ordering as ``normalize._dedup_dimn`` — not by
+    last, same ordering as ``normalize.build_dim_index`` — not by
     ``dropDuplicates`` row order, which is not stable distributed."""
     joined = llt.join(F.broadcast(pt), "pt_code", "left").select(
         F.col("llt_code").cast("string").alias("entity_id"),

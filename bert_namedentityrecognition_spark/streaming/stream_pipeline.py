@@ -63,21 +63,27 @@ def streaming_pairs(
     """pages stream → (warc_ts, subj, obj) pair rows, ONE Arrow stage.
 
     Streaming needs no pairing join at all: a page is a single row, so
-    extract → normalize (broadcast dim, oracle kernels) → per-doc dedup →
-    all-pairs (+No Symptoms) are row-local. The only stateful operator left
-    downstream is the windowed count — exactly the shape Structured
-    Streaming supports without stream-stream joins.
+    extract → normalize (``resolve_surfaces`` against the dimension index
+    built once per worker) → per-doc dedup → all-pairs (+No Symptoms) are
+    row-local. The only stateful operator left downstream is the windowed
+    count — exactly the shape Structured Streaming supports without
+    stream-stream joins.
     """
     from collections.abc import Iterator
 
     import pandas as pd
 
-    from ..operators.normalize import build_dim_index, resolve_surfaces_driver
+    from ..operators.normalize import (
+        _broadcast_dim,
+        _worker_dim_index,
+        resolve_surfaces,
+    )
     from ..operators.tagger import _Gazetteer, _page_sentences, _pages_text_source
     from ..oracle.ade import NO_SYMPTOMS
 
     sc = pages_stream.sparkSession.sparkContext
-    bc = sc.broadcast((term_types, dim_rows, threshold))
+    bc = sc.broadcast(term_types)
+    bdim = _broadcast_dim(sc, dim_rows)
 
     # the shared pages contract (rule 10): html→text fallback rows pass
     # through with _html set — a WARC-sourced stream carries text=None by
@@ -85,17 +91,14 @@ def streaming_pairs(
     src = _pages_text_source(pages_stream, lang_filter, extra_cols=("warc_ts",))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tt, dims, thr = bc.value
-        gazetteer = _Gazetteer(tt, True)
-        # one O(|dim|) index build per task, not one per distinct surface
-        idx = build_dim_index(dims)
+        gazetteer = _Gazetteer(bc.value, True)
+        idx = _worker_dim_index(bdim)
         cache: dict[tuple[str, str], tuple] = {}
 
         def canon(word: str, mtype: str) -> str:
             key = (word, mtype)
             if key not in cache:
-                rec = resolve_surfaces_driver([key], dims, thr, index=idx)[0]
-                cache[key] = rec
+                cache[key] = resolve_surfaces([key], idx, threshold)[0]
             return cache[key][2] or ""
 
         for pdf in batches:

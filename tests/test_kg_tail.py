@@ -89,7 +89,7 @@ def _run_and_write(spark, pages, dim_rows, base):
 def test_edge_endpoint_ids_take_min_entity_id(spark, partitions, first, second):
     """A surface (drug) and a canonical (symptom) listed under two entity
     ids resolve to the smaller id, whatever the dictionary's row order and
-    partitioning — the value-deterministic rule of ``_dedup_dimn``."""
+    partitioning — the value-deterministic rule of ``build_dim_index``."""
     rows = [
         _dim_row(first[0], "ロキソニン", "drug"),
         _dim_row(second[0], "ロキソニン", "drug"),

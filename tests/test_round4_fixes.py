@@ -186,8 +186,9 @@ def test_normalize_dedups_collapsed_dim_rows_both_paths(spark):
     exact stage must not fan out (one output row per mention) and the
     distributed and driver paths must pick the SAME row by value."""
     from bert_namedentityrecognition_spark.operators.normalize import (
+        build_dim_index,
         normalize_surfaces,
-        resolve_surfaces_driver,
+        resolve_surfaces,
     )
 
     dim = spark.createDataFrame(
@@ -204,9 +205,9 @@ def test_normalize_dedups_collapsed_dim_rows_both_paths(spark):
     assert len(rows) == 1  # no fan-out
     assert (rows[0].canonical, rows[0].entity_id) == ("CANON_A", "E1")
 
-    got = resolve_surfaces_driver(
+    got = resolve_surfaces(
         [("ロキソニン", "drug")],
-        [r.asDict() for r in dim.collect()],
+        build_dim_index([r.asDict() for r in dim.collect()]),
     )
     assert len(got) == 1
     assert (got[0][2], got[0][3]) == ("CANON_A", "E1")

@@ -51,6 +51,7 @@ def test_ner_pages_equals_extract_mentions(spark, corpus, term_types):
 def test_hybrid_normalizer_driver_equals_distributed(spark, corpus, term_types):
     from bert_namedentityrecognition_spark.operators.normalize import (
         normalize_mentions,
+        normalize_surfaces,
     )
     from bert_namedentityrecognition_spark.operators.tagger import extract_mentions
 
@@ -62,14 +63,10 @@ def test_hybrid_normalizer_driver_equals_distributed(spark, corpus, term_types):
         tuple(r)
         for r in normalize_mentions(mentions, dim, 70.0).select(*cols).distinct().collect()
     }
-    distributed = {
-        tuple(r)
-        for r in normalize_mentions(mentions, dim, 70.0, max_driver_surfaces=0)
-        .select(*cols)
-        .distinct()
-        .collect()
-    }
-    assert driver_side == distributed
+    surfaces = mentions.select("word", "type").distinct()
+    distributed = [tuple(r) for r in normalize_surfaces(surfaces, dim, 70.0).collect()]
+    assert len(distributed) == len(set(distributed))  # one row per surface
+    assert driver_side == set(distributed)
     assert any(r[6] == "fuzzy" and r[2] != "" for r in driver_side)
 
 
@@ -160,28 +157,37 @@ def test_streaming_triples_available_now(spark, tmp_path, corpus, term_types):
     assert again == want
 
 
-def test_streaming_udf_normalizer_matches_other_paths(spark, corpus, term_types):
-    """Third normalization path (streaming-safe in-UDF) must agree with the
-    hybrid driver path on every mention."""
-    from bert_namedentityrecognition_spark.operators.normalize import (
-        normalize_mentions,
-        normalize_mentions_udf,
-    )
-    from bert_namedentityrecognition_spark.operators.tagger import extract_mentions
+def test_worker_dim_index_built_once_per_worker(spark):
+    """The per-worker dimension index behind ``normalize_surfaces`` and
+    ``streaming_pairs`` is built once per Python worker process: every task
+    a reused worker runs sees the same index object, not a rebuild."""
+    import os
 
-    pages = fixtures.pages_to_spark(spark, corpus)
-    dim = fixtures.entity_dim_to_spark(spark)
-    mentions = extract_mentions(pages, term_types)
-    cols = ["url", "sent_id", "start", "end", "word", "type",
-            "canonical", "entity_id", "code", "score", "method"]
-    a = {tuple(r) for r in normalize_mentions(mentions, dim, 70.0).select(*cols).collect()}
-    b = {
-        tuple(r)
-        for r in normalize_mentions_udf(
-            mentions, [r.asDict() for r in dim.collect()], 70.0
-        ).select(*cols).collect()
-    }
-    assert a == b
+    import pandas as pd
+
+    from bert_namedentityrecognition_spark.operators.normalize import (
+        _broadcast_dim,
+        _worker_dim_index,
+    )
+
+    bdim = _broadcast_dim(spark.sparkContext, fixtures.generate_entity_dim())
+
+    def run(batches):
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "idx": [id(_worker_dim_index(bdim))]})
+
+    # idle workers are taken first-in first-out, so the task count must
+    # exceed the idle pool earlier stages left behind for any to be reused
+    rows = spark.range(0, 96, numPartitions=96).mapInPandas(
+        run, "pid long, idx long"
+    ).collect()
+    assert len(rows) == 96
+    by_pid: dict[int, set[int]] = {}
+    for r in rows:
+        by_pid.setdefault(r.pid, set()).add(r.idx)
+    assert len(by_pid) < len(rows), "no worker ran two tasks; nothing was checked"
+    assert all(len(ids) == 1 for ids in by_pid.values()), by_pid
 
 
 def test_html_fallback_parity_across_paths(spark):

@@ -3,14 +3,19 @@ Spark and its DuckDB oracle side-by-side at a given scale factor; compare
 row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+Each query argument is an exact name or a shell-style pattern ('kg_*');
+a name or pattern that matches no query exits non-zero.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -40,7 +45,7 @@ def main():
     from bert_namedentityrecognition_spark.plans.session import build_session
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    patterns = sys.argv[2:]
 
     spark = build_session(app_name="oracle-check", cores=8, shuffle_partitions=16)
     con = duckdb.connect()
@@ -49,10 +54,11 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    unknown = only - qs.keys()
+    unknown = [p for p in patterns if not fnmatch.filter(qs, p)]
     if unknown:
         # a typo'd name must not exit 0 with "0 failures" having run nothing
         sys.exit(f"unknown query name(s): {sorted(unknown)}")
+    only = {n for p in patterns for n in fnmatch.filter(qs, p)}
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
