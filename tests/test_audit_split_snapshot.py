@@ -19,27 +19,6 @@ def _duck(sf="0.001"):
     return con
 
 
-def test_integrity_audit_expected_counts_sf0001():
-    # n=1000: self-loops at 0,500; dup pairs at 300,900 (600 excluded by
-    # %40); orphan at 700; exactly the 5 registered-unreferenced nodes
-    con = _duck()
-    got = dict(con.sql(E.oracle_sql()["kg_integrity_audit"]).fetchall())
-    assert got["n_self_loops"] == 2
-    assert got["n_duplicate_pairs"] == 2
-    assert got["n_orphan_edges"] == 1
-    assert got["n_isolated_nodes"] == 5
-    assert got["n_edges_total"] == 996
-
-
-def test_integrity_audit_spark_matches_oracle(spark):
-    con = _duck()
-    want = dict(con.sql(E.oracle_sql()["kg_integrity_audit"]).fetchall())
-    got = {r.metric: r.value
-           for r in E.queries()["kg_integrity_audit"](
-               spark, "/root/testdata/sf0.001").collect()}
-    assert got == want
-
-
 def test_dataset_split_is_partition_and_roughly_80_10_10():
     con = _duck()
     rows = con.sql(E.oracle_sql()["dataset_split_hash"]).df()
@@ -93,5 +72,5 @@ def test_snapshot_is_scd2_interval_at_t(spark):
 
 def test_all_registered():
     qs, os_ = E.queries(), E.oracle_sql()
-    for q in ("kg_integrity_audit", "dataset_split_hash", "kg_snapshot_asof"):
+    for q in ("dataset_split_hash", "kg_snapshot_asof"):
         assert q in qs and q in os_

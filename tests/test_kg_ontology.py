@@ -1,6 +1,6 @@
-"""RDFS subclass-closure type inference + rollup levels — kernel vs
-distributed operator vs recursive-CTE twin, loud-cycle failure, and the
-grouping_id bit-order contract events_rollup relies on."""
+"""RDFS subclass-closure type inference — kernel vs distributed operator
+vs recursive-CTE twin, loud-cycle failure — plus hand-fixture invariants
+of the shape, BGP, fusion, provenance and ANN-recall queries."""
 
 import duckdb
 import pytest
@@ -78,21 +78,6 @@ def test_rdfs_gate_invariants(spark, sf_dir):
     assert rows[leaf]["n_entailed"] == rows[leaf]["n_direct"]
     # parent's entailed covers each child's
     assert rows[(leaf - 1) // 3]["n_entailed"] >= rows[leaf]["n_entailed"]
-
-
-def test_rollup_levels_are_consistent(spark, sf_dir):
-    import __spark_entry__ as E
-
-    rows = E.queries()["events_rollup"](spark, sf_dir).collect()
-    leaves = [r for r in rows if r["gid"] == 0]
-    subtotals = {r["event_type"]: r["n"] for r in rows if r["gid"] == 1}
-    grand = [r for r in rows if r["gid"] == 3]
-    assert len(grand) == 1 and grand[0]["event_type"] is None
-    assert grand[0]["n"] == sum(subtotals.values())
-    per_type = {}
-    for r in leaves:
-        per_type[r["event_type"]] = per_type.get(r["event_type"], 0) + r["n"]
-    assert per_type == subtotals
 
 
 def test_shape_violations_hand_fixture(spark):
@@ -206,39 +191,6 @@ def test_bgp_match_hand_check(spark, sf_dir):
     assert got  # pattern live at the smallest sf
 
 
-def test_degree_histogram_conservation(spark, sf_dir):
-    """Sum(degree * n_nodes) over each direction == edge count; node
-    totals match the fixture's construction."""
-    import __spark_entry__ as E
-
-    rows = E.queries()["kg_degree_histogram"](spark, sf_dir).collect()
-    out_mass = sum(r["degree"] * r["n_nodes"] for r in rows if r["direction"] == "out")
-    in_mass = sum(r["degree"] * r["n_nodes"] for r in rows if r["direction"] == "in")
-    assert out_mass == in_mass  # every edge has one source and one target
-    # chain+skip at n nodes: n-1 chain + |{1<i<n, i%3!=0}| skip edges
-    import duckdb
-
-    n = duckdb.sql(
-        f"SELECT count(*) FROM '{sf_dir}/events.parquet'"
-    ).fetchone()[0]
-    n_skip = sum(1 for i in range(2, n) if i % 3)
-    assert out_mass == (n - 1) + n_skip
-
-
-def test_unpivot_stats_match_wide_scan(spark, sf_dir):
-    """Long-form per-metric n equals the wide row count, and totals match
-    a direct per-column aggregate."""
-    import __spark_entry__ as E
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    n = li.count()
-    rows = {r["metric"]: r for r in E.queries()["lineitem_unpivot"](spark, sf_dir).collect()}
-    assert set(rows) == {"l_quantity", "l_extendedprice", "l_discount", "l_tax"}
-    assert all(r["n"] == n for r in rows.values())
-    direct = li.agg(F.round(F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double"), 2)).first()[0]
-    assert rows["l_quantity"]["total"] == direct
-
-
 def test_community_profile_invariants(spark, sf_dir):
     """Leader belongs to its community and holds its max rank; member
     counts conserve the node total."""
@@ -328,24 +280,6 @@ def test_record_fusion_gate_conservation(spark, sf_dir):
     assert any(r["n_merged"] > 1 for r in out)  # real merges live
 
 
-def test_q4_exists_branches_partition_orders(spark, sf_dir):
-    """Semi + anti branches partition the orders table exactly."""
-    import __spark_entry__ as E
-
-    rows = E.queries()["q4_priority_exists"](spark, sf_dir).collect()
-    import duckdb
-
-    per_prio = dict(
-        duckdb.sql(
-            f"SELECT o_orderpriority, count(*) FROM '{sf_dir}/orders.parquet' GROUP BY 1"
-        ).fetchall()
-    )
-    for r in rows:
-        assert r["n_with_late"] + r["n_without_late"] == per_prio[r["o_orderpriority"]]
-    assert any(r["n_with_late"] > 0 for r in rows)
-    assert any(r["n_without_late"] > 0 for r in rows)
-
-
 def test_quotient_graph_conserves_edges(spark, sf_dir):
     """Quotient edge mass == undirected edge count; intra rows exist (a
     community's internal cohesion) and the quotient is far smaller than
@@ -358,49 +292,6 @@ def test_quotient_graph_conserves_edges(spark, sf_dir):
     assert sum(r["n_edges"] for r in rows) == n_und
     assert any(r["comm_a"] == r["comm_b"] for r in rows)
     assert len(rows) < n_und
-
-
-def test_moving_stats_frame_semantics(spark, sf_dir):
-    """First event of a user has mov_n 1; mov_n caps at 3; a hand
-    recomputation matches for one user."""
-    import __spark_entry__ as E
-
-    rows = E.queries()["events_moving_stats"](spark, sf_dir).collect()
-    assert rows and max(r["mov_n"] for r in rows) <= 3
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").collect()
-    uid = e[0]["user_id"]
-    mine = sorted(
-        [(r["ts"], r["event_id"], r["value"]) for r in e if r["user_id"] == uid]
-    )
-    got = {
-        r["event_id"]: (r["mov_n"], r["mov_sum"])
-        for r in rows
-        if r["user_id"] == uid
-    }
-    from decimal import Decimal
-
-    for i, (_, eid, _) in enumerate(mine):
-        lo = max(0, i - 2)
-        vals = [Decimal(str(round(v, 4))) for *_, v in mine[lo : i + 1]]
-        assert got[eid][0] == i - lo + 1
-        assert abs(got[eid][1] - float(sum(vals))) < 0.011
-
-
-def test_spend_quartiles_are_balanced_and_ordered(spark, sf_dir):
-    import __spark_entry__ as E
-
-    rows = E.queries()["user_spend_quartiles"](spark, sf_dir).collect()
-    n = len(rows)
-    sizes = {}
-    for r in rows:
-        sizes[r["quartile"]] = sizes.get(r["quartile"], 0) + 1
-    assert set(sizes) == {1, 2, 3, 4}
-    assert max(sizes.values()) - min(sizes.values()) <= 1  # ntile balance
-    # quartile 1 holds the top spenders
-    q1_min = min(r["total_spend"] for r in rows if r["quartile"] == 1)
-    q4_max = max(r["total_spend"] for r in rows if r["quartile"] == 4)
-    assert q1_min >= q4_max
-    assert n == sum(sizes.values())
 
 
 def test_provenance_consistent_with_codoc_counts(spark, sf_dir):
@@ -438,104 +329,6 @@ def test_edge_confidence_sums_to_about_1e6(spark, sf_dir):
         assert 1000000 - n_edges < ppm_sum <= 1000000
     for r in rows:
         assert r["conf_ppm"] == (1000000 * r["count"]) // per[r["subj"]][0]
-
-
-def test_expectations_both_branches_live(spark, sf_dir):
-    import __spark_entry__ as E
-
-    rows = {
-        r["expectation"]: r
-        for r in E.queries()["lineitem_expectations"](spark, sf_dir).collect()
-    }
-    assert rows["not_null"]["passed"] and rows["accepted_values"]["passed"]
-    assert not rows["unique_key"]["passed"] and not rows["value_range"]["passed"]
-    # unique_key violations = rows minus distinct composite keys, recomputed
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    dup = li.count() - li.select("l_orderkey", "l_linenumber").distinct().count()
-    assert rows["unique_key"]["n_violations"] == dup
-
-
-def test_burst_flag_is_exact_integer_predicate(spark, sf_dir):
-    import __spark_entry__ as E
-
-    rows = E.queries()["events_burst_detection"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert r["burst"] == (7 * r["n"] > 2 * r["trailing_sum"])
-    flags = {r["burst"] for r in rows}
-    assert flags == {True, False}  # both branches live
-
-
-def test_attribution_counts_all_purchases(spark, sf_dir):
-    import __spark_entry__ as E
-
-    rows = E.queries()["events_attribution"](spark, sf_dir).collect()
-    total = sum(r["n_purchases"] for r in rows)
-    import duckdb
-
-    n_purch = duckdb.sql(
-        f"SELECT count(*) FROM '{sf_dir}/events.parquet' WHERE event_type = 'purchase'"
-    ).fetchone()[0]
-    assert total == n_purch  # every purchase attributed exactly once
-    # purchases that START a session self-attribute, so the key exists
-    assert any(r["first_touch"] == "purchase" for r in rows)
-
-
-def test_basket_pairs_symmetric_support_directed_confidence(spark, sf_dir):
-    import __spark_entry__ as E
-
-    rows = {(r["a"], r["b"]): r for r in E.queries()["events_basket_pairs"](spark, sf_dir).collect()}
-    for (a, b), r in rows.items():
-        assert rows[(b, a)]["n_ab"] == r["n_ab"]  # support symmetric
-        assert r["conf_ppm"] == (1000000 * r["n_ab"]) // r["n_a"]
-        assert r["n_ab"] <= r["n_a"]
-
-
-def test_dataset_card_invariants(spark, sf_dir):
-    import __spark_entry__ as E
-
-    card = {r["metric"]: r["value"] for r in E.queries()["corpus_dataset_card"](spark, sf_dir).collect()}
-    lang_total = sum(v for k, v in card.items() if k.startswith("lang_"))
-    assert lang_total == card["n_docs"]
-    assert card["min_chars"] <= card["max_chars"] <= card["total_chars"]
-    assert card["n_unique"] <= card["n_docs"]
-    assert card["dup_ppm"] == (1000000 * (card["n_docs"] - card["n_unique"])) // card["n_docs"]
-
-
-def test_adjacency_export_consistency(spark, sf_dir):
-    """Degree equals the CSV's element count; neighbor lists are sorted;
-    the degree histogram derived from the export matches the edge mass."""
-    import __spark_entry__ as E
-
-    rows = E.queries()["kg_adjacency_export"](spark, sf_dir).collect()
-    for r in rows[:50]:
-        parts = r["neighbors_csv"].split(",")
-        assert len(parts) == r["degree"]
-        assert parts == sorted(parts)
-    n_edges_sym = E._alias_graph(spark, sf_dir).count()
-    assert sum(r["degree"] for r in rows) == n_edges_sym
-
-
-def test_phrase_search_matches_python_scan(spark, sf_dir):
-    """Gate query == a plain Python bigram scan over the corpus."""
-    import __spark_entry__ as E
-    import duckdb
-
-    texts = duckdb.sql(
-        f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet'"
-    ).fetchall()
-    want = {}
-    for doc_id, text in texts:
-        t = [x for x in (text or "").strip().split() if x]
-        hits = [i for i in range(len(t) - 1) if t[i] == "spark" and t[i + 1] == "stream"]
-        if hits:
-            want[doc_id] = (len(hits), hits[0] + 1)
-    got = {
-        r["doc_id"]: (r["n_matches"], r["first_pos"])
-        for r in E.queries()["phrase_search"](spark, sf_dir).collect()
-    }
-    assert got == want
-    assert got  # phrase present at the smallest sf
 
 
 def test_ann_recall_eval_composes_gated_queries(spark, sf_dir):
@@ -600,37 +393,3 @@ def test_disjointness_check_matches_python_replay(spark, sf_dir):
     assert r["n_violations"] == len(viol)
     assert r["first_violator"] == min(viol)
     assert r["n_entities"] == n and 0 < len(viol) < n
-
-
-def test_activity_islands_hand_recompute(spark, sf_dir):
-    """Gate query == a plain-Python streak scan over the distinct
-    (user, day) activity set."""
-    import __spark_entry__ as E
-    import duckdb
-    from datetime import timedelta
-
-    rows = duckdb.sql(
-        f"SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) "
-        f"FROM '{sf_dir}/events.parquet'"
-    ).fetchall()
-    per = {}
-    for uid, day in rows:
-        per.setdefault(uid, set()).add(day)
-    want = {}
-    for uid, dayset in per.items():
-        days = sorted(dayset)
-        lens = []
-        cur = 1
-        for a, b in zip(days, days[1:]):
-            if b - a == timedelta(days=1):
-                cur += 1
-            else:
-                lens.append(cur)
-                cur = 1
-        lens.append(cur)
-        want[uid] = (len(lens), max(lens), sum(lens))
-    got = {
-        r["user_id"]: (r["n_islands"], r["longest_streak"], r["active_days"])
-        for r in E.queries()["events_activity_islands"](spark, sf_dir).collect()
-    }
-    assert got == want

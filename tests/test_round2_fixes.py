@@ -241,16 +241,6 @@ def test_strict_span_prf_is_plan_only_and_correct(spark):
 # --- degenerate-input percentiles -------------------------------------------
 
 
-def test_doc_length_percentiles_empty_documents(spark, tmp_path):
-    import __spark_entry__ as entrymod
-
-    schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    spark.createDataFrame([], schema).write.parquet(str(tmp_path / "documents.parquet"))
-    out = entrymod.queries()["doc_length_percentiles"](spark, str(tmp_path))
-    assert out.collect() == []
-    assert [f.name for f in out.schema.fields] == ["p", "n_chars"]
-
-
 # --- pattern-based predicates -------------------------------------------------
 
 

@@ -254,36 +254,6 @@ def test_qerror_symmetric_and_floor_one():
     assert (1000000 * max(50, 0)) // max(min(50, 0), 1) == 50000000
 
 
-def test_l2sq_fold_bit_identical(spark):
-    """The Spark aggregate/zip_with fold and the DuckDB list_reduce fold
-    produce BIT-IDENTICAL squared distances on adversarial float32
-    components (values whose double sums depend on addition order)."""
-    import struct
-
-    import __spark_entry__ as entry
-
-    a = [1e8, 1.0, -1e8, 3.14159, 1e-7, 2.71828] + [0.1] * 58
-    b = [0.0, 2.0, 1e8, -1.0, 1e7, 0.5] + [0.30000001] * 58
-    # round-trip through float32 like the parquet column does
-    f32 = lambda xs: [struct.unpack("f", struct.pack("f", x))[0] for x in xs]
-    a32, b32 = f32(a), f32(b)
-    df = spark.createDataFrame(
-        [(a32, b32)], "va array<float>, vb array<float>"
-    )
-    (got_spark,) = df.select(
-        F.expr(entry._L2SQ_SPARK.format(a="va", b="vb")).alias("d")
-    ).collect()[0]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE t AS SELECT CAST(? AS FLOAT[]) AS va, CAST(? AS FLOAT[]) AS vb",
-        [a32, b32],
-    )
-    (got_duck,) = con.execute(
-        "SELECT " + entry._L2SQ_DUCK.format(a="va", b="vb") + " FROM t"
-    ).fetchone()
-    assert struct.pack("d", got_spark) == struct.pack("d", got_duck)
-
-
 def test_changepoint_statistic_peaks_at_shift():
     """n*P_i - i*T peaks exactly at a constructed level shift."""
     series = [10] * 5 + [50] * 5  # shift after day 5
@@ -296,44 +266,6 @@ def test_changepoint_statistic_peaks_at_shift():
         if s > best:
             best, best_i = s, i
     assert best_i == 5
-
-
-def test_benford_constants_sum_to_one():
-    import __spark_entry__ as entry
-
-    total = sum(entry._BENFORD_PPM)
-    assert abs(total - 1000000) <= 5  # rounding of 9 constants
-    # and they are the canonical log10(1+1/d) values
-    import math
-
-    for d, ppm in enumerate(entry._BENFORD_PPM, start=1):
-        assert ppm == round(1000000 * math.log10(1 + 1 / d))
-
-
-def test_equidepth_buckets_are_contiguous_and_balanced(spark):
-    """Histogram invariants at sf0.001: buckets tile the value range in
-    order and masses differ by at most 1 row."""
-    import __spark_entry__ as entry
-
-    rows = sorted(
-        entry._optimizer_histogram_stats(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["bucket"],
-    )
-    assert [r["bucket"] for r in rows] == list(range(1, 11))
-    masses = [r["n_rows"] for r in rows]
-    assert max(masses) - min(masses) <= 1
-    for prev, cur in zip(rows, rows[1:]):
-        assert prev["hi_cents"] <= cur["lo_cents"]
-
-
-def test_frame_sample_positions_in_bounds(spark):
-    import __spark_entry__ as entry
-
-    rows = entry._multimodal_frame_sample(spark, "/root/testdata/sf0.001").collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r["frame_idx"] * 64 < r["n_frames"] * 64 + 64
-        assert 32 <= r["frame_byte"] <= 126  # printable ASCII enforced
 
 
 def test_bgp_optional_branch_totals(spark):
@@ -373,15 +305,6 @@ def test_modularity_bounds_and_identity(spark):
     assert r["q_shift_ppm"] == (1000000 * (r["q_num"] + r["q_den"])) // (2 * r["q_den"])
     # communities partition all nodes and a chain+heads LPA finds > 1
     assert r["n_communities"] > 1
-
-
-def test_rle_runs_bounds(spark):
-    import __spark_entry__ as entry
-
-    rows = entry._storage_rle_audit(spark, "/root/testdata/sf0.001").collect()
-    assert {r["col_name"] for r in rows} == {"returnflag", "linestatus", "quantity"}
-    for r in rows:
-        assert r["n_distinct"] <= r["n_runs"] <= r["n"]
 
 
 def test_edgecut_range_beats_hash(spark):
@@ -429,28 +352,6 @@ def test_gini_rank_sum_identity():
     assert num * 4 == den * 3  # G = 3/4 = (n-1)/n
 
 
-def test_gap_bits_compression_on_chain(spark):
-    """Chain+skip adjacency compresses hard: gaps are 1 or 2, so ~1-2
-    bits/edge vs 64 raw."""
-    import __spark_entry__ as entry
-
-    (r,) = entry._kg_adjacency_gap_bits(spark, "/root/testdata/sf0.001").collect()
-    assert r["gap_bits"] < r["n_edges"] * 3
-    assert r["compressed_ppm"] < 50000  # > 20x compression
-
-
-def test_autocorr_r2_bounds(spark):
-    import __spark_entry__ as entry
-
-    rows = entry._events_periodicity_autocorr(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r["r2_ppm"] <= 1000000
-        assert r["r_sign"] in (-1, 0, 1)
-
-
 def test_view_selection_prefix_property(spark):
     """Selected views form a contiguous rank prefix within budget, and
     the first unselected view would overflow it."""
@@ -479,41 +380,6 @@ def test_ranker_agreement_bounds(spark):
     for k, r in rows.items():
         assert 0 <= r["n_overlap"] <= k
         assert r["overlap_ppm"] == (1000000 * r["n_overlap"]) // k
-
-
-def test_interval_overlap_sweep(spark):
-    """Every 3rd interval (length 12 > stride 8) overlaps its successor;
-    the sweep counts the successor as overlapping and concurrency peaks
-    at exactly 2."""
-    import __spark_entry__ as entry
-
-    rows = entry._interval_overlap_audit(spark, "/root/testdata/sf0.001").collect()
-    assert len(rows) == 7
-    for r in rows:
-        # one in three intervals is long -> its successor overlaps
-        assert 0 < r["n_overlapping"] <= r["n_intervals"] // 2
-        assert r["max_concurrency"] == 2
-
-
-def test_streaming_interval_join_cross_batch_state(spark):
-    """The pairs whose purchase arrives a micro-batch AFTER its view
-    (i % 7 == 0, i % 3 != 0) are present — provable only via carried
-    stream-join state — and every out-of-window (70-min) pair is absent."""
-    import __spark_entry__ as entry
-
-    rows = entry._streaming_interval_join(spark, "/root/testdata/sf0.001").collect()
-    got = {(r["purchase_id"], r["view_id"]) for r in rows}
-    # self-pairs: i matched with its own view iff lag 10 (i % 3 != 0)
-    self_pairs = {(i, i) for i, _ in ((r["purchase_id"], 0) for r in rows)}
-    for i in range(0, 60):
-        if i % 3 != 0:
-            assert (i, i) in got, i
-        else:
-            assert (i, i) not in got, i
-    cross_batch = [i for i in range(200) if i % 7 == 0 and i % 3 != 0]
-    assert any((i, i) in got for i in cross_batch)
-    for r in rows:
-        assert 0 <= r["lag_min"] <= 60
 
 
 # --- property-based differential tests for the new kernels ---------------
@@ -583,22 +449,6 @@ def test_line_graph_mis_is_maximal_matching(pairs):
             assert any(set(e) & set(m) for m in matched), e
 
 
-def test_streaming_enrichment_totals_and_advancer_excluded(spark):
-    """Enriched totals equal the fixture row count (nothing late-dropped)
-    and the far-future advancer row never reaches the output."""
-    import __spark_entry__ as entry
-    from bert_namedentityrecognition_spark.oracle.bert_sql import (  # noqa: F401
-        pages_for_events,
-    )
-
-    rows = entry._streaming_static_enrichment(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    n = entry._warc_pages_for_events(1000)
-    assert sum(r["n_events"] for r in rows) == n
-    assert all(r["tier"] in (0, 1, 2) for r in rows)
-
-
 def test_orbit_identities(spark):
     """Orbit identities hold row-by-row: orbit2 == C(deg,2) - t, sum of
     wedge-centers == total wedges - 3*triangles... and every orbit is
@@ -615,19 +465,6 @@ def test_orbit_identities(spark):
         assert r["orbit2_wedge_center"] >= 0
 
 
-def test_join_cardinality_fk_exact_self_underestimated(spark):
-    """FK joins: formula exact (q-error == 1.0); self-join on a skewed
-    key: Jensen gap makes the estimate low (act >= est)."""
-    import __spark_entry__ as entry
-
-    rows = {r["join_name"]: r for r in entry._optimizer_join_cardinality_audit(
-        spark, "/root/testdata/sf0.001").collect()}
-    for fk in ("lineitem_orders", "lineitem_part", "orders_customer"):
-        assert rows[fk]["q_error_ppm"] == 1000000, fk
-    s = rows["lineitem_self_partkey"]
-    assert s["act"] >= s["est"]
-
-
 def test_minhash_calibration_bounds(spark):
     import __spark_entry__ as entry
 
@@ -638,42 +475,6 @@ def test_minhash_calibration_bounds(spark):
         assert 0 <= r["est_matches"] <= 16
         assert 0 <= r["true_ppm"] <= 1000000
         assert r["abs_err_ppm"] == abs(r["est_ppm"] - r["true_ppm"])
-
-
-def test_hnsw_levels_geometric(spark):
-    """Level masses follow the 2^-(k+1) ladder and the trailing-zero
-    formula is correct."""
-    import __spark_entry__ as entry
-
-    rows = sorted(
-        entry._ann_hnsw_levels(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["level"],
-    )
-    n = sum(r["n_nodes"] for r in rows)
-    assert rows[0]["level"] == 0
-    # level 0 holds roughly half the nodes
-    assert abs(rows[0]["n_nodes"] - n // 2) < n // 5
-    for h in [1, 2, 3, 4, 8, 12, 1024]:
-        tz = (h ^ (h - 1)).bit_length() - 1
-        assert h % (1 << tz) == 0 and (h >> tz) % 2 == 1
-
-
-def test_timezone_rollup_dst_rules(spark):
-    """The skipped spring-forward hour is absent and the repeated
-    fall-back hour carries roughly double mass."""
-    import datetime as dt
-
-    import __spark_entry__ as entry
-
-    rows = entry._timezone_rollup_audit(spark, "/root/testdata/sf0.001").collect()
-    mar = {r["local_hour"]: r["n"] for r in rows
-           if r["local_date"] == dt.date(2024, 3, 10)}
-    nov = {r["local_hour"]: r["n"] for r in rows
-           if r["local_date"] == dt.date(2024, 11, 3)}
-    assert 2 not in mar          # 02:xx never exists on Mar 10
-    assert 1 in mar and 3 in mar
-    # fall-back: 01:xx occurs twice (EDT and EST readings)
-    assert nov[1] > 1.5 * nov[2]
 
 
 def test_motif_enrichment_strongly_positive(spark):
@@ -707,19 +508,6 @@ def test_triad_balance_partition(spark):
     for r in rows:
         assert r["balanced"] == (1 if r["n_neg"] % 2 == 0 else 0)
     assert sum(r["n_triangles"] for r in rows) > 0
-
-
-def test_hazard_table_conservation(spark):
-    """At-risk counts telescope: at_risk(t) - deaths(t) == at_risk(next t)."""
-    import __spark_entry__ as entry
-
-    rows = sorted(
-        entry._events_hazard_table(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["day"],
-    )
-    for prev, cur in zip(rows, rows[1:]):
-        assert prev["at_risk"] - prev["deaths"] >= cur["at_risk"] - cur["deaths"]
-    assert rows[0]["at_risk"] == sum(r["deaths"] for r in rows)
 
 
 def test_widest_path_semiring_invariants(spark):
@@ -803,18 +591,6 @@ def test_pagerank_topk_stability_bounds(spark):
     assert rows[5]["n_overlap"] >= 3
 
 
-def test_did_cells_complete_and_bounded(spark):
-    import __spark_entry__ as entry
-
-    (r,) = entry._events_did_estimator(spark, "/root/testdata/sf0.001").collect()
-    for c in ("n_00", "n_01", "n_10", "n_11"):
-        assert r[c] > 0  # every treatment x period cell populated
-    assert r["did_sign"] in (-1, 0, 1)
-    # DiD magnitude bounded by the largest cell mean (sanity)
-    max_mean = max(r[f"s_{t}{p}"] // r[f"n_{t}{p}"] for t in (0, 1) for p in (0, 1))
-    assert r["abs_did_micro_cents"] <= 2 * 1000000 * max_mean
-
-
 def test_recency_degree_bounds(spark):
     import __spark_entry__ as entry
 
@@ -825,14 +601,3 @@ def test_recency_degree_bounds(spark):
         # each edge contributes between 1 (age 8) and 256 (age 0)
         assert r["degree"] <= r["decayed_x256"] <= 256 * r["degree"]
         assert 0 <= r["freshest_age"] <= 8
-
-
-def test_markov_stationary_mass_conserved(spark):
-    """Total stationary mass stays within floor-truncation loss of the
-    scale (<= steps * states units), and every state keeps mass."""
-    import __spark_entry__ as entry
-
-    rows = entry._events_markov_stationary(spark, "/root/testdata/sf0.001").collect()
-    total = sum(r["stationary_x1e9"] for r in rows)
-    assert 1_000_000_000 - 8 * 5 * 5 <= total <= 1_000_000_000
-    assert all(r["stationary_x1e9"] > 0 for r in rows)

@@ -1,11 +1,6 @@
-"""Session-8 operator invariants: TPC-H q2/q9 analogues, directed dyad
-census (reciprocity), resource-allocation link prediction, event trigram
-model, and integer-exact z-score anomalies — each re-derived independently
-in plain Python at gate parameters (sf0.001 fixture sizes are
-plain-Python tractable)."""
-
-from collections import defaultdict
-from decimal import Decimal
+"""Session-8 operator invariants: grid betweenness and the Boruvka MST
+kernel, each re-derived independently in plain Python at gate parameters
+(sf0.001 fixture sizes are plain-Python tractable)."""
 
 import duckdb
 
@@ -14,241 +9,11 @@ import __spark_entry__ as E
 SF = "/root/testdata/sf0.001"
 
 
-def _fetch(table, cols):
-    con = duckdb.connect()
-    return con.execute(
-        f"SELECT {', '.join(cols)} FROM '{SF}/{table}.parquet'"
-    ).fetchall()
-
-
 def _n_events():
     con = duckdb.connect()
     return con.execute(
         f"SELECT count(*) FROM '{SF}/events.parquet'"
     ).fetchone()[0]
-
-
-def _money_u(x, scale):
-    # the engines' decimal(18,4) → integer micro/cent path, replayed via
-    # Decimal so float noise can't shift a unit
-    return int(Decimal(str(x)).quantize(Decimal("0.0001")) * scale)
-
-
-def test_q2_min_cost_supplier_matches_plain_python(spark):
-    sup_rows = _fetch("supplier", ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"])
-    nat = dict(
-        (k, (name, reg))
-        for k, name, reg in _fetch("nation", ["n_nationkey", "n_name", "n_regionkey"])
-    )
-    regions = dict(_fetch("region", ["r_regionkey", "r_name"]))
-    sup = {}
-    for sk, sname, nk, bal in sup_rows:
-        n_name, rk = nat[nk]
-        if regions[rk] == "ASIA":
-            sup[sk] = (sname, n_name, _money_u(bal, 100))
-    pf = {
-        pk: ptype
-        for pk, ptype, size in _fetch("part", ["p_partkey", "p_type", "p_size"])
-        if size <= 15 and ptype == "STANDARD"
-    }
-    best = {}
-    for pk, skey, price, qty in _fetch(
-        "lineitem", ["l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"]
-    ):
-        if pk in pf and skey in sup:
-            unit_u = _money_u(price, 1000000) // int(qty)
-            cand = (unit_u, skey)
-            if pk not in best or cand < best[pk]:
-                best[pk] = cand
-    want = {
-        pk: (pf[pk], sup[sk][0], sup[sk][1], u // 10000, sup[sk][2])
-        for pk, (u, sk) in best.items()
-    }
-    got = {
-        r["p_partkey"]: (
-            r["p_type"],
-            r["s_name"],
-            r["n_name"],
-            r["min_unit_cents"],
-            r["acctbal_cents"],
-        )
-        for r in E.queries()["q2_min_cost_supplier"](spark, SF).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_q9_product_profit_matches_plain_python(spark):
-    pf = {
-        pk: _money_u(rp, 1000000)
-        for pk, name, rp in _fetch("part", ["p_partkey", "p_name", "p_retailprice"])
-        if "widget" in name
-    }
-    nat = dict(_fetch("nation", ["n_nationkey", "n_name"]))
-    sup = {
-        sk: nat[nk] for sk, nk in _fetch("supplier", ["s_suppkey", "s_nationkey"])
-    }
-    oyear = {
-        ok: d.year for ok, d in _fetch("orders", ["o_orderkey", "o_orderdate"])
-    }
-    want = defaultdict(lambda: [0, 0])
-    for ok, pk, sk, qty, price, disc in _fetch(
-        "lineitem",
-        [
-            "l_orderkey",
-            "l_partkey",
-            "l_suppkey",
-            "l_quantity",
-            "l_extendedprice",
-            "l_discount",
-        ],
-    ):
-        if pk not in pf:
-            continue
-        rev = Decimal(str(price)).quantize(Decimal("0.0001")) * (
-            1 - Decimal(str(disc)).quantize(Decimal("0.0001"))
-        )
-        rev_u = int(rev * 1000000)  # truncation, matching both engines
-        profit = rev_u - pf[pk] * int(qty)
-        cell = want[(sup[sk], oyear[ok])]
-        cell[0] += profit
-        cell[1] += 1
-    got = {
-        (r["n_name"], r["o_year"]): [r["profit_mu"], r["n_lineitems"]]
-        for r in E.queries()["q9_product_profit"](spark, SF).collect()
-    }
-    assert got == dict(want) and len(got) > 0
-
-
-def _directed_edges(n):
-    e = [(i, i + 1) for i in range(n - 1)]
-    e += [(i + 1, i) for i in range(n - 1) if i % 3 == 0]
-    e += [(i, i + 2) for i in range(n - 2) if i % 5 == 0]
-    e += [(i + 2, i) for i in range(n - 2) if i % 15 == 0]
-    return e
-
-
-def test_kg_reciprocity_matches_plain_python(spark):
-    n = _n_events()
-    edges = _directed_edges(n)
-    eset = set(edges)
-    out_deg = defaultdict(int)
-    in_deg = defaultdict(int)
-    mutual = defaultdict(int)
-    for u, v in edges:
-        out_deg[u] += 1
-        in_deg[v] += 1
-        if (v, u) in eset:
-            mutual[u] += 1
-    nodes = set(out_deg) | set(in_deg)
-    want = {
-        v: (
-            out_deg[v],
-            in_deg[v],
-            mutual[v],
-            1000000 * mutual[v] // max(out_deg[v], 1),
-        )
-        for v in nodes
-    }
-    got = {
-        r["node"]: (r["out_deg"], r["in_deg"], r["n_mutual"], r["reciprocity_ppm"])
-        for r in E.queries()["kg_reciprocity"](spark, SF).collect()
-    }
-    assert got == want
-    # both dyad classes live at gate parameters
-    assert any(m > 0 for _, _, m, _ in got.values())
-    assert any(o > m for o, _, m, _ in got.values())
-
-
-def _alias_edges(n):
-    e = [(i, i - 1) for i in range(1, n) if i % 40 != 0]
-    e += [(i, i - 40) for i in range(1, n) if i % 40 == 0 and (i // 40) % 3 != 0]
-    sym = set(e) | {(b, a) for a, b in e}
-    return sym
-
-
-def test_kg_resource_allocation_matches_plain_python(spark):
-    n = _n_events()
-    sym = _alias_edges(n)
-    deg = defaultdict(int)
-    nbrs = defaultdict(set)
-    for a, b in sym:
-        deg[a] += 1
-        nbrs[a].add(b)
-    want = {}
-    for z in list(nbrs):
-        for u in nbrs[z]:
-            for v in nbrs[z]:
-                if u < v and (u, v) not in sym:
-                    key = (u, v)
-                    cn, ra = want.get(key, (0, 0))
-                    want[key] = (cn + 1, ra + 1000000 // deg[z])
-    got = {
-        (r["u"], r["v"]): (r["n_common"], r["ra_ppm"])
-        for r in E.queries()["kg_resource_allocation"](spark, SF).collect()
-    }
-    assert got == want and len(got) > 0
-    # the degree discount is live: distinct per-z terms appear
-    assert len({ra for cn, ra in got.values() if cn == 1}) >= 2
-
-
-def test_events_sequence_ngrams_matches_plain_python(spark):
-    rows = _fetch("events", ["user_id", "ts", "event_id", "event_type"])
-    per_user = defaultdict(list)
-    for uid, ts, eid, et in rows:
-        per_user[uid].append((ts, eid, et))
-    tri = defaultdict(int)
-    for uid, seq in per_user.items():
-        seq.sort()
-        for i in range(2, len(seq)):
-            tri[(seq[i - 2][2], seq[i - 1][2], seq[i][2])] += 1
-    prefix = defaultdict(int)
-    for (t1, t2, t3), c in tri.items():
-        prefix[(t1, t2)] += c
-    want = {
-        (t1, t2, t3): (c, prefix[(t1, t2)], 1000000 * c // prefix[(t1, t2)])
-        for (t1, t2, t3), c in tri.items()
-    }
-    got = {
-        (r["t1"], r["t2"], r["t3"]): (r["n"], r["prefix_n"], r["cond_ppm"])
-        for r in E.queries()["events_sequence_ngrams"](spark, SF).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_events_anomaly_zscore_matches_plain_python(spark):
-    rows = _fetch("events", ["user_id", "event_id", "value"])
-    per_user = defaultdict(list)
-    for uid, eid, v in rows:
-        per_user[uid].append((eid, _money_u(v, 10000)))
-    want = {}
-    total_anoms = 0
-    for uid, evs in per_user.items():
-        n = len(evs)
-        s = sum(v for _, v in evs)
-        q = sum(v * v for _, v in evs)
-        anoms = [
-            eid
-            for eid, v in evs
-            if n >= 2 and (n * v - s) ** 2 > 4 * (n * q - s * s)
-        ]
-        total_anoms += len(anoms)
-        want[uid] = (
-            n,
-            len(anoms),
-            min(anoms) if anoms else None,
-            max(anoms) if anoms else None,
-        )
-    got = {
-        r["user_id"]: (
-            r["n_events"],
-            r["n_anomalies"],
-            r["first_anom_event"],
-            r["last_anom_event"],
-        )
-        for r in E.queries()["events_anomaly_zscore"](spark, SF).collect()
-    }
-    assert got == want
-    assert total_anoms > 0  # the 2σ flag actually fires at gate parameters
 
 
 # ---------------------------------------------------------------- graph ops

@@ -63,15 +63,6 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        if name not in oracles:
-            try:
-                df = fn(spark, sf_dir)
-                n = df.count()
-                print(f"ROWS-ONLY  {name}: {n} rows, schema={df.columns}")
-            except Exception as e:
-                failures.append(name)
-                print(f"FAIL(run)  {name}: {type(e).__name__}: {str(e)[:200]}")
-            continue
         try:
             df = fn(spark, sf_dir)
             s_cols = df.columns

@@ -2,10 +2,11 @@
 of N nodes — shows the iterative op shifting from latency-bound to
 data-bound as the graph grows (the 100x extrapolation evidence)."""
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 n, cores = int(sys.argv[1]), int(sys.argv[2])
 from bert_namedentityrecognition_spark.plans.session import build_session
 from pyspark.sql import functions as F
