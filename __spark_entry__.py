@@ -1129,9 +1129,8 @@ def _kg_shacl_validation(spark, sf):
     predicate whitelist ({DEGRADES, SPEEDS_UP} — the CO_OCCURS_WITH
     default fires as a warning), min evidence support (count < 2), and
     object min-length 4 ('dup'/'big' fire) — every branch live at every
-    sf by construction.  Complements ``kg_integrity_audit`` (graph
-    defects) with SHAPE defects; triples are localCheckpoint-materialized
-    once and fan into four map-side-combined branches (rule 23)."""
+    sf by construction.  Triples are localCheckpoint-materialized once
+    and fan into four map-side-combined branches (rule 23)."""
     from bert_namedentityrecognition_spark.operators.triples import (
         shape_violations,
     )
@@ -9032,10 +9031,10 @@ def _kg_characteristic_sets(spark, sf):
     genuinely differ per doc, so the statistic is discriminative (the
     drug->symptom store collapses to one universal set).  Spark: one agg
     per subject (``collect_set`` + ``array_sort`` + ``array_join`` — the
-    sort makes the set string deterministic across partition orders, the
-    ``kg_adjacency_export`` rule), then one agg per set string; both
-    map-side-combinable.  DuckDB twin builds the same string via
-    ``string_agg(pred ORDER BY pred)`` over the occurrence table.
+    sort makes the set string deterministic across partition orders),
+    then one agg per set string; both map-side-combinable.  DuckDB twin
+    builds the same string via ``string_agg(pred ORDER BY pred)`` over
+    the occurrence table.
     Beyond-reference (the reference emits one fixed relation,
     ``ade_table/generate_table.py``) — SURVEY §2.12 KG-scale extension."""
     m = _doc_mentions(spark, sf)
@@ -10549,8 +10548,7 @@ def _kg_view_selection_greedy(spark, sf):
     ties → benefit desc, then set string) and take the budget-bounded
     prefix of the cumulative cost — a single window pass, identical in
     both engines, deliberately chosen over skip-and-retry greedy
-    because it needs NO sequential recursion (the same determinism
-    argument as optimizer_histogram_stats' ntile).  Spark: the gated
+    because it needs NO sequential recursion.  Spark: the gated
     characteristic-set agg, one tiny global window over the SET-level
     frame (hundreds of rows), one broadcast budget scalar."""
     items = _kg_characteristic_sets(spark, sf).select(

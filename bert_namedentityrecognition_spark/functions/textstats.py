@@ -46,11 +46,6 @@ def punct_ratio(col: Column) -> Column:
     return n_punct / F.greatest(F.length(col), F.lit(1))
 
 
-def alpha_ratio(col: Column) -> Column:
-    n_alpha = F.size(F.regexp_extract_all(col, F.lit(r"[A-Za-z]"), F.lit(0)))
-    return n_alpha / F.greatest(F.length(col), F.lit(1))
-
-
 def stopword_ratio(col: Column) -> Column:
     """Fraction of whitespace tokens that are stopwords."""
     toks = F.split(F.trim(col), r"\s+")
@@ -133,8 +128,3 @@ def poly_hash(col: Column, base: int = _POLY_BASE, mod: int = _POLY_MOD) -> Colu
         F.lit(0).cast("long"),
         lambda acc, c: (acc * base + F.ascii(c)) % mod,
     )
-
-
-def poly_hash_seeded(col: Column, a: int, b: int, mod: int = _POLY_MOD) -> Column:
-    """Universal-hash family over poly_hash: ``(a*h + b) % mod``."""
-    return (poly_hash(col) * a + b) % mod

@@ -1,39 +1,358 @@
-"""Entity-graph analytics over alias/co-mention edges — PageRank and
-triangle counting as pure DataFrame jobs (GraphFrames-free).
+"""Entity-graph analytics over alias/co-mention edges as pure DataFrame
+jobs (GraphFrames-free).
 
-Semantics live in ``oracle/graph.py`` (integer-exact kernels); this module is
-the distributed execution. The reference has no graph stage (alias
-resolution is one-hop, ``OICI_database.py:34-39``) — ranking canonical
-entities and measuring alias-cluster cohesion are this repo's KG-scale
-extensions (SURVEY §2.12).
+Semantics live in ``oracle/graph.py`` (integer-exact kernels and their
+DuckDB twins); this module is the distributed execution. The reference has
+no graph stage (alias resolution is one-hop, ``OICI_database.py:34-39``) —
+ranking canonical entities and measuring alias-cluster cohesion are this
+repo's KG-scale extensions (SURVEY §2.12).
 
-100 TB notes
-------------
-* ``pagerank_integer``: per iteration = 1 shuffle to co-locate ranks with
-  the edge list's ``a`` side + 1 shuffle for the ``groupBy(b)`` partial-
-  aggregated sum. The edge list (with out-degrees pre-joined) is
-  ``localCheckpoint``-materialized ONCE and reused every iteration (rule
-  23: exchange reuse does not dedup near-identical subtrees; without the
-  checkpoint each level re-derives degrees from scratch). Ranks are
-  checkpointed per level so plan size stays O(1) in the iteration count.
-  At 10**12 nodes the integer scale ``init`` must shrink (or move to
-  decimal(38)) to keep ``d_num * sum`` under 2**63 — the kernel docstring
-  carries the bound.
-* ``triangle_counts_df``: degree-based orientation (direct every edge from
-  the lower ``(degree, id)`` endpoint to the higher) bounds every node's
-  out-degree by O(sqrt(m)), so the wedge join ``e1.b == e2.a`` materializes
-  O(m^1.5) candidate wedges worst-case instead of sum(deg^2) — the standard
-  scalable triangle enumeration. Counts are orientation-invariant, so the
-  DuckDB twin may orient by plain id order and still match exactly.
+Iteration kernels
+-----------------
+Three loop shapes and one join serve 14 public operators; each is written
+once below and the operators are thin wrappers. The loops materialize their
+edge list ONCE (``_edge_list``: BIGINT ``(a, b[, w|t])``, hash-partitioned
+on ``a``, ``localCheckpoint``-ed) and checkpoint their state every level,
+so plan size stays O(1) in the level count (rule 23: exchange reuse does
+not dedup near-identical subtrees; without the checkpoint each level
+re-derives the edge list). State is all-integer, so every level is
+bit-exact on any partitioning and in the SQL twins.
+
+* ``_seeded_bfs`` — bounded-hop BFS from a seed set, keyed on ``node`` or,
+  per seed, on the ``(seed, node)`` pair (state |seeds| × |hop cone|; at
+  100 TB the seed set is a serving shortlist, never the node set). Per
+  level ONE join of the frontier (only nodes first reached at the previous
+  level) against the edge list. With nothing carried the level merges by
+  one ``union`` + ``min(dist)``; with a carried value (σ sum, min seed) it
+  aggregates the value on the target and keeps first reach with one
+  anti-join. Serves ``bfs_levels_df``, ``bfs_path_counts_df``,
+  ``nearest_seed_df``, ``seeded_sigma_df``, ``harmonic_centrality_df`` and
+  ``closeness_profile_df``; for unbounded closure use
+  ``connected_components_star`` (O(log²) rounds).
+* ``_relax_rounds`` — bounded-round semiring relaxation from a seed set.
+  Per round ONE join of the CHANGED frontier (nodes whose value improved
+  last round — delta-stepping-lite) against the edge list, one min- or
+  max-agg that also flags improvement. The twins relax ALL nodes per round
+  and reach the same values. Serves ``sssp_bellman_ford`` (min, +),
+  ``temporal_reachability_df`` (min, with the usability predicate
+  ``t >= arrival`` on the join) and ``widest_path_bounded`` (max, min).
+* ``_int_pagerank`` — integer PageRank power iteration over ``(a, b, w)``
+  with out-weight sums pre-joined: per iteration 1 shuffle to co-locate
+  ranks with the edge list's ``a`` side + 1 for the partial-aggregated
+  ``groupBy(b)`` sum. Unweighted PageRank is ``w = 1`` (``rank·1 DIV Σ1``
+  is ``rank DIV deg``); personalized PageRank restricts the teleport mass
+  to a seed predicate. At 10**12 nodes the integer scale ``init`` must
+  shrink (or move to decimal(38)) to keep ``d_num * sum`` under 2**63 — the
+  oracle ``pagerank_int`` docstring carries the bound.
+
+``_seed_pair_paths`` is the seed-pair Brandes join shared by
+``stress_centrality_df`` and ``betweenness_ppm_df``: one per-seed σ-BFS,
+then the broadcast seed-pair distance table drives two joins re-keyed on
+the interior node; only the final map-side-combinable aggregate differs.
+
+``triangle_counts_df``: degree-based orientation (direct every edge from
+the lower ``(degree, id)`` endpoint to the higher) bounds every node's
+out-degree by O(sqrt(m)), so the wedge join ``e1.b == e2.a`` materializes
+O(m^1.5) candidate wedges worst-case instead of sum(deg^2) — the standard
+scalable triangle enumeration. Counts are orientation-invariant, so the
+DuckDB twin may orient by plain id order and still match exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from ..oracle.graph import D_DEN, D_NUM, INIT
+from ..oracle.graph import D_DEN, D_NUM, HARMONIC_SCALE, INIT, MIS_MOD, MIS_MUL
+
+
+def _edge_list(edges: DataFrame, src: str, dst: str, **extra: str) -> DataFrame:
+    """BIGINT ``(a, b, *extra)`` (``extra`` maps output name → input
+    column), hash-partitioned on ``a`` and materialized once."""
+    return (
+        edges.select(
+            F.col(src).cast("long").alias("a"),
+            F.col(dst).cast("long").alias("b"),
+            *[F.col(c).cast("long").alias(k) for k, c in extra.items()],
+        )
+        .repartition("a")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Each undirected edge once as BIGINT ``(u, v)`` with ``u < v``:
+    orientation, duplicates and self-loops dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
+            F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``_undirected`` in both directions as ``(a, b)``, materialized."""
+    und = _undirected(edges, src, dst)
+    return (
+        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
+        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _nodes(e: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
+    """Distinct endpoints of ``e`` as ``(node)``."""
+    return (
+        e.select(F.col(a).alias("node"))
+        .union(e.select(F.col(b).alias("node")))
+        .distinct()
+    )
+
+
+def _int_pagerank(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    w: Column,
+    iterations: int,
+    init: int,
+    d_num: int,
+    d_den: int,
+    is_seed: Column | None = None,
+) -> DataFrame:
+    """``(node, rank_scaled)`` after ``iterations`` integer power
+    iterations over DIRECTED ``edges`` weighted by ``w``: contributions
+    ``(rank·w) DIV Σw_out``; the teleport term ``base`` lands on every
+    node, or only where ``is_seed`` (a predicate over ``node``) holds.
+    Caller owns the ``init·w_max`` int64 bound (``oracle.graph.
+    wpagerank_int`` docstring)."""
+    e = edges.select(
+        F.col(src).cast("long").alias("a"),
+        F.col(dst).cast("long").alias("b"),
+        w.cast("long").alias("w"),
+    )
+    sw = e.groupBy("a").agg(F.sum("w").alias("sw"))
+    # (a, b, w, sw) materialized once; every iteration reuses this partitioning.
+    e = e.join(sw, "a").repartition("a").localCheckpoint(eager=True)
+    nodes = _nodes(e).localCheckpoint(eager=True)
+    base = ((d_den - d_num) * init) // d_den
+
+    def teleport(mass: int) -> Column:
+        if is_seed is None:
+            return F.lit(mass).cast("long")
+        return F.when(is_seed, F.lit(mass)).otherwise(F.lit(0)).cast("long")
+
+    ranks = nodes.select("node", teleport(init).alias("rank_scaled"))
+    for _ in range(iterations):
+        inc = (
+            e.join(ranks, e.a == ranks.node)
+            .select(F.col("b"), F.expr("(rank_scaled * w) DIV sw").alias("c"))
+            .groupBy("b")
+            .agg(F.sum("c").alias("inc"))
+        )
+        ranks = (
+            nodes.join(inc, nodes.node == inc.b, "left")
+            .select(
+                "node",
+                (
+                    teleport(base)
+                    + F.expr(f"({d_num} * coalesce(inc, 0L)) DIV {d_den}")
+                ).alias("rank_scaled"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    return ranks
+
+
+# carried values of ``_seeded_bfs``: (column, SQL value at the seed, merge)
+_SIGMA = ("sig", "1", F.sum)  # shortest-path count σ
+_MIN_SEED = ("seed", "node", F.min)  # nearest seed, ties → min id
+
+
+def _seeded_bfs(
+    edges: DataFrame,
+    seeds: DataFrame,
+    max_hops: int,
+    src: str,
+    dst: str,
+    node: str,
+    per_seed: bool = False,
+    carry: tuple | None = None,
+) -> DataFrame:
+    """``([seed,] node, dist[, carry])``: bounded-hop BFS from ``seeds``
+    over DIRECTED ``edges`` — one multi-source BFS, or one per seed on the
+    ``(seed, node)`` key when ``per_seed``. ``carry`` is ``_SIGMA``,
+    ``_MIN_SEED`` or None. Nodes unreached within ``max_hops`` are
+    absent."""
+    e = _edge_list(edges, src, dst)
+    lead = ["seed"] if per_seed else []
+    key = lead + ["node"]
+    root = key[0]
+    cols = lead + [F.col(root).alias("node"), F.lit(0).cast("long").alias("dist")]
+    keep = list(key)
+    if carry is not None:
+        name, at_seed, merge = carry
+        cols.append(F.expr(at_seed).cast("long").alias(name))
+        keep.append(name)
+    dist = (
+        seeds.select(F.col(node).cast("long").alias(root))
+        .distinct()
+        .select(*cols)
+        .localCheckpoint(eager=True)
+    )
+    frontier = dist.select(*keep)
+    for k in range(1, max_hops + 1):
+        hop = frontier.join(e, frontier.node == e.a)
+        level = F.lit(k).cast("long").alias("dist")
+        if carry is None:
+            dist = (
+                dist.unionByName(hop.select(*lead, F.col("b").alias("node"), level))
+                .groupBy(*key)
+                .agg(F.min("dist").alias("dist"))
+                .localCheckpoint(eager=True)
+            )
+        else:
+            pushed = hop.groupBy(*lead, F.col("b").alias("node")).agg(
+                merge(name).alias(name)
+            )
+            fresh = pushed.join(dist, key, "left_anti").select(
+                *key, level, F.col(name).cast("long").alias(name)
+            )
+            dist = dist.unionByName(fresh).localCheckpoint(eager=True)
+        frontier = dist.filter(F.col("dist") == k).select(*keep)
+    return dist
+
+
+def _relax_rounds(
+    e: DataFrame,
+    seeds: DataFrame,
+    rounds: int,
+    node: str,
+    val: str,
+    source: int,
+    step: Column,
+    maximize: bool = False,
+    usable: Column | None = None,
+) -> DataFrame:
+    """``(node, val)`` after ``rounds`` simultaneous relaxations from
+    ``seeds`` (value ``source``) over the ``_edge_list`` ``e``: an edge
+    from a changed node offers ``step`` (over the frontier's ``val`` and
+    the edge's columns) wherever ``usable`` holds, and each node keeps the
+    min (max when ``maximize``) of its value and its offers. Nodes never
+    offered a value are absent."""
+    best = F.max if maximize else F.min
+
+    def better(x: Column, y: Column) -> Column:
+        return x > y if maximize else x < y
+
+    vals = (
+        seeds.select(F.col(node).cast("long").alias("node"))
+        .distinct()
+        .select("node", F.lit(source).cast("long").alias(val))
+        .localCheckpoint(eager=True)
+    )
+    frontier = vals
+    for _ in range(rounds):
+        on = frontier.node == e.a
+        if usable is not None:
+            on = on & usable
+        relaxed = frontier.join(e, on).select(
+            F.col("b").alias("node"), step.alias(val)
+        )
+        nxt = (
+            vals.withColumn("__old", F.lit(1))
+            .unionByName(relaxed.withColumn("__old", F.lit(0)))
+            .groupBy("node")
+            .agg(
+                best(val).alias(val),
+                # improved iff the winner beats every carried old value
+                better(
+                    best(val), best(F.when(F.col("__old") == 1, F.col(val)))
+                ).alias("__improved_vs_old"),
+                F.max("__old").alias("__had_old"),
+            )
+            .withColumn(
+                "__changed",
+                (F.col("__had_old") == 0)
+                | F.coalesce(F.col("__improved_vs_old"), F.lit(False)),
+            )
+            .localCheckpoint(eager=True)
+        )
+        frontier = nxt.filter(F.col("__changed")).select("node", val)
+        vals = nxt.select("node", val).localCheckpoint(eager=True)
+    return vals
+
+
+def _seed_pair_paths(
+    edges: DataFrame,
+    seeds: DataFrame,
+    max_hops: int,
+    src: str,
+    dst: str,
+    node: str,
+) -> DataFrame:
+    """One row per seed pair ``s < t`` (``d_st``, ``sig_st``) and interior
+    node ``v ∉ {s, t}`` on a shortest s-t route (``d_sv + d_tv = d_st``),
+    with both σ factors ``sig_sv``, ``sig_tv`` — Brandes' pair-combination
+    identity over SYMMETRIC ``edges`` (see ``oracle.graph.
+    stress_centrality`` for the completeness argument)."""
+    # the kernel returns its checkpointed state, read 3× below (rule 23)
+    sig = _seeded_bfs(
+        edges, seeds, max_hops, src, dst, node, per_seed=True, carry=_SIGMA
+    )
+    targets = seeds.select(F.col(node).cast("long").alias("t_node")).distinct()
+    dd = (
+        sig.join(F.broadcast(targets), sig.node == F.col("t_node"))
+        .filter((F.col("seed") < F.col("t_node")) & (F.col("dist") > 0))
+        .select(
+            F.col("seed").alias("s"),
+            F.col("t_node").alias("t"),
+            F.col("dist").alias("d_st"),
+            F.col("sig").alias("sig_st"),
+        )
+    )
+
+    def end(seed: str, d: str, sg: str) -> DataFrame:
+        return sig.select(
+            F.col("seed").alias(seed),
+            F.col("node").alias("v"),
+            F.col("dist").alias(d),
+            F.col("sig").alias(sg),
+        )
+
+    return (
+        F.broadcast(dd)
+        .join(end("s", "d_sv", "sig_sv"), "s")
+        .join(end("t", "d_tv", "sig_tv"), ["t", "v"])
+        .filter(
+            (F.col("d_sv") + F.col("d_tv") == F.col("d_st"))
+            & (F.col("v") != F.col("s"))
+            & (F.col("v") != F.col("t"))
+        )
+    )
+
+
+def _check_priority_ids(sym: DataFrame, op: str) -> None:
+    """Precondition of the ``(v·MIS_MUL) % MIS_MOD`` priority scramble:
+    node ids in ``[0, MIS_MOD)``.  Only there is it injective (and free of
+    BIGINT overflow, and equal to the pure-Python ``mis_priority``);
+    colliding priorities make neither neighbor a strict local minimum and
+    stall the rounds.  ``sym`` is the symmetrized ``(a, b)`` edge frame."""
+    lo, hi = sym.agg(F.min("a"), F.max("a")).first()
+    if lo is not None and (lo < 0 or hi >= MIS_MOD):
+        raise ValueError(
+            f"{op}: node ids must lie in [0, {MIS_MOD}) for the priority "
+            f"scramble, got [{lo}, {hi}]; densify the ids first"
+        )
+
+
+def _priority(col: str) -> Column:
+    """``oracle.graph.mis_priority`` as a column expression."""
+    return (F.col(col) * F.lit(MIS_MUL)) % F.lit(MIS_MOD)
 
 
 def pagerank_integer(
@@ -48,39 +367,9 @@ def pagerank_integer(
     """DIRECTED ``edges(src, dst)`` → ``(node, rank_scaled)`` — the exact
     integer PageRank of ``oracle.graph.pagerank_int`` (pass both directions
     for undirected graphs; dangling nodes keep the base rank)."""
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
+    return _int_pagerank(
+        edges, src, dst, F.lit(1), iterations, init, d_num, d_den
     )
-    deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    # (a, b, deg) materialized once; every iteration reuses this partitioning.
-    e = e.join(deg, "a").repartition("a").localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    base = ((d_den - d_num) * init) // d_den
-    ranks = nodes.select("node", F.lit(init).cast("long").alias("rank_scaled"))
-    for _ in range(iterations):
-        inc = (
-            e.join(ranks, e.a == ranks.node)
-            .select(F.col("b"), F.expr("rank_scaled DIV deg").alias("c"))
-            .groupBy("b")
-            .agg(F.sum("c").alias("inc"))
-        )
-        ranks = (
-            nodes.join(inc, nodes.node == inc.b, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(f"({d_num} * coalesce(inc, 0L)) DIV {d_den}")
-                ).alias("rank_scaled"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
 
 
 def weighted_pagerank_integer(
@@ -97,44 +386,11 @@ def weighted_pagerank_integer(
     the exact integer weighted PageRank of ``oracle.graph.wpagerank_int``
     (contributions split ∝ weight: the centrality that consumes
     ``kg_edge_confidence``-style edge weights instead of flattening them).
-    Same plan shape as ``pagerank_integer``: the edge list with pre-joined
-    weight sums is materialized once (rule 23), 2 shuffles/iteration,
-    per-level checkpoints.  Caller owns the ``init·w_max`` int64 bound
-    (kernel docstring)."""
-    e = wedges.select(
-        F.col(src).cast("long").alias("a"),
-        F.col(dst).cast("long").alias("b"),
-        F.col(weight).cast("long").alias("w"),
+    Caller owns the ``init·w_max`` int64 bound (``wpagerank_int``
+    docstring)."""
+    return _int_pagerank(
+        wedges, src, dst, F.col(weight), iterations, init, d_num, d_den
     )
-    sw = e.groupBy("a").agg(F.sum("w").alias("sw"))
-    e = e.join(sw, "a").repartition("a").localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    base = ((d_den - d_num) * init) // d_den
-    ranks = nodes.select("node", F.lit(init).cast("long").alias("rank_scaled"))
-    for _ in range(iterations):
-        inc = (
-            e.join(ranks, e.a == ranks.node)
-            .select(F.col("b"), F.expr("(rank_scaled * w) DIV sw").alias("c"))
-            .groupBy("b")
-            .agg(F.sum("c").alias("inc"))
-        )
-        ranks = (
-            nodes.join(inc, nodes.node == inc.b, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(f"({d_num} * coalesce(inc, 0L)) DIV {d_den}")
-                ).alias("rank_scaled"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
 
 
 def triangle_counts_df(
@@ -148,19 +404,11 @@ def triangle_counts_df(
     wedges ``x→y, y→z`` closed by ``x→z``. Every triangle is enumerated
     exactly once (the orientation is acyclic), and each enumeration credits
     all three corners."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
-            F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        # und feeds degree (twice), both orientation joins, and all three
-        # wedge-join legs — materialize once (rule 23: exchange reuse does
-        # NOT dedup near-identical subtrees; unmaterialized this plan
-        # re-derived the edge list 6× = 64 exchanges at the gate).
-        .localCheckpoint(eager=True)
-    )
+    # und feeds degree (twice), both orientation joins, and all three
+    # wedge-join legs — materialize once (rule 23: exchange reuse does
+    # NOT dedup near-identical subtrees; unmaterialized this plan
+    # re-derived the edge list 6× = 64 exchanges at the gate).
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     deg = (
         und.select(F.col("u").alias("node"))
         .union(und.select(F.col("v").alias("node")))
@@ -217,19 +465,7 @@ def kcore(
     23). Raises LOUDLY if the fixpoint is not reached within
     ``max_rounds`` — the unrolled SQL twin covers a fixed round budget,
     so running past it must fail, not silently diverge."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
-            F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(edges, src, dst)
     for _ in range(max_rounds):
         deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
         bad = deg.filter(F.col("d") < k).select(F.col("a").alias("bn"))
@@ -263,42 +499,9 @@ def bfs_levels_df(
     the bounded-hop BFS of ``oracle.graph.bfs_levels`` (pass both edge
     directions for undirected graphs). Nodes unreached within ``max_hops``
     are absent — the k-hop-neighborhood contract a KG serving layer uses
-    for "entities within k joins of these seeds".
-
-    Scale shape: per level ONE join of the current frontier (only nodes
-    first reached at the previous level, not the whole dist table) against
-    the edge list + one min-agg on node; the edge list is materialized
-    once and reused (rule 23), dist is localCheckpoint-ed per level so the
-    plan stays O(1) in ``max_hops``. Work per level is |frontier-adjacent
-    edges| — the textbook distributed BFS; for unbounded closure use
-    ``connected_components_star`` instead (O(log²) rounds)."""
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        seeds.select(F.col(node).cast("long").alias("node"))
-        .distinct()
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist.select("node")
-    for k in range(1, max_hops + 1):
-        u = (
-            frontier.join(e, frontier.node == e.a)
-            .select(F.col("b").alias("node"), F.lit(k).cast("long").alias("dist"))
-        )
-        dist = (
-            dist.unionByName(u)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = dist.filter(F.col("dist") == k).select("node")
-    return dist
+    for "entities within k joins of these seeds". ``_seeded_bfs`` with
+    nothing carried."""
+    return _seeded_bfs(edges, seeds, max_hops, src, dst, node)
 
 
 def bfs_path_counts_df(
@@ -313,52 +516,10 @@ def bfs_path_counts_df(
     sigma)``: bounded-hop BFS carrying SHORTEST-PATH COUNTS — the exact σ
     table of ``oracle.graph.bfs_path_counts`` (Brandes' betweenness
     building block; sigma = how many distinct shortest routes tie the
-    node to the seed set).
-
-    Scale shape: identical to ``bfs_levels_df`` plus one SUM — per level
-    ONE join of the (node, sigma) frontier against the once-materialized
-    edge list, one partial-aggregated sigma sum on the target, and one
-    anti-join admitting only first-reached nodes; dist is
-    localCheckpoint-ed per level (rule 23) so the plan stays O(1) in
-    ``max_hops``.  All-integer (rule 11) — the caller owns the
-    ``out_deg_max^max_hops`` int64 bound (see kernel docstring)."""
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        seeds.select(F.col(node).cast("long").alias("node"))
-        .distinct()
-        .select(
-            "node",
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(1).cast("long").alias("sig"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist.select("node", "sig")
-    for k in range(1, max_hops + 1):
-        pushed = (
-            frontier.join(e, frontier.node == e.a)
-            .groupBy(F.col("b").alias("nnode"))
-            .agg(F.sum("sig").alias("sig"))
-        )
-        fresh = (
-            pushed.join(dist, pushed.nnode == dist.node, "left_anti")
-            .select(
-                F.col("nnode").alias("node"),
-                F.lit(k).cast("long").alias("dist"),
-                F.col("sig").cast("long").alias("sig"),
-            )
-        )
-        dist = dist.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = dist.filter(F.col("dist") == k).select("node", "sig")
-    return dist.select(
-        "node", "dist", F.col("sig").alias("sigma")
-    )
+    node to the seed set). The caller owns the ``out_deg_max^max_hops``
+    int64 bound (see the oracle function's docstring)."""
+    dist = _seeded_bfs(edges, seeds, max_hops, src, dst, node, carry=_SIGMA)
+    return dist.select("node", "dist", F.col("sig").alias("sigma"))
 
 
 def nearest_seed_df(
@@ -373,41 +534,8 @@ def nearest_seed_df(
     seed)``: the graph-Voronoi assignment of ``oracle.graph.
     bfs_nearest_seed`` — each node routed to its nearest seed (ties at
     first reach → min seed id), the hub/shard assignment a served KG
-    partitions by.  Same scale shape as ``bfs_path_counts_df``: per level
-    ONE frontier join + one MIN agg + one first-reach anti-join, dist
-    localCheckpoint-ed per level (rule 23)."""
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        seeds.select(F.col(node).cast("long").alias("node"))
-        .distinct()
-        .select(
-            "node",
-            F.lit(0).cast("long").alias("dist"),
-            F.col("node").alias("seed"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist.select("node", "seed")
-    for k in range(1, max_hops + 1):
-        pushed = (
-            frontier.join(e, frontier.node == e.a)
-            .groupBy(F.col("b").alias("nnode"))
-            .agg(F.min("seed").alias("seed"))
-        )
-        fresh = pushed.join(dist, pushed.nnode == dist.node, "left_anti").select(
-            F.col("nnode").alias("node"),
-            F.lit(k).cast("long").alias("dist"),
-            F.col("seed").cast("long").alias("seed"),
-        )
-        dist = dist.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = dist.filter(F.col("dist") == k).select("node", "seed")
-    return dist
+    partitions by."""
+    return _seeded_bfs(edges, seeds, max_hops, src, dst, node, carry=_MIN_SEED)
 
 
 def harmonic_centrality_df(
@@ -419,50 +547,12 @@ def harmonic_centrality_df(
     node: str = "node",
 ) -> DataFrame:
     """``(seed, h_scaled)``: the exact bounded-hop harmonic centrality of
-    ``oracle.graph.harmonic_centrality`` — per-seed BFS carrying the
-    (seed, node) PAIR key (per-seed distances, not the multi-source
-    minimum), contributions ``840 DIV dist`` exact for hops ≤ 8.
-
-    Scale shape: state is |seeds| × |hop cone| pairs; per level one
-    frontier join + one distinct + one first-reach anti-join on the pair
-    key, localCheckpoint per level (rule 23).  For a 100 TB graph the
-    seed set is the serving shortlist (entities on a page), not the whole
-    node set — per-seed cones stay bounded."""
-    from ..oracle.graph import HARMONIC_SCALE
-
+    ``oracle.graph.harmonic_centrality`` — per-seed BFS (per-seed
+    distances, not the multi-source minimum), contributions
+    ``840 DIV dist`` exact for hops ≤ 8."""
     if max_hops > 8:
         raise ValueError("HARMONIC_SCALE is exact only for max_hops <= 8")
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        seeds.select(F.col(node).cast("long").alias("seed"))
-        .distinct()
-        .select("seed", F.col("seed").alias("node"), F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist.select("seed", "node")
-    for k in range(1, max_hops + 1):
-        pushed = (
-            frontier.join(e, frontier.node == e.a)
-            .select("seed", F.col("b").alias("nnode"))
-            .distinct()
-        )
-        fresh = pushed.join(
-            dist,
-            (pushed.seed == dist.seed) & (pushed.nnode == dist.node),
-            "left_anti",
-        ).select(
-            "seed",
-            F.col("nnode").alias("node"),
-            F.lit(k).cast("long").alias("dist"),
-        )
-        dist = dist.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = dist.filter(F.col("dist") == k).select("seed", "node")
+    dist = _seeded_bfs(edges, seeds, max_hops, src, dst, node, per_seed=True)
     return dist.groupBy("seed").agg(
         F.coalesce(
             F.sum(
@@ -499,15 +589,8 @@ def label_propagation(
     (rule 23). State carried is one (node, label) long pair per node —
     the same cardinality as PageRank's rank table, so the 10**12-node
     bound is identical."""
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    ).repartition("a").localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _edge_list(edges, src, dst)
+    nodes = _nodes(e).localCheckpoint(eager=True)
     labels = nodes.select("node", F.col("node").alias("lab"))
     for _ in range(rounds):
         votes = (
@@ -714,62 +797,12 @@ def sssp_bellman_ford(
     integer-weighted ``wedges`` (pass both directions for undirected).
     Nodes unreached within the budget are absent — the weighted
     counterpart of ``bfs_levels_df`` (edge weights = relation confidence
-    / traversal cost in a served KG).
-
-    Scale shape: per round ONE join of the CHANGED frontier (only nodes
-    whose dist improved last round — delta-stepping-lite, not the whole
-    dist table) against the once-materialized edge list + one min-agg;
-    dist is localCheckpoint-ed per round (rule 23) so the plan stays O(1)
-    in ``rounds``.  All-integer mins ⇒ the round-K state is bit-identical
-    on any cluster size and in the DuckDB twin
-    (``oracle/graph.py:sssp_sql``, which relaxes all dists — same minima,
-    see its docstring)."""
-    e = (
-        wedges.select(
-            F.col(src).cast("long").alias("a"),
-            F.col(dst).cast("long").alias("b"),
-            F.col(weight).cast("long").alias("w"),
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
+    / traversal cost in a served KG). ``_relax_rounds`` over (min, +); the
+    DuckDB twin is ``oracle/graph.py:sssp_sql``."""
+    e = _edge_list(wedges, src, dst, w=weight)
+    return _relax_rounds(
+        e, seeds, rounds, node, "dist", 0, F.col("dist") + F.col("w")
     )
-    dist = (
-        seeds.select(F.col(node).cast("long").alias("node"))
-        .distinct()
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    for _ in range(rounds):
-        relaxed = frontier.join(e, frontier.node == e.a).select(
-            F.col("b").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        nxt = (
-            dist.withColumn("__old", F.lit(1))
-            .unionByName(relaxed.withColumn("__old", F.lit(0)))
-            .groupBy("node")
-            .agg(
-                F.min("dist").alias("dist"),
-                # improved iff the winning dist beats every carried old one
-                (
-                    F.min("dist")
-                    < F.coalesce(
-                        F.min(F.when(F.col("__old") == 1, F.col("dist"))),
-                        F.lit(None),
-                    )
-                ).alias("__improved_vs_old"),
-                F.max("__old").alias("__had_old"),
-            )
-            .withColumn(
-                "__changed",
-                (F.col("__had_old") == 0)
-                | F.coalesce(F.col("__improved_vs_old"), F.lit(False)),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = nxt.filter(F.col("__changed")).select("node", "dist")
-        dist = nxt.select("node", "dist").localCheckpoint(eager=True)
-    return dist
 
 
 def temporal_reachability_df(
@@ -786,60 +819,22 @@ def temporal_reachability_df(
     temporal_reachability`` over DIRECTED timestamped edges — paths must
     have non-decreasing edge times (a static BFS overcounts by traveling
     backwards in time; this is the influence-cone query of a versioned /
-    event KG).
-
-    Scale shape: identical to ``sssp_bellman_ford`` — per round ONE join
-    of the CHANGED frontier against the once-materialized edge list (the
-    usability predicate ``e.t >= arrival`` rides the join), one min-agg,
-    localCheckpoint per round (rule 23).  Arrival shrinking only ever
-    WIDENS edge usability, so the changed-only frontier converges to the
-    same minima the twin's relax-all computes (kernel docstring carries
-    the argument)."""
-    e = (
-        tedges.select(
-            F.col(src).cast("long").alias("a"),
-            F.col(dst).cast("long").alias("b"),
-            F.col(time).cast("long").alias("t"),
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
+    event KG). ``_relax_rounds`` with the usability predicate
+    ``t >= arrival`` on the join: arrival shrinking only ever WIDENS edge
+    usability, so the changed-only frontier converges to the same minima
+    the twin's relax-all computes (``oracle.graph.temporal_reachability``
+    carries the argument)."""
+    e = _edge_list(tedges, src, dst, t=time)
+    return _relax_rounds(
+        e,
+        seeds,
+        rounds,
+        node,
+        "arrival",
+        0,
+        F.col("t"),
+        usable=F.col("t") >= F.col("arrival"),
     )
-    arr = (
-        seeds.select(F.col(node).cast("long").alias("node"))
-        .distinct()
-        .select("node", F.lit(0).cast("long").alias("arrival"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = arr
-    for _ in range(rounds):
-        relaxed = (
-            frontier.join(
-                e, (frontier.node == e.a) & (e.t >= frontier.arrival)
-            )
-            .select(F.col("b").alias("node"), F.col("t").alias("arrival"))
-        )
-        nxt = (
-            arr.withColumn("__old", F.lit(1))
-            .unionByName(relaxed.withColumn("__old", F.lit(0)))
-            .groupBy("node")
-            .agg(
-                F.min("arrival").alias("arrival"),
-                (
-                    F.min("arrival")
-                    < F.min(F.when(F.col("__old") == 1, F.col("arrival")))
-                ).alias("__improved_vs_old"),
-                F.max("__old").alias("__had_old"),
-            )
-            .withColumn(
-                "__changed",
-                (F.col("__had_old") == 0)
-                | F.coalesce(F.col("__improved_vs_old"), F.lit(False)),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = nxt.filter(F.col("__changed")).select("node", "arrival")
-        arr = nxt.select("node", "arrival").localCheckpoint(eager=True)
-    return arr
 
 
 def incremental_components(
@@ -946,14 +941,7 @@ def clustering_coefficients(
     enumeration (``triangle_counts_df`` — O(m^1.5) worst case); degrees
     are one map-side-combined aggregate; the stitch is a left join on
     node.  All-integer (rule 11) — bit-exact in any engine."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
-            F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     deg = (
         und.select(F.col("u").alias("node"))
         .union(und.select(F.col("v").alias("node")))
@@ -1003,12 +991,7 @@ def hits_integer(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("ea").alias("node"))
-        .union(e.select(F.col("eb").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _nodes(e, "ea", "eb").localCheckpoint(eager=True)
     hub = nodes.select("node", F.lit(1).cast("long").alias("hub"))
     auth = nodes.select("node", F.lit(0).cast("long").alias("auth"))
     for _ in range(iterations):
@@ -1043,22 +1026,6 @@ def hits_integer(
     )
 
 
-def _check_priority_ids(sym: DataFrame, op: str) -> None:
-    """Precondition of the ``(v·MIS_MUL) % MIS_MOD`` priority scramble:
-    node ids in ``[0, MIS_MOD)``.  Only there is it injective (and free of
-    BIGINT overflow, and equal to the pure-Python ``mis_priority``);
-    colliding priorities make neither neighbor a strict local minimum and
-    stall the rounds.  ``sym`` is the symmetrized ``(a, b)`` edge frame."""
-    from ..oracle.graph import MIS_MOD
-
-    lo, hi = sym.agg(F.min("a"), F.max("a")).first()
-    if lo is not None and (lo < 0 or hi >= MIS_MOD):
-        raise ValueError(
-            f"{op}: node ids must lie in [0, {MIS_MOD}) for the priority "
-            f"scramble, got [{lo}, {hi}]; densify the ids first"
-        )
-
-
 def maximal_independent_set(
     edges: DataFrame,
     max_rounds: int = 6,
@@ -1082,26 +1049,8 @@ def maximal_independent_set(
     unrolled SQL twin covers the same fixed budget (kcore's contract).
     Node ids must lie in ``[0, MIS_MOD)``, where the scramble is
     injective; ids outside raise ``ValueError``."""
-    from ..oracle.graph import MIS_MOD, MIS_MUL
-
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
-            F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(edges, src, dst)
     _check_priority_ids(sym, "maximal_independent_set")
-
-    def pri(col):
-        return (F.col(col) * F.lit(MIS_MUL)) % F.lit(MIS_MOD)
-
     undecided = (
         sym.select(F.col("a").alias("node")).distinct().localCheckpoint(eager=True)
     )
@@ -1118,11 +1067,11 @@ def maximal_independent_set(
             sym.join(ua, "a")
             .join(ub, "b")
             .groupBy("a")
-            .agg(F.min(pri("b")).alias("minp"))
+            .agg(F.min(_priority("b")).alias("minp"))
         )
         winners = (
             undecided.join(minnbr, undecided.node == minnbr.a, "left")
-            .filter(F.col("a").isNull() | (pri("node") < F.col("minp")))
+            .filter(F.col("a").isNull() | (_priority("node") < F.col("minp")))
             .select("node")
             .localCheckpoint(eager=True)
         )
@@ -1184,9 +1133,7 @@ def transitive_closure_doubling(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    nodes = e.select(F.col("a").alias("node")).union(
-        e.select(F.col("b").alias("node"))
-    ).distinct()
+    nodes = _nodes(e)
     reach = (
         nodes.select(F.col("node").alias("a"), F.col("node").alias("b"))
         .union(e)
@@ -1243,49 +1190,20 @@ def personalized_pagerank_integer(
     template over the ``{node}`` placeholder (e.g. ``"{node} % 97 = 0"``)
     — the SAME string ``oracle.graph.ppr_sql`` embeds in the DuckDB twin,
     so both engines evaluate one predicate source (rule 6 by
-    construction).  Plan shape identical to ``pagerank_integer`` (the
-    seed test is a codegen'd CASE, not a join): 2 shuffles/iteration,
-    edge list + out-degrees localCheckpoint-materialized once (rule 23).
+    construction); the seed test is a codegen'd CASE, not a join.
     Nodes unreachable from every seed hold rank exactly 0 at any scale —
     the locality property that makes PPR the 'related entities' query."""
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
+    return _int_pagerank(
+        edges,
+        src,
+        dst,
+        F.lit(1),
+        iterations,
+        init,
+        d_num,
+        d_den,
+        is_seed=F.expr(seed_pred.format(node="node")),
     )
-    deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    e = e.join(deg, "a").repartition("a").localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    base = ((d_den - d_num) * init) // d_den
-    is_seed = F.expr(seed_pred.format(node="node"))
-    ranks = nodes.select(
-        "node",
-        F.when(is_seed, F.lit(init)).otherwise(F.lit(0))
-        .cast("long").alias("rank_scaled"),
-    )
-    for _ in range(iterations):
-        inc = (
-            e.join(ranks, e.a == ranks.node)
-            .select(F.col("b"), F.expr("rank_scaled DIV deg").alias("c"))
-            .groupBy("b")
-            .agg(F.sum("c").alias("inc"))
-        )
-        ranks = (
-            nodes.join(inc, nodes.node == inc.b, "left")
-            .select(
-                "node",
-                (
-                    F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
-                    .cast("long")
-                    + F.expr(f"({d_num} * coalesce(inc, 0L)) DIV {d_den}")
-                ).alias("rank_scaled"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
 
 
 def seeded_sigma_df(
@@ -1299,51 +1217,11 @@ def seeded_sigma_df(
     """``(seed, node, dist, sigma)``: per-seed bounded-hop BFS carrying
     shortest-path counts on the (seed, node) PAIR key — the per-source σ
     table Brandes-style combinations need (:func:`bfs_path_counts_df`
-    merges the seed set; this keeps seeds separate, like
-    :func:`harmonic_centrality_df` but with σ sums instead of DISTINCT).
-
-    Scale shape: state is |seeds| × |hop cone| pairs; per level ONE
-    frontier join against the once-materialized edge list, one partial-
-    aggregated σ sum on the (seed, target) pair, one first-reach
-    anti-join; localCheckpoint per level (rule 23).  All-integer — the
+    merges the seed set; this keeps seeds separate).  All-integer — the
     caller owns the ``out_deg_max^max_hops`` int64 σ bound."""
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
+    dist = _seeded_bfs(
+        edges, seeds, max_hops, src, dst, node, per_seed=True, carry=_SIGMA
     )
-    dist = (
-        seeds.select(F.col(node).cast("long").alias("seed"))
-        .distinct()
-        .select(
-            "seed",
-            F.col("seed").alias("node"),
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(1).cast("long").alias("sig"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist.select("seed", "node", "sig")
-    for k in range(1, max_hops + 1):
-        pushed = (
-            frontier.join(e, frontier.node == e.a)
-            .groupBy("seed", F.col("b").alias("nnode"))
-            .agg(F.sum("sig").alias("sig"))
-        )
-        fresh = pushed.join(
-            dist,
-            (pushed.seed == dist.seed) & (pushed.nnode == dist.node),
-            "left_anti",
-        ).select(
-            "seed",
-            F.col("nnode").alias("node"),
-            F.lit(k).cast("long").alias("dist"),
-            F.col("sig").cast("long").alias("sig"),
-        )
-        dist = dist.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = dist.filter(F.col("dist") == k).select("seed", "node", "sig")
     return dist.select("seed", "node", "dist", F.col("sig").alias("sigma"))
 
 
@@ -1359,49 +1237,9 @@ def stress_centrality_df(
     restricted to seed pairs — the exact twin of
     ``oracle.graph.stress_centrality`` (see its docstring for the
     Brandes pair-combination identity and the completeness argument;
-    requires SYMMETRIC ``edges``).
-
-    Scale shape: one σ-BFS (|seeds| × cone state), then the seed-pair
-    distance table ``dd`` — |shortlist pairs| rows, broadcast — drives
-    two joins against the σ table re-keyed on the interior node; the
-    final agg is map-side-combinable on node.  No all-pairs state, no
-    float σ ratios."""
-    sig = seeded_sigma_df(edges, seeds, max_hops, src=src, dst=dst, node=node)
-    sig = sig.localCheckpoint(eager=True)  # reused 3× below (rule 23)
-    seeds_l = (
-        seeds.select(F.col(node).cast("long").alias("t_node")).distinct()
-    )
-    dd = (
-        sig.join(F.broadcast(seeds_l), sig.node == F.col("t_node"))
-        .filter((F.col("seed") < F.col("t_node")) & (F.col("dist") > 0))
-        .select(
-            F.col("seed").alias("s"),
-            F.col("t_node").alias("t"),
-            F.col("dist").alias("d_st"),
-        )
-    )
-    left = sig.select(
-        F.col("seed").alias("s"),
-        F.col("node").alias("v"),
-        F.col("dist").alias("d_sv"),
-        F.col("sigma").alias("sig_sv"),
-    )
-    right = sig.select(
-        F.col("seed").alias("t"),
-        F.col("node").alias("v"),
-        F.col("dist").alias("d_tv"),
-        F.col("sigma").alias("sig_tv"),
-    )
-    j = (
-        F.broadcast(dd)
-        .join(left, "s")
-        .join(right, ["t", "v"])
-        .filter(
-            (F.col("d_sv") + F.col("d_tv") == F.col("d_st"))
-            & (F.col("v") != F.col("s"))
-            & (F.col("v") != F.col("t"))
-        )
-    )
+    requires SYMMETRIC ``edges``).  No all-pairs state, no float σ
+    ratios."""
+    j = _seed_pair_paths(edges, seeds, max_hops, src, dst, node)
     return j.groupBy(F.col("v").alias("node")).agg(
         F.sum(F.col("sig_sv") * F.col("sig_tv")).cast("long").alias("stress"),
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -1434,11 +1272,7 @@ def scc_bounded_df(
         )
         .distinct()
     )
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-    )
+    nodes = _nodes(e)
     reach = (
         nodes.select(F.col("node").alias("a"), F.col("node").alias("b"))
         .union(e.filter(F.col("a") != F.col("b")))
@@ -1497,47 +1331,9 @@ def betweenness_ppm_df(
     ``σ_sv·σ_vt / σ_st`` made integer-exact (rule 11) as the per-pair
     term ``(1e6·σ_sv·σ_vt) DIV σ_st`` (the seed-pair distance table
     carries σ_st, so the division never leaves integer space and both
-    twins evaluate the identical truncation).
-
-    Scale shape is stress_centrality_df's: one σ-BFS on the (seed, node)
-    pair key, a broadcast seed-pair table (now with σ_st), two joins
-    re-keyed on the interior node, one map-side-combinable agg.  Exact
-    twin: ``oracle.graph.betweenness_sql`` / ``betweenness_ppm``."""
-    sig = seeded_sigma_df(edges, seeds, max_hops, src=src, dst=dst, node=node)
-    sig = sig.localCheckpoint(eager=True)  # reused 3x below (rule 23)
-    seeds_l = seeds.select(F.col(node).cast("long").alias("t_node")).distinct()
-    dd = (
-        sig.join(F.broadcast(seeds_l), sig.node == F.col("t_node"))
-        .filter((F.col("seed") < F.col("t_node")) & (F.col("dist") > 0))
-        .select(
-            F.col("seed").alias("s"),
-            F.col("t_node").alias("t"),
-            F.col("dist").alias("d_st"),
-            F.col("sigma").alias("sig_st"),
-        )
-    )
-    left = sig.select(
-        F.col("seed").alias("s"),
-        F.col("node").alias("v"),
-        F.col("dist").alias("d_sv"),
-        F.col("sigma").alias("sig_sv"),
-    )
-    right = sig.select(
-        F.col("seed").alias("t"),
-        F.col("node").alias("v"),
-        F.col("dist").alias("d_tv"),
-        F.col("sigma").alias("sig_tv"),
-    )
-    j = (
-        F.broadcast(dd)
-        .join(left, "s")
-        .join(right, ["t", "v"])
-        .filter(
-            (F.col("d_sv") + F.col("d_tv") == F.col("d_st"))
-            & (F.col("v") != F.col("s"))
-            & (F.col("v") != F.col("t"))
-        )
-    )
+    twins evaluate the identical truncation).  Exact twin:
+    ``oracle.graph.betweenness_sql`` / ``betweenness_ppm``."""
+    j = _seed_pair_paths(edges, seeds, max_hops, src, dst, node)
     return j.groupBy(F.col("v").alias("node")).agg(
         F.sum(
             F.expr("CAST(1000000 AS BIGINT) * sig_sv * sig_tv DIV sig_st")
@@ -1593,9 +1389,7 @@ def boruvka_msf(
         F.col(weight).cast("long").alias("w"),
     ).localCheckpoint(eager=True)
     comp = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
+        _nodes(e, "u", "v")
         .select("node", F.col("node").alias("comp"))
         .localCheckpoint(eager=True)
     )
@@ -1717,47 +1511,11 @@ def closeness_profile_df(
 ) -> DataFrame:
     """``(seed, n_reached, sum_dist, closeness_ppm)``: the bounded-hop
     CLOSENESS profile of ``oracle.graph.closeness_profile`` — the same
-    per-seed (seed, node) pair-key BFS as :func:`harmonic_centrality_df`
-    (per level one frontier join + distinct + first-reach anti-join,
-    localCheckpoint per level — rule 23), aggregated to the exact integer
-    numerator/denominator of closeness centrality plus the ppm ratio
-    (``10^6 · n_reached DIV sum_dist`` — rule 11, no float boundary;
-    isolated seeds → (0, 0, 0)).  Scale shape: state is |seeds| × |cone|
-    pairs; at 100 TB the seed set is the serving shortlist, never the
-    whole node set."""
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        seeds.select(F.col(node).cast("long").alias("seed"))
-        .distinct()
-        .select(
-            "seed", F.col("seed").alias("node"), F.lit(0).cast("long").alias("dist")
-        )
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist.select("seed", "node")
-    for k in range(1, max_hops + 1):
-        pushed = (
-            frontier.join(e, frontier.node == e.a)
-            .select("seed", F.col("b").alias("nnode"))
-            .distinct()
-        )
-        fresh = pushed.join(
-            dist,
-            (pushed.seed == dist.seed) & (pushed.nnode == dist.node),
-            "left_anti",
-        ).select(
-            "seed",
-            F.col("nnode").alias("node"),
-            F.lit(k).cast("long").alias("dist"),
-        )
-        dist = dist.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = dist.filter(F.col("dist") == k).select("seed", "node")
+    per-seed BFS as :func:`harmonic_centrality_df`, aggregated to the
+    exact integer numerator/denominator of closeness centrality plus the
+    ppm ratio (``10^6 · n_reached DIV sum_dist`` — rule 11, no float
+    boundary; isolated seeds → (0, 0, 0))."""
+    dist = _seeded_bfs(edges, seeds, max_hops, src, dst, node, per_seed=True)
     agg = dist.groupBy("seed").agg(
         F.count(F.when(F.col("dist") > 0, 1)).cast("long").alias("n_reached"),
         F.coalesce(
@@ -1798,13 +1556,7 @@ def katz_centrality_df(
     reached by any walk score 0 (left join from the node universe).
     Scale shape: per round ONE shuffle on dst; state is one BIGINT per
     node — the same footprint as :func:`pagerank_integer`."""
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
-    )
+    e = _edge_list(edges, src, dst)
     universe = nodes.select(F.col(node).cast("long").alias("node")).distinct()
     w = universe.select("node", F.lit(1).cast("long").alias("w"))
     contribs = None
@@ -1937,26 +1689,8 @@ def jones_plassmann_coloring(
     scramble (rule 11) so no tie-break is needed; overrunning
     ``max_rounds`` or exhausting ``max_colors`` raises LOUDLY.  Node ids
     must lie in ``[0, MIS_MOD)`` (see :func:`maximal_independent_set`)."""
-    from ..oracle.graph import MIS_MOD, MIS_MUL
-
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
-            F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(edges, src, dst)
     _check_priority_ids(sym, "jones_plassmann_coloring")
-
-    def pri(col):
-        return (F.col(col) * F.lit(MIS_MUL)) % F.lit(MIS_MOD)
-
     spark = edges.sparkSession
     cand = F.broadcast(
         spark.range(max_colors).select(F.col("id").cast("long").alias("color"))
@@ -1978,11 +1712,11 @@ def jones_plassmann_coloring(
             sym.join(ua, "a")
             .join(ub, "b")
             .groupBy("a")
-            .agg(F.min(pri("b")).alias("minp"))
+            .agg(F.min(_priority("b")).alias("minp"))
         )
         ready = (
             uncolored.join(minnbr, uncolored.node == minnbr.a, "left")
-            .filter(F.col("a").isNull() | (pri("node") < F.col("minp")))
+            .filter(F.col("a").isNull() | (_priority("node") < F.col("minp")))
             .select("node")
             .localCheckpoint(eager=True)
         )
@@ -2038,54 +1772,19 @@ def widest_path_bounded(
     """Bounded-round WIDEST PATH (max-min semiring): ``(node, cap)`` =
     the maximum over ≤``rounds``-hop paths from any seed of the MINIMUM
     edge weight along the path — the bottleneck-capacity / reliability
-    routing query, and the proof that :func:`sssp_bellman_ford`'s
-    changed-frontier loop is SEMIRING-GENERIC (swap (min, +) for
-    (max, min) and nothing else moves: same per-round join + agg, same
-    localCheckpoint discipline, same bit-exact integer state).  Seeds
-    start at ``source_cap`` (an "infinite" source).  Unreached nodes are
-    absent.  All-integer maxima ⇒ round-K state is engine- and
-    partitioning-independent; the unrolled SQL twin relaxes ALL nodes
-    per round — identical maxima (the sssp_sql argument, flipped)."""
-    e = (
-        wedges.select(
-            F.col(src).cast("long").alias("a"),
-            F.col(dst).cast("long").alias("b"),
-            F.col(weight).cast("long").alias("w"),
-        )
-        .repartition("a")
-        .localCheckpoint(eager=True)
+    routing query: :func:`sssp_bellman_ford`'s ``_relax_rounds`` with
+    (max, min) in place of (min, +).  Seeds start at ``source_cap`` (an
+    "infinite" source).  Unreached nodes are absent.  The unrolled SQL
+    twin relaxes ALL nodes per round — identical maxima (the sssp_sql
+    argument, flipped)."""
+    e = _edge_list(wedges, src, dst, w=weight)
+    return _relax_rounds(
+        e,
+        seeds,
+        rounds,
+        node,
+        "cap",
+        source_cap,
+        F.least(F.col("cap"), F.col("w")),
+        maximize=True,
     )
-    cap = (
-        seeds.select(F.col(node).cast("long").alias("node"))
-        .distinct()
-        .select("node", F.lit(source_cap).cast("long").alias("cap"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = cap
-    for _ in range(rounds):
-        relaxed = frontier.join(e, frontier.node == e.a).select(
-            F.col("b").alias("node"),
-            F.least(F.col("cap"), F.col("w")).alias("cap"),
-        )
-        nxt = (
-            cap.withColumn("__old", F.lit(1))
-            .unionByName(relaxed.withColumn("__old", F.lit(0)))
-            .groupBy("node")
-            .agg(
-                F.max("cap").alias("cap"),
-                (
-                    F.max("cap")
-                    > F.max(F.when(F.col("__old") == 1, F.col("cap")))
-                ).alias("__improved_vs_old"),
-                F.max("__old").alias("__had_old"),
-            )
-            .withColumn(
-                "__changed",
-                (F.col("__had_old") == 0)
-                | F.coalesce(F.col("__improved_vs_old"), F.lit(False)),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = nxt.filter(F.col("__changed")).select("node", "cap")
-        cap = nxt.select("node", "cap").localCheckpoint(eager=True)
-    return cap

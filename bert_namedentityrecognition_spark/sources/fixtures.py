@@ -193,16 +193,6 @@ def generate_alias_edges() -> list[dict]:
     return [{"src": a, "dst": b} for a, b in ALIAS_CHAINS]
 
 
-def dictionary_terms(kind: str | None = None) -> list[str]:
-    """Matcher dictionary: surfaces > 2 chars (hyakuyaku.py:78-79 floor)."""
-    terms = []
-    if kind in (None, "drug"):
-        terms += DRUGS
-    if kind in (None, "symptom"):
-        terms += SYMPTOMS + ["咳"]
-    return [t for t in terms if len(t) > 2 or t in SYMPTOMS]
-
-
 def pipeline_term_types() -> dict[str, str]:
     """Tagger dictionary for the e2e pipeline: dimension surfaces plus the
     near-miss spellings (the NER model would emit unseen surfaces too —

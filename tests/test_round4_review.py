@@ -225,9 +225,11 @@ def test_pred_patterns_rsplit_allows_equals_in_regex(capsys):
 
 
 def test_check_oracles_norm_val_zero_sign():
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "tools"))
     from check_oracles import norm_val
 
     assert norm_val(-0.0) == norm_val(0.0) == "0.000000"

@@ -1,9 +1,8 @@
-"""Session-10 operators: maximal matching (line-graph MIS), gap
-histogram bucket math, and the integer-exact ARI readability formula."""
+"""Session-10 operators: maximal matching (line-graph MIS), Jones-Plassmann
+coloring and the registry queries added alongside them."""
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from bert_namedentityrecognition_spark.operators.graph import maximal_matching
 
@@ -118,34 +117,6 @@ def test_priority_scramble_rejects_ids_out_of_range(spark, bad):
         )
 
 
-def test_gap_bucket_is_floor_log2(spark):
-    gaps = [0, 1, 2, 3, 4, 7, 8, 1023, 1024, 123456]
-    df = spark.createDataFrame([(g,) for g in gaps], "g long")
-    out = df.select(
-        "g", (F.length(F.bin(F.col("g") + 1)) - 1).alias("b")
-    ).collect()
-    for r in out:
-        assert r["b"] == (r["g"] + 1).bit_length() - 1
-    # DuckDB side of the same formula
-    for g in gaps:
-        (b,) = duckdb.sql(
-            f"SELECT length(format('{{:b}}', {g} + 1)) - 1"
-        ).fetchone()
-        assert b == (g + 1).bit_length() - 1
-
-
-def test_ari_bucket_matches_reference_formula():
-    """The shifted integer DIV == floor(ARI) + 22 for hand-checked
-    (chars, words, sentences) triples, including negative-ARI docs."""
-    import math
-
-    for c, w, s in [(100, 20, 3), (5, 5, 1), (2000, 300, 20), (7, 7, 7)]:
-        ari = 4.71 * c / w + 0.5 * w / s - 21.43
-        bucket = (1000000 * (471 * c * s + 50 * w * w - 2143 * w * s)
-                  + 2200000000 * w * s) // (100000000 * w * s)
-        assert bucket == math.floor(ari) + 22, (c, w, s)
-
-
 def test_jp_coloring_proper_and_equals_kernel(spark):
     """Spark JP coloring == the pure-Python kernel on a random graph,
     and the result is a proper coloring."""
@@ -186,39 +157,6 @@ def test_jp_coloring_round_overrun_raises(spark):
         jones_plassmann_coloring(df, max_rounds=0).collect()
 
 
-def test_auc_ranksum_known_values():
-    """The 2R-integer rank-sum formula reproduces hand-computed AUCs:
-    perfect separation -> 1.0, reversed -> 0.0, all-tied -> 0.5."""
-    def auc_ppm(pairs):  # (score, is_pos)
-        from collections import Counter
-
-        ns = Counter(s for s, _ in pairs)
-        npos_s = Counter(s for s, p in pairs if p)
-        n_pos = sum(npos_s.values())
-        n_neg = len(pairs) - n_pos
-        cum = 0
-        r2 = 0
-        for s in sorted(ns):
-            r2 += npos_s.get(s, 0) * (2 * cum + ns[s] + 1)
-            cum += ns[s]
-        return (1000000 * (r2 - n_pos * (n_pos + 1))) // (2 * n_pos * n_neg)
-
-    assert auc_ppm([(1, False), (2, False), (3, True), (4, True)]) == 1000000
-    assert auc_ppm([(1, True), (2, True), (3, False), (4, False)]) == 0
-    assert auc_ppm([(5, True), (5, False), (5, True), (5, False)]) == 500000
-    # one tie straddling the classes: wins (1 + 2) + half-credit tie (0.5)
-    # over 4 pairs -> AUC = 0.875 exactly
-    assert auc_ppm([(1, False), (2, True), (2, False), (3, True)]) == 875000
-
-
-def test_gini_ppm_formula():
-    # 3 types with counts 2,1,1: gini = 1 - (4+1+1)/16 = 10/16 = 0.625
-    n, ss = 4, 6
-    assert (1000000 * (n * n - ss)) // (n * n) == 625000
-    # single type -> 0
-    assert (1000000 * (9 - 9)) // 9 == 0
-
-
 def test_ledger_audit_twin_replay_nonzero():
     """The ledger-audit oracle generator's per-page replay finds mentions
     and the VALUES cover the full MAX corpus (prefix-stability contract)."""
@@ -233,39 +171,6 @@ def test_ledger_audit_twin_replay_nonzero():
     assert sum(int(b) for _, b in pairs) > 0
     # some pages legitimately yield zero mentions (en/zh, null, >512)
     assert any(int(b) == 0 for _, b in pairs)
-
-
-def test_kendall_shift_formula():
-    # perfect increasing trend over 4 buckets: C=6, D=0, P=6 -> 1.0
-    assert (1000000 * (6 - 0 + 6)) // (2 * 6) == 1000000
-    # perfect decreasing: C=0, D=6 -> 0.0
-    assert (1000000 * (0 - 6 + 6)) // (2 * 6) == 0
-    # no trend (C == D) -> 0.5
-    assert (1000000 * (2 - 2 + 6)) // (2 * 6) == 500000
-
-
-def test_qerror_symmetric_and_floor_one():
-    # q-error is max/min, so over- and under-estimates score identically
-    est, act = 200, 100
-    assert (1000000 * max(est, act)) // max(min(est, act), 1) == 2000000
-    est, act = 100, 200
-    assert (1000000 * max(est, act)) // max(min(est, act), 1) == 2000000
-    # an empty conjunction doesn't divide by zero
-    assert (1000000 * max(50, 0)) // max(min(50, 0), 1) == 50000000
-
-
-def test_changepoint_statistic_peaks_at_shift():
-    """n*P_i - i*T peaks exactly at a constructed level shift."""
-    series = [10] * 5 + [50] * 5  # shift after day 5
-    n, t = len(series), sum(series)
-    best_i, best = None, -1
-    p = 0
-    for i, x in enumerate(series[:-1], start=1):
-        p += x
-        s = abs(n * p - i * t)
-        if s > best:
-            best, best_i = s, i
-    assert best_i == 5
 
 
 def test_bgp_optional_branch_totals(spark):
@@ -321,35 +226,6 @@ def test_edgecut_range_beats_hash(spark):
     # range cut ~ 3 boundary edges per seam (chain crosses once, skips twice)
     assert rows["range"]["n_cut"] <= 3 * 16
     assert rows["hash"]["cut_ppm"] > 800000  # ~ 1 - 1/16 = 937500
-
-
-def test_ks_statistic_on_constructed_shift():
-    """Integer KS replay: two samples with a clean location shift give
-    D == max gap at the boundary."""
-    s1 = [1, 2, 3, 4, 5]
-    s2 = [6, 7, 8, 9, 10]
-    vals = sorted(set(s1) | set(s2))
-    n1, n2 = len(s1), len(s2)
-    best = 0
-    for v in vals:
-        c1 = sum(1 for x in s1 if x <= v)
-        c2 = sum(1 for x in s2 if x <= v)
-        best = max(best, abs(n2 * c1 - n1 * c2))
-    assert best == n1 * n2  # fully separated -> D = 1
-
-
-def test_gini_rank_sum_identity():
-    # equal spends -> G = 0; one customer has everything -> G -> (n-1)/n
-    def g(xs):
-        xs = sorted(xs)
-        n, sx = len(xs), sum(xs)
-        six = sum((i + 1) * x for i, x in enumerate(xs))
-        return (2 * six - (n + 1) * sx, n * sx)
-
-    num, den = g([5, 5, 5, 5])
-    assert num == 0
-    num, den = g([0, 0, 0, 100])
-    assert num * 4 == den * 3  # G = 3/4 = (n-1)/n
 
 
 def test_view_selection_prefix_property(spark):

@@ -62,11 +62,12 @@ def test_reducer_split_salting_direction(spark):
     — exactly Spark's hash partitioning) and therefore cannot flip with
     host windows the way wall time did. Plain keys pin the hot cell's rows
     on one reducer; salted keys flatten max toward median."""
+    import os
     import sys
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from bench import _reducer_split
 
     from bert_namedentityrecognition_spark.operators.normalize import (
