@@ -6497,8 +6497,9 @@ def _warc_ingest_mentions(spark, sf):
     section previously without an oracle-gated row): a deterministic WARC
     fixture (plain + gzip segments, script subtrees, HTML entities, an
     English decoy page per 10) is materialized to ``_writable_base()``,
-    then ``read_warc`` (binaryFile → framing parser) → ``prepare_pages``
-    (html→text fallback + lang-ID — rows arrive with text=null by design)
+    then ``read_warc`` (binaryFile → framing parser, which derives text =
+    ``html_to_text(html)`` per record) → ``prepare_pages`` (lang-ID; no
+    second html→text pass over the reader's text-complete frame)
     → ``extract_mentions`` (fused split/512/han_to_zen/tag stage,
     lang_filter='cjk'). Output grain is (url, term, kind): occurrence
     count ``n`` plus the per-url ``warc_ts`` (gates WARC-Date parsing) and

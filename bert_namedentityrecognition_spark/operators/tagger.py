@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from ..oracle.matcher import automaton_match, build_automaton
 from ..oracle.textproc import han_to_zen, html_to_text, preprocess_text, split_sentences
+from .sentences import _has_text, _is_text_complete
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -186,13 +187,16 @@ def _pages_text_source(
     _html is null unless the row needs the html→text fallback (text null or
     empty): the pushable filter keeps text-or-html rows, and the JVM-side
     ``when`` gate keeps html bytes out of the Arrow transfer for text rows.
+    A frame marked text-complete (``read_warc``'s or ``prepare_pages``'
+    output) needs no fallback: it keeps its rows with text and ships no
+    html at all.
     EVERY pages consumer must come through here (CLAUDE.md rule 10) so the
     input contract stays in one place: fallback gating and lang here, then
     html decode, split and length cut in :func:`_page_sentences`.
     ``extra_cols`` carries additional passthrough columns (e.g. warc_ts
     for the streaming pair path)."""
-    has_text = F.col("text").isNotNull() & (F.col("text") != "")
-    if "html" in pages.columns:
+    has_text = _has_text("text")
+    if "html" in pages.columns and not _is_text_complete(pages):
         df = pages.filter(has_text | F.col("html").isNotNull())
         html_arg = F.when(~has_text, F.col("html"))
     else:

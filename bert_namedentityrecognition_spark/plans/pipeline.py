@@ -197,15 +197,16 @@ def write_outputs_iceberg(
     twin above is the measured path.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.functions.partitioning import bucket
 
     outputs["mentions"].writeTo(f"{table_prefix}_mentions").partitionedBy(
-        F.bucket(url_buckets, F.col("url"))
+        bucket(url_buckets, F.col("url"))
     ).createOrReplace()
     outputs["triples"].writeTo(f"{table_prefix}_triples").createOrReplace()
     outputs["nodes"].writeTo(f"{table_prefix}_nodes").partitionedBy(
-        F.bucket(id_buckets, F.col("entity_id"))
+        bucket(id_buckets, F.col("entity_id"))
     ).createOrReplace()
     if "edges" in outputs:
         outputs["edges"].writeTo(f"{table_prefix}_edges").partitionedBy(
-            F.bucket(id_buckets, F.col("src_id"))
+            bucket(id_buckets, F.col("src_id"))
         ).createOrReplace()

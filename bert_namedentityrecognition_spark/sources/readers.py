@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.sentences import _mark_text_complete
+from ..oracle.textproc import html_to_text
+
 
 def read_text_corpus(spark: SparkSession, path: str, text_col: str = "value") -> DataFrame:
     """Text files; blank/whitespace rows dropped (NaN-skip semantics)."""
@@ -237,8 +240,10 @@ def parse_warc_bytes(blob: bytes) -> list[dict]:
     Proper record framing: read the WARC header block (terminated by
     CRLFCRLF), take exactly Content-Length payload bytes, skip the record
     separator. For ``response`` records the payload is an HTTP message —
-    the body after its own header block becomes the ``html`` bytes; ``text``
-    stays null so the pipeline's html→text fallback produces it.
+    the body after its own header block becomes the ``html`` bytes and
+    ``html_to_text`` of those bytes the ``text`` (``""`` for a page with no
+    text, e.g. script only) — the same kernel as the pipeline's html→text
+    fallback, run here while the bytes are already in Python.
     Multi-member gzip (the per-record compression Common Crawl uses) is
     handled upstream by ``gzip`` transparently.
     """
@@ -295,7 +300,7 @@ def parse_warc_bytes(blob: bytes) -> list[dict]:
                 "url": headers.get("warc-target-uri"),
                 "warc_ts": ts,
                 "html": body,
-                "text": None,
+                "text": html_to_text(body),
                 "lang": None,
             }
         )
@@ -309,9 +314,16 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     ships ~1 GB segment files, so file-level parallelism is the natural
     split; WARC gzip members are not block-splittable) → one ``mapInPandas``
     stage running the framing parser per file. ``.gz`` members decompress
-    transparently (Python gzip reads concatenated members). ``text`` is null
-    by design: the pipeline's html→text fallback derives it, keeping the
-    byte-identical-text invariant rooted in the archived bytes.
+    transparently (Python gzip reads concatenated members).
+
+    ``text`` is ``html_to_text(html)``, derived by the parser in the same
+    Python section that holds the bytes (the same kernel as the pipeline's
+    html→text fallback, so the byte-identical-text invariant stays rooted
+    in the archived bytes). The returned DataFrame object is marked
+    text-complete: ``prepare_pages``, ``pages_to_sentences`` and the
+    mention stages plan no second html→text pass over it. The mark is on
+    this object only; any frame derived from it (a union, a withColumn)
+    takes the fallback again.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -329,7 +341,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
             )
 
     files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return files.mapInPandas(run, schema=_PAGES_SCHEMA)
+    return _mark_text_complete(files.mapInPandas(run, schema=_PAGES_SCHEMA))
 
 
 def write_ntriples(

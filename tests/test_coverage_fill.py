@@ -382,10 +382,12 @@ def _make_warc(records):
 
 
 def test_warc_reader_end_to_end(spark, tmp_path):
-    """WARC (plain + gzip) → pages table → full KG pipeline via the
-    html→text fallback: Common Crawl's container feeds the engine."""
+    """WARC (plain + gzip) → pages table, its text derived by the reader
+    from the html bytes → full KG pipeline: Common Crawl's container feeds
+    the engine."""
     import gzip
 
+    from bert_namedentityrecognition_spark.oracle.textproc import html_to_text
     from bert_namedentityrecognition_spark.plans.pipeline import run_kg_pipeline
     from bert_namedentityrecognition_spark.sources import fixtures
     from bert_namedentityrecognition_spark.sources.readers import read_warc
@@ -411,7 +413,7 @@ def test_warc_reader_end_to_end(spark, tmp_path):
     # 2 response records per file x 2 files; warcinfo/request skipped
     assert len(rows) == 4
     assert {r.url for r in rows} == {"http://ex.com/a", "http://ex.com/b"}
-    assert all(r.text is None and bytes(r.html) == html for r in rows)
+    assert all(bytes(r.html) == html and r.text == html_to_text(bytes(r.html)) for r in rows)
     assert all(r.warc_ts is not None and r.warc_ts.year == 2024 for r in rows)
 
     dim = fixtures.entity_dim_to_spark(spark)

@@ -47,7 +47,10 @@ def test_nodes_and_edges_resolve_entity_ids(spark, tmp_path):
 
 def test_write_outputs_iceberg_requires_catalog(spark):
     """The V2 writeTo path is real code that fails only at catalog
-    resolution in this jar-less sandbox (no silent parquet fallback)."""
+    resolution in this jar-less sandbox (no silent parquet fallback), and
+    builds its partition transforms without a deprecated alias."""
+    import warnings
+
     import pytest
     from pyspark.sql.utils import AnalysisException
 
@@ -57,7 +60,8 @@ def test_write_outputs_iceberg_requires_catalog(spark):
 
     mentions = spark.createDataFrame([("u1", 0, "w", "drug")],
                                      ["url", "sent_id", "word", "type"])
-    with pytest.raises(AnalysisException):
+    with warnings.catch_warnings(), pytest.raises(AnalysisException):
+        warnings.simplefilter("error", FutureWarning)
         write_outputs_iceberg({"mentions": mentions, "triples": mentions,
                                "nodes": mentions}, "nocatalog.db.kg")
 
