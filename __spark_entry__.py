@@ -364,182 +364,6 @@ FROM g GROUP BY user_id
 """
 
 
-def _events_asof_join(spark, sf):
-    """As-of join each event to the user's most recent PRIOR purchase
-    (inclusive at equal timestamps) — the temporal-dimension lookup Spark
-    has no native operator for, re-expressed as the union + ordered-window
-    merge in ``operators/temporal.py:asof_join`` (ONE shuffle on user_id,
-    zero joins).  The oracle is DuckDB's native ``ASOF LEFT JOIN``, so the
-    tie rule and left semantics are checked against an independent
-    implementation, not a twin of our own construction.  Timestamps compare
-    as BIGINT epoch-microseconds (rule 11: integer-exact, no float
-    rounding); the payload lag is exact integer arithmetic.  Dim rows are
-    pre-aggregated per (user_id, ts) so the carried version is pinned."""
-    from bert_namedentityrecognition_spark.operators.temporal import asof_join
-
-    e = _t(spark, sf, "events")
-    ep = F.expr("unix_micros(cast(ts as timestamp_ltz))")
-    fact = e.select("event_id", "user_id", ep.alias("ts_us"))
-    dim = (
-        e.filter(F.col("event_type") == "purchase")
-        .select("user_id", ep.alias("ts_us"), "event_id")
-        .groupBy("user_id", "ts_us")
-        .agg(F.max("event_id").alias("purchase_event_id"))
-        .withColumn("purchase_ts_us", F.col("ts_us"))
-    )
-    out = asof_join(
-        fact, dim, ["user_id"], "ts_us", ["purchase_event_id", "purchase_ts_us"]
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("purchase_event_id").alias("last_purchase_event_id"),
-        (F.col("ts_us") - F.col("purchase_ts_us"))
-        .cast("long")
-        .alias("us_since_purchase"),
-    )
-
-
-_EVENTS_ASOF_SQL = """
-WITH f AS (
-  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-),
-dim AS (
-  SELECT user_id, epoch_us(ts) AS ts_us,
-         max(event_id) AS purchase_event_id
-  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-)
-SELECT f.event_id, f.user_id,
-       dim.purchase_event_id AS last_purchase_event_id,
-       CAST(f.ts_us - dim.ts_us AS BIGINT) AS us_since_purchase
-FROM f ASOF LEFT JOIN dim
-  ON f.user_id = dim.user_id AND f.ts_us >= dim.ts_us
-"""
-
-
-def _events_range_join(spark, sf):
-    """Range (interval-containment) join: every error event opens a
-    10-minute incident window; count the same user's events inside it.
-    A theta-join here cross-products per user; the scalable re-expression
-    (``operators/temporal.py:range_join_buckets``) explodes each interval
-    to the <=2 fixed-width buckets it covers and equi-joins on
-    (user_id, bucket) with an exact BETWEEN refinement — bounded 2x
-    blow-up at any corpus size.  The oracle is the plain inequality join
-    DuckDB can afford at gate scale.  Bounds are inclusive; the error
-    event itself falls in its own window, so every group is non-empty and
-    both the matched and unmatched-neighbor branches are live at every
-    sf.  Epoch-microsecond BIGINTs per rule 11."""
-    from bert_namedentityrecognition_spark.operators.temporal import (
-        range_join_buckets,
-    )
-
-    e = _t(spark, sf, "events")
-    ep = F.expr("unix_micros(cast(ts as timestamp_ltz))")
-    pts = e.select("user_id", ep.alias("p_us"))
-    ivs = e.filter(F.col("event_type") == "error").select(
-        "user_id",
-        ep.alias("lo_us"),
-        (ep + F.lit(600_000_000)).alias("hi_us"),
-        F.col("event_id").alias("incident_id"),
-    )
-    joined = range_join_buckets(
-        pts, ivs, ["user_id"], "p_us", "lo_us", "hi_us", 600_000_000
-    )
-    return joined.groupBy("incident_id", "user_id").agg(
-        F.count("*").alias("n_events_in_window")
-    )
-
-
-_EVENTS_RANGE_SQL = """
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type FROM events
-),
-iv AS (
-  SELECT user_id, ts_us AS lo_us, ts_us + 600000000 AS hi_us,
-         event_id AS incident_id
-  FROM ev WHERE event_type = 'error'
-)
-SELECT iv.incident_id, iv.user_id,
-       CAST(count(*) AS BIGINT) AS n_events_in_window
-FROM iv JOIN ev ON ev.user_id = iv.user_id
-                AND ev.ts_us BETWEEN iv.lo_us AND iv.hi_us
-GROUP BY 1, 2
-"""
-
-
-def _url_host_stats(spark, sf):
-    """Web-crawl URL canonicalization + per-host dup stats (the CCNet /
-    RefinedWeb pre-content pass).  Messy URLs are synthesized
-    deterministically per doc_id (mixed case, www., default ports,
-    tracking params, fragments, trailing slashes) so every
-    canonicalization rule is live at every sf; the canonical transform is
-    pure JVM regexp chains (``functions/urltools.py``) whose DuckDB twin
-    is GENERATED from the same pattern constants — the engines share one
-    source of truth, and ``tests/test_urltools.py`` asserts parity on a
-    fuzz set beyond the synthesis below.  One shuffle (host agg)."""
-    from bert_namedentityrecognition_spark.functions.urltools import (
-        url_host_stats,
-    )
-
-    d = _t(spark, sf, "documents")
-    i = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    url = F.concat(
-        F.lit("HTTPS://"),
-        F.when(i % 3 == 0, F.lit("WWW.")).otherwise(F.lit("")),
-        F.lit("Site"), s(i % 37), F.lit(".Example.COM"),
-        F.when(i % 5 == 0, F.lit(":443")).otherwise(F.lit("")),
-        F.lit("/Path/"), s(i % 11),
-        F.when(i % 2 == 0, F.lit("/")).otherwise(F.lit("")),
-        F.when(
-            i % 4 == 0,
-            F.concat(F.lit("?utm_source=feed&id="), s(i % 7),
-                     F.lit("&utm_campaign=x")),
-        ).when(
-            i % 4 == 1,
-            F.concat(F.lit("?id="), s(i % 7), F.lit("&fbclid=abc")),
-        ).otherwise(F.lit("")),
-        F.when(i % 6 == 0, F.lit("#frag")).otherwise(F.lit("")),
-    )
-    return url_host_stats(d.select(url.alias("url")))
-
-
-def _url_host_stats_sql() -> str:
-    from bert_namedentityrecognition_spark.functions.urltools import (
-        canonical_url_sql,
-    )
-
-    exprs = canonical_url_sql("url")
-    return f"""
-WITH raw AS (
-  SELECT 'HTTPS://'
-    || CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END
-    || 'Site' || CAST(doc_id % 37 AS VARCHAR) || '.Example.COM'
-    || CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END
-    || '/Path/' || CAST(doc_id % 11 AS VARCHAR)
-    || CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END
-    || CASE WHEN doc_id % 4 = 0
-            THEN '?utm_source=feed&id=' || CAST(doc_id % 7 AS VARCHAR) || '&utm_campaign=x'
-            WHEN doc_id % 4 = 1
-            THEN '?id=' || CAST(doc_id % 7 AS VARCHAR) || '&fbclid=abc'
-            ELSE '' END
-    || CASE WHEN doc_id % 6 = 0 THEN '#frag' ELSE '' END AS url
-  FROM documents
-),
-canon AS (
-  SELECT {exprs['canonical_url']} AS canonical_url,
-         {exprs['host']} AS host,
-         {exprs['registered_domain']} AS registered_domain
-  FROM raw
-)
-SELECT host, registered_domain,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(DISTINCT canonical_url) AS BIGINT) AS n_canonical,
-       CAST(count(*) - count(DISTINCT canonical_url) AS BIGINT) AS n_url_dups
-FROM canon GROUP BY host, registered_domain
-"""
-
-
 def _kg_mentions(spark, sf):  # gazetteer NER (§2.8 containment join)
     m = _doc_mentions(spark, sf)
     return m.groupBy(
@@ -4165,85 +3989,6 @@ FROM topk t LEFT JOIN topk b ON b.src_id = t.dst_id AND b.dst_id = t.src_id"""
     )
 
 
-_BM25_TERMS = ["merge", "window", "customer"]
-
-
-def _bm25_ranking(spark, sf):
-    """Log-free BM25 ranked retrieval over the sf-scaled documents table:
-    top-10 docs for a 3-term query, idf = the raw Robertson–Sparck-Jones
-    odds ratio (N-df+0.5)/(df+0.5) so every step is IEEE +,-,*,/ in DOUBLE
-    and the twin replays the score bit-for-bit (the kg_pmi_edges log-free
-    precedent). Corpus stats are one map-side-combined aggregate broadcast
-    back; the top-N is TakeOrderedAndProject (partial top-k, no global
-    sort); only 10 rows cross the rank window."""
-    from bert_namedentityrecognition_spark.operators.retrieval import bm25_rank
-
-    return bm25_rank(
-        _t(spark, sf, "documents"), _BM25_TERMS, k1=1.2, b=0.75, top_n=10
-    )
-
-
-def _bm25_sql(
-    terms: list[str] | None = None,
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_n: int = 10,
-) -> str:
-    """SQL twin of ``_bm25_ranking`` — identical tokenization
-    (string_split_regex ↔ split), identical double fold order (idf, denom,
-    per-term score, left-assoc term sum), rank over the same (score DESC,
-    doc_id ASC) ordering of bit-identical doubles."""
-    terms = _BM25_TERMS if terms is None else terms
-    tf_cols = ",\n    ".join(
-        f"len(list_filter(t, x -> x = '{t}')) AS tf{i}"
-        for i, t in enumerate(terms)
-    )
-    df_cols = ",\n    ".join(
-        f"SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
-        for i in range(len(terms))
-    )
-    avgdl = "(CAST(s.sum_dl AS DOUBLE) / CAST(s.n_docs AS DOUBLE))"
-
-    def term_score(i: int) -> str:
-        tf = f"CAST(f.tf{i} AS DOUBLE)"
-        df = f"CAST(s.df{i} AS DOUBLE)"
-        idf = f"(((CAST(s.n_docs AS DOUBLE) - {df}) + 0.5) / ({df} + 0.5))"
-        denom = (
-            f"({tf} + ({k1!r} * ((1.0 - {b!r}) + "
-            f"({b!r} * (CAST(f.dl AS DOUBLE) / {avgdl})))))"
-        )
-        return f"(({idf} * ({tf} * {k1 + 1.0!r})) / {denom})"
-
-    score = term_score(0)
-    for i in range(1, len(terms)):
-        score = f"({score} + {term_score(i)})"
-    return f"""
-WITH base AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-),
-feat AS (
-  SELECT doc_id, len(t) AS dl,
-    {tf_cols}
-  FROM base
-),
-stats AS (
-  SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl,
-    {df_cols}
-  FROM feat
-),
-scored AS (
-  SELECT f.doc_id, {score} AS score
-  FROM feat f CROSS JOIN stats s
-)
-SELECT doc_id, CAST(rank AS BIGINT) AS rank, round(score, 6) AS bm25_score
-FROM (
-  SELECT doc_id, score,
-    row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {top_n}
-"""
-
-
 def _orc_roundtrip(spark, sf):
     """ORC format boundary under the gate (beyond-reference §2.1/§2.2
     breadth — Spark's other first-class columnar format, jar-less): the
@@ -6499,7 +6244,9 @@ def _warc_ingest_mentions(spark, sf):
     English decoy page per 10) is materialized to ``_writable_base()``,
     then ``read_warc`` (binaryFile → framing parser, which derives text =
     ``html_to_text(html)`` per record) → ``prepare_pages`` (lang-ID; no
-    second html→text pass over the reader's text-complete frame)
+    second html→text pass over the reader's text-complete frame),
+    materialized once without the html column (rule 23: the mention side
+    and the per-url side both read it, and the fixture is parsed once)
     → ``extract_mentions`` (fused split/512/han_to_zen/tag stage,
     lang_filter='cjk'). Output grain is (url, term, kind): occurrence
     count ``n`` plus the per-url ``warc_ts`` (gates WARC-Date parsing) and
@@ -6521,7 +6268,7 @@ def _warc_ingest_mentions(spark, sf):
     n_pages = _warc_pages_for_events(_t(spark, sf, "events").count())
     d = os.path.join(_writable_base(), "var", f"warc_fixture_{n_pages}")
     fixtures.write_warc_fixture(d, n_pages)
-    pages = prepare_pages(read_warc(spark, d))
+    pages = prepare_pages(read_warc(spark, d)).drop("html").localCheckpoint(eager=True)
     m = extract_mentions(pages, fixtures.WARC_TERM_TYPES, lang_filter="cjk")
     per_url = pages.select(
         "url",
@@ -6765,121 +6512,6 @@ SELECT a.article_id, a.src, CAST(a.year AS BIGINT) AS year,
   CAST((length(a.text) - length(replace(a.text, t.term, ''))) / length(t.term) AS BIGINT) AS n
 FROM arts a CROSS JOIN (VALUES {terms_sql}) AS t(term, kind)
 WHERE length(a.text) - length(replace(a.text, t.term, '')) > 0
-"""
-
-
-def _textprep_texts(n: int) -> list[tuple[int, str]]:
-    """Fixture texts for the §2.4 scalar gate — six patterns cycling,
-    each made unique by the embedded index (digits are OUTSIDE the
-    normalize-prefix charset, so they also pin where the prefix stops):
-    mid-string and end-of-string 。 (the end one gets NO newline — the
-    lookahead needs a following char), consecutive 。。, 。 already
-    followed by \\n (no double insert), XML tags, the reference's
-    ``A-z`` charset quirk (accepts ``_ ^`` etc.), and a leading 。."""
-    out = []
-    for i in range(n):
-        p = i % 6
-        if p == 0:
-            t = f"今日は晴れ{i}。明日は雨。"
-        elif p == 1:
-            t = f"連続{i}。。テスト"
-        elif p == 2:
-            t = f"既に改行{i}。\nあり。"
-        elif p == 3:
-            t = f"タグ{i}<b>付き</b>文。"
-        elif p == 4:
-            t = f"Prefix_Test^ abc{i}、続き。"
-        else:
-            t = f"。先頭句点{i}"
-        out.append((i, t))
-    return out
-
-
-def _textprep_scalars(spark, sf):
-    """§2.4's remaining scalar functions under one gate, all three as JVM
-    Column expressions (zero Python on the path):
-    ``newline_after_period`` (``predict_for_xls_folder.py:61`` — Java
-    regex lookahead), ``normalize_text_prefix`` (``excelToTxt.py:9-11``
-    — anchored charset run INCLUDING the reference's ``A-z`` quirk, which
-    admits ``[ \\ ] ^ _ `` ``), and the ``remove_tags`` default branch
-    (``util/text_utils.py:86-98`` — ``<[^<>]*>`` strip). sf-scaled
-    60/180/600 texts via the events probe. The DuckDB twin cannot use
-    lookahead (RE2), so it replays the newline insert with the
-    lookbehind-free per-character walk (CLAUDE.md rule 14's recipe);
-    generation-time assertions pin both derivations to the
-    ``oracle/textproc.py`` kernels per text."""
-    from bert_namedentityrecognition_spark.functions.textprep import (
-        newline_after_period,
-        normalize_text_prefix,
-    )
-
-    n = _warc_pages_for_events(_t(spark, sf, "events").count())
-    docs = spark.createDataFrame(_textprep_texts(n), "doc_id long, text string")
-    return docs.select(
-        "doc_id",
-        newline_after_period(F.col("text")).alias("nl_text"),
-        normalize_text_prefix(F.col("text")).alias("prefix"),
-        F.regexp_replace("text", "<[^<>]*>", "").alias("untagged"),
-    )
-
-
-@functools.lru_cache(maxsize=1)
-def _textprep_scalars_sql() -> str:
-    """SQL twin of ``_textprep_scalars``; see its docstring. Asserts at
-    build time, per text: (a) the per-character-walk newline derivation
-    == the kernel regex; (b) prefix/untagged patterns are RE2-compatible
-    reformulations whose Python evaluation == the kernels."""
-    import re as _re
-
-    from bert_namedentityrecognition_spark.oracle.textproc import (
-        NORMALIZE_PREFIX_REGEX,
-        _NEWLINE_AFTER_PERIOD_RE,
-        _NORMALIZE_PREFIX_RE,
-        remove_tags,
-    )
-
-    def q(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
-    texts = _textprep_texts(_WARC_PAGES_MAX)
-    for _i, t in texts:
-        walk = "".join(
-            ch + ("\n" if ch == "。" and j + 1 < len(t) and t[j + 1] != "\n" else "")
-            for j, ch in enumerate(t)
-        )
-        assert walk == _NEWLINE_AFTER_PERIOD_RE.sub("。\n", t), t  # (a)
-        m = _re.match("^(" + NORMALIZE_PREFIX_REGEX + ")", t)
-        assert m.group(1) == _NORMALIZE_PREFIX_RE.match(t).group(0), t  # (b)
-        assert _re.sub("<[^<>]*>", "", t) == remove_tags(t), t  # (b)
-
-    docs_sql = ", ".join(f"({i}, {q(t)})" for i, t in texts)
-    prefix_re = "^(" + NORMALIZE_PREFIX_REGEX + ")"
-    return f"""
-WITH params AS (
-  SELECT least({_WARC_PAGES_MAX}, greatest({_WARC_PAGES_MIN},
-    {_WARC_PAGES_MIN} * CAST(floor(sqrt(CAST((SELECT count(*) FROM events) // 1000 AS DOUBLE))) AS INT)
-  )) AS n
-),
-docs_all(doc_id, text) AS (VALUES {docs_sql}),
-docs AS (SELECT doc_id, text FROM docs_all, params WHERE doc_id < params.n),
-chars AS (
-  SELECT d.doc_id, u.pos,
-    substring(d.text, CAST(u.pos AS INT), 1) AS ch,
-    substring(d.text, CAST(u.pos + 1 AS INT), 1) AS nxt
-  FROM docs d, unnest(range(1, length(d.text) + 1)) AS u(pos)
-),
-nl AS (
-  SELECT doc_id,
-    string_agg(
-      ch || CASE WHEN ch = '。' AND nxt != '' AND nxt != chr(10)
-                 THEN chr(10) ELSE '' END,
-      '' ORDER BY pos) AS nl_text
-  FROM chars GROUP BY doc_id
-)
-SELECT d.doc_id, n.nl_text,
-  regexp_extract(d.text, {q(prefix_re)}, 1) AS prefix,
-  regexp_replace(d.text, '<[^<>]*>', '', 'g') AS untagged
-FROM docs d JOIN nl n USING (doc_id)
 """
 
 
@@ -7691,133 +7323,6 @@ FROM per_sent
 """
 
 
-def _scd2_entity_history(spark, sf):
-    """SCD type-2 history build over the per-user event-type update stream
-    — the temporal-dimension materialization (Kimball SCD2) the north
-    rule's resumable KG maintenance ships next to its as-of lookup
-    (``events_asof_join`` serves FROM a table of exactly this shape).
-    ``operators/temporal.py:scd2_history``: ONE window shuffle — ordered
-    lag change-suppression (null-safe), lead() validity intervals, a
-    version counter.  Exactness: epoch-microsecond BIGINTs and equality
-    only (rule 11); the (ts, event_id) tiebreak pins ordering, so the
-    DuckDB twin (the same lag/lead recipe) matches bit-for-bit at any
-    corpus size.  The open current version keeps valid_to NULL — live in
-    every key group.  Beyond-reference (the reference rebuilds dicts from
-    scratch, ``OICI_database.py``)."""
-    from bert_namedentityrecognition_spark.operators.temporal import scd2_history
-
-    e = _t(spark, sf, "events")
-    ep = F.expr("unix_micros(cast(ts as timestamp_ltz))")
-    upd = e.select(
-        "user_id", ep.alias("ts_us"), "event_id",
-        F.col("event_type").alias("status"),
-    )
-    out = scd2_history(upd, ["user_id"], "ts_us", ["status"], ["event_id"])
-    return out.select(
-        "user_id",
-        "status",
-        F.col("valid_from").cast("long").alias("valid_from_us"),
-        F.col("valid_to").cast("long").alias("valid_to_us"),
-        "version",
-    )
-
-
-_SCD2_SQL = """
-WITH upd AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type AS status
-  FROM events
-),
-lagged AS (
-  SELECT user_id, ts_us, event_id, status,
-         lag(status) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-           AS prev_status,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-           AS rn
-  FROM upd
-),
-kept AS (
-  SELECT user_id, ts_us, event_id, status FROM lagged
-  WHERE rn = 1 OR NOT (status IS NOT DISTINCT FROM prev_status)
-)
-SELECT user_id, status,
-       CAST(ts_us AS BIGINT) AS valid_from_us,
-       CAST(lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-            AS BIGINT) AS valid_to_us,
-       CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-            AS BIGINT) AS version
-FROM kept
-"""
-
-
-def _events_funnel(spark, sf):
-    """Strictly-ordered 3-step funnel (view → click → purchase) per user —
-    the conversion query an events warehouse answers constantly, and the
-    provenance-staging shape (ingested → linked → materialized) of the
-    north rule's per-partition lineage counters.
-    ``operators/temporal.py:funnel_steps``: all three step minima are
-    windows over ONE ``partitionBy(user_id)`` exchange (no N-way
-    self-join), step i+1 counting only events strictly after step i.
-    Step events are thinned deterministically by event_id modulus so all
-    four terminal stages (0..3) are live at every sf (verified 2/2/2/9 at
-    sf0.001 .. 227/328/215/730 at sf0.1).  Exactness: integral epoch
-    micros + deterministic predicates (rule 11); ties ON a timestamp
-    don't chain (strict >) — the same rule in both twins."""
-    from bert_namedentityrecognition_spark.operators.temporal import funnel_steps
-
-    e = _t(spark, sf, "events")
-    ep = F.expr("unix_micros(cast(ts as timestamp_ltz))")
-    d = e.select("user_id", ep.alias("ts_us"), "event_type", "event_id")
-    preds = [
-        (F.col("event_type") == "view") & (F.col("event_id") % 7 == 0),
-        (F.col("event_type") == "click") & (F.col("event_id") % 5 == 0),
-        (F.col("event_type") == "purchase") & (F.col("event_id") % 3 == 0),
-    ]
-    out = funnel_steps(d, ["user_id"], "ts_us", preds)
-    return out.select(
-        "user_id",
-        F.col("t1").cast("long").alias("t1_us"),
-        F.col("t2").cast("long").alias("t2_us"),
-        F.col("t3").cast("long").alias("t3_us"),
-        "max_stage",
-    )
-
-
-_EVENTS_FUNNEL_SQL = """
-WITH d AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, event_type, event_id FROM events
-),
-s1 AS (
-  SELECT *, min(CASE WHEN event_type = 'view' AND event_id % 7 = 0
-                     THEN ts_us END)
-              OVER (PARTITION BY user_id) AS t1
-  FROM d
-),
-s2 AS (
-  SELECT *, min(CASE WHEN event_type = 'click' AND event_id % 5 = 0
-                          AND t1 IS NOT NULL AND ts_us > t1
-                     THEN ts_us END)
-              OVER (PARTITION BY user_id) AS t2
-  FROM s1
-),
-s3 AS (
-  SELECT *, min(CASE WHEN event_type = 'purchase' AND event_id % 3 = 0
-                          AND t2 IS NOT NULL AND ts_us > t2
-                     THEN ts_us END)
-              OVER (PARTITION BY user_id) AS t3
-  FROM s2
-)
-SELECT user_id,
-       CAST(min(t1) AS BIGINT) AS t1_us,
-       CAST(min(t2) AS BIGINT) AS t2_us,
-       CAST(min(t3) AS BIGINT) AS t3_us,
-       CAST((CASE WHEN min(t1) IS NULL THEN 0 ELSE 1 END)
-          + (CASE WHEN min(t2) IS NULL THEN 0 ELSE 1 END)
-          + (CASE WHEN min(t3) IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-         AS max_stage
-FROM s3 GROUP BY user_id
-"""
-
-
 def _kg_link_prediction(spark, sf):
     """Common-neighbor link prediction over the SAME derived co-mention
     graph as ``kg_triangle_counts`` (path + skip edges from the ``events``
@@ -7944,279 +7449,6 @@ SELECT CASE WHEN hp < 80 THEN 'train' WHEN hp < 90 THEN 'val'
        CAST(min(doc_id) AS BIGINT) AS min_doc,
        CAST(max(doc_id) AS BIGINT) AS max_doc
 FROM h GROUP BY 1
-"""
-
-
-def _kg_snapshot_asof(spark, sf):
-    """Temporal-KG snapshot: the entity state table AS OF the corpus
-    midpoint — compose ``scd2_entity_history``'s validity intervals with
-    the standard as-of predicate (valid_from ≤ T < valid_to, open
-    current version included).  Exactly one row per user at any T inside
-    the corpus span, so row count pins the predicate and values pin the
-    interval build.  T is a DERIVED scalar (rule 24): both twins compute
-    ``(min(ts_us) + max(ts_us)) // 2`` with the same integer arithmetic
-    — a params CTE in SQL, one bounded scalar agg on the Spark side.
-    Shape: the SCD2 single window shuffle + a pure filter; nothing else."""
-    from bert_namedentityrecognition_spark.operators.temporal import scd2_history
-
-    e = _t(spark, sf, "events")
-    ep = F.expr("unix_micros(cast(ts as timestamp_ltz))")
-    row = e.agg(
-        F.min(ep).alias("mn"), F.max(ep).alias("mx")
-    ).collect()[0]
-    t_mid = (int(row["mn"]) + int(row["mx"])) // 2
-    upd = e.select(
-        "user_id", ep.alias("ts_us"), "event_id",
-        F.col("event_type").alias("status"),
-    )
-    scd = scd2_history(upd, ["user_id"], "ts_us", ["status"], ["event_id"])
-    return scd.filter(
-        (F.col("valid_from") <= t_mid)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > t_mid))
-    ).select(
-        "user_id",
-        "status",
-        "version",
-        F.lit(t_mid).cast("long").alias("as_of_us"),
-    )
-
-
-_KG_SNAPSHOT_ASOF_SQL = """
-WITH params AS (
-  SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS t_mid FROM events
-),
-upd AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type AS status
-  FROM events
-),
-lagged AS (
-  SELECT user_id, ts_us, event_id, status,
-         lag(status) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-           AS prev_status,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-           AS rn
-  FROM upd
-),
-kept AS (
-  SELECT user_id, ts_us, event_id, status FROM lagged
-  WHERE rn = 1 OR NOT (status IS NOT DISTINCT FROM prev_status)
-),
-scd AS (
-  SELECT user_id, status, ts_us AS valid_from,
-         lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-           AS valid_to,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-           AS version
-  FROM kept
-)
-SELECT user_id, status, CAST(version AS BIGINT) AS version,
-       CAST(t_mid AS BIGINT) AS as_of_us
-FROM scd, params
-WHERE valid_from <= t_mid AND (valid_to IS NULL OR valid_to > t_mid)
-"""
-
-
-def _kg_snapshot_diff(spark, sf):
-    """CDC changefeed between two as-of points of the SCD2 entity history
-    — the incremental-consumption complement of ``kg_snapshot_asof``: a
-    consumer holding the t1 state applies exactly these insert / update /
-    delete rows to reach t2 instead of re-reading the world (Iceberg/Delta
-    CDC semantics; the north rule's resumable materialization consumes
-    this shape).  ``status = 'purchase'`` versions are soft-delete
-    tombstones (absent from their snapshot), which keeps ALL THREE change
-    types live at every sf from an append-only ledger (verified in
-    ``tests/test_temporal_cdc.py``).  Entities are sharded
-    ``user_id·8 + event_id%8`` (the ``events_funnel`` thinning dial:
-    sf0.001 has only 15 raw users — too coarse for three live branches).
-    t1/t2 are DERIVED scalars (rule 24):
-    both twins compute the span quartiles with the same integer
-    arithmetic.  Shape: the SCD2 single window shuffle, two pure filters,
-    ONE full-outer shuffle join (full-outer cannot broadcast — both sides
-    are entity-sized by design).  Beyond-reference (the reference rebuilds
-    dictionaries from scratch, ``OICI_database.py``)."""
-    from bert_namedentityrecognition_spark.operators.temporal import (
-        scd2_history,
-        snapshot_diff,
-    )
-
-    e = _t(spark, sf, "events")
-    ep = F.expr("unix_micros(cast(ts as timestamp_ltz))")
-    row = e.agg(F.min(ep).alias("mn"), F.max(ep).alias("mx")).collect()[0]
-    mn, mx = int(row["mn"]), int(row["mx"])
-    t1 = mn + (mx - mn) // 4
-    t2 = mn + (3 * (mx - mn)) // 4
-    upd = e.select(
-        (F.col("user_id") * 8 + F.col("event_id") % 8).alias("entity_id"),
-        ep.alias("ts_us"),
-        "event_id",
-        F.col("event_type").alias("status"),
-    )
-    scd = scd2_history(upd, ["entity_id"], "ts_us", ["status"], ["event_id"])
-    return snapshot_diff(
-        scd,
-        ["entity_id"],
-        ["status"],
-        t1,
-        t2,
-        tombstone=F.col("status") == "purchase",
-    )
-
-
-_KG_SNAPSHOT_DIFF_SQL = """
-WITH params AS MATERIALIZED (
-  SELECT min(epoch_us(ts)) + (max(epoch_us(ts)) - min(epoch_us(ts))) // 4
-           AS t1,
-         min(epoch_us(ts)) + (3 * (max(epoch_us(ts)) - min(epoch_us(ts)))) // 4
-           AS t2
-  FROM events
-),
-upd AS (
-  SELECT user_id * 8 + event_id % 8 AS entity_id, epoch_us(ts) AS ts_us,
-         event_id, event_type AS status
-  FROM events
-),
-lagged AS (
-  SELECT entity_id, ts_us, event_id, status,
-         lag(status) OVER (PARTITION BY entity_id ORDER BY ts_us, event_id)
-           AS prev_status,
-         row_number() OVER (PARTITION BY entity_id ORDER BY ts_us, event_id)
-           AS rn
-  FROM upd
-),
-kept AS (
-  SELECT entity_id, ts_us, event_id, status FROM lagged
-  WHERE rn = 1 OR NOT (status IS NOT DISTINCT FROM prev_status)
-),
-scd AS MATERIALIZED (
-  SELECT entity_id, status, ts_us AS valid_from,
-         lead(ts_us) OVER (PARTITION BY entity_id ORDER BY ts_us, event_id)
-           AS valid_to
-  FROM kept
-),
-s1 AS (
-  SELECT entity_id, status FROM scd, params
-  WHERE valid_from <= t1 AND (valid_to IS NULL OR valid_to > t1)
-    AND status <> 'purchase'
-),
-s2 AS (
-  SELECT entity_id, status FROM scd, params
-  WHERE valid_from <= t2 AND (valid_to IS NULL OR valid_to > t2)
-    AND status <> 'purchase'
-)
-SELECT COALESCE(s1.entity_id, s2.entity_id) AS entity_id,
-       CASE WHEN s1.status IS NULL THEN 'insert'
-            WHEN s2.status IS NULL THEN 'delete'
-            ELSE 'update' END AS change_type,
-       s1.status AS old_status,
-       s2.status AS new_status
-FROM s1 FULL OUTER JOIN s2 ON s1.entity_id = s2.entity_id
-WHERE s1.status IS NULL OR s2.status IS NULL OR s1.status <> s2.status
-"""
-
-
-def _events_retention_cohorts(spark, sf):
-    """Weekly cohort/retention matrix over the event stream — the
-    product-analytics staple next to ``events_funnel``, and at KG scale
-    the freshness audit of an incremental materialization (which ingest
-    cohort of entities still receives updates k weeks on).  Periods are
-    pure integer arithmetic (``epoch_day DIV 7`` — no calendar functions,
-    rule 11), so the twin replays bit-for-bit; ``retention_ppm`` is the
-    BIGINT ratio, with offset 0 pinned at 10⁶ by construction.
-    ``operators/temporal.py:retention_cohorts``: window min on ONE
-    user_id exchange (no second pass over raw events), dedup on the finer
-    (user, cohort, offset) key, map-side-combined agg, BROADCAST cohort-
-    size join (one row per cohort week).  Beyond-reference."""
-    from bert_namedentityrecognition_spark.operators.temporal import (
-        retention_cohorts,
-    )
-
-    e = _t(spark, sf, "events")
-    d = e.select(
-        "user_id",
-        F.expr(
-            "unix_micros(cast(ts as timestamp_ltz)) div 86400000000"
-        ).alias("day"),
-    )
-    return retention_cohorts(d, ["user_id"], "day", period_days=7)
-
-
-_EVENTS_RETENTION_SQL = """
-WITH d AS (
-  SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events
-),
-f AS (
-  SELECT user_id, day,
-         min(day) OVER (PARTITION BY user_id) AS first_day
-  FROM d
-),
-base AS MATERIALIZED (
-  SELECT DISTINCT user_id, first_day // 7 AS cohort_period,
-         day // 7 - first_day // 7 AS period_offset
-  FROM f
-),
-active AS (
-  SELECT cohort_period, period_offset, count(*) AS n_active
-  FROM base GROUP BY cohort_period, period_offset
-),
-sizes AS (
-  SELECT cohort_period, count(*) AS cohort_size
-  FROM base WHERE period_offset = 0 GROUP BY cohort_period
-)
-SELECT a.cohort_period, a.period_offset,
-       CAST(a.n_active AS BIGINT) AS n_active,
-       CAST(s.cohort_size AS BIGINT) AS cohort_size,
-       CAST((1000000 * a.n_active) // s.cohort_size AS BIGINT)
-         AS retention_ppm
-FROM active a JOIN sizes s USING (cohort_period)
-"""
-
-
-def _compaction_binpack(spark, sf):
-    """Small-files compaction planner over the ``documents`` manifest
-    (file_id = doc_id, size = n_chars): next-fit-decreasing bin
-    assignment ``(running_total − size) DIV target`` with per-bin stats —
-    the decision table an OPTIMIZE/rewrite-data-files pass consumes, and
-    the write-side complement of ``zorder_layout``'s read-side audit.
-    The running total comes from ``operators/layout.py:
-    distributed_prefix_sum`` — a TWO-PASS parallel prefix sum
-    (repartitionByRange tiling + per-partition windows + a one-row-per-
-    partition offset collect), NOT a single-partition ``Window.orderBy``:
-    a 100 TB table's manifest is millions of rows and the naive window
-    funnels them through one task.  ``target`` is a DERIVED scalar
-    (rule 24: ``total DIV 32 + 1``, same integer arithmetic in the params
-    CTE).  All-BIGINT (rule 11).  Beyond-reference."""
-    from bert_namedentityrecognition_spark.operators.layout import (
-        compaction_binpack,
-    )
-
-    d = _t(spark, sf, "documents")
-    total = int(
-        d.agg(F.sum(F.col("n_chars").cast("long")).alias("s"))
-        .collect()[0]["s"]
-    )
-    target = total // 32 + 1
-    return compaction_binpack(
-        d.select("doc_id", "n_chars"), "doc_id", "n_chars", target
-    )
-
-
-_COMPACTION_BINPACK_SQL = """
-WITH params AS (
-  SELECT CAST(sum(n_chars) AS BIGINT) // 32 + 1 AS target FROM documents
-),
-cum AS (
-  SELECT doc_id, CAST(n_chars AS BIGINT) AS sz,
-         sum(CAST(n_chars AS BIGINT)) OVER (
-           ORDER BY n_chars DESC, doc_id ASC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-  FROM documents
-)
-SELECT CAST((c - sz) // target AS BIGINT) AS bin_id,
-       CAST(count(*) AS BIGINT) AS n_files,
-       CAST(sum(sz) AS BIGINT) AS total_bytes,
-       CAST(min(sz) AS BIGINT) AS min_bytes,
-       CAST(max(sz) AS BIGINT) AS max_bytes
-FROM cum, params GROUP BY 1
 """
 
 
@@ -8417,115 +7649,6 @@ walk(node, comp) AS (
 )
 SELECT CAST(node AS BIGINT) AS node, CAST(min(comp) AS BIGINT) AS component
 FROM walk GROUP BY node
-"""
-
-
-def _inverted_index_postings(spark, sf):
-    """Inverted-index build over the documents corpus: the postings table
-    (token, doc_id, tf, first 1-based position) behind ``bm25_doc_ranking``
-    — the write-once index a served retrieval deployment pays for instead
-    of re-scanning text per query.  Engine-wide whitespace tokenization
-    (identical twin recipe as bm25/vocab/sketch queries); ONE
-    map-side-combined groupBy after a JVM-side posexplode — no Python.
-    At 100 TB the output is bucketed BY TOKEN (single-bucket per-term
-    lookups); tf/positions are all-integer (rule 11)."""
-    from bert_namedentityrecognition_spark.operators.retrieval import (
-        inverted_postings,
-    )
-
-    return inverted_postings(_t(spark, sf, "documents"))
-
-
-_INVERTED_POSTINGS_SQL = r"""
-WITH t AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'),
-                     x -> x <> '') AS l
-  FROM documents
-),
-e AS (
-  SELECT doc_id, unnest(l) AS token,
-         unnest(generate_series(1, len(l))) AS tok_pos
-  FROM t
-)
-SELECT token, doc_id,
-       CAST(count(*) AS BIGINT) AS tf,
-       CAST(min(tok_pos) AS BIGINT) AS first_pos
-FROM e GROUP BY 1, 2
-"""
-
-
-def _zorder_layout(spark, sf):
-    """Z-order layout audit: per-file min/max clustering stats + the
-    manifest-pruning decision for a 2-D range predicate, under a Morton
-    z-value layout vs a single-key clustering of the SAME rows — the
-    evidence a 100 TB table owner needs before paying for an ``OPTIMIZE
-    ZORDER BY`` rewrite (the read-side companion of
-    ``write_outputs_bucketed``'s join story).  Keys: x = event_id % 1024
-    (an entity-hash bucket, uniform at every sf), y = minute-of-day; box
-    x∈[128,383], y∈[300,555].  Measured: z-order opens 4 of ~24 files
-    (rows_read 17.6%) where x-clustering opens 16 of 64 (25%) — both hit
-    and pruned branches live at every sf.
-
-    ``operators/layout.py``: file ids are VALUE-RANGE bins of each
-    layout's sort key (deterministic manifest math — no sampled range
-    partitioner, no global row_number), so the whole query is one
-    map-side-combined groupBy per layout; the z-value is a flat integer
-    sum inside whole-stage codegen, generated from the SAME
-    ``oracle/layout.py:zorder_sql_expr`` the DuckDB twin uses (rules 6 +
-    11 — bit-identical by construction)."""
-    from bert_namedentityrecognition_spark.operators.layout import (
-        layout_file_stats,
-        with_zvalue,
-    )
-
-    e = _t(spark, sf, "events")
-    d = e.select(
-        (F.col("event_id") % 1024).cast("long").alias("x"),
-        F.expr(
-            "CAST((unix_micros(cast(ts as timestamp_ltz)) DIV 60000000)"
-            " % 1440 AS BIGINT)"
-        ).alias("y"),
-    )
-    box = (128, 383, 300, 555)
-    zs = layout_file_stats(
-        with_zvalue(d, "x", "y", 11),
-        F.expr("zval DIV 65536"),
-        "x", "y", box, "zorder",
-    )
-    ls = layout_file_stats(d, F.expr("x DIV 16"), "x", "y", box, "xcluster")
-    return zs.unionByName(ls)
-
-
-def _zorder_layout_sql() -> str:
-    from bert_namedentityrecognition_spark.oracle.layout import zorder_sql_expr
-
-    z = zorder_sql_expr("x", "y", 11, "//")
-    return f"""
-WITH d AS (
-  SELECT CAST(event_id % 1024 AS BIGINT) AS x,
-         CAST((epoch_us(ts) // 60000000) % 1440 AS BIGINT) AS y
-  FROM events
-),
-zt AS (SELECT x, y, {z} AS zval FROM d),
-stats AS (
-  SELECT 'zorder' AS layout, CAST(zval // 65536 AS BIGINT) AS file_id,
-         CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(min(x) AS BIGINT) AS min_x, CAST(max(x) AS BIGINT) AS max_x,
-         CAST(min(y) AS BIGINT) AS min_y, CAST(max(y) AS BIGINT) AS max_y
-  FROM zt GROUP BY 2
-  UNION ALL
-  SELECT 'xcluster' AS layout, CAST(x // 16 AS BIGINT) AS file_id,
-         CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(min(x) AS BIGINT) AS min_x, CAST(max(x) AS BIGINT) AS max_x,
-         CAST(min(y) AS BIGINT) AS min_y, CAST(max(y) AS BIGINT) AS max_y
-  FROM d GROUP BY 2
-)
-SELECT layout, file_id, n_rows, min_x, max_x, min_y, max_y,
-       CAST(CASE WHEN min_x <= 383 AND max_x >= 128
-                  AND min_y <= 555 AND max_y >= 300
-            THEN 1 ELSE 0 END AS BIGINT) AS hit
-FROM stats
 """
 
 
@@ -9212,83 +8335,6 @@ FROM pr JOIN deg da ON pr.subj_a = da.subj JOIN deg db ON pr.subj_b = db.subj
 
 
 _D38 = "decimal(38,0)"
-
-
-def _hilbert_layout(spark, sf):
-    """HILBERT-CURVE layout audit, head-to-head against z-order on the
-    same keys, box, and file budget — the layout-choice experiment a
-    100 TB table owner runs before an OPTIMIZE rewrite (Hilbert's
-    unit-step locality prunes tighter boxes than Morton's diagonal
-    jumps; Delta/Hudi expose exactly this choice).  The Hilbert index is
-    a per-level state rewrite chained as narrow JVM selects
-    (``operators/layout.py:with_hilbert``), generated from the SAME
-    ``oracle/layout.py:hilbert_level_exprs`` the DuckDB twin nests
-    (rules 6 + 11 — bit-identical by construction; kernel pinned
-    bijective with unit steps in tests/test_hilbert_layout.py).  Same
-    one-agg-per-layout shape as zorder_layout: derived file ids, no
-    global sort."""
-    from bert_namedentityrecognition_spark.operators.layout import (
-        layout_file_stats,
-        with_hilbert,
-        with_zvalue,
-    )
-
-    e = _t(spark, sf, "events")
-    d = e.select(
-        (F.col("event_id") % 1024).cast("long").alias("x"),
-        F.expr(
-            "CAST((unix_micros(cast(ts as timestamp_ltz)) DIV 60000000)"
-            " % 1440 AS BIGINT)"
-        ).alias("y"),
-    )
-    box = (128, 383, 300, 555)
-    hs = layout_file_stats(
-        with_hilbert(d, "x", "y", 11),
-        F.expr("hval DIV 65536"),
-        "x", "y", box, "hilbert",
-    )
-    zs = layout_file_stats(
-        with_zvalue(d, "x", "y", 11),
-        F.expr("zval DIV 65536"),
-        "x", "y", box, "zorder",
-    )
-    return hs.unionByName(zs)
-
-
-def _hilbert_layout_sql() -> str:
-    from bert_namedentityrecognition_spark.oracle.layout import (
-        hilbert_sql_query,
-        zorder_sql_expr,
-    )
-
-    base = """
-  SELECT CAST(event_id % 1024 AS BIGINT) AS x,
-         CAST((epoch_us(ts) // 60000000) % 1440 AS BIGINT) AS y
-  FROM events
-"""
-    h = hilbert_sql_query(11, "//", base)
-    z = zorder_sql_expr("x", "y", 11, "//")
-    return f"""
-WITH ht AS ({h}),
-stats AS (
-  SELECT 'hilbert' AS layout, CAST(hval // 65536 AS BIGINT) AS file_id,
-         CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(min(x) AS BIGINT) AS min_x, CAST(max(x) AS BIGINT) AS max_x,
-         CAST(min(y) AS BIGINT) AS min_y, CAST(max(y) AS BIGINT) AS max_y
-  FROM ht GROUP BY 2
-  UNION ALL
-  SELECT 'zorder' AS layout, CAST({z} // 65536 AS BIGINT) AS file_id,
-         CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(min(x) AS BIGINT) AS min_x, CAST(max(x) AS BIGINT) AS max_x,
-         CAST(min(y) AS BIGINT) AS min_y, CAST(max(y) AS BIGINT) AS max_y
-  FROM ({base}) GROUP BY 2
-)
-SELECT layout, file_id, n_rows, min_x, max_x, min_y, max_y,
-       CAST(CASE WHEN min_x <= 383 AND max_x >= 128
-                  AND min_y <= 555 AND max_y >= 300
-            THEN 1 ELSE 0 END AS BIGINT) AS hit
-FROM stats
-"""
 
 
 def _kg_bond_percolation(spark, sf):
@@ -10619,91 +9665,6 @@ FROM cum, tot
 """
 
 
-def _ir_ranker_agreement(spark, sf):
-    """RANKER AGREEMENT eval: the gated BM25 ranking vs the naive
-    raw-TF ranking for the same 3-term query — overlap@k for k ∈
-    {5, 10, 20} plus the Spearman FOOTRULE displacement over the
-    k-agreed docs (the A/B eval an IR stack runs before swapping its
-    scorer; complements ann_recall_eval, which grades an INDEX against
-    truth — this grades one RANKER against another).  BM25 ranks come
-    from the same ``bm25_rank`` operator / ``_bm25_sql`` twin already
-    hash-proven under the gate (top_n=20 variant); the TF ranker is
-    pure integers (ties → doc_id).  All outputs integer (rule 11).
-    Spark: the two top-20 rankers (partial top-k each), one 20×20-max
-    inner join, one broadcast k-values cross join."""
-    from bert_namedentityrecognition_spark.operators.retrieval import bm25_rank
-
-    d = _t(spark, sf, "documents")
-    a = bm25_rank(d, _BM25_TERMS, k1=1.2, b=0.75, top_n=20).select(
-        "doc_id", F.col("rank").cast("long").alias("ra")
-    )
-    tf_expr = " + ".join(
-        f"size(filter(split(trim(text), '\\\\s+'), x -> x = '{t}'))"
-        for t in _BM25_TERMS
-    )
-    scored = d.select(
-        "doc_id", F.expr(f"CAST({tf_expr} AS BIGINT)").alias("tf")
-    )
-    wb = Window.orderBy(F.desc("tf"), F.asc("doc_id"))
-    b = (
-        scored.select(
-            "doc_id", F.row_number().over(wb).cast("long").alias("rb")
-        )
-        .filter(F.col("rb") <= 20)
-    )
-    j = a.join(b, "doc_id")
-    ks = spark.range(3).select(
-        F.element_at(
-            F.array(F.lit(5), F.lit(10), F.lit(20)), (F.col("id") + 1).cast("int")
-        ).cast("long").alias("k")
-    )
-    return (
-        j.crossJoin(F.broadcast(ks))
-        .filter((F.col("ra") <= F.col("k")) & (F.col("rb") <= F.col("k")))
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_overlap"),
-            F.sum(F.abs(F.col("ra") - F.col("rb"))).cast("long").alias(
-                "footrule_sum"
-            ),
-        )
-        .select(
-            "k",
-            "n_overlap",
-            F.expr("(1000000 * n_overlap) DIV k").alias("overlap_ppm"),
-            "footrule_sum",
-        )
-    )
-
-
-def _ir_ranker_agreement_sql() -> str:
-    bm25 = _bm25_sql(top_n=20)
-    tf_expr = " + ".join(
-        f"len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x = '{t}'))"
-        for t in _BM25_TERMS
-    )
-    return f"""
-WITH bm25 AS MATERIALIZED ({bm25}),
-tfs AS (
-  SELECT doc_id, CAST({tf_expr} AS BIGINT) AS tf FROM documents
-),
-tfr AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY tf DESC, doc_id) AS BIGINT) AS rb
-  FROM tfs QUALIFY rb <= 20
-),
-j AS (
-  SELECT bm25.doc_id, CAST(bm25.rank AS BIGINT) AS ra, tfr.rb
-  FROM bm25 JOIN tfr ON tfr.doc_id = bm25.doc_id
-),
-ks(k) AS (VALUES (CAST(5 AS BIGINT)), (CAST(10 AS BIGINT)), (CAST(20 AS BIGINT)))
-SELECT ks.k, CAST(count(*) AS BIGINT) AS n_overlap,
-       CAST((1000000 * count(*)) // ks.k AS BIGINT) AS overlap_ppm,
-       CAST(sum(abs(j.ra - j.rb)) AS BIGINT) AS footrule_sum
-FROM j, ks WHERE j.ra <= ks.k AND j.rb <= ks.k
-GROUP BY ks.k
-"""
-
-
 def _kg_orbit_counts(spark, sf):
     """GRAPHLET ORBIT COUNTS (3-node graphlets, orbits 0-3) per node —
     the structural-role fingerprint (Pržulj's graphlet degree vector)
@@ -11761,7 +10722,6 @@ _REGISTRY: tuple[
     ("conll_roundtrip", _conll_roundtrip, _conll_roundtrip_sql),
     ("oici_excel_normalize", _oici_excel_normalize, _oici_excel_sql),
     ("cv_fold_stats", _cv_fold_stats, _cv_fold_stats_sql),
-    ("textprep_scalars", _textprep_scalars, _textprep_scalars_sql),
     ("kg_alias_components", _kg_alias_components, _KG_ALIAS_COMPONENTS_SQL),
     ("kg_personalized_pagerank", _kg_personalized_pagerank, _kg_personalized_pagerank_sql),
     ("kg_hits_scores", _kg_hits_scores, _kg_hits_scores_sql),
@@ -11779,7 +10739,6 @@ _REGISTRY: tuple[
     ("kg_katz_centrality", _kg_katz_centrality, _kg_katz_centrality_sql),
     ("kg_characteristic_sets", _kg_characteristic_sets, _KG_CHARACTERISTIC_SETS_SQL),
     ("kg_bipartite_projection", _kg_bipartite_projection, _KG_BIPARTITE_PROJECTION_SQL),
-    ("hilbert_layout", _hilbert_layout, _hilbert_layout_sql),
     ("kg_bond_percolation", _kg_bond_percolation, _KG_BOND_PERCOLATION_SQL),
     ("kmv_distinct_estimate", _kmv_distinct_estimate, _KMV_DISTINCT_ESTIMATE_SQL),
     ("er_fellegi_sunter", _er_fellegi_sunter, _er_fellegi_sunter_sql),
@@ -11799,26 +10758,14 @@ _REGISTRY: tuple[
     ("kg_triangle_counts", _kg_triangle_counts, _KG_TRIANGLE_COUNTS_SQL),
     ("kg_bfs_levels", _kg_bfs_levels, _kg_bfs_levels_sql),
     ("kg_random_walks", _kg_random_walks, _kg_random_walks_sql),
-    ("events_asof_join", _events_asof_join, _EVENTS_ASOF_SQL),
-    ("events_range_join", _events_range_join, _EVENTS_RANGE_SQL),
-    ("events_funnel", _events_funnel, _EVENTS_FUNNEL_SQL),
-    ("scd2_entity_history", _scd2_entity_history, _SCD2_SQL),
     ("kg_link_prediction", _kg_link_prediction, _KG_LINK_PREDICTION_SQL),
     ("kg_weighted_sssp", _kg_weighted_sssp, _kg_weighted_sssp_sql),
     ("kg_clustering_coefficients", _kg_clustering_coefficients, _KG_CLUSTERING_COEFF_SQL),
-    ("kg_snapshot_asof", _kg_snapshot_asof, _KG_SNAPSHOT_ASOF_SQL),
-    ("kg_snapshot_diff", _kg_snapshot_diff, _KG_SNAPSHOT_DIFF_SQL),
-    ("events_retention_cohorts", _events_retention_cohorts, _EVENTS_RETENTION_SQL),
-    ("compaction_binpack", _compaction_binpack, _COMPACTION_BINPACK_SQL),
     ("dataset_split_hash", _dataset_split_hash, _DATASET_SPLIT_SQL),
     ("dataset_split_coverage", _dataset_split_coverage, _DATASET_SPLIT_COVERAGE_SQL),
     ("kg_incremental_components", _kg_incremental_components, _KG_INCREMENTAL_COMPONENTS_SQL),
-    ("inverted_index_postings", _inverted_index_postings, _INVERTED_POSTINGS_SQL),
-    ("zorder_layout", _zorder_layout, _zorder_layout_sql),
-    ("url_host_stats", _url_host_stats, _url_host_stats_sql),
     ("dedup_semantic_clusters", _semdedup, _semdedup_sql),
     ("knn_graph_mutual", _knn_graph, _knn_graph_sql),
-    ("bm25_doc_ranking", _bm25_ranking, _bm25_sql),
     ("orc_roundtrip_stats", _orc_roundtrip, _ORC_ROUNDTRIP_SQL),
     ("kg_betweenness_ppm", _kg_betweenness_ppm, _kg_betweenness_ppm_sql),
     ("kg_min_spanning_forest", _kg_min_spanning_forest, _kg_min_spanning_forest_sql),
@@ -11835,7 +10782,6 @@ _REGISTRY: tuple[
     ("kg_modularity_score", _kg_modularity_score, _kg_modularity_score_sql),
     ("kg_partition_edgecut", _kg_partition_edgecut, _KG_PARTITION_EDGECUT_SQL),
     ("kg_view_selection_greedy", _kg_view_selection_greedy, _kg_view_selection_greedy_sql),
-    ("ir_ranker_agreement", _ir_ranker_agreement, _ir_ranker_agreement_sql),
     ("kg_orbit_counts", _kg_orbit_counts, _kg_orbit_counts_sql),
     ("minhash_estimator_calibration", _minhash_estimator_calibration, _MINHASH_CALIBRATION_SQL),
     ("kg_motif_significance", _kg_motif_significance, _kg_motif_significance_sql),

@@ -133,10 +133,14 @@ def resolve_surfaces(
     ``oracle.normalize.DictNormalizer`` reports): the band only prunes
     candidates that cannot pass the threshold, and one of them can still
     outscore every candidate the band keeps. Canonical, entity_id and code
-    always agree with a per-kind ``DictNormalizer``."""
+    always agree with a per-kind ``DictNormalizer``. A null word is
+    rejected with score 0.0, like a word the band leaves no candidate."""
     by_kind, exact_index = index
     out = []
     for word, kind in surface_rows:
+        if word is None:
+            out.append((word, kind, SENTINEL, None, None, 0.0, "fuzzy"))
+            continue
         wn = han_to_zen(word)
         hit = exact_index.get((wn, kind))
         if hit is not None:
@@ -277,7 +281,7 @@ def oici_normalize_surfaces(
     surfaces(term) × mapping(key, checked) → (term, normalized, score,
     method). Exact stage: broadcast equi-join on the RAW key, sentinel
     CASE. Misses: length-band-pruned broadcast theta-join against the
-    han_to_zen'd candidate keys, exact indel-ratio scorer, top-1 by
+    candidate keys, exact indel-ratio scorer, top-1 by
     (score desc, candidate asc — the kernel's deterministic tie-break);
     score > threshold re-enters the exact branch ON THE MATCHED KEY (the
     reference recurses; one level terminates because the match is itself
@@ -286,7 +290,9 @@ def oici_normalize_surfaces(
     Like the kernel, a dictionary whose keys are not closed under
     han_to_zen would cycle (the zenkaku candidate never hits the exact
     branch) — checked once driver-side with a bounded action and failed
-    loudly, instead of looping in the reference's manner.
+    loudly, instead of looping in the reference's manner. Past that check
+    every key equals its han_to_zen form (a null key maps to null), so the
+    fuzzy stage reads ``key`` itself and han_to_zen runs only in the check.
 
     Its own stage rather than :func:`resolve_surfaces`: the exact branch
     looks up the RAW key with sentinel values, and a fuzzy match recurses
@@ -309,17 +315,17 @@ def oici_normalize_surfaces(
     )
     misses = exact.filter(F.col("key").isNull()).select("term")
     lt = F.length("term").cast("double")
-    lk = F.length("key_norm").cast("double")
+    lk = F.length("key").cast("double")
     band_ok = (200.0 * F.least(lt, lk) / (lt + lk)) > F.lit(threshold)
-    cand = misses.join(F.broadcast(mapn), band_ok, "left").withColumn(
+    cand = misses.join(F.broadcast(mapping), band_ok, "left").withColumn(
         "fscore",
         F.when(
-            F.col("key_norm").isNotNull(),
-            indel_ratio_udf(F.col("term"), F.col("key_norm")),
+            F.col("key").isNotNull(),
+            indel_ratio_udf(F.col("term"), F.col("key")),
         ).otherwise(F.lit(0.0)),
     )
     w = Window.partitionBy("term").orderBy(
-        F.col("fscore").desc(), F.col("key_norm").asc_nulls_last()
+        F.col("fscore").desc(), F.col("key").asc_nulls_last()
     )
     fuzzy = (
         cand.withColumn("rn", F.row_number().over(w))
@@ -328,7 +334,7 @@ def oici_normalize_surfaces(
             "term",
             F.when(
                 F.col("fscore") > threshold,
-                _oici_exact_result(F.col("checked"), F.col("key_norm")),
+                _oici_exact_result(F.col("checked"), F.col("key")),
             )
             .otherwise(F.lit(SENTINEL))
             .alias("normalized"),

@@ -158,27 +158,6 @@ def positional_split_no_ws(text: str) -> list[str]:
     return [s.strip() for s in parts if s.strip()]
 
 
-# Charset verbatim from the reference (``scripts/utils/excelToTxt.py:9-11``),
-# including the ``A-z`` quirk (covers ``[\]^_`` ` between Z and a).
-NORMALIZE_PREFIX_REGEX = r"[一-龯ぁ-ゔゞァ-・ヽヾ゛゜ーA-z -]*"
-_NORMALIZE_PREFIX_RE = re.compile(NORMALIZE_PREFIX_REGEX)
-
-NEWLINE_AFTER_PERIOD_REGEX = r"。(?=[^\n])"
-_NEWLINE_AFTER_PERIOD_RE = re.compile(NEWLINE_AFTER_PERIOD_REGEX)
-
-
-def newline_after_period(text: str) -> str:
-    """Insert ``\\n`` after each ``。`` not already followed by one
-    (``scripts/predict/predict_for_xls_folder.py:61``)."""
-    return _NEWLINE_AFTER_PERIOD_RE.sub("。\n", text)
-
-
-def normalize_text_prefix(text: str) -> str:
-    """``normalizeText`` (``scripts/utils/excelToTxt.py:9-11``): the leading
-    run of JP/ASCII charset characters (may be empty)."""
-    return _NORMALIZE_PREFIX_RE.search(text).group()
-
-
 def findstem(words: list[str]) -> str:
     """Longest "common" substring finder (``util/text_utils.py:99-134``),
     reference quirks preserved faithfully: candidates are substrings of the
@@ -202,9 +181,3 @@ def findstem(words: list[str]) -> str:
                 best = stem
     return best
 
-
-def exclude_long_sentences(max_length: int, sentences: list[str], tags: list) -> tuple[list, list]:
-    """Drop (not truncate) sentences longer than ``max_length`` chars
-    (``util/text_utils.py:50-61``)."""
-    keep = [(s, t) for s, t in zip(sentences, tags) if len(s) <= max_length]
-    return [s for s, _ in keep], [t for _, t in keep]

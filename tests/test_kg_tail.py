@@ -5,6 +5,10 @@
 - degenerate inputs (no pages, nothing resolves, one vs four partitions, one
   url split across input partitions) give defined outputs whose triples
   equal the oracle kernels over the written mentions;
+- ``normalize_mentions`` on its driver and distributed placements, then
+  ``build_triples``, equal the oracle kernels on degenerate mentions
+  (empty, all-null word, one vs four partitions, one url split across
+  partitions, non-ASCII urls);
 - the plans do each piece of work once: driver-built side tables are
   ``LocalTableScan``s, edges read the persisted triples, and the mentions
   sink has no shuffle.
@@ -46,26 +50,41 @@ def _pages(spark, rows):
     return spark.createDataFrame([(u, None, None, t, "ja") for u, t in rows], PAGE_SCHEMA)
 
 
-def _oracle_triples(mentions_dir, dim_rows, threshold=70.0):
-    """Triples from the written mentions with the pure-Python kernels:
-    per-url (drug words, symptom words) lists, symptoms through the top-1
-    fuzzy normalizer, pairing and counting by ``oracle/ade.py``."""
+def _written_mentions(mentions_dir):
     t = pq.read_table(mentions_dir, columns=["url", "type", "word"]).to_pydict()
-    docs = {}
-    for url, typ, word in zip(t["url"], t["type"], t["word"]):
-        d = docs.setdefault(url, ([], []))
-        (d[0] if typ == "drug" else d[1]).append(word)
-    sym = [r for r in dim_rows if r["kind"] == "symptom"]
-    normalizer = DictNormalizer({r["surface"] for r in sym}, threshold=threshold)
-    canonical = {han_to_zen(r["surface"]): r["canonical"] for r in sym}
+    return list(zip(t["url"], t["type"], t["word"]))
 
-    def norm(word):
+
+def _oracle_resolve(dim_rows, kind, threshold=70.0):
+    """word → (canonical, entity_id) by a per-kind top-1 fuzzy normalizer;
+    the dimension row of a surface is its min entity id (``build_dim_index``)."""
+    rows = sorted((r for r in dim_rows if r["kind"] == kind), key=lambda r: r["entity_id"])
+    normalizer = DictNormalizer({r["surface"] for r in rows}, threshold=threshold)
+    by_surface = {}
+    for r in rows:
+        by_surface.setdefault(han_to_zen(r["surface"]), (r["canonical"], r["entity_id"]))
+
+    def resolve(word):
         surface, _ = normalizer.normalize(word)
-        return canonical[surface] if surface else ""
+        return by_surface[surface] if surface else ("", None)
 
+    return resolve
+
+
+def _oracle_triples(mentions, dim_rows, threshold=70.0):
+    """Triples from (url, type, word) mentions with the pure-Python kernels:
+    per-url (drug words, symptom words) lists, symptoms through the top-1
+    fuzzy normalizer, pairing and counting by ``oracle/ade.py``. A null
+    word is no mention."""
+    docs = {}
+    for url, typ, word in mentions:
+        d = docs.setdefault(url, ([], []))
+        if word is not None:
+            (d[0] if typ == "drug" else d[1]).append(word)
+    resolve = _oracle_resolve(dim_rows, "symptom", threshold)
     counts = ade_pairs_from_lists(
         [d for d, _ in docs.values()], [s for _, s in docs.values()],
-        remove_duplicates=True, normalize=norm,
+        remove_duplicates=True, normalize=lambda word: resolve(word)[0],
     )
     return sorted((s, o, n) for (s, o), n in counts.items())
 
@@ -76,7 +95,7 @@ def _run_and_write(spark, pages, dim_rows, base):
     write_outputs(out, base)
     read = {k: spark.read.parquet(f"{base}/{k}") for k in ("mentions", "triples", "nodes", "edges")}
     triples = sorted((r.subj, r.obj, r["count"]) for r in read["triples"].collect())
-    assert triples == _oracle_triples(f"{base}/mentions", dim_rows)
+    assert triples == _oracle_triples(_written_mentions(f"{base}/mentions"), dim_rows)
     # every edge is a triple with ids attached
     edges = sorted((r.subj, r.obj, r["count"]) for r in read["edges"].collect())
     assert edges == triples
@@ -176,6 +195,80 @@ def test_duplicate_url_split_across_partitions(spark, tmp_path):
     }
     assert len(files) == 2
     assert ("ロキソニン", "発熱", 1) in triples and ("アスピリン", "頭痛", 1) in triples
+
+
+# --- normalize_mentions and build_triples on degenerate mentions --------------
+
+MENTION_SCHEMA = "url string, sent_id int, type string, word string"
+MENTIONS = [
+    ("https://a", 0, "drug", "ロキソニン"),
+    ("https://a", 0, "symptom", "頭痛"),
+    ("https://a", 1, "symptom", "頭痛い"),  # fuzzy hit
+    ("https://b", 0, "drug", "ﾛｷｿﾆﾝ"),  # half-width: exact after han_to_zen
+    ("https://b", 0, "symptom", "ｚｚ"),  # resolves to nothing
+    ("https://c", 0, "drug", "アスピリン"),  # no symptoms
+    ("https://d", 0, "symptom", "発熱"),  # no drug
+]
+MENTION_CASES = {
+    "empty": ([], 1),
+    "all_null_word": ([(u, i, t, None) for u, i, t, _ in MENTIONS], 1),
+    "one_partition": (MENTIONS, 1),
+    "four_partitions": (MENTIONS, 4),
+    # https://a's mentions open both of the two input partitions
+    "duplicate_url_split": ([MENTIONS[i] for i in (0, 3, 4, 1, 2, 5, 6)], 2),
+    "non_ascii_url": (
+        [("https://例え.テスト/頭痛?q=ﾛｷｿﾆﾝ" + u[-1], i, t, w) for u, i, t, w in MENTIONS],
+        4,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(MENTION_CASES))
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_normalize_and_triples_on_degenerate_mentions(spark, monkeypatch, path, case):
+    """``normalize_mentions`` on both placements, then ``build_triples``,
+    equal the oracle kernels: a per-kind ``DictNormalizer`` for each
+    mention and ``ade_pairs_from_lists`` for the triples."""
+    from bert_namedentityrecognition_spark.operators import normalize
+    from bert_namedentityrecognition_spark.operators.triples import build_triples
+
+    if path == "distributed":
+        monkeypatch.setattr(normalize, "MAX_DRIVER_SURFACES", -1)
+    rows, partitions = MENTION_CASES[case]
+    mentions = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, partitions), MENTION_SCHEMA
+    )
+    if case == "duplicate_url_split":
+        assert [
+            sorted({r.url for r in p})
+            for p in mentions.rdd.glom().collect()
+        ] == [["https://a", "https://b"], ["https://a", "https://c", "https://d"]]
+    dim = fixtures.entity_dim_to_spark(spark, DIM)
+
+    normalized = normalize.normalize_mentions(mentions, dim)
+    resolvers = {kind: _oracle_resolve(DIM, kind) for kind in ("drug", "symptom")}
+    want = sorted(
+        ((u, i, t, w, *(resolvers[t](w) if w is not None else (None, None)))
+         for u, i, t, w in rows),
+        key=repr,
+    )
+    got = sorted(
+        ((r.url, r.sent_id, r.type, r.word, r.canonical, r.entity_id)
+         for r in normalized.collect()),
+        key=repr,
+    )
+    assert got == want
+    if any(w is not None for *_, w in rows):  # AQE drops a side that turns out empty
+        stages = [n for n, _ in _plan_nodes(_executed(normalized)) if n == "MapInPandasExec"]
+        assert len(stages) == (path == "distributed")
+
+    triples = sorted((r.subj, r.obj, r["count"]) for r in build_triples(normalized).collect())
+    assert triples == _oracle_triples([(u, t, w) for u, _, t, w in rows], DIM)
+    if case in ("one_partition", "four_partitions", "duplicate_url_split"):
+        assert triples == [
+            # 頭痛 and 頭痛い are two raw symptoms of one url: counted twice
+            ("アスピリン", "No Symptoms", 1), ("ロキソニン", "頭痛", 2)
+        ]
 
 
 # --- plan shape ---------------------------------------------------------------

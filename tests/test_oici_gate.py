@@ -63,3 +63,14 @@ def test_oici_open_dictionary_fails_loudly(spark):
     terms = spark.createDataFrame([("ロキソ",)], "term string")
     with pytest.raises(ValueError, match="han_to_zen"):
         oici_normalize_surfaces(terms, mapping)
+
+
+def test_oici_plan_runs_one_python_node(spark, sf_dir):
+    """han_to_zen runs only in the closure check, an action of its own: the
+    fuzzy stage reads the checked keys as they are, so the scorer is the
+    query's one Python node."""
+    import __spark_entry__ as entrymod
+    from tests.test_warc_text import _python_nodes
+
+    df = entrymod.queries()["oici_fuzzy_chain"](spark, sf_dir)
+    assert _python_nodes(df) == [("ArrowEvalPythonExec", ["indel_ratio_udf"])]

@@ -1,4 +1,4 @@
-"""BM25 ranking and mutual-kNN graph semantics on handcrafted inputs."""
+"""Mutual-kNN graph semantics on handcrafted inputs."""
 
 import math
 
@@ -6,72 +6,20 @@ from pyspark.sql.types import (
     ArrayType,
     FloatType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
-from bert_namedentityrecognition_spark.operators.retrieval import bm25_rank
 from bert_namedentityrecognition_spark.operators.similarity import (
     knn_within_clusters,
 )
 
-DOCS = StructType(
-    [StructField("doc_id", LongType()), StructField("text", StringType())]
-)
 VECS = StructType(
     [
         StructField("vec_id", LongType()),
         StructField("embedding", ArrayType(FloatType())),
     ]
 )
-
-
-def _bm25_py(docs, terms, k1=1.2, b=0.75):
-    toks = {d: t.strip().split() for d, t in docs}
-    n = len(docs)
-    avgdl = sum(len(t) for t in toks.values()) / n
-    df = {q: sum(1 for t in toks.values() if q in t) for q in terms}
-    out = {}
-    for d, t in toks.items():
-        s = 0.0
-        for q in terms:
-            tf = t.count(q)
-            idf = (n - df[q] + 0.5) / (df[q] + 0.5)
-            s += idf * (tf * (k1 + 1.0)) / (tf + k1 * (1 - b + b * len(t) / avgdl))
-        out[d] = s
-    return out
-
-
-def test_bm25_matches_pure_python_ranking(spark):
-    docs = [
-        (0, "merge merge merge window"),
-        (1, "window customer window"),
-        (2, "the fast key order sort"),
-        (3, "merge customer"),
-        (4, "customer customer customer customer customer customer"),
-    ]
-    terms = ["merge", "window", "customer"]
-    got = bm25_rank(spark.createDataFrame(docs, DOCS), terms, top_n=5).collect()
-    exp = _bm25_py(docs, terms)
-    order = sorted(exp, key=lambda d: (-exp[d], d))
-    assert [r["doc_id"] for r in got] == order
-    assert [r["rank"] for r in got] == [1, 2, 3, 4, 5]
-    for r in got:
-        assert math.isclose(r["bm25_score"], exp[r["doc_id"]], abs_tol=5e-7)
-
-
-def test_bm25_absent_term_contributes_zero(spark):
-    docs = [(0, "merge window"), (1, "window window")]
-    both = bm25_rank(
-        spark.createDataFrame(docs, DOCS), ["window", "zzz_absent"], top_n=2
-    ).collect()
-    only = bm25_rank(
-        spark.createDataFrame(docs, DOCS), ["window"], top_n=2
-    ).collect()
-    assert [(r["doc_id"], r["bm25_score"]) for r in both] == [
-        (r["doc_id"], r["bm25_score"]) for r in only
-    ]
 
 
 def test_knn_mutual_flag_asymmetry(spark):

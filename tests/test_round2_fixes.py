@@ -7,40 +7,6 @@ from __future__ import annotations
 import zipfile
 
 import pytest
-from pyspark.sql import functions as F
-
-
-# --- reference string one-liners --------------------------------------------
-
-
-def test_textprep_one_liners_match_oracle(spark):
-    from bert_namedentityrecognition_spark.functions.textprep import (
-        newline_after_period,
-        normalize_text_prefix,
-    )
-    from bert_namedentityrecognition_spark.oracle import textproc
-
-    cases = [
-        "頭痛がする。熱もある。",          # two insertion points (one at EOS: no)
-        "改行済み。\nそのまま。",          # first already followed by \n
-        "。。",                            # consecutive periods
-        "no period at all",
-        "ロキソニンを飲んだ。",            # trailing 。 (no following char)
-        "めまいABC xyz-123残り",           # prefix stops at '1'
-        "123字から始まる",                 # empty prefix
-    ]
-    df = spark.createDataFrame([(c,) for c in cases], "text string")
-    got = df.select(
-        "text",
-        newline_after_period(F.col("text")).alias("nl"),
-        normalize_text_prefix(F.col("text")).alias("px"),
-    ).collect()
-    for r in got:
-        assert r.nl == textproc.newline_after_period(r.text), r.text
-        assert r.px == textproc.normalize_text_prefix(r.text), r.text
-    # pin the reference semantics directly too
-    assert textproc.newline_after_period("a。b。") == "a。\nb。"
-    assert textproc.normalize_text_prefix("abc 漢字123") == "abc 漢字"
 
 
 # --- token_set_ratio searchTerm parity --------------------------------------

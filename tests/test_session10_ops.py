@@ -247,17 +247,6 @@ def test_view_selection_prefix_property(spark):
         assert rows[k]["cum_cost"] > rows[0]["budget"]
 
 
-def test_ranker_agreement_bounds(spark):
-    import __spark_entry__ as entry
-
-    rows = {r["k"]: r for r in entry._ir_ranker_agreement(
-        spark, "/root/testdata/sf0.001").collect()}
-    assert set(rows) <= {5, 10, 20}
-    for k, r in rows.items():
-        assert 0 <= r["n_overlap"] <= k
-        assert r["overlap_ppm"] == (1000000 * r["n_overlap"]) // k
-
-
 # --- property-based differential tests for the new kernels ---------------
 
 from hypothesis import given, settings

@@ -1,16 +1,14 @@
 """Tests for weighted SSSP (Bellman-Ford), incremental connected
-components, and the inverted-postings build.  Gate-level Spark-vs-DuckDB
+components and clustering coefficients.  Gate-level Spark-vs-DuckDB
 equality ran at sf0.001/0.01/0.1 when each query landed; these pin the
 kernels and the branches gate data may not stress (negative-free weight
-relaxation order, unreachable nodes, merge-vs-new-node incremental paths,
-empty/whitespace docs).
+relaxation order, unreachable nodes, merge-vs-new-node incremental paths).
 """
 
 import random
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from bert_namedentityrecognition_spark.operators.canonicalize import (
     connected_components_star,
@@ -18,9 +16,6 @@ from bert_namedentityrecognition_spark.operators.canonicalize import (
 from bert_namedentityrecognition_spark.operators.graph import (
     incremental_components,
     sssp_bellman_ford,
-)
-from bert_namedentityrecognition_spark.operators.retrieval import (
-    inverted_postings,
 )
 from bert_namedentityrecognition_spark.oracle.graph import sssp_sql, sssp_weighted
 
@@ -95,28 +90,7 @@ def test_incremental_components_noop_delta_keeps_assignment(spark):
     assert inc == {(r.node, r.component) for r in prev.collect()}
 
 
-def test_inverted_postings_tf_and_positions(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "a b a   c a"),     # runs of spaces collapse
-            (2, "  b  "),           # outer whitespace trimmed
-            (3, ""),                # empty -> absent
-            (4, None),              # null -> absent
-        ],
-        "doc_id long, text string",
-    )
-    got = {(r.token, r.doc_id): (r.tf, r.first_pos)
-           for r in inverted_postings(docs).collect()}
-    assert got == {
-        ("a", 1): (3, 1),
-        ("b", 1): (1, 2),
-        ("c", 1): (1, 4),
-        ("b", 2): (1, 1),
-    }
-
-
-@pytest.mark.parametrize("q", ["kg_weighted_sssp", "kg_incremental_components",
-                               "inverted_index_postings"])
+@pytest.mark.parametrize("q", ["kg_weighted_sssp", "kg_incremental_components"])
 def test_new_queries_registered_with_oracles(q):
     import __spark_entry__ as e
 

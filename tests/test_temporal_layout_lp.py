@@ -1,85 +1,14 @@
-"""Unit tests for the round-5 session-3 operators: SCD2 history, ordered
-funnel, common-neighbor link prediction, and the Z-order layout audit.
-Gate-level Spark-vs-DuckDB equality is covered by tools/check_oracles.py
-(verified at sf0.001/0.01/0.1 when each query landed); these pin the
-operator semantics on hand-checkable fixtures, including the branches the
-synthetic gate data may not stress (null-safe SCD2 changes, tie-on-ts
-funnel non-chaining, quad-graph Jaccard, pruning truth table).
+"""Unit tests for common-neighbor link prediction. Gate-level
+Spark-vs-DuckDB equality is covered by tools/check_oracles.py; these pin
+the operator semantics on hand-checkable fixtures, including the branches
+the synthetic gate data may not stress (quad-graph Jaccard, existing edges
+excluded).
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from bert_namedentityrecognition_spark.operators.graph import link_prediction_cn
-from bert_namedentityrecognition_spark.operators.layout import (
-    layout_file_stats,
-    with_zvalue,
-)
-from bert_namedentityrecognition_spark.operators.temporal import (
-    funnel_steps,
-    scd2_history,
-)
-from bert_namedentityrecognition_spark.oracle.layout import (
-    file_overlaps,
-    zorder_interleave,
-)
 
-
-def test_scd2_collapses_noop_updates_and_versions(spark):
-    rows = [
-        # key 1: a, a (no-op), b, b (no-op), a  -> 3 versions a/b/a
-        (1, 10, 1, "a"), (1, 20, 2, "a"), (1, 30, 3, "b"),
-        (1, 40, 4, "b"), (1, 50, 5, "a"),
-        # key 2: single row -> one open version
-        (2, 15, 6, "x"),
-    ]
-    df = spark.createDataFrame(rows, "k long, ts long, seq long, v string")
-    out = scd2_history(df, ["k"], "ts", ["v"], ["seq"])
-    got = {
-        (r.k, r.version): (r.v, r.valid_from, r.valid_to)
-        for r in out.collect()
-    }
-    assert got == {
-        (1, 1): ("a", 10, 30),
-        (1, 2): ("b", 30, 50),
-        (1, 3): ("a", 50, None),
-        (2, 1): ("x", 15, None),
-    }
-
-
-def test_scd2_null_value_transitions_are_nullsafe(spark):
-    # NULL -> NULL is a no-op; NULL -> value and value -> NULL are changes
-    rows = [(1, 10, 1, None), (1, 20, 2, None), (1, 30, 3, "a"),
-            (1, 40, 4, None)]
-    df = spark.createDataFrame(rows, "k long, ts long, seq long, v string")
-    out = scd2_history(df, ["k"], "ts", ["v"], ["seq"]).orderBy("version")
-    vs = [(r.v, r.valid_from, r.valid_to) for r in out.collect()]
-    assert vs == [(None, 10, 30), ("a", 30, 40), (None, 40, None)]
-
-
-def test_funnel_stalls_and_ties_do_not_chain(spark):
-    rows = [
-        # user 1 completes: A@10, B@20, C@30
-        (1, 10, "A"), (1, 20, "B"), (1, 30, "C"),
-        # user 2 stalls at stage 1: A@10, C@20 (no B)
-        (2, 10, "A"), (2, 20, "C"),
-        # user 3: B-before-A never counts; B AT t1 doesn't chain (strict >)
-        (3, 5, "B"), (3, 10, "A"), (3, 10, "B"),
-        # user 4: no step events at all
-        (4, 10, "Z"),
-    ]
-    df = spark.createDataFrame(rows, "u long, ts long, et string")
-    out = funnel_steps(
-        df, ["u"], "ts",
-        [F.col("et") == "A", F.col("et") == "B", F.col("et") == "C"],
-    )
-    got = {r.u: (r.t1, r.t2, r.t3, r.max_stage) for r in out.collect()}
-    assert got == {
-        1: (10, 20, 30, 3),
-        2: (10, None, None, 1),
-        3: (10, None, None, 1),
-        4: (None, None, None, 0),
-    }
 
 
 def test_link_prediction_on_quad(spark):
@@ -109,38 +38,7 @@ def test_link_prediction_excludes_existing_edges(spark):
     assert got == {(0, 3): (1, 500_000), (1, 3): (1, 500_000)}
 
 
-def test_zorder_kernel_matches_spark_expr(spark):
-    pts = [(x, y) for x in (0, 1, 5, 1023, 2047) for y in (0, 2, 7, 1439)]
-    df = spark.createDataFrame(pts, "x long, y long")
-    got = {(r.x, r.y): r.zval for r in with_zvalue(df, "x", "y", 11).collect()}
-    for (x, y), zv in got.items():
-        assert zv == zorder_interleave(x, y, 11), (x, y)
-
-
-def test_zorder_locality_orders_tiles(spark):
-    # within one 2^16 z-span, x and y both stay inside a 256-wide tile
-    df = spark.createDataFrame(
-        [(x, y) for x in range(0, 1024, 64) for y in range(0, 1024, 64)],
-        "x long, y long",
-    )
-    stats = layout_file_stats(
-        with_zvalue(df, "x", "y", 11),
-        F.expr("zval DIV 65536"), "x", "y", (0, 0, 0, 0), "z",
-    ).collect()
-    for r in stats:
-        assert r.max_x - r.min_x <= 255 and r.max_y - r.min_y <= 255
-
-
-def test_file_overlaps_truth_table():
-    # fully inside, straddling, disjoint in x, disjoint in y
-    assert file_overlaps(10, 20, 10, 20, 0, 100, 0, 100)
-    assert file_overlaps(90, 110, 0, 5, 0, 100, 0, 100)
-    assert not file_overlaps(101, 110, 0, 5, 0, 100, 0, 100)
-    assert not file_overlaps(0, 5, 101, 110, 0, 100, 0, 100)
-
-
-@pytest.mark.parametrize("q", ["events_funnel", "scd2_entity_history",
-                               "kg_link_prediction", "zorder_layout"])
+@pytest.mark.parametrize("q", ["kg_link_prediction"])
 def test_new_queries_registered_with_oracles(q):
     import __spark_entry__ as e
 

@@ -25,7 +25,7 @@ from bert_namedentityrecognition_spark.oracle.textproc import (
 from bert_namedentityrecognition_spark.plans.oracle_pipeline import oracle_mentions
 from bert_namedentityrecognition_spark.sources import fixtures
 from bert_namedentityrecognition_spark.sources.readers import read_warc
-from tests.test_kg_tail import _plan_nodes
+from tests.test_kg_tail import _plan_nodes, _seq
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 TERMS = fixtures.WARC_TERM_TYPES
@@ -107,6 +107,33 @@ def test_html_fallback_evaluated_once_on_unmarked_input(spark):
         ("ArrowEvalPythonExec", ["split_sentences_udf"]),
         fallback,
     ]
+
+
+def test_warc_gate_parses_the_fixture_once(spark, sf_dir):
+    """``warc_ingest_mentions`` reads the prepared pages on two sides, the
+    mentions and the per-url text hash: building and collecting it scans
+    the WARC fixture once, counted over every SQL execution it runs."""
+    import __spark_entry__ as E
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def recent_executions():
+        """The last 50 finished SQL executions, oldest first."""
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        return _seq(store.executionsList(max(0, n - 50), min(n, 50))) if n else []
+
+    first = max((e.executionId() for e in recent_executions()), default=-1)
+    E.queries()["warc_ingest_mentions"](spark, sf_dir).collect()
+    scans = [
+        node.name()
+        for e in recent_executions()
+        if e.executionId() > first
+        for node in _seq(store.planGraph(e.executionId()).allNodes())
+        if node.name().startswith("Scan binaryFile")
+    ]
+    assert len(scans) == 1
 
 
 # --- rows equal the unmarked path's ----------------------------------------------
