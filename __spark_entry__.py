@@ -6243,10 +6243,10 @@ def _warc_ingest_mentions(spark, sf):
     fixture (plain + gzip segments, script subtrees, HTML entities, an
     English decoy page per 10) is materialized to ``_writable_base()``,
     then ``read_warc`` (binaryFile → framing parser, which derives text =
-    ``html_to_text(html)`` per record) → ``prepare_pages`` (lang-ID; no
-    second html→text pass over the reader's text-complete frame),
-    materialized once without the html column (rule 23: the mention side
-    and the per-url side both read it, and the fixture is parsed once)
+    ``html_to_text(html)`` per record and returns no html column) →
+    ``prepare_pages`` (lang-ID; no html→text pass over html-less pages),
+    materialized once (rule 23: the mention side and the per-url side both
+    read it, and the fixture is parsed once)
     → ``extract_mentions`` (fused split/512/han_to_zen/tag stage,
     lang_filter='cjk'). Output grain is (url, term, kind): occurrence
     count ``n`` plus the per-url ``warc_ts`` (gates WARC-Date parsing) and
@@ -6268,7 +6268,7 @@ def _warc_ingest_mentions(spark, sf):
     n_pages = _warc_pages_for_events(_t(spark, sf, "events").count())
     d = os.path.join(_writable_base(), "var", f"warc_fixture_{n_pages}")
     fixtures.write_warc_fixture(d, n_pages)
-    pages = prepare_pages(read_warc(spark, d)).drop("html").localCheckpoint(eager=True)
+    pages = prepare_pages(read_warc(spark, d)).localCheckpoint(eager=True)
     m = extract_mentions(pages, fixtures.WARC_TERM_TYPES, lang_filter="cjk")
     per_url = pages.select(
         "url",

@@ -43,14 +43,8 @@ from pyspark.sql import DataFrame
 from ..oracle.iob import split_tag
 from ..oracle.matcher import automaton_match, build_automaton
 from ..oracle.textproc import han_to_zen
-from .tagger import (
-    MAX_LEN,
-    _mention_stage,
-    _page_rows,
-    _pages_text_source,
-    _sentence_rows,
-    matches_to_iob,
-)
+from .sentences import MAX_LEN, _page_rows, _pages_text_source
+from .tagger import _mention_stage, _sentence_rows, matches_to_iob
 
 PAD, CLS, UNK = "[PAD]", "[CLS]", "[UNK]"
 

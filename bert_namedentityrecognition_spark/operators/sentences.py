@@ -1,19 +1,29 @@
-"""pages → sentences derivation.
+"""pages → sentences, and the one page contract every pages consumer runs.
 
-Spark-first shape: null/empty filter (the NaN-skip path of
-``scripts/predict/predict_for_xls_folder.py:56-58``) pushes down to the scan;
-sentence splitting is a vectorized Arrow UDF returning ``array<string>`` that
-is ``posexplode``d into ``(url, sent_id, sent)``; the 512-char drop filter
-(``util/text_utils.py:50-61``) is a JVM-side ``length()`` predicate.
+The contract has two halves, both here:
 
-The split regex itself stays in Python (the reference regex relies on
-Python ``re`` unicode word-class semantics in its lookbehinds; Java regex
-``\\w`` is ASCII-only — running it JVM-side would silently change splits on
-Japanese text). Parity beats the marginal JVM win here; the UDF is
-Arrow-batched and O(text).
+- :func:`_pages_text_source` (JVM side): the pushable text-or-html filter,
+  the null-gate that keeps html bytes out of the Arrow transfer for pages
+  that carry text, and the lang filter. The schema decides the fallback:
+  a pages frame without an ``html`` column (what ``read_warc`` returns)
+  needs none, so only its rows with text pass.
+- :func:`_page_sentences` (Python side): the html→text fallback for a page
+  whose text is null or empty, preprocess + split, then the ``MAX_LEN`` cut
+  (``util/text_utils.py:50-61``), with sent_ids assigned before the cut.
+
+``pages_to_sentences``, the fused mention stages (``tagger.extract_mentions``,
+``ner.ner_pages``) and ``streaming.stream_pipeline.streaming_pairs`` all read
+pages through these two, each in one ``mapInPandas``.
+
+The split regex stays in Python (the reference regex relies on Python
+``re`` unicode word-class semantics in its lookbehinds; Java regex ``\\w``
+is ASCII-only — running it JVM-side would silently change splits on
+Japanese text).
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -23,12 +33,18 @@ from pyspark.sql.functions import pandas_udf
 
 from ..oracle.textproc import html_to_text, preprocess_text, split_sentences
 
+# pages paths drop sentences longer than MAX_LEN chars
+# (``util/text_utils.py:50-61``); the model's position table holds MAX_LEN
+# tokens including [CLS]
+MAX_LEN = 512
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def split_sentences_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(
-        lambda t: split_sentences(preprocess_text(t)) if t is not None else []
-    )
+SENTENCE_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), True),
+        T.StructField("sent_id", T.IntegerType(), False),
+        T.StructField("sent", T.StringType(), True),
+    ]
+)
 
 
 def _html_to_text_batch(html: pd.Series) -> pd.Series:
@@ -46,132 +62,107 @@ def _html_to_text_batch(html: pd.Series) -> pd.Series:
 
 html_to_text_udf = pandas_udf(_html_to_text_batch, T.StringType()).asNondeterministic()
 
-# Attribute set on the one DataFrame object whose text column is already
-# filled from html: re-running the html→text fallback on it changes no row.
-# Every transformation returns a new object without it, so anything derived
-# falls back to the UDF. Not carried as field metadata: a union keeps its
-# first child's metadata, and html-only rows from the second child would
-# then skip their fallback.
-_TEXT_COMPLETE = "_kg_text_complete"
-
-
-def _mark_text_complete(
-    df: DataFrame, text_col: str = "text", html_col: str = "html"
-) -> DataFrame:
-    setattr(df, _TEXT_COMPLETE, (text_col, html_col))
-    return df
-
-
-def _is_text_complete(
-    df: DataFrame, text_col: str = "text", html_col: str = "html"
-) -> bool:
-    return vars(df).get(_TEXT_COMPLETE) == (text_col, html_col)
-
 
 def _has_text(text_col: str) -> Column:
     return F.col(text_col).isNotNull() & (F.col(text_col) != "")
 
 
-def _text_from_html(pages: DataFrame, text_col: str, html_col: str | None) -> Column | None:
-    """The html→text fallback of ``pages``' text column: text where it is
-    non-empty, else the text of the html bytes (null-gated JVM-side, so the
-    UDF only sees the bytes of rows that need it). None when there is
-    nothing to fill: no html column, or a frame marked text-complete."""
-    if (
-        html_col is None
-        or html_col not in pages.columns
-        or _is_text_complete(pages, text_col, html_col)
-    ):
-        return None
-    has_text = _has_text(text_col)
-    return F.when(has_text, F.col(text_col)).otherwise(
-        html_to_text_udf(F.when(~has_text, F.col(html_col)))
-    )
-
-
-def prepare_pages(
+def _pages_text_source(
     pages: DataFrame,
-    text_col: str = "text",
-    html_col: str = "html",
-    lang_col: str = "lang",
-    overwrite_lang: bool = False,
+    lang_filter: str | None,
+    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
+    """(url, text, _html[, *extra_cols]) source for the pages stages.
+
+    _html is null unless the row needs the html→text fallback (text null or
+    empty): the pushable filter keeps text-or-html rows, and the JVM-side
+    ``when`` gate keeps html bytes out of the Arrow transfer for text rows.
+    A frame without an ``html`` column needs no fallback: it keeps its
+    rows with text and ships no html at all.
+    ``extra_cols`` carries additional passthrough columns (e.g. warc_ts
+    for the streaming pair path)."""
+    has_text = _has_text("text")
+    if "html" in pages.columns:
+        df = pages.filter(has_text | F.col("html").isNotNull())
+        html_arg = F.when(~has_text, F.col("html"))
+    else:
+        df = pages.filter(has_text)
+        html_arg = F.lit(None).cast("binary")
+    if lang_filter is not None and "lang" in pages.columns:
+        df = df.filter(F.col("lang") == lang_filter)
+    return df.select("url", "text", html_arg.alias("_html"), *extra_cols)
+
+
+def _page_sentences(text: str | None, html: bytes | None) -> list[tuple[int, str]]:
+    """(sent_id, sent) of one page: the html→text fallback when ``text`` is
+    null or empty, preprocess + split, then the ``MAX_LEN`` cut. sent_ids
+    are assigned before the cut."""
+    if not text:
+        text = html_to_text(html) if html is not None else ""
+    return [
+        (sid, sent)
+        for sid, sent in enumerate(split_sentences(preprocess_text(text)))
+        if len(sent) <= MAX_LEN
+    ]
+
+
+def _page_rows(pdf: pd.DataFrame) -> list[tuple]:
+    """(url, sent_id, sent) rows of a ``_pages_text_source`` batch."""
+    return [
+        (url, sid, sent)
+        for url, text, html in zip(pdf["url"], pdf["text"], pdf["_html"])
+        for sid, sent in _page_sentences(text, html)
+    ]
+
+
+def prepare_pages(pages: DataFrame) -> DataFrame:
     """One-off crawl prep: fill null ``text`` from html bytes and null
     ``lang`` via the n-gram heuristic (JVM expression) — the step that turns
-    raw WARC ingest into a proper pages table, typically written back to
+    raw crawl pages into a proper pages table, typically written back to
     storage once so the KG pipeline reads cleaned input thereafter.
 
-    text: html→text fallback only where text is null/empty, in one Arrow
-    stage; a frame marked text-complete (what ``read_warc`` returns) is
-    taken as is and plans no Python UDF. lang: filled where null (or
-    everywhere with ``overwrite_lang``); rows with neither text nor html
-    pass through unchanged (null text).
-
-    The output is marked text-complete: it is a fixed point of the
-    fallback (a row whose html yields ``""`` keeps ``""``, and running
-    the fallback again gives the same ``""``), so the consumers
-    (``pages_to_sentences``, the mention stages) ship no html and plan no
-    second fallback over it."""
+    text: where the frame has an ``html`` column, the html→text fallback
+    fills rows whose text is null or empty, in one Arrow stage; the output
+    keeps the column. ``read_warc`` output has no html column (its text is
+    already derived), so only the lang guess runs and no Python UDF is
+    planned. lang: filled where null; rows with neither text nor html pass
+    through unchanged (null text, the lang they had)."""
     from ..functions.textstats import lang_guess
 
-    filled = _text_from_html(pages, text_col, html_col)
-    if filled is not None:
-        pages = pages.withColumn(text_col, filled)
-    guessed = lang_guess(F.col(text_col))
-    if lang_col in pages.columns and not overwrite_lang:
-        lang_val = F.coalesce(F.col(lang_col), guessed)
+    if "html" in pages.columns:
+        has_text = _has_text("text")
+        pages = pages.withColumn(
+            "text",
+            F.when(has_text, F.col("text")).otherwise(
+                html_to_text_udf(F.when(~has_text, F.col("html")))
+            ),
+        )
+    guessed = lang_guess(F.col("text"))
+    if "lang" in pages.columns:
+        lang_val = F.coalesce(F.col("lang"), guessed)
+        # rows the text fill could not populate keep their pre-existing lang
+        # instead of being silently nulled
+        keep = F.col("lang")
     else:
-        lang_val = guessed
-    # rows the text fill could not populate keep their pre-existing lang
-    # (pass-through, per docstring) instead of being silently nulled
-    keep = (
-        F.col(lang_col)
-        if lang_col in pages.columns
-        else F.lit(None).cast("string")
+        lang_val, keep = guessed, F.lit(None).cast("string")
+    return pages.withColumn(
+        "lang", F.when(F.col("text").isNotNull(), lang_val).otherwise(keep)
     )
-    out = pages.withColumn(
-        lang_col, F.when(F.col(text_col).isNotNull(), lang_val).otherwise(keep)
-    )
-    return _mark_text_complete(out, text_col, html_col)
 
 
-def pages_to_sentences(
-    pages: DataFrame,
-    max_length: int = 512,
-    lang_filter: str | None = "ja",
-    text_col: str = "text",
-    key_col: str = "url",
-    html_col: str | None = "html",
-) -> DataFrame:
+def pages_to_sentences(pages: DataFrame, lang_filter: str | None = "ja") -> DataFrame:
     """Returns (url, sent_id, sent). Deterministic per row; no shuffle.
 
-    input_hint fallback: rows with null/empty ``text`` but non-null ``html``
-    get text extracted from the html bytes (deterministic, so the
-    byte-identical-text-per-url invariant holds for them too). The coalesce
-    is conditional JVM-side, so the Python extractor only ever sees the
-    html-only rows' bytes — pages with text never pay the UDF. A frame
-    marked text-complete (``read_warc``'s or ``prepare_pages``' output)
-    plans no fallback at all: only its rows with text are split."""
-    has_text = _has_text(text_col)
-    filled = _text_from_html(pages, text_col, html_col)
-    if filled is None:
-        df = pages.filter(has_text)
-    else:
-        # pushable disjunction FIRST (parquet row-group stats still prune),
-        # THEN the coalesce — a computed text column would otherwise block
-        # predicate pushdown for the all-text common case
-        df = pages.filter(has_text | F.col(html_col).isNotNull())
-    if lang_filter is not None and "lang" in pages.columns:
-        # lang is an input column: filter before the fill, which no filter
-        # passes (the UDF is non-deterministic), so other-language html is
-        # never decoded
-        df = df.filter(F.col("lang") == lang_filter)
-    if filled is not None:
-        df = df.withColumn(text_col, filled).filter(has_text)
-    out = df.select(
-        F.col(key_col).alias("url"),
-        F.posexplode(split_sentences_udf(F.col(text_col))).alias("sent_id", "sent"),
-    )
-    if max_length is not None:
-        out = out.filter(F.length("sent") <= max_length)
-    return out
+    One ``mapInPandas`` over :func:`_pages_text_source`, emitting the
+    :func:`_page_sentences` rows of each page: the same contract as the
+    fused mention stages, html→text fallback included (null-gated
+    JVM-side, so pages with text never ship their html bytes). sent_ids
+    are assigned before the ``MAX_LEN`` cut."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                _page_rows(pdf), columns=SENTENCE_SCHEMA.fieldNames()
+            ).astype({"sent_id": "int32"})
+
+    return _pages_text_source(pages, lang_filter).mapInPandas(run, schema=SENTENCE_SCHEMA)

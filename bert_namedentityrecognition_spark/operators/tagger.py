@@ -32,12 +32,11 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..oracle.matcher import automaton_match, build_automaton
-from ..oracle.textproc import han_to_zen, html_to_text, preprocess_text, split_sentences
-from .sentences import _has_text, _is_text_complete
+from ..oracle.textproc import han_to_zen
+from .sentences import _page_rows, _pages_text_source
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -49,11 +48,6 @@ MENTION_SCHEMA = T.StructType(
         T.StructField("word", T.StringType(), False),
     ]
 )
-
-# pages paths drop sentences longer than MAX_LEN chars
-# (``util/text_utils.py:50-61``); the model's position table holds MAX_LEN
-# tokens including [CLS]
-MAX_LEN = 512
 
 
 def matches_to_iob(text: str, matches: list[tuple[int, int, str]], types: dict[str, str]) -> list[str]:
@@ -117,28 +111,6 @@ def _sentence_rows(pdf: pd.DataFrame) -> list[tuple]:
     return [row for row in zip(pdf["url"], pdf["sent_id"], pdf["sent"]) if row[2]]
 
 
-def _page_sentences(text: str | None, html: bytes | None) -> list[tuple[int, str]]:
-    """(sent_id, sent) of one page: the html→text fallback when ``text`` is
-    null or empty, preprocess + split, then the ``MAX_LEN`` cut. sent_ids
-    are assigned before the cut, as in ``pages_to_sentences``."""
-    if not text:
-        text = html_to_text(html) if html is not None else ""
-    return [
-        (sid, sent)
-        for sid, sent in enumerate(split_sentences(preprocess_text(text)))
-        if len(sent) <= MAX_LEN
-    ]
-
-
-def _page_rows(pdf: pd.DataFrame) -> list[tuple]:
-    """(url, sent_id, sent) rows of a ``_pages_text_source`` batch."""
-    return [
-        (url, sid, sent)
-        for url, text, html in zip(pdf["url"], pdf["text"], pdf["_html"])
-        for sid, sent in _page_sentences(text, html)
-    ]
-
-
 def _mention_stage(
     src: DataFrame,
     rows_of: Callable[[pd.DataFrame], list[tuple]],
@@ -175,36 +147,6 @@ def tag_sentences(
     surfaces should surface verbatim.
     """
     return _mention_stage(sentences, _sentence_rows, _Gazetteer, term_types, normalize)
-
-
-def _pages_text_source(
-    pages: DataFrame,
-    lang_filter: str | None,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(url, text, _html[, *extra_cols]) source for the fused Arrow stages.
-
-    _html is null unless the row needs the html→text fallback (text null or
-    empty): the pushable filter keeps text-or-html rows, and the JVM-side
-    ``when`` gate keeps html bytes out of the Arrow transfer for text rows.
-    A frame marked text-complete (``read_warc``'s or ``prepare_pages``'
-    output) needs no fallback: it keeps its rows with text and ships no
-    html at all.
-    EVERY pages consumer must come through here (CLAUDE.md rule 10) so the
-    input contract stays in one place: fallback gating and lang here, then
-    html decode, split and length cut in :func:`_page_sentences`.
-    ``extra_cols`` carries additional passthrough columns (e.g. warc_ts
-    for the streaming pair path)."""
-    has_text = _has_text("text")
-    if "html" in pages.columns and not _is_text_complete(pages):
-        df = pages.filter(has_text | F.col("html").isNotNull())
-        html_arg = F.when(~has_text, F.col("html"))
-    else:
-        df = pages.filter(has_text)
-        html_arg = F.lit(None).cast("binary")
-    if lang_filter is not None and "lang" in pages.columns:
-        df = df.filter(F.col("lang") == lang_filter)
-    return df.select("url", "text", html_arg.alias("_html"), *extra_cols)
 
 
 def extract_mentions(

@@ -2,8 +2,8 @@
 
 Spark dataflow (SURVEY.md §7):
 
-    pages(url, warc_ts, html, text, lang)
-      → sentences   (filter + posexplode, no shuffle)
+    pages(url, warc_ts, [html,] text, lang)
+      → sentences   (one mapInPandas over the page contract, no shuffle)
       → mentions    (one mapInPandas Arrow stage: han_to_zen + tag + BIO decode)
       → normalized  (distinct surfaces → exact→fuzzy resolver, on the driver
                      or in one mapInPandas stage → broadcast join back)
@@ -43,7 +43,6 @@ def run_kg_pipeline(
     alias_edges: DataFrame | None = None,
     threshold: float = 70.0,
     scope: str = "document",
-    remove_duplicates: bool = True,
     lang_filter: str | None = "ja",
     salt_buckets: int = 0,
     persist: bool = True,
@@ -84,7 +83,6 @@ def run_kg_pipeline(
     triples = build_triples(
         normalized,
         scope=scope,
-        remove_duplicates=remove_duplicates,
         salt_buckets=salt_buckets,
     )
     if persist:

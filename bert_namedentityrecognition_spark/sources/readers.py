@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.sentences import _mark_text_complete
 from ..oracle.textproc import html_to_text
 
 
@@ -227,7 +226,6 @@ _PAGES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), True),
         T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
     ]
@@ -235,7 +233,8 @@ _PAGES_SCHEMA = T.StructType(
 
 
 def parse_warc_bytes(blob: bytes) -> list[dict]:
-    """Parse WARC/1.0 bytes → pages rows (response records only).
+    """Parse WARC/1.0 bytes → (url, warc_ts, html, text, lang) records
+    (response records only; ``read_warc`` returns all but ``html``).
 
     Proper record framing: read the WARC header block (terminated by
     CRLFCRLF), take exactly Content-Length payload bytes, skip the record
@@ -308,7 +307,7 @@ def parse_warc_bytes(blob: bytes) -> list[dict]:
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """WARC files → the pages(url, warc_ts, html, text, lang) input table.
+    """WARC files → the pages(url, warc_ts, text, lang) input table.
 
     Spark-first shape: ``binaryFile`` scan (one task per file — Common Crawl
     ships ~1 GB segment files, so file-level parallelism is the natural
@@ -319,11 +318,13 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     ``text`` is ``html_to_text(html)``, derived by the parser in the same
     Python section that holds the bytes (the same kernel as the pipeline's
     html→text fallback, so the byte-identical-text invariant stays rooted
-    in the archived bytes). The returned DataFrame object is marked
-    text-complete: ``prepare_pages``, ``pages_to_sentences`` and the
-    mention stages plan no second html→text pass over it. The mark is on
-    this object only; any frame derived from it (a union, a withColumn)
-    takes the fallback again.
+    in the archived bytes). The html bytes themselves are not returned:
+    nothing downstream reads them, and Spark cannot prune a column out of
+    a ``mapInPandas`` output. Without an ``html`` column the pages contract
+    (``operators/sentences._pages_text_source``) plans no html→text
+    fallback, for this frame and for every frame derived from it.
+    ``lang`` is null until ``prepare_pages`` guesses it. The kernel,
+    :func:`parse_warc_bytes`, still returns the html of each record.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -336,12 +337,10 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
                 if p.endswith(".gz") or blob[:2] == b"\x1f\x8b":
                     blob = gzip.decompress(blob)
                 out.extend(parse_warc_bytes(blob))
-            yield pd.DataFrame(
-                out, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
+            yield pd.DataFrame(out, columns=_PAGES_SCHEMA.fieldNames())
 
     files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return _mark_text_complete(files.mapInPandas(run, schema=_PAGES_SCHEMA))
+    return files.mapInPandas(run, schema=_PAGES_SCHEMA)
 
 
 def write_ntriples(

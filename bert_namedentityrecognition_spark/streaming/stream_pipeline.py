@@ -65,7 +65,9 @@ def streaming_pairs(
     Streaming needs no pairing join at all: a page is a single row, so
     extract → normalize (``resolve_surfaces`` against the dimension index
     built once per worker) → per-doc dedup → all-pairs (+No Symptoms) are
-    row-local. The only stateful operator left downstream is the windowed
+    row-local. The pairing rules are the oracle's
+    (``oracle/ade.ade_pairs_from_lists``, called per page), so they exist
+    once. The only stateful operator left downstream is the windowed
     count — exactly the shape Structured Streaming supports without
     stream-stream joins.
     """
@@ -78,8 +80,9 @@ def streaming_pairs(
         _worker_dim_index,
         resolve_surfaces,
     )
-    from ..operators.tagger import _Gazetteer, _page_sentences, _pages_text_source
-    from ..oracle.ade import NO_SYMPTOMS
+    from ..operators.sentences import _page_sentences, _pages_text_source
+    from ..operators.tagger import _Gazetteer
+    from ..oracle.ade import ade_pairs_from_lists
 
     sc = pages_stream.sparkSession.sparkContext
     bc = sc.broadcast(term_types)
@@ -101,38 +104,33 @@ def streaming_pairs(
                 cache[key] = resolve_surfaces([key], idx, threshold)[0]
             return cache[key][2] or ""
 
+        def norm(word: str) -> str:
+            return canon(word, "symptom").strip()
+
         for pdf in batches:
             ts_out, subj_out, obj_out = [], [], []
             for ts, text, hb in zip(pdf["warc_ts"], pdf["text"], pdf["_html"]):
                 drugs: list[str] = []
-                syms_raw: list[str] = []
+                syms: list[str] = []
                 for _, sent in _page_sentences(text, hb):
                     for _, _, ttype, word in gazetteer.spans(sent):
-                        (drugs if ttype == "drug" else syms_raw).append(word)
-                if remove_duplicates:
-                    drug_list = sorted(set(drugs))
-                    sym_list = sorted(set(syms_raw))
-                else:
-                    drug_list, sym_list = drugs, syms_raw
-                objs = [
-                    c
-                    for c in (canon(w, "symptom").strip() for w in sym_list)
-                    if c != "" and len(c) >= 2
-                ]
-                for d in drug_list:
-                    d = d.strip()
-                    if len(d) < 2:
-                        continue
-                    if not syms_raw:
-                        ts_out.append(ts)
-                        subj_out.append(d)
-                        obj_out.append(NO_SYMPTOMS)
-                    else:
-                        for o in objs:
-                            ts_out.append(ts)
-                            subj_out.append(d)
-                            obj_out.append(o)
-            yield pd.DataFrame({"warc_ts": ts_out, "subj": subj_out, "obj": obj_out})
+                        (drugs if ttype == "drug" else syms).append(word)
+                pairs = ade_pairs_from_lists(
+                    [drugs], [syms], remove_duplicates=remove_duplicates, normalize=norm
+                )
+                for (subj, obj), n in pairs.items():
+                    ts_out += [ts] * n
+                    subj_out += [subj] * n
+                    obj_out += [obj] * n
+            # explicit dtypes: a batch with no pair would otherwise infer
+            # float64 columns, which Arrow cannot cast to timestamp
+            yield pd.DataFrame(
+                {
+                    "warc_ts": pd.Series(ts_out, dtype="datetime64[ns]"),
+                    "subj": pd.Series(subj_out, dtype=object),
+                    "obj": pd.Series(obj_out, dtype=object),
+                }
+            )
 
     return src.mapInPandas(run, schema="warc_ts timestamp, subj string, obj string")
 

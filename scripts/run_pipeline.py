@@ -5,12 +5,16 @@
         [--input-format parquet|warc] [--resume --buckets 64]
         [--dim-csv dim.csv] [--lang ja] [--checkpoint model.npz]
 
-With ``--resume`` the job processes url-hash buckets through the metrics
-ledger (idempotent restart from the last committed bucket); without it, one
-batch pass. Outputs: mentions/ triples/ nodes/ edges/ (+ ledger.jsonl;
-``--pred-patterns`` adds triples_patterned/ — in both modes; under
-``--resume`` the per-sentence predicate table commits per url-bucket with
-the same ledger idempotency as mentions).
+Without ``--resume``, one batch pass writes mentions/ triples/ nodes/
+edges/ (``--pred-patterns`` adds triples_patterned/). With ``--resume`` the
+job processes url-hash buckets through the metrics ledger (idempotent
+restart from the last committed bucket) and writes mentions/ (one
+bucket=K directory per url-hash bucket), triples/ and, with
+``--pred-patterns``, triples_patterned/ (+ ledger.jsonl; the per-sentence
+predicate table preds/ commits per url-bucket with the same ledger
+idempotency as mentions); no nodes/ or edges/. It counts document scope,
+unsalted: it rejects ``--scope`` and ``--salt-buckets``, as it rejects
+``--checkpoint``.
 
 Non-ASCII ``--pred-patterns`` values require a UTF-8 locale (``LANG=C.UTF-8``)
 — the spark-submit JVM decodes argv with the platform charset and silently
@@ -87,6 +91,16 @@ def main(argv=None):
         p.error(
             "--checkpoint is not supported with --resume yet: the bucketed "
             "resume path drives the gazetteer matcher (run a batch pass)"
+        )
+    if args.resume and args.scope != "document":
+        p.error(
+            "--scope is not supported with --resume: the bucketed resume "
+            "path counts document scope (run a batch pass)"
+        )
+    if args.resume and args.salt_buckets:
+        p.error(
+            "--salt-buckets is not supported with --resume: the bucketed "
+            "resume path counts unsalted (run a batch pass)"
         )
 
     # validate up front: a spec without '=' would otherwise surface as an

@@ -185,3 +185,27 @@ def test_rebucketing_rerun_is_correct(spark, tmp_path):
     ledger = MetricsLedger(base)
     specs = {r["spec"] for r in ledger.rows() if r["stage"] == "mentions"}
     assert len(specs) == 2
+
+
+@pytest.mark.parametrize(
+    "flag",
+    [["--scope", "sentence"], ["--salt-buckets", "8"]],
+    ids=["scope", "salt_buckets"],
+)
+def test_resume_rejects_batch_only_flags(flag, monkeypatch, capsys):
+    """``resume_run`` counts document scope, unsalted: ``--resume`` with
+    ``--scope`` or ``--salt-buckets`` exits with a usage error before
+    Spark starts, instead of silently ignoring the flag."""
+    from pyspark.sql import SparkSession
+
+    from scripts.run_pipeline import main
+
+    def no_spark(self):
+        raise AssertionError("Spark was started")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        main(["--pages-dir", "/nonexistent", "--out", "/nonexistent/out", "--resume", *flag])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert f"{flag[0]} is not supported with --resume" in err

@@ -98,3 +98,49 @@ def test_streaming_model_path_equals_batch(spark, tmp_path):
         for r in ner_pages(pages, model, vocab).collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_streaming_pairs_follow_the_ade_oracle(spark):
+    """``streaming_pairs`` pairs each page by ``oracle/ade.ade_pairs_from_lists``:
+    a drug-only page gives (drug, No Symptoms), a symptom-only page gives
+    nothing, and a page with duplicate mentions counts each distinct raw
+    surface once with ``remove_duplicates`` (before normalization, so two
+    surfaces of one symptom still count twice) and every occurrence
+    without it. Both equal the oracle's document-scope counts."""
+    from collections import Counter
+
+    from bert_namedentityrecognition_spark.plans.oracle_pipeline import oracle_triples
+    from bert_namedentityrecognition_spark.streaming.stream_pipeline import streaming_pairs
+
+    rows = [
+        {"url": "u/drug-only", "text": "アスピリンを服用した。", "html": None},
+        {"url": "u/symptom-only", "text": "頭痛がする。", "html": None},
+        {
+            "url": "u/duplicates",
+            "text": "ロキソニンを服用後、頭痛が出現した。ロキソニンを再開し頭痛い状態が続き、発熱した。",
+            "html": None,
+        },
+        {
+            "url": "u/html-only",
+            "text": None,
+            "html": "<p>カロナールで嘔吐した。</p>".encode(),
+        },
+    ]
+    for r in rows:
+        r["lang"], r["warc_ts"] = "ja", None
+    pages = spark.createDataFrame(
+        [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]) for r in rows],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    dim_rows, tt = fixtures.generate_entity_dim(), fixtures.pipeline_term_types()
+    for remove_duplicates in (True, False):
+        got = Counter(
+            (r.subj, r.obj)
+            for r in streaming_pairs(
+                pages, dim_rows, tt, remove_duplicates=remove_duplicates
+            ).collect()
+        )
+        want = oracle_triples(rows, dim_rows, tt, remove_duplicates=remove_duplicates)
+        assert got == Counter(want), remove_duplicates
+        assert want[("アスピリン", "No Symptoms")] == 1
+    assert want[("ロキソニン", "頭痛")] == 4  # 2 drug × 2 symptom occurrences

@@ -1,22 +1,27 @@
-"""WARC pages arrive with text: ``read_warc``'s parser derives ``text`` from
-the html bytes in its own Python section and marks the frame it returns
-text-complete, so ``prepare_pages``, ``pages_to_sentences`` and the mention
-stages plan no second html→text pass over it. Every frame derived from a
-marked one takes the fallback again.
+"""The page contract is in the schema: a pages frame without an ``html``
+column needs no html→text fallback. ``read_warc``'s parser derives ``text``
+from the html bytes in its own Python section and returns
+(url, warc_ts, text, lang), so its output and every frame derived from it
+(a union, a filter, a withColumn) plan no fallback; pages that carry html
+take it.
 
-Each test compares with the unmarked path (text nulled or the mark dropped,
-so the fallback UDF runs) or with a replay of the oracle kernels.
+Each test compares with the fallback path over the same archived bytes
+(parquet-style pages: null text and the html ``parse_warc_bytes`` returns
+for each record) or with a replay of the oracle kernels.
 """
+
+import gzip
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from bert_namedentityrecognition_spark.operators.sentences import (
-    _is_text_complete,
+    MAX_LEN,
     pages_to_sentences,
     prepare_pages,
 )
-from bert_namedentityrecognition_spark.operators.tagger import MAX_LEN, extract_mentions
+from bert_namedentityrecognition_spark.operators.tagger import extract_mentions
 from bert_namedentityrecognition_spark.oracle.textproc import (
     html_to_text,
     preprocess_text,
@@ -24,7 +29,7 @@ from bert_namedentityrecognition_spark.oracle.textproc import (
 )
 from bert_namedentityrecognition_spark.plans.oracle_pipeline import oracle_mentions
 from bert_namedentityrecognition_spark.sources import fixtures
-from bert_namedentityrecognition_spark.sources.readers import read_warc
+from bert_namedentityrecognition_spark.sources.readers import parse_warc_bytes, read_warc
 from tests.test_kg_tail import _plan_nodes, _seq
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -35,6 +40,11 @@ ENTITIES = (
     f"<html><body><p>{DRUG}&amp;{SYM} &lt;{DRUG}&gt;。</p>"
     f"<p>&#x{ord(SYM[0]):x};{SYM[1:]}&nbsp;が出た。</p></body></html>"
 ).encode()
+SCRIPT_URL = "https://warc.example/script-only"
+ENTITIES_URL = "https://warc.example/entities"
+EXTRA_URL, EXTRA_TEXT = "https://warc.example/extra", f"{DRUG}を服用した。{SYM}が出た。"
+FALLBACK = ("ArrowEvalPythonExec", ["_html_to_text_batch"])
+DERIVED = ("as_read", "union", "filter", "withColumn")
 
 
 @pytest.fixture(scope="module")
@@ -44,16 +54,55 @@ def warc_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("warc")
     fixtures.write_warc_fixture(str(d), 100)
     ts = fixtures.generate_warc_corpus(1)[0]["ts"]
-    extra = fixtures.warc_record_bytes("https://warc.example/script-only", ts, SCRIPT_ONLY)
-    extra += fixtures.warc_record_bytes("https://warc.example/entities", ts, ENTITIES)
+    extra = fixtures.warc_record_bytes(SCRIPT_URL, ts, SCRIPT_ONLY)
+    extra += fixtures.warc_record_bytes(ENTITIES_URL, ts, ENTITIES)
     (d / "seg0100.warc").write_bytes(extra)
     assert sorted(p.suffix for p in d.iterdir()) == [".gz", ".warc", ".warc"]
     return str(d)
 
 
-def _unmarked(spark, d):
-    """``read_warc`` rows with text nulled: every page takes the fallback."""
-    return read_warc(spark, d).withColumn("text", F.lit(None).cast("string"))
+def _archived(d):
+    """(url, warc_ts, html) of every response record under ``d``, by the
+    reader's kernel."""
+    out = []
+    for name in sorted(os.listdir(d)):
+        with open(os.path.join(d, name), "rb") as f:
+            blob = f.read()
+        if name.endswith(".gz"):
+            blob = gzip.decompress(blob)
+        out += [(r["url"], r["warc_ts"], r["html"]) for r in parse_warc_bytes(blob)]
+    return out
+
+
+def _fallback_pages(spark, d):
+    """Parquet-style pages of the same archive: text null, html the
+    archived bytes, so every page takes the fallback."""
+    rows = [(url, ts, html, None, None) for url, ts, html in _archived(d)]
+    return spark.createDataFrame(rows, PAGES_SCHEMA)
+
+
+def _derive(kind, df):
+    """``df`` as read, or a frame derived from it."""
+    if kind == "union":
+        extra = df.sparkSession.createDataFrame(
+            [(EXTRA_URL, None, EXTRA_TEXT, None)],
+            "url string, warc_ts timestamp, text string, lang string",
+        )
+        return df.unionByName(extra, allowMissingColumns=True)
+    if kind == "filter":
+        return df.filter(F.col("url") != ENTITIES_URL)
+    if kind == "withColumn":
+        return df.withColumn("source", F.lit("cc"))
+    return df
+
+
+def _derive_raw(kind, raw):
+    """The oracle's page dicts for ``_derive(kind, ...)``."""
+    if kind == "union":
+        return raw + [{"url": EXTRA_URL, "html": None, "text": EXTRA_TEXT}]
+    if kind == "filter":
+        return [r for r in raw if r["url"] != ENTITIES_URL]
+    return raw
 
 
 def _rows(df):
@@ -80,33 +129,33 @@ def _python_nodes(df):
 
 @pytest.mark.parametrize("lang_filter", [None, "cjk"])
 def test_warc_mention_stage_runs_two_python_sections(spark, warc_dir, lang_filter):
-    """The reader's section and the tagger's: no ArrowEvalPython between."""
-    marked = extract_mentions(prepare_pages(read_warc(spark, warc_dir)), TERMS, lang_filter)
-    assert _python_nodes(marked) == [("MapInPandasExec", []), ("MapInPandasExec", [])]
-    # the unmarked frame plans the fallback, once
-    unmarked = extract_mentions(prepare_pages(_unmarked(spark, warc_dir)), TERMS, lang_filter)
-    assert [n for n, _ in _python_nodes(unmarked)] == [
-        "MapInPandasExec",
-        "ArrowEvalPythonExec",
-        "MapInPandasExec",
+    """The reader's section and the tagger's, for ``read_warc`` output and
+    for frames derived from it: no ArrowEvalPython between. Pages that
+    carry html plan the fallback, once."""
+    two = [("MapInPandasExec", []), ("MapInPandasExec", [])]
+    for kind in DERIVED:
+        pages = prepare_pages(_derive(kind, read_warc(spark, warc_dir)))
+        assert _python_nodes(extract_mentions(pages, TERMS, lang_filter)) == two, kind
+        assert _python_nodes(pages_to_sentences(pages, lang_filter)) == two, kind
+    fallback = prepare_pages(_fallback_pages(spark, warc_dir))
+    assert _python_nodes(extract_mentions(fallback, TERMS, lang_filter)) == [
+        ("MapInPandasExec", []),
+        FALLBACK,
     ]
 
 
-def test_html_fallback_evaluated_once_on_unmarked_input(spark):
+def test_html_fallback_evaluated_once_on_html_input(spark):
     """Catalyst must not copy the fallback UDF into a pushed filter or a
-    collapsed projection: one ArrowEvalPython runs ``html_to_text``."""
-    html_only = spark.createDataFrame(
-        [("u1", None, ENTITIES, None, None), ("u2", None, SCRIPT_ONLY, None, None)],
-        PAGES_SCHEMA,
-    )
-    fallback = ("ArrowEvalPythonExec", ["_html_to_text_batch"])
+    collapsed projection: one ArrowEvalPython runs ``html_to_text``. Over
+    raw html-only pages ``pages_to_sentences`` runs the page contract in
+    its one ``mapInPandas``."""
+    rows = [("u1", None, ENTITIES, None, None), ("u2", None, SCRIPT_ONLY, None, None)]
+    html_only = spark.createDataFrame(rows, PAGES_SCHEMA)
     mentions = extract_mentions(prepare_pages(html_only), TERMS, lang_filter=None)
-    assert _python_nodes(mentions) == [("MapInPandasExec", []), fallback]
+    assert _python_nodes(mentions) == [("MapInPandasExec", []), FALLBACK]
     sentences = pages_to_sentences(html_only, lang_filter=None)
-    assert _python_nodes(sentences) == [
-        ("ArrowEvalPythonExec", ["split_sentences_udf"]),
-        fallback,
-    ]
+    assert _python_nodes(sentences) == [("MapInPandasExec", [])]
+    assert _rows(sentences) == _replay(rows, None) != []
 
 
 def test_warc_gate_parses_the_fixture_once(spark, sf_dir):
@@ -136,47 +185,59 @@ def test_warc_gate_parses_the_fixture_once(spark, sf_dir):
     assert len(scans) == 1
 
 
-# --- rows equal the unmarked path's ----------------------------------------------
+# --- rows equal the fallback path's -------------------------------------------
 
 
-def test_marked_warc_rows_equal_unmarked(spark, warc_dir):
-    marked, unmarked = read_warc(spark, warc_dir), _unmarked(spark, warc_dir)
-    assert _is_text_complete(marked) and not _is_text_complete(unmarked)
-    texts = {r.url: r.text for r in marked.collect()}
-    assert texts["https://warc.example/script-only"] == ""
-    assert "<" in texts["https://warc.example/entities"]  # &lt; unescaped
+def test_read_warc_schema_carries_no_html(spark, warc_dir):
+    pages = read_warc(spark, warc_dir)
+    assert pages.schema.simpleString() == (
+        "struct<url:string,warc_ts:timestamp,text:string,lang:string>"
+    )
+    texts = {r.url: r.text for r in pages.collect()}
+    assert texts == {url: html_to_text(html) for url, _, html in _archived(warc_dir)}
+    assert texts[SCRIPT_URL] == ""
+    assert "<" in texts[ENTITIES_URL]  # &lt; unescaped
 
-    prepared = prepare_pages(marked)
-    assert _rows(prepared) == _rows(prepare_pages(unmarked))
-    for lang_filter in (None, "cjk"):
-        got = _rows(extract_mentions(prepared, TERMS, lang_filter))
-        assert got == _rows(extract_mentions(prepare_pages(unmarked), TERMS, lang_filter))
-        assert _rows(pages_to_sentences(prepared, lang_filter=lang_filter)) == _rows(
-            pages_to_sentences(prepare_pages(unmarked), lang_filter=lang_filter)
+
+def test_warc_rows_equal_the_fallback_path(spark, warc_dir):
+    """For ``read_warc`` output and each derived frame: ``prepare_pages``
+    returns the fallback path's rows minus html, and the mentions and
+    sentences equal the fallback path's and the oracle's."""
+    raw = [{"url": u, "html": h, "text": None} for u, _, h in _archived(warc_dir)]
+    for kind in DERIVED:
+        warc = _derive(kind, read_warc(spark, warc_dir))
+        fallback = _derive(kind, _fallback_pages(spark, warc_dir))
+        prepared, prepared_fb = prepare_pages(warc), prepare_pages(fallback)
+        assert _rows(prepared) == _rows(prepared_fb.drop("html")), kind
+        for lang_filter in (None, "cjk"):
+            got = _rows(extract_mentions(prepared, TERMS, lang_filter))
+            assert got == _rows(extract_mentions(prepared_fb, TERMS, lang_filter)), kind
+            assert _rows(pages_to_sentences(prepared, lang_filter)) == _rows(
+                pages_to_sentences(prepared_fb, lang_filter)
+            ), kind
+        assert _rows(pages_to_sentences(warc, None)) == _rows(
+            pages_to_sentences(fallback, None)
+        ), kind
+        want = sorted(
+            (tuple(m.values()) for m in oracle_mentions(_derive_raw(kind, raw), TERMS, None)),
+            key=repr,
         )
-    assert _rows(pages_to_sentences(marked, lang_filter=None)) == _rows(
-        pages_to_sentences(unmarked, lang_filter=None)
-    )
-    # and the mentions are the oracle's over the raw bytes
-    raw = [{"url": r.url, "html": bytes(r.html), "text": None} for r in unmarked.collect()]
-    want = sorted(
-        (tuple(m.values()) for m in oracle_mentions(raw, TERMS, lang_filter=None)), key=repr
-    )
-    assert _rows(extract_mentions(prepared, TERMS, None)) == want
+        assert want and _rows(extract_mentions(prepared, TERMS, None)) == want, kind
 
 
-# --- the mark does not survive a transformation ----------------------------------
+# --- html decides the fallback -----------------------------------------------------
 
 
-def test_derived_frames_take_the_fallback(spark, warc_dir):
-    marked = read_warc(spark, warc_dir)
+def test_frames_with_html_take_the_fallback(spark, warc_dir):
+    warc = read_warc(spark, warc_dir)
     html_only = spark.createDataFrame(
         [("https://warc.example/html-only", None, ENTITIES, None, None)], PAGES_SCHEMA
     )
-    union = marked.union(html_only)
-    assert not _is_text_complete(union)
+    # the union brings an html column: the html-only page takes the fallback
+    union = warc.unionByName(html_only, allowMissingColumns=True)
     filled = {r.url: r.text for r in prepare_pages(union).collect()}
     assert filled["https://warc.example/html-only"] == html_to_text(ENTITIES)
+    assert not filled[SCRIPT_URL]  # the reader's page has no html: still no text
     want = oracle_mentions(
         [{"url": "https://warc.example/html-only", "html": ENTITIES, "text": None}],
         TERMS,
@@ -193,23 +254,20 @@ def test_derived_frames_take_the_fallback(spark, warc_dir):
         split_sentences(preprocess_text(html_to_text(ENTITIES)))
     )
 
-    # text blanked: the fallback restores it from the html bytes
-    blanked = marked.withColumn("text", F.lit(""))
-    assert _rows(prepare_pages(blanked)) == _rows(prepare_pages(marked))
-    assert _rows(extract_mentions(blanked, TERMS, None)) == _rows(
-        extract_mentions(marked, TERMS, None)
-    )
-    # html replaced: the page whose text is empty is derived from the new bytes
-    appended = marked.withColumn("html", F.concat("html", F.lit(ENTITIES)))
-    got = {r.url: r for r in prepare_pages(appended).collect()}
-    page = got["https://warc.example/script-only"]
-    assert page.text == html_to_text(bytes(page.html)) != ""
-    assert pages_to_sentences(appended, lang_filter=None).filter(
-        F.col("url") == "https://warc.example/script-only"
+    # html added: the page whose text is empty is derived from the new bytes
+    with_html = warc.withColumn("html", F.lit(ENTITIES))
+    page = {r.url: r for r in prepare_pages(with_html).collect()}[SCRIPT_URL]
+    assert page.text == html_to_text(ENTITIES) != ""
+    assert pages_to_sentences(with_html, lang_filter=None).filter(
+        F.col("url") == SCRIPT_URL
     ).count() == len(split_sentences(preprocess_text(page.text)))
+    # no html: text blanked leaves nothing to derive
+    blanked = warc.withColumn("text", F.lit(""))
+    assert extract_mentions(blanked, TERMS, None).count() == 0
+    assert pages_to_sentences(blanked, lang_filter=None).count() == 0
 
 
-# --- pages_to_sentences on degenerate input, marked and unmarked ------------------
+# --- pages_to_sentences on degenerate input, with and without html ----------------
 
 
 def _replay(rows, lang_filter):
@@ -231,13 +289,12 @@ def _replay(rows, lang_filter):
 
 def _sentences(spark, rows, lang_filter, partitions=None):
     """pages_to_sentences rows of the raw frame, of its prepare_pages output
-    (marked) and of that output with the mark dropped, per variant."""
+    and of that output without its html column, per variant."""
     pages = spark.createDataFrame(rows, PAGES_SCHEMA)
     if partitions is not None:
         pages = pages.repartition(partitions)
-    marked = prepare_pages(pages)
-    assert _is_text_complete(marked)
-    variants = {"raw": pages, "marked": marked, "unmarked": marked.select("*")}
+    prepared = prepare_pages(pages)
+    variants = {"raw": pages, "prepared": prepared, "text_only": prepared.drop("html")}
     return {
         name: _rows(pages_to_sentences(df, lang_filter=lang_filter))
         for name, df in variants.items()
@@ -259,14 +316,14 @@ def _mixed_rows(url):
 @pytest.mark.parametrize("lang_filter", [None, "ja"])
 def test_pages_to_sentences_empty_frame(spark, lang_filter):
     got = _sentences(spark, [], lang_filter)
-    assert got == {"raw": [], "marked": [], "unmarked": []}
+    assert got == {"raw": [], "prepared": [], "text_only": []}
 
 
 @pytest.mark.parametrize("lang_filter", [None, "ja"])
 def test_pages_to_sentences_all_null_text_and_html(spark, lang_filter):
     rows = [(f"u{i}", None, None, None, "ja") for i in range(4)]
     got = _sentences(spark, rows, lang_filter)
-    assert got == {"raw": [], "marked": [], "unmarked": []}
+    assert got == {"raw": [], "prepared": [], "text_only": []}
 
 
 @pytest.mark.parametrize("lang_filter", [None, "ja"])
@@ -276,14 +333,14 @@ def test_pages_to_sentences_one_partition_equals_four(spark, lang_filter):
     assert want
     for partitions in (1, 4):
         got = _sentences(spark, rows, lang_filter, partitions)
-        assert got == {"raw": want, "marked": want, "unmarked": want}
+        assert got == {"raw": want, "prepared": want, "text_only": want}
 
 
 def test_pages_to_sentences_duplicate_urls_across_partitions(spark):
     rows = _mixed_rows(lambda i: "https://ex.com/dup") * 2
     want = _replay(rows, None)
     got = _sentences(spark, rows, None, partitions=4)
-    assert got == {"raw": want, "marked": want, "unmarked": want}
+    assert got == {"raw": want, "prepared": want, "text_only": want}
 
 
 def test_pages_to_sentences_non_ascii_urls(spark):
@@ -291,5 +348,4 @@ def test_pages_to_sentences_non_ascii_urls(spark):
     want = _replay(rows, "ja")
     assert {u for u, _, _ in want} > {rows[0][0], rows[1][0]}
     got = _sentences(spark, rows, "ja", partitions=4)
-    assert got == {"raw": want, "marked": want, "unmarked": want}
-
+    assert got == {"raw": want, "prepared": want, "text_only": want}

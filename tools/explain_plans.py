@@ -39,6 +39,71 @@ CHECKS = {
 }
 
 
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+class EagerWork:
+    """The SQL executions a query's build function runs before it returns
+    its DataFrame (``localCheckpoint(eager=True)``, ``collect``, streaming
+    runs): ``explain`` shows only the returned plan, so these are listed
+    from the status store, by execution id."""
+
+    def __init__(self, spark):
+        self.store = spark._jsparkSession.sharedState().statusStore()
+        self.bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def _after(self, first: int) -> list:
+        """Finished executions with an id above ``first``, oldest first,
+        read a page at a time from the end of the id-ordered list (the
+        store keeps only the last ``spark.sql.ui.retainedExecutions``)."""
+        self.bus.waitUntilEmpty()
+        end = self.store.executionsCount()
+        out: list = []
+        while end > 0:
+            page = _seq(self.store.executionsList(max(0, end - 64), min(end, 64)))
+            newer = [e for e in page if e.executionId() > first]
+            out[:0] = newer
+            if len(newer) < len(page):
+                break
+            end -= len(page)
+        return out
+
+    def mark(self) -> int:
+        """The id of the last finished execution (-1 if none)."""
+        self.bus.waitUntilEmpty()
+        end = self.store.executionsCount()
+        last = _seq(self.store.executionsList(end - 1, 1)) if end else []
+        return last[0].executionId() if last else -1
+
+    def note(self, first: int) -> str:
+        """Markdown note listing the scan and Python nodes of every
+        execution after ``first``; runs of identical lines are counted.
+        Empty when there was none."""
+        lines: list[list] = []
+        for e in self._after(first):
+            nodes = [
+                n.name().strip()
+                for n in _seq(self.store.planGraph(e.executionId()).allNodes())
+                if "Scan" in n.name() or "Python" in n.name() or "Pandas" in n.name()
+            ]
+            line = ", ".join(nodes) or "(no scan or Python node)"
+            if lines and lines[-1][0] == line:
+                lines[-1][1] += 1
+            else:
+                lines.append([line, 1])
+        if not lines:
+            return ""
+        n = sum(k for _, k in lines)
+        items = [f"- {line}" + (f" (×{k})" if k > 1 else "") for line, k in lines]
+        return (
+            f"\nEager work before the plan above: building the query ran {n} SQL "
+            f"execution{'s' if n > 1 else ''} (scan and Python nodes of each, in order):\n\n"
+            + "\n".join(items)
+            + "\n"
+        )
+
+
 def main():
     import __spark_entry__ as entrymod
     from bert_namedentityrecognition_spark.plans.session import build_session
@@ -49,8 +114,11 @@ def main():
     names = [n for n in qs if n != "dedup_ngram_jaccard"]
     sections = []
     summary = []
+    eager = EagerWork(spark)
     for name in names:
+        first = eager.mark()
         df = qs[name](spark, sf_dir)
+        eager_note = eager.note(first)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
@@ -66,7 +134,7 @@ def main():
             if name in STREAMING
             else ""
         )
-        sections.append(f"## {name}\n{note}\n```\n{head.strip()}\n```\n")
+        sections.append(f"## {name}\n{note}\n```\n{head.strip()}\n```\n{eager_note}")
 
     # dedup_ngram_jaccard is probe-ADAPTIVE (naive vs PPJoin prefix filter,
     # flipping on the sampled blowup probe at cutoff 100) — the one headline
@@ -86,7 +154,9 @@ def main():
         f"auto picks {'ppjoin' if probe >= BLOWUP_CUTOFF else 'naive'} on this corpus)"
     )
     for label, pf in (("naive", False), ("ppjoin", True)):
+        first = eager.mark()
         df = ngram_jaccard_pairs(docs, n=3, threshold=0.6, prefix_filter=pf)
+        eager_note = eager.note(first)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
@@ -97,7 +167,7 @@ def main():
         summary.append((name, flags))
         head = plan.split("\n\n")[0]
         sections.append(
-            f"## {name}\n\n{probe_note}\n\n```\n{head.strip()}\n```\n"
+            f"## {name}\n\n{probe_note}\n\n```\n{head.strip()}\n```\n{eager_note}"
         )
     spark.stop()
 
