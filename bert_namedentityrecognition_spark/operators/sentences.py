@@ -122,19 +122,22 @@ def prepare_pages(pages: DataFrame) -> DataFrame:
     storage once so the KG pipeline reads cleaned input thereafter.
 
     text: where the frame has an ``html`` column, the html→text fallback
-    fills rows whose text is null or empty, in one Arrow stage; the output
-    keeps the column. ``read_warc`` output has no html column (its text is
-    already derived), so only the lang guess runs and no Python UDF is
-    planned. lang: filled where null; rows with neither text nor html pass
-    through unchanged (null text, the lang they had)."""
+    fills rows whose text is null or empty and whose html is not null, in
+    one Arrow stage; the output keeps the column. ``read_warc`` output has
+    no html column (its text is already derived), so only the lang guess
+    runs and no Python UDF is planned. lang: filled where null; rows
+    without html keep their text (null or ``""``), so a second call changes
+    nothing; a row with neither text nor html keeps the lang it had."""
     from ..functions.textstats import lang_guess
 
     if "html" in pages.columns:
-        has_text = _has_text("text")
+        # the UDF argument is null except on rows that take the fallback,
+        # so no other row ships html bytes to Python
+        fill = ~_has_text("text") & F.col("html").isNotNull()
         pages = pages.withColumn(
             "text",
-            F.when(has_text, F.col("text")).otherwise(
-                html_to_text_udf(F.when(~has_text, F.col("html")))
+            F.when(fill, html_to_text_udf(F.when(fill, F.col("html")))).otherwise(
+                F.col("text")
             ),
         )
     guessed = lang_guess(F.col("text"))

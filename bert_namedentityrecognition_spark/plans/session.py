@@ -16,6 +16,16 @@ deployment shape and is safe at both scales:
   identity hash. So whether each warm pass recompiled identical code
   (Janino, then interpreted until the JIT caught up) changed from one
   process to the next.
+- one BLAS environment for the driver and every Python worker
+  (:func:`worker_blas_env`): BLAS pinned to one thread, since task
+  parallelism comes from Spark, and ``OPENBLAS_CORETYPE`` derived from the
+  CPU flags, since OpenBLAS 0.3.23 falls back to its SSE3 ``Prescott``
+  kernels on CPUs it does not recognise by model (AVX-512 hosts that
+  report only "Intel(R) Xeon(R) Processor"). The NER forward is mostly
+  GEMM, so the kernel choice sets the model stage's speed. OpenBLAS reads
+  the variable once, when numpy loads: Python workers start after the
+  session and get it; a driver that imported numpy (pyarrow imports it)
+  before the session keeps the kernels it loaded with.
 """
 
 from __future__ import annotations
@@ -25,6 +35,75 @@ import os
 from pyspark.sql import SparkSession
 
 
+# (flags the CPU must have, OpenBLAS core type), first match wins. SkylakeX
+# also on CPUs with avx512_bf16: on an AVX-512 Xeon, OpenBLAS's Cooperlake
+# kernels ran a 12-layer/768-hidden forward at 382 tokens/s per core,
+# SkylakeX's at 472.
+_CORETYPE_RULES = (
+    (("avx512f", "avx512bw", "avx512vl"), "SkylakeX"),
+    (("avx2", "fma"), "Haswell"),
+)
+_CPUINFO = "/proc/cpuinfo"
+_BLAS_THREAD_VARS = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS")
+
+
+def _cpu_flags() -> frozenset[str]:
+    """The ``flags`` line of the first CPU in ``/proc/cpuinfo``; empty where
+    there is none (non-Linux, non-x86)."""
+    try:
+        with open(_CPUINFO) as f:
+            for line in f:
+                if line.startswith("flags"):
+                    return frozenset(line.partition(":")[2].split())
+    except OSError:
+        pass
+    return frozenset()
+
+
+def worker_blas_env() -> dict[str, str]:
+    """The BLAS environment every Python worker (and the driver) runs with.
+
+    ``OMP_NUM_THREADS``, ``OPENBLAS_NUM_THREADS`` and ``MKL_NUM_THREADS``
+    are ``1``: one BLAS thread per worker, since a numpy thread pool in
+    every worker oversubscribes the host. ``OPENBLAS_CORETYPE`` is
+    ``SkylakeX`` on AVX-512 (f/bw/vl) CPUs, ``Haswell`` on AVX2+FMA ones,
+    and absent otherwise, so OpenBLAS autodetects as before. Callers let a
+    value the deployment already set win."""
+    env = dict.fromkeys(_BLAS_THREAD_VARS, "1")
+    flags = _cpu_flags()
+    for needs, core in _CORETYPE_RULES:
+        if flags.issuperset(needs):
+            env["OPENBLAS_CORETYPE"] = core
+            break
+    return env
+
+
+def _launch_conf() -> dict[str, str]:
+    """Confs the spark-submit launch holds (``--conf``, spark-defaults):
+    under spark-submit the JVM starts before this driver does. A plain
+    ``python`` driver has no launch conf yet."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()  # connects to the launch's JVM
+    return dict(SparkConf().getAll())
+
+
+def with_worker_blas_env(builder: SparkSession.Builder) -> SparkSession.Builder:
+    """``builder`` plus :func:`worker_blas_env` as ``spark.executorEnv.*``
+    confs: :func:`build_session` and the spark-submit entry points that
+    configure their own session. A value already set wins: a launch
+    ``--conf spark.executorEnv.X=...`` (a builder conf would replace it) or
+    ``X`` in the environment."""
+    launched = _launch_conf()
+    for key, val in worker_blas_env().items():
+        conf = f"spark.executorEnv.{key}"
+        if conf not in launched:
+            builder = builder.config(conf, os.environ.get(key, val))
+    return builder
+
+
 def build_session(
     app_name: str = "kg-spark",
     cores: int | None = None,
@@ -32,12 +111,16 @@ def build_session(
     extra_conf: dict | None = None,
     warehouse_dir: str | None = None,
 ) -> SparkSession:
-    # pin BLAS to one thread per python worker: task parallelism comes from
-    # Spark, not from numpy spawning its own thread pool inside every worker
-    # (unpinned BLAS oversubscribes the host and silently borrows cores
-    # across tasks, which also corrupts scaling measurements)
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
+    """A local session with the scale defaults above. The BLAS environment
+    (:func:`worker_blas_env`) goes to this process's environment, where a
+    value already set wins, and the resulting values go to the Python
+    workers (:func:`with_worker_blas_env`); ``extra_conf`` is applied last
+    and wins over both. ``getOrCreate`` returns a context that already
+    exists unchanged: its workers keep the environment it was started with."""
+    # unpinned BLAS oversubscribes the host and silently borrows cores
+    # across tasks, which also corrupts scaling measurements
+    for key, val in worker_blas_env().items():
+        os.environ.setdefault(key, val)
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -55,12 +138,11 @@ def build_session(
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.python.worker.reuse", "true")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    builder = with_worker_blas_env(builder)
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
     for k, v in (extra_conf or {}).items():

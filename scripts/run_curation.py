@@ -24,7 +24,8 @@ production shape: benchmark suites are tiny and broadcast) or a
 deterministic doc_id % --eval-mod == 0 split of the corpus itself (the
 gate-fixture shape). Every decision in the pass is a pure function of row
 values — re-running on the same input at any cluster size produces
-byte-identical outputs.
+byte-identical outputs. Python workers run the engine's BLAS environment
+(``plans/session.worker_blas_env``) unless the launch sets its own.
 """
 
 from __future__ import annotations
@@ -58,8 +59,9 @@ def main(argv=None):
     from pyspark.sql import functions as F
 
     from bert_namedentityrecognition_spark.operators.corpus import curate_corpus
+    from bert_namedentityrecognition_spark.plans.session import with_worker_blas_env
 
-    spark = SparkSession.builder.appName("curation").getOrCreate()
+    spark = with_worker_blas_env(SparkSession.builder.appName("curation")).getOrCreate()
     docs = spark.read.parquet(args.docs_dir)
     if args.eval_dir:
         ev = spark.read.parquet(args.eval_dir)

@@ -21,6 +21,9 @@ Non-ASCII ``--pred-patterns`` values require a UTF-8 locale (``LANG=C.UTF-8``)
 mangles Japanese regexes to ``?`` under a POSIX locale.
 The package ships via --py-files (zip) or an installed wheel — no driver-
 local imports assumed beyond this file.
+Python workers run the engine's BLAS environment (one BLAS thread, the
+OpenBLAS core type of the CPU: ``plans/session.worker_blas_env``); a
+``--conf spark.executorEnv.X=...`` or an ``X`` in the environment wins.
 """
 
 from __future__ import annotations
@@ -121,7 +124,9 @@ def main(argv=None):
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("kg-pipeline").getOrCreate()
+    from bert_namedentityrecognition_spark.plans.session import with_worker_blas_env
+
+    spark = with_worker_blas_env(SparkSession.builder.appName("kg-pipeline")).getOrCreate()
 
     from bert_namedentityrecognition_spark.sources import fixtures
     from bert_namedentityrecognition_spark.sources.dims import dim_from_csv

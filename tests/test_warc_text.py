@@ -237,7 +237,7 @@ def test_frames_with_html_take_the_fallback(spark, warc_dir):
     union = warc.unionByName(html_only, allowMissingColumns=True)
     filled = {r.url: r.text for r in prepare_pages(union).collect()}
     assert filled["https://warc.example/html-only"] == html_to_text(ENTITIES)
-    assert not filled[SCRIPT_URL]  # the reader's page has no html: still no text
+    assert filled[SCRIPT_URL] == ""  # the reader's page has no html: still no text
     want = oracle_mentions(
         [{"url": "https://warc.example/html-only", "html": ENTITIES, "text": None}],
         TERMS,
@@ -265,6 +265,35 @@ def test_frames_with_html_take_the_fallback(spark, warc_dir):
     blanked = warc.withColumn("text", F.lit(""))
     assert extract_mentions(blanked, TERMS, None).count() == 0
     assert pages_to_sentences(blanked, lang_filter=None).count() == 0
+
+
+def test_prepare_pages_is_a_fixed_point(spark):
+    """On a frame mixing ``""``/null text with null/non-null html,
+    ``prepare_pages`` twice equals once, and a row without html is prepared
+    as it would be in a frame without an html column: its ``""`` text stays
+    ``""`` and gets a lang guess."""
+    no_html = [
+        ("https://warc.example/empty", None, None, "", None),
+        ("https://warc.example/empty-ja", None, None, "", "ja"),
+        ("https://warc.example/null", None, None, None, None),
+        ("https://warc.example/null-en", None, None, None, "en"),
+        (EXTRA_URL, None, None, EXTRA_TEXT, None),
+    ]
+    with_html = [
+        (SCRIPT_URL, None, SCRIPT_ONLY, "", None),
+        (ENTITIES_URL, None, ENTITIES, None, None),
+        ("https://warc.example/text-and-html", None, ENTITIES, EXTRA_TEXT, "ja"),
+    ]
+    pages = spark.createDataFrame(no_html + with_html, PAGES_SCHEMA)
+    once = prepare_pages(pages)
+    assert _rows(prepare_pages(once)) == _rows(once)
+    got = {r.url: (r.text, r.lang) for r in once.collect()}
+    assert got["https://warc.example/empty"][0] == ""
+    text_only = spark.createDataFrame(no_html, PAGES_SCHEMA).drop("html")
+    assert {u: got[u] for u, *_ in no_html} == {
+        r.url: (r.text, r.lang) for r in prepare_pages(text_only).collect()
+    }
+    assert got[SCRIPT_URL][0] == "" and got[ENTITIES_URL][0] == html_to_text(ENTITIES)
 
 
 # --- pages_to_sentences on degenerate input, with and without html ----------------
