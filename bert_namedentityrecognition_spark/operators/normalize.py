@@ -27,9 +27,10 @@ Where the kernel runs is the only choice left, made from the observed
 distinct-surface count (:func:`normalize_mentions`): on the driver over the
 collected surfaces, or in one ``mapInPandas`` stage over the distinct
 surfaces (:func:`normalize_surfaces`) against an index built once per
-Python worker from broadcast dimension rows. The streaming pair stage
-(``streaming/stream_pipeline.py:streaming_pairs``) uses the same per-worker
-index.
+Python worker from broadcast dimension rows. The KG page stage
+(``plans/page_stage.page_kg``, behind ``run_kg_pipeline`` and
+``streaming_pairs``) resolves against the same per-worker index, inside
+its own Arrow section.
 
 Other semantics keep their own stages: :func:`oici_normalize_surfaces`
 (raw-key exact branch with sentinels, one recursion) and the all-JVM

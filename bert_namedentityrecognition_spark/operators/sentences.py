@@ -12,8 +12,9 @@ The contract has two halves, both here:
   (``util/text_utils.py:50-61``), with sent_ids assigned before the cut.
 
 ``pages_to_sentences``, the fused mention stages (``tagger.extract_mentions``,
-``ner.ner_pages``) and ``streaming.stream_pipeline.streaming_pairs`` all read
-pages through these two, each in one ``mapInPandas``.
+``ner.ner_pages``) and the KG page stage (``plans.page_stage.page_kg``,
+behind ``run_kg_pipeline`` and ``streaming_pairs``) all read pages through
+these two, each in one Python section.
 
 The split regex stays in Python (the reference regex relies on Python
 ``re`` unicode word-class semantics in its lookbehinds; Java regex ``\\w``

@@ -1,15 +1,13 @@
 """Mention pairing → (subj, pred, obj, count) triples.
 
 Re-expresses the ADE-table pairing (``ade_table/ade_table.py:14-64``) as
-joins + aggregation:
+per-scope-key lists + array expressions + one count aggregation:
 
-- per-document dedup (``list(set(...))``, :25-27)  → ``dropDuplicates``
-- drug ``len >= 2`` floor (:31-33)                 → ``length() >= 2`` filter
-- entity '' / ``len < 2`` drop post-normalize (:49-55)
-- all-pairs per scope key (:29-61)                 → self-equi-join on the key
-- "No Symptoms" for drug docs with zero symptom mentions *pre-normalization*
-  (:41-46 — the empty check happens before the normalizer runs)
-                                                   → ``left_anti`` join
+- per-document raw lists, deduplicated (:25-27)   → ``collect_list`` +
+  ``array_distinct`` per key (:func:`build_pairs`), or the page stage's
+  per-page lists merged by url (``plans/page_stage.py``)
+- strip, ``len >= 2`` floors, "No Symptoms"       → :func:`explode_pairs`,
+  the one copy of the rules (:29-55), JVM array expressions inside the row
 - nested-dict counting                             → ``groupBy().count()``
   (map-side partial aggregation = the scale win), optionally **salted**:
   two-phase ``groupBy(subj, obj, salt) → groupBy(subj, obj)`` so one hot
@@ -23,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sources.dims import local_frame
 
 NO_SYMPTOMS = "No Symptoms"
 DEFAULT_PRED = "HAS_ADVERSE_EVENT"
@@ -41,6 +41,56 @@ def salted_count(
     return df.groupBy(*keys).agg(F.count("*").alias(count_col))
 
 
+# the characters of str.isspace (tests/test_kg_tail.py checks the set)
+_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003"
+    "\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+
+
+def _strip(col):
+    """Python ``str.strip()``: drops the ``str.isspace`` characters from both
+    ends. Spark's one-argument ``trim`` drops only U+0020, so the U+3000
+    that ``han_to_zen`` makes of an ASCII space would survive it."""
+    return F.btrim(col, F.lit(_WHITESPACE))
+
+
+def explode_pairs(
+    lists: DataFrame,
+    emit_no_symptoms: bool = True,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(*keep, subj, obj) pair rows from one row per scope key carrying its
+    raw lists: ``drugs`` (drug surfaces) and ``syms`` (``struct<w, n>``:
+    symptom surface, its normalized name). The pairing rules of
+    ``ade_table.py:29-55`` as JVM array expressions inside the row, the one
+    copy every pairing path runs:
+
+    - ``str.strip`` and the ``len >= 2`` floor on drugs (:31-33) and on the
+      normalized name, which also drops the '' sentinel (:49-55);
+    - "No Symptoms" when the raw symptom list is empty, a test made before
+      normalization (:41-46).
+
+    The per-document dedup (:25-27) comes first and is the caller's, on the
+    RAW surfaces, so two raw variants of one name still count twice: the
+    lists arrive deduplicated when the reference's ``remove_duplicates``
+    is on."""
+    subjs = F.filter(F.transform("drugs", _strip), lambda d: F.length(d) >= 2)
+    objs = F.filter(F.transform("syms", lambda s: _strip(s["n"])), lambda n: F.length(n) >= 2)
+    if emit_no_symptoms:
+        objs = F.when(F.size("syms") == 0, F.array(F.lit(NO_SYMPTOMS))).otherwise(objs)
+    return (
+        lists.select(*keep, F.explode(subjs).alias("subj"), objs.alias("_objs"))
+        .select(*keep, "subj", F.explode("_objs").alias("obj"))
+    )
+
+
+def count_pairs(pairs: DataFrame, salt_buckets: int = 0, pred: str = DEFAULT_PRED) -> DataFrame:
+    """(subj, obj) pair rows → (subj, pred, obj, count) triples."""
+    counted = salted_count(pairs, ["subj", "obj"], salt_buckets)
+    return counted.select("subj", F.lit(pred).alias("pred"), "obj", F.col("count"))
+
+
 def build_pairs(
     mentions: DataFrame,
     subj_type: str = "drug",
@@ -52,48 +102,25 @@ def build_pairs(
 ) -> DataFrame:
     """The pre-aggregation (subj, obj) pair stream of :func:`build_triples`
     — exposed so the skew bench can measure the per-reducer shuffle split
-    of the counting exchange on the exact rows that feed it."""
+    of the counting exchange on the exact rows that feed it.
+
+    ONE shuffle: per-scope-key mention lists (the reference's own shape —
+    ``from_lists`` consumes per-document lists), then :func:`explode_pairs`."""
     keys = ["url"] if scope == "document" else ["url", "sent_id"]
     name = F.col("canonical") if use_canonical and "canonical" in mentions.columns else F.col("word")
-    base = mentions.withColumn("_name", F.trim(name))
-
-    # ONE shuffle: per-scope-key mention lists (the reference's own shape —
-    # from_lists consumes per-document lists). All pairing/dedup/No-Symptoms
-    # logic then runs as JVM array expressions inside the row.
-    perdoc = base.groupBy(*keys).agg(
-        F.collect_list(
-            F.when(F.col("type") == subj_type, F.trim(F.col("word")))
-        ).alias("_drugs_raw"),
-        F.collect_list(
-            F.when(
-                F.col("type") == obj_type,
-                F.struct(F.col("word").alias("w"), F.col("_name").alias("n")),
+    dedup = F.array_distinct if remove_duplicates else (lambda c: c)
+    perdoc = mentions.groupBy(*keys).agg(
+        dedup(F.collect_list(F.when(F.col("type") == subj_type, F.col("word")))).alias("drugs"),
+        dedup(
+            F.collect_list(
+                F.when(
+                    F.col("type") == obj_type,
+                    F.struct(F.col("word").alias("w"), name.alias("n")),
+                )
             )
-        ).alias("_syms_raw"),
+        ).alias("syms"),
     )
-
-    drugs = F.filter(F.col("_drugs_raw"), lambda d: F.length(d) >= 2)
-    if remove_duplicates:
-        # reference :25-27 dedups the RAW lists, THEN normalizes each member
-        # (two raw variants normalizing to one canonical still count twice)
-        drugs = F.array_distinct(drugs)
-        syms_src = F.array_distinct(F.col("_syms_raw"))
-    else:
-        syms_src = F.col("_syms_raw")
-    objs = F.transform(
-        F.filter(syms_src, lambda s: (s["n"] != "") & (F.length(s["n"]) >= 2)),
-        lambda s: s["n"],
-    )
-    if emit_no_symptoms:
-        # No-Symptoms when the RAW symptom list is empty (pre-normalization
-        # presence test, reference :41)
-        objs = F.when(F.size("_syms_raw") == 0, F.array(F.lit(NO_SYMPTOMS))).otherwise(objs)
-
-    return (
-        perdoc.select(drugs.alias("_drugs"), objs.alias("_objs"))
-        .select(F.explode("_drugs").alias("subj"), "_objs")
-        .select("subj", F.explode("_objs").alias("obj"))
-    )
+    return explode_pairs(perdoc, emit_no_symptoms)
 
 
 def build_triples(
@@ -121,8 +148,7 @@ def build_triples(
         use_canonical=use_canonical,
         emit_no_symptoms=emit_no_symptoms,
     )
-    counted = salted_count(pairs, ["subj", "obj"], salt_buckets)
-    return counted.select("subj", F.lit(pred).alias("pred"), "obj", F.col("count"))
+    return count_pairs(pairs, salt_buckets, pred)
 
 
 def pattern_predicate(
@@ -204,6 +230,19 @@ def patterned_from_preds(
     return pairs.groupBy("subj", "pred", "obj").agg(F.count("*").alias("count"))
 
 
+def _min_ids(rows, key: str) -> list[tuple]:
+    """(key value, min entity_id) per non-null key of dimension rows, the
+    driver twin of ``groupBy(key).agg(min(entity_id))``: Python orders
+    strings by code point, which is the byte order Spark compares UTF-8
+    strings in; null ids are skipped, so a key with only null ids maps to
+    null."""
+    ids: dict = {}
+    for r in rows:
+        if r[key] is not None:
+            ids.setdefault(r[key], []).append(r["entity_id"])
+    return [(k, min((e for e in v if e is not None), default=None)) for k, v in ids.items()]
+
+
 def build_graph(
     normalized: DataFrame,
     dim: DataFrame,
@@ -233,12 +272,12 @@ def build_graph(
     )
     # a surface or canonical listed under several entity ids (real MedDRA /
     # Manbyo dimensions have them) keeps the min id — value-deterministic,
-    # like build_dim_index's pick, never an arbitrary row
-    surf_map = dim.groupBy(F.col("surface").alias("_k")).agg(
-        F.min("entity_id").alias("_id")
-    )
-    canon_map = dim.groupBy(F.col("canonical").alias("_k")).agg(
-        F.min("entity_id").alias("_id")
+    # like build_dim_index's pick, never an arbitrary row; both maps are
+    # built on the driver from the dimension rows, so neither is a shuffle
+    dim_rows = dim.select("surface", "canonical", "entity_id").collect()
+    surf_map, canon_map = (
+        local_frame(dim.sparkSession, _min_ids(dim_rows, key), "_k string, _id string")
+        for key in ("surface", "canonical")
     )
     edges = (
         triples.join(

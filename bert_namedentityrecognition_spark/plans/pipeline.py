@@ -3,24 +3,25 @@
 Spark dataflow (SURVEY.md §7):
 
     pages(url, warc_ts, [html,] text, lang)
-      → sentences   (one mapInPandas over the page contract, no shuffle)
-      → mentions    (one mapInPandas Arrow stage: han_to_zen + tag + BIO decode)
-      → normalized  (distinct surfaces → exact→fuzzy resolver, on the driver
-                     or in one mapInPandas stage → broadcast join back)
-      → canonical   (alias connected-components map, broadcast)
-      → triples     (co-scope pairing join + salted groupBy count)
-      → nodes/edges (parquet sinks; Iceberg bucketing documented)
+      → page_kg     (ONE mapInArrow over the page contract: split, tag,
+                     resolve against a per-worker dimension index, alias
+                     lookup, per-page dedup; one row per page, no shuffle)
+      → mentions, normalized   (``inline`` views of page_kg, no shuffle)
+      → triples     (url merge of the per-page lists → pairing expressions
+                     → salted count)
+      → nodes/edges (nodes: one aggregation of normalized; edges: triples ×
+                     two driver-built endpoint maps, broadcast)
 
-Shuffles: exactly two on the hot path at scale — the pairing self-join keyed
-by url (avoidable with bucketed storage) and the triple count aggregation
-(map-side combined, salt-able). Everything else is broadcast or narrow.
+Shuffles on the hot path: the url merge (per-page lists, one row per page,
+not per mention), the count aggregation (map-side combined, salt-able) and
+the nodes aggregation (map-side combined). The mention stream itself
+crosses none.
 
-Each piece of work runs once per pass: ``mentions`` and ``triples`` are
-persisted (the NER stage and the pairing + count feed several consumers),
-the side tables built on the driver (resolved surface map, fixture and
-loaded dimensions) are ``LocalTableScan`` frames, so broadcasting them runs
-no Python task, and the parquet sink writes each table as its plan emits
-it, with no shuffle of its own.
+Each piece of work runs once per pass: the page frame and ``triples`` are
+persisted (each feeds several consumers), the side tables built on the
+driver (dimension, endpoint maps, alias lookup frame) are ``LocalTableScan``
+frames, so broadcasting them runs no Python task, and the parquet sink
+writes each table as its plan emits it, with no shuffle of its own.
 """
 
 from __future__ import annotations
@@ -29,11 +30,16 @@ from pyspark.sql import DataFrame
 
 from pyspark import StorageLevel
 
-from ..operators.canonicalize import apply_alias_map, canonical_alias_map
-from ..operators.normalize import normalize_mentions
 from ..operators.sentences import pages_to_sentences
-from ..operators.tagger import extract_mentions
-from ..operators.triples import build_triples
+from ..operators.triples import build_graph
+from .page_stage import (
+    _tagger,
+    alias_lookup,
+    mentions_view,
+    normalized_view,
+    page_kg,
+    page_triples,
+)
 
 
 def run_kg_pipeline(
@@ -49,50 +55,53 @@ def run_kg_pipeline(
     model=None,
     label_vocab=None,
 ) -> dict[str, DataFrame]:
-    """Returns the full lineage: sentences, mentions, normalized, triples,
-    nodes, edges.
+    """Returns the full lineage: sentences, page_kg, mentions, normalized,
+    triples, nodes, edges.
+
+    Every KG table derives from ``page_kg`` (``plans/page_stage.py``), the
+    one Arrow stage that tags, resolves and deduplicates each page.
+    ``mentions`` and ``normalized`` are ``inline`` views of it; ``triples``
+    merges its per-page lists by url and counts the pairs.
 
     With ``persist`` (the default) two frames are persisted:
 
-    - ``mentions`` feeds the distinct-surface map, the pairing, the nodes
-      aggregation and the sink; recomputing the NER Arrow stage per
-      consumer is the single biggest avoidable cost.
-    - ``triples`` feeds both its own sink and ``edges``; without it the
-      edges write re-runs the per-url pairing and the count aggregation.
+    - ``page_kg`` feeds the mentions sink, the triples and the nodes;
+      recomputing the NER stage per consumer is the single biggest
+      avoidable cost.
+    - ``triples`` feeds both its own sink and ``edges``.
 
-    ``normalized`` is not persisted: it is a broadcast join of the persisted
-    mentions with a small ``LocalTableScan`` map. In the cluster deployment
-    the same role is played by writing mentions to storage between stages;
-    persist is the in-session equivalent. The caller unpersists
-    ``mentions``; :func:`write_outputs` releases ``triples`` after its two
-    sinks.
+    In the cluster deployment the same role is played by writing the page
+    frame to storage between stages; persist is the in-session equivalent.
+    :func:`write_outputs` releases both.
     """
     sentences = pages_to_sentences(pages, lang_filter=lang_filter)
-    if model is not None:
-        from ..operators.ner import ner_pages
-
-        mentions = ner_pages(pages, model, label_vocab, lang_filter=lang_filter)
-    else:
-        mentions = extract_mentions(pages, term_types, lang_filter=lang_filter)
-    if persist:
-        mentions = mentions.persist(StorageLevel.MEMORY_AND_DISK)
-    normalized = normalize_mentions(mentions, dim, threshold=threshold)
+    dim_rows = [r.asDict() for r in dim.collect()]
+    alias = None
     if alias_edges is not None:
-        alias_map = canonical_alias_map(alias_edges, dim)
-        normalized = apply_alias_map(normalized, alias_map, dim=dim)
-    triples = build_triples(
-        normalized,
+        types = _tagger(term_types, model, label_vocab)[2]
+        alias = alias_lookup(alias_edges, dim, dim_rows, types)
+    page = page_kg(
+        pages,
+        dim_rows,
+        term_types,
+        threshold=threshold,
+        lang_filter=lang_filter,
+        model=model,
+        label_vocab=label_vocab,
+        alias=alias,
         scope=scope,
-        salt_buckets=salt_buckets,
     )
     if persist:
+        page = page.persist(StorageLevel.MEMORY_AND_DISK)
+    normalized = normalized_view(page)
+    triples = page_triples(page, scope=scope, salt_buckets=salt_buckets)
+    if persist:
         triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
-    from ..operators.triples import build_graph
-
     graph = build_graph(normalized, dim, triples)
     return {
         "sentences": sentences,
-        "mentions": mentions,
+        "page_kg": page,
+        "mentions": mentions_view(page),
         "normalized": normalized,
         "triples": triples,
         "nodes": graph["nodes"],
@@ -103,27 +112,30 @@ def run_kg_pipeline(
 def write_outputs(outputs: dict[str, DataFrame], base_dir: str):
     """Materialize the KG tables as parquet directories.
 
-    No table is shuffled for its sink. Mentions come out of the mention
-    stage url-clustered (each page's mentions from one task), and plain
+    No table is shuffled for its sink. Mentions come out of the page stage
+    url-clustered (each page's mentions from one task), and plain
     parquet records no bucketing a reader could use, so a
     ``repartition(url)`` would only cost a shuffle of the largest table.
     Edges are triples-sized. The bucketed sinks are
     :func:`write_outputs_bucketed` and :func:`write_outputs_iceberg`
-    (``bucket(N, 'url')`` co-locates the pairing join on read).
+    (``bucket(N, 'url')`` co-locates a url join on read).
     Each write is an atomic directory replace = the idempotent-resume unit.
 
-    The triples cache (see :func:`run_kg_pipeline`) serves the triples and
-    edges writes and is released after them: every cached plan left behind
-    is matched against each later query's plan, and a caller that releases
-    only ``mentions`` would keep one per pass. The release waits for the
-    cached blocks to be removed, so no removal work outlives the call.
+    The caches of the pass (see :func:`run_kg_pipeline`: ``page_kg`` and
+    ``triples``) are released after the writes: every cached plan left
+    behind is matched against each later query's plan. The release waits
+    for the cached blocks to be removed, so no removal work outlives the
+    call. ``mentions`` and ``normalized`` are views, and an ``unpersist``
+    on them frees nothing.
     """
     outputs["mentions"].write.mode("overwrite").parquet(f"{base_dir}/mentions")
     outputs["triples"].write.mode("overwrite").parquet(f"{base_dir}/triples")
     outputs["nodes"].write.mode("overwrite").parquet(f"{base_dir}/nodes")
     if "edges" in outputs:
         outputs["edges"].write.mode("overwrite").parquet(f"{base_dir}/edges")
-    outputs["triples"].unpersist(blocking=True)
+    for name in ("page_kg", "triples"):
+        if name in outputs:
+            outputs[name].unpersist(blocking=True)
 
 
 def write_outputs_bucketed(

@@ -6,9 +6,10 @@ append-per-1000-lines loop (``scripts/predict/predict_for_jst_data_parallel.py:5
 ``readStream → transform → writeStream`` pipeline:
 
 - source: file stream over a pages directory (parquet), i.e. new WARC drops
-- the stateless stages (sentences → mentions → normalize) are the *same
-  operator functions* as batch — they're plan builders, so they compose with
-  streaming DataFrames unchanged
+- the stateless stages are the *same operator functions* as batch —
+  they're plan builders, so they compose with streaming DataFrames
+  unchanged: the mention stage, and the batch pipeline's page stage
+  (tag → resolve → per-page dedup), whose per-page lists pair row-locally
 - triple counting is a watermarked windowed aggregation on ``warc_ts``
   (late pages beyond the watermark are dropped deterministically)
 - sink: parquet append with checkpointLocation — the exactly-once
@@ -21,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.tagger import extract_mentions
+from ..operators.triples import explode_pairs
+from ..plans.page_stage import page_kg
 
 
 def stream_pages(spark: SparkSession, pages_dir: str, schema) -> DataFrame:
@@ -60,79 +63,37 @@ def streaming_pairs(
     remove_duplicates: bool = True,
     lang_filter: str | None = "ja",
 ) -> DataFrame:
-    """pages stream → (warc_ts, subj, obj) pair rows, ONE Arrow stage.
+    """pages stream → (warc_ts, subj, obj) pair rows.
 
-    Streaming needs no pairing join at all: a page is a single row, so
-    extract → normalize (``resolve_surfaces`` against the dimension index
-    built once per worker) → per-doc dedup → all-pairs (+No Symptoms) are
-    row-local. The pairing rules are the oracle's
-    (``oracle/ade.ade_pairs_from_lists``, called per page), so they exist
-    once. The only stateful operator left downstream is the windowed
-    count — exactly the shape Structured Streaming supports without
-    stream-stream joins.
+    The batch pipeline's page stage (``plans/page_stage.page_kg``: tag,
+    resolve against the dimension index built once per worker, per-page
+    dedup) with ``warc_ts`` passed through, then
+    ``triples.explode_pairs`` over each page row: a page is one row here,
+    so no url merge and no pairing join. The only stateful operator left
+    downstream is the windowed count — exactly the shape Structured
+    Streaming supports without stream-stream joins.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..operators.normalize import (
-        _broadcast_dim,
-        _worker_dim_index,
-        resolve_surfaces,
+    page = page_kg(
+        pages_stream, dim_rows, term_types, threshold=threshold, lang_filter=lang_filter,
+        remove_duplicates=remove_duplicates, extra_cols=("warc_ts",),
     )
-    from ..operators.sentences import _page_sentences, _pages_text_source
-    from ..operators.tagger import _Gazetteer
-    from ..oracle.ade import ade_pairs_from_lists
+    return page_pairs(page)
 
-    sc = pages_stream.sparkSession.sparkContext
-    bc = sc.broadcast(term_types)
-    bdim = _broadcast_dim(sc, dim_rows)
 
-    # the shared pages contract (rule 10): html→text fallback rows pass
-    # through with _html set — a WARC-sourced stream carries text=None by
-    # design, and a bare text filter would silently drop every page
-    src = _pages_text_source(pages_stream, lang_filter, extra_cols=("warc_ts",))
+def page_pairs(page: DataFrame) -> DataFrame:
+    """(warc_ts, subj, obj) pair rows of each row of a ``page_kg`` frame
+    built with ``extra_cols=("warc_ts",)``."""
+    return explode_pairs(page.select("warc_ts", F.inline("scopes")), keep=("warc_ts",))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gazetteer = _Gazetteer(bc.value, True)
-        idx = _worker_dim_index(bdim)
-        cache: dict[tuple[str, str], tuple] = {}
 
-        def canon(word: str, mtype: str) -> str:
-            key = (word, mtype)
-            if key not in cache:
-                cache[key] = resolve_surfaces([key], idx, threshold)[0]
-            return cache[key][2] or ""
-
-        def norm(word: str) -> str:
-            return canon(word, "symptom").strip()
-
-        for pdf in batches:
-            ts_out, subj_out, obj_out = [], [], []
-            for ts, text, hb in zip(pdf["warc_ts"], pdf["text"], pdf["_html"]):
-                drugs: list[str] = []
-                syms: list[str] = []
-                for _, sent in _page_sentences(text, hb):
-                    for _, _, ttype, word in gazetteer.spans(sent):
-                        (drugs if ttype == "drug" else syms).append(word)
-                pairs = ade_pairs_from_lists(
-                    [drugs], [syms], remove_duplicates=remove_duplicates, normalize=norm
-                )
-                for (subj, obj), n in pairs.items():
-                    ts_out += [ts] * n
-                    subj_out += [subj] * n
-                    obj_out += [obj] * n
-            # explicit dtypes: a batch with no pair would otherwise infer
-            # float64 columns, which Arrow cannot cast to timestamp
-            yield pd.DataFrame(
-                {
-                    "warc_ts": pd.Series(ts_out, dtype="datetime64[ns]"),
-                    "subj": pd.Series(subj_out, dtype=object),
-                    "obj": pd.Series(obj_out, dtype=object),
-                }
-            )
-
-    return src.mapInPandas(run, schema="warc_ts timestamp, subj string, obj string")
+def windowed_counts(pairs: DataFrame, watermark: str = "1 hour", window: str = "1 hour") -> DataFrame:
+    """(warc_ts, subj, obj) pair rows → windowed (subj, obj) counts, late
+    rows beyond the watermark dropped."""
+    return (
+        pairs.withWatermark("warc_ts", watermark)
+        .groupBy(F.window("warc_ts", window).alias("w"), "subj", "obj")
+        .agg(F.count("*").alias("count"))
+    )
 
 
 def streaming_triples(
@@ -147,11 +108,7 @@ def streaming_triples(
     pairs = streaming_pairs(
         pages_stream, [r.asDict() for r in dim.collect()], term_types
     )
-    return (
-        pairs.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "subj", "obj")
-        .agg(F.count("*").alias("count"))
-    )
+    return windowed_counts(pairs, watermark, window)
 
 
 def start_mentions_sink(

@@ -17,6 +17,8 @@
 """
 
 import os
+import re
+import sys
 import time
 
 import pyarrow.parquet as pq
@@ -197,6 +199,139 @@ def test_duplicate_url_split_across_partitions(spark, tmp_path):
     assert ("ロキソニン", "発熱", 1) in triples and ("アスピリン", "頭痛", 1) in triples
 
 
+# --- the page stage against the layer path -------------------------------------
+
+MATRIX_TERMS = {
+    **TERM_TYPES,
+    "ロキソプロフェン": "drug",
+    "薬": "drug",  # one character: below the drug length floor
+    "めまい": "symptom",  # no dimension row resolves it
+}
+MATRIX_DIM = DIM + [_dim_row("D3", "ロキソプロフェン", "drug")]
+MATRIX_PAGES = [
+    ("https://dup", "ロキソニンを服用後、頭痛が出現した。"),
+    ("https://drug-only", "アスピリンを飲んだ。"),
+    ("https://symptom-only", "頭痛がする。"),
+    ("https://unresolved", "ロキソニンでめまいがした。"),
+    ("https://one-char", "薬を飲んで発熱した。"),
+    ("https://dup", "アスピリンを飲んだら発熱した。"),
+    ("https://repeated", "ロキソニンで頭痛。ロキソニンでまた頭痛がして、発熱した。"),
+    ("https://alias", "ロキソプロフェンで発熱した。"),
+    ("https://empty", ""),
+    ("https://null", None),
+]
+MATRIX_CASES = {
+    "four_partitions": {},
+    "one_partition": {"partitions": 1},
+    "alias_edges": {"alias": True},
+    "sentence_scope": {"scope": "sentence"},
+    "salted": {"salt_buckets": 8},
+    "no_persist": {"persist": False},
+    "model": {"model": True},
+}
+
+
+@pytest.mark.parametrize("case", sorted(MATRIX_CASES))
+def test_page_stage_equals_layer_path(spark, tmp_path, case):
+    """``run_kg_pipeline`` + ``write_outputs`` write the rows of the layer
+    path (``normalize_mentions`` → ``apply_alias_map`` → ``build_triples`` →
+    ``build_graph`` over the mention stage): a url split across two input
+    partitions, drug-only and symptom-only pages, an unresolved symptom, a
+    one-character drug, repeated mentions, empty and null text."""
+    from bert_namedentityrecognition_spark.operators.canonicalize import (
+        apply_alias_map,
+        canonical_alias_map,
+    )
+    from bert_namedentityrecognition_spark.operators.ner import (
+        DictionaryStubModel,
+        label_vocab_for_types,
+        ner_pages,
+    )
+    from bert_namedentityrecognition_spark.operators.normalize import normalize_mentions
+    from bert_namedentityrecognition_spark.operators.tagger import extract_mentions
+    from bert_namedentityrecognition_spark.operators.triples import build_graph, build_triples
+
+    cfg = MATRIX_CASES[case]
+    n = cfg.get("partitions", 4)
+    rows = [(u, None, None, t, "ja") for u, t in MATRIX_PAGES]
+    pages = spark.createDataFrame(spark.sparkContext.parallelize(rows, n), PAGE_SCHEMA)
+    if n == 4:
+        assert sum("https://dup" in {r.url for r in p} for p in pages.rdd.glom().collect()) == 2
+    dim = fixtures.entity_dim_to_spark(spark, MATRIX_DIM)
+    alias = (
+        spark.createDataFrame([("ロキソプロフェン", "ロキソニン")], ["src", "dst"])
+        if cfg.get("alias") else None
+    )
+    model = vocab = None
+    if cfg.get("model"):
+        vocab = label_vocab_for_types(["drug", "symptom"])
+        model = DictionaryStubModel(MATRIX_TERMS, vocab)
+    scope, salt = cfg.get("scope", "document"), cfg.get("salt_buckets", 0)
+
+    out = run_kg_pipeline(
+        pages, dim, MATRIX_TERMS, alias_edges=alias, scope=scope, salt_buckets=salt,
+        persist=cfg.get("persist", True), model=model, label_vocab=vocab,
+    )
+    got_normalized = out["normalized"].collect()
+    base = str(tmp_path / "kg")
+    write_outputs(out, base)
+    got = {k: spark.read.parquet(f"{base}/{k}").collect() for k in ("mentions", "triples", "nodes", "edges")}
+
+    mentions = (
+        ner_pages(pages, model, vocab) if model else extract_mentions(pages, MATRIX_TERMS)
+    )
+    normalized = normalize_mentions(mentions, dim)
+    if alias is not None:
+        normalized = apply_alias_map(normalized, canonical_alias_map(alias, dim), dim=dim)
+    triples = build_triples(normalized, scope=scope, salt_buckets=salt)
+    graph = build_graph(normalized, dim, triples)
+    want = {"mentions": mentions, "triples": triples, **graph}
+
+    def by_name(rows):
+        return sorted((tuple(sorted(r.asDict().items())) for r in rows), key=repr)
+
+    assert by_name(got_normalized) == by_name(normalized.collect())
+    for k, df in want.items():
+        assert by_name(got[k]) == by_name(df.collect()), k
+    assert got["triples"] and got["nodes"]
+    pairs = {(r.subj, r.obj) for r in got["triples"]}
+    assert ("アスピリン", "No Symptoms") in pairs
+    assert not [p for p in pairs if "薬" in p or "めまい" in p or "" in p]
+    if alias is not None:
+        assert ("ロキソニン", "発熱") in pairs
+
+
+def test_pairing_strips_python_whitespace_after_raw_dedup(spark, tmp_path):
+    """``ロキソニン`` and ``ロキソニン　`` (U+3000, what ``han_to_zen`` makes
+    of an ASCII space, which Spark's one-argument ``trim`` keeps) are two
+    raw surfaces of one document: deduplicated raw, then stripped, they
+    count twice, as in the reference. ``build_triples``, the pipeline and
+    ``ade_pairs_from_lists(remove_duplicates=True)`` agree."""
+    from bert_namedentityrecognition_spark.operators.triples import _WHITESPACE, build_triples
+
+    assert set(_WHITESPACE) == {chr(c) for c in range(sys.maxunicode + 1) if chr(c).isspace()}
+    tt = {"ロキソニン": "drug", "ロキソニン ": "drug", "頭痛": "symptom"}
+    text = "ロキソニン を飲んで頭痛がした。ロキソニンを再開した。"
+    out = run_kg_pipeline(_pages(spark, [("https://ws", text)]), fixtures.entity_dim_to_spark(spark, DIM), tt)
+    words = sorted(r.word for r in out["mentions"].collect() if r.type == "drug")
+    assert words == ["ロキソニン", "ロキソニン\u3000"]
+    pipeline = {(r.subj, r.obj): r["count"] for r in out["triples"].collect()}
+    write_outputs(out, str(tmp_path / "kg"))
+
+    mentions = spark.createDataFrame(
+        [("u", 0, "drug", w, None) for w in ["ロキソニン", "ロキソニン\u3000", "\tロキソニン "]]
+        + [("u", 0, "symptom", "頭痛", "頭痛"), ("u", 1, "drug", "ロキソニン", None)],
+        "url string, sent_id int, type string, word string, canonical string",
+    )
+    layer = {(r.subj, r.obj): r["count"] for r in build_triples(mentions).collect()}
+    oracle = ade_pairs_from_lists([words], [["頭痛"]], remove_duplicates=True)
+    assert pipeline == oracle == {("ロキソニン", "頭痛"): 2}
+    assert layer == ade_pairs_from_lists(
+        [["ロキソニン", "ロキソニン\u3000", "\tロキソニン ", "ロキソニン"]], [["頭痛"]],
+        remove_duplicates=True,
+    ) == {("ロキソニン", "頭痛"): 3}
+
+
 # --- normalize_mentions and build_triples on degenerate mentions --------------
 
 MENTION_SCHEMA = "url string, sent_id int, type string, word string"
@@ -305,51 +440,102 @@ def _executed(df):
     return df._jdf.queryExecution().executedPlan()
 
 
+_PYTHON_NODES = ("MapInArrowExec", "MapInPandasExec", "ArrowEvalPythonExec", "BatchEvalPythonExec")
+
+
+def _cached_plans(nodes):
+    """The plans the cached relations scanned by ``nodes`` were built from."""
+    return [p.relation().cachedPlan() for n, p in nodes if n == "InMemoryTableScanExec"]
+
+
 def test_tail_plans_do_each_piece_of_work_once(spark, tmp_path):
+    """One Python node per pass, the page stage, computed once under the
+    cache; every table reads that cache with no Python node of its own; no
+    side table is a Python-RDD scan; no pass job collects distinct
+    surfaces; the mentions sink has no shuffle; the edge endpoint maps are
+    local tables; and the sink releases every cache the pass made."""
+    spark.catalog.clearCache()
     src = str(tmp_path / "pages")
     fixtures.pages_to_spark(spark, fixtures.generate_pages(60, seed=3)).write.parquet(src)
     pages = spark.read.parquet(src)
     out = run_kg_pipeline(pages, fixtures.entity_dim_to_spark(spark), fixtures.pipeline_term_types())
 
-    nodes_plan = _executed(out["nodes"])
-    edges_plan = _executed(out["edges"])
-    for plan in (nodes_plan, edges_plan):
+    plans = {k: _executed(out[k]) for k in ("mentions", "triples", "nodes", "edges")}
+    page_plans = []
+    for name, plan in plans.items():
         # also the plans the cached relations were built from
-        assert "Scan ExistingRDD" not in plan.toString()
+        assert "Scan ExistingRDD" not in plan.toString(), name
+        nodes = list(_plan_nodes(plan))
+        assert not [n for n, _ in nodes if n in _PYTHON_NODES], name
+        cached = _cached_plans(nodes)
+        assert cached, name
+        page_plans += [c for c in cached if "InMemoryTableScan" not in c.toString()]
+    # the page stage is the one Python node; triples and edges reach it
+    # only through the cached page frame
+    for plan in page_plans:
+        assert [n for n, _ in _plan_nodes(plan) if n in _PYTHON_NODES] == ["MapInArrowExec"]
+    assert len({p.toString() for p in page_plans}) == 1
 
-    # the resolved surface map and the dimension are local tables
-    local = "LocalTableScanExec"
-    assert ["canonical", "entity_id", "type", "word"] in _scans(_plan_nodes(nodes_plan), local)
-    edge_nodes = list(_plan_nodes(edges_plan))
-    assert ["entity_id", "surface"] in _scans(edge_nodes, local)
-    assert ["canonical", "entity_id"] in _scans(edge_nodes, local)
-
-    # edges read the persisted triples: one cached scan of the triples
-    # columns and no pairing aggregation of their own
+    # edges read the persisted triples, and the endpoint maps are local
+    # tables built on the driver: no aggregation of the dimension
+    edge_nodes = list(_plan_nodes(plans["edges"]))
     assert _scans(edge_nodes, "InMemoryTableScanExec") == [["count", "obj", "pred", "subj"]]
-    assert "ObjectHashAggregateExec" not in [n for n, _ in edge_nodes]
+    assert sorted(_scans(edge_nodes, "LocalTableScanExec")) == [["_dst", "_k"], ["_k", "_src"]]
+    assert not [n for n, _ in edge_nodes if "Aggregate" in n]
 
-    # the mentions sink adds no shuffle: find its execution in the SQL
-    # status store (filled asynchronously by the listener bus)
+    # the pass's own executions, from the SQL status store (filled
+    # asynchronously by the listener bus)
     store = spark._jsparkSession.sharedState().statusStore()
+    seen = {e.executionId() for e in _seq(store.executionsList())}
     base = str(tmp_path / "kg")
     write_outputs(out, base)
     deadline = time.monotonic() + 10
     while True:
-        executions = _seq(store.executionsList())
-        mention_writes = [
-            e.physicalPlanDescription() for e in executions
-            if f"{base}/mentions," in e.physicalPlanDescription()
+        executions = [
+            e.physicalPlanDescription() for e in _seq(store.executionsList())
+            if e.executionId() not in seen
         ]
-        if mention_writes or time.monotonic() > deadline:
+        writes = [p for p in executions if f"{base}/" in p]
+        if len(writes) == 4 or time.monotonic() > deadline:
             break
         time.sleep(0.05)
+    assert len(writes) == 4, writes
+    assert not [p for p in executions if re.search(r"keys=\[word#\d+, type#\d+\]", p)]
+    mention_writes = [p for p in writes if f"{base}/mentions," in p]
     assert len(mention_writes) == 1, mention_writes
     assert "InMemoryTableScan" in mention_writes[0]
     assert "Exchange" not in mention_writes[0], mention_writes[0]
-    # the sink released the triples cache it was kept for
-    assert not out["triples"].is_cached
-    out["mentions"].unpersist()
+    # the sink released every cache the pass made
+    assert not out["page_kg"].is_cached and not out["triples"].is_cached
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# a second identical pass of run_kg_pipeline + write_outputs over
+# generate_pages(60, seed=3): one job for the parquet read's footer scan,
+# one for the mentions write, four for the triples write (url merge, count,
+# cache), three each for the nodes and edges writes
+WARM_PASS_JOBS = 12
+
+
+def test_warm_pass_job_count(spark, tmp_path):
+    """The job count of a warm pass is pinned: bringing back the
+    distinct-surface collect or a shuffle of the mention stream adds jobs."""
+    src = str(tmp_path / "pages")
+    fixtures.pages_to_spark(spark, fixtures.generate_pages(60, seed=3)).write.parquet(src)
+    dim = fixtures.entity_dim_to_spark(spark)
+    sc = spark.sparkContext
+
+    def pass_jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            out = run_kg_pipeline(spark.read.parquet(src), dim, fixtures.pipeline_term_types())
+            write_outputs(out, str(tmp_path / group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pass_jobs("kg-job-count-1")
+    assert pass_jobs("kg-job-count-2") == WARM_PASS_JOBS
 
 
 def _codegen_compiles(spark) -> int:

@@ -43,10 +43,8 @@ def test_streaming_triples_windowed_counts(spark, tmp_path):
     assert got_map == want
 
 
-def test_streaming_model_path_equals_batch(spark, tmp_path):
-    """The real-model NER stage streams unchanged: streaming_mentions with
-    a numpy-BERT checkpoint over micro-batches produces exactly the batch
-    mention set (mapInPandas is stateless, weights broadcast once)."""
+def _tiny_model(corpus):
+    """Random-init numpy BERT over the corpus alphabet: 1 layer, hidden 32."""
     from bert_namedentityrecognition_spark.operators.bert_numpy import (
         init_token_classifier_state,
     )
@@ -54,18 +52,8 @@ def test_streaming_model_path_equals_batch(spark, tmp_path):
         CharTokenizer,
         NumpyTokenClassifier,
         label_vocab_for_types,
-        ner_pages,
     )
     from bert_namedentityrecognition_spark.oracle.textproc import han_to_zen
-    from bert_namedentityrecognition_spark.streaming.stream_pipeline import (
-        stream_pages,
-        streaming_mentions,
-    )
-
-    corpus = fixtures.generate_pages(40, seed=3)
-    pages = fixtures.pages_to_spark(spark, corpus)
-    src = str(tmp_path / "pages")
-    pages.write.mode("overwrite").parquet(src)
 
     alphabet = sorted(
         {c for r in corpus if r["text"] for c in han_to_zen(r["text"])}
@@ -76,7 +64,24 @@ def test_streaming_model_path_equals_batch(spark, tmp_path):
         vocab_size=len(tok.itos), num_labels=len(vocab.itos), hidden=32,
         layers=1, heads=2, intermediate=64, seed=13,
     )
-    model = NumpyTokenClassifier(sd, tok)
+    return NumpyTokenClassifier(sd, tok), vocab
+
+
+def test_streaming_model_path_equals_batch(spark, tmp_path):
+    """The real-model NER stage streams unchanged: streaming_mentions with
+    a numpy-BERT checkpoint over micro-batches produces exactly the batch
+    mention set (mapInPandas is stateless, weights broadcast once)."""
+    from bert_namedentityrecognition_spark.operators.ner import ner_pages
+    from bert_namedentityrecognition_spark.streaming.stream_pipeline import (
+        stream_pages,
+        streaming_mentions,
+    )
+
+    corpus = fixtures.generate_pages(40, seed=3)
+    pages = fixtures.pages_to_spark(spark, corpus)
+    src = str(tmp_path / "pages")
+    pages.write.mode("overwrite").parquet(src)
+    model, vocab = _tiny_model(corpus)
 
     m = streaming_mentions(
         stream_pages(spark, src, pages.schema), {}, model=model, label_vocab=vocab
@@ -98,6 +103,51 @@ def test_streaming_model_path_equals_batch(spark, tmp_path):
         for r in ner_pages(pages, model, vocab).collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_streaming_model_tagger_counts_equal_batch(spark, tmp_path):
+    """The page stage with the model tagger streams: its per-page pairs,
+    counted in watermarked windows, sum to the batch pipeline's triples
+    over the same pages and model."""
+    from bert_namedentityrecognition_spark.plans.page_stage import page_kg
+    from bert_namedentityrecognition_spark.plans.pipeline import run_kg_pipeline
+    from bert_namedentityrecognition_spark.streaming.stream_pipeline import (
+        page_pairs,
+        stream_pages,
+        windowed_counts,
+    )
+
+    corpus = fixtures.generate_pages(40, seed=3)
+    pages = fixtures.pages_to_spark(spark, corpus)
+    src = str(tmp_path / "pages")
+    pages.write.mode("overwrite").parquet(src)
+    model, vocab = _tiny_model(corpus)
+    dim = fixtures.entity_dim_to_spark(spark)
+
+    page = page_kg(
+        stream_pages(spark, src, pages.schema), [r.asDict() for r in dim.collect()], {},
+        model=model, label_vocab=vocab, extra_cols=("warc_ts",),
+    )
+    q = (
+        windowed_counts(page_pairs(page))
+        .writeStream.format("memory")
+        .queryName("model_triples_stream")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    got = {
+        (r.subj, r.obj): r.c
+        for r in spark.sql(
+            "select subj, obj, sum(count) as c from model_triples_stream group by subj, obj"
+        ).collect()
+    }
+    batch = run_kg_pipeline(pages, dim, {}, model=model, label_vocab=vocab)
+    want = {(r.subj, r.obj): r["count"] for r in batch["triples"].collect()}
+    batch["page_kg"].unpersist()
+    batch["triples"].unpersist()
+    assert got == want and got
 
 
 def test_streaming_pairs_follow_the_ade_oracle(spark):

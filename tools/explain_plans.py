@@ -85,7 +85,7 @@ class EagerWork:
             nodes = [
                 n.name().strip()
                 for n in _seq(self.store.planGraph(e.executionId()).allNodes())
-                if "Scan" in n.name() or "Python" in n.name() or "Pandas" in n.name()
+                if any(k in n.name() for k in ("Scan", "Python", "Pandas", "MapInArrow"))
             ]
             line = ", ".join(nodes) or "(no scan or Python node)"
             if lines and lines[-1][0] == line:
